@@ -45,22 +45,28 @@ def fail(msg):
     sys.exit(2)
 
 
-def source_stamp():
-    """Hash of every file the build reads from the checkout."""
+def tree_hash(paths):
+    """Hash of the files under `paths` (files or directories), by
+    relative path and content."""
     h = hashlib.sha256()
-    roots = [os.path.join(ROOT, "src", "main"), os.path.join(BENCH, "src"),
-             os.path.join(BENCH, "project")]
-    files = [os.path.join(BENCH, "build.sbt")]
-    for r in roots:
+    files = []
+    for r in paths:
+        if os.path.isfile(r):
+            files.append(r)
         for d, dirs, fs in os.walk(r):
             dirs[:] = sorted(x for x in dirs if x != "target")
             files += [os.path.join(d, f) for f in sorted(fs)]
     for f in files:
-        if os.path.isfile(f):
-            h.update(os.path.relpath(f, ROOT).encode())
-            with open(f, "rb") as fh:
-                h.update(hashlib.sha256(fh.read()).digest())
+        h.update(os.path.relpath(f, ROOT).encode())
+        with open(f, "rb") as fh:
+            h.update(hashlib.sha256(fh.read()).digest())
     return h.hexdigest()[:16]
+
+
+def source_stamp():
+    """Hash of every file the build reads from the checkout."""
+    return tree_hash([os.path.join(BENCH, "build.sbt"), os.path.join(ROOT, "src", "main"),
+                      os.path.join(BENCH, "src"), os.path.join(BENCH, "project")])
 
 
 def spark_home():
@@ -127,7 +133,7 @@ def main():
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
     cmd += ["-cp", cp, "perfbench.Main", "--workload", a.workload,
             "--seed", str(a.seed), "--seconds", str(a.seconds), "--trace", a.trace,
-            "--work", WORK, "--key", stamp]
+            "--work", WORK, "--digest-key", tree_hash([os.path.join(BENCH, "src")])]
     if a.smoke:
         cmd.append("--smoke")
     proc = subprocess.Popen(cmd, cwd=WORK, stdout=subprocess.PIPE,

@@ -11,7 +11,7 @@ Checks, for every workload in BENCHMARK.json:
     (failed == 0, so error_rate = failed / attempted = 0);
   * a second run of the same seed reproduces the response digest;
 and that without the program's sources next to it the benchmark exits
-non-zero without printing a result. Takes about ten minutes on 4 cores.
+non-zero without printing a result. Takes about five minutes on 4 cores.
 """
 import json
 import os

@@ -6,26 +6,32 @@ import org.apache.spark.sql.functions._
 import graft.trace.MemoLog
 
 /** Batch phase: named catalog queries from the `SparkEntry` registry over
-  * the seed's generated tables. Each query runs once per run, after the
-  * memos an earlier query built are dropped, so its wall includes every
-  * build it needs.
+  * the seed's generated tables. Every pass of a query starts after the
+  * memos it built in the previous pass were dropped, so each pass's wall
+  * includes every build the query needs.
   */
 final class Batch(spark: SparkSession, dir: String, digest: Digest, errors: Errors) {
   private val registry = graft.SparkEntry.queries ++ graft.SparkEntry.benchExtras
 
-  /** Runs `q`, checks its rows (folding them into the digest when
-    * `digested`) and returns its wall time in seconds.
+  /** Runs `q` once and returns its rows and wall time in seconds. Times
+    * the query alone: its output check is [[verify]].
     */
-  def run(q: String, digested: Boolean): Double = {
+  def execute(q: String): (Array[Row], Double) = {
     MemoLog.currentQuery = q
     val t0 = System.nanoTime()
     val rows = registry(q)(spark, dir).collect()
     val wall = (System.nanoTime() - t0) / 1e9
     MemoLog.clearMemos(MemoLog.memosBuiltBy(q))
+    (rows, wall)
+  }
+
+  /** Checks the rows of `q`, folding them into the digest when
+    * `digested`.
+    */
+  def verify(q: String, rows: Array[Row], digested: Boolean): Unit = {
     if (digested) digest.add(q, rows.map(rowString).toSeq)
     errors.check(rows.nonEmpty, s"$q returned no rows")
     check(q, rows)
-    wall
   }
 
   private def rowString(r: Row): String = r.toSeq.map {
@@ -110,4 +116,25 @@ final class Batch(spark: SparkSession, dir: String, digest: Digest, errors: Erro
     while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
     d / math.sqrt(na * nb)
   }
+}
+
+/** A catalog query a run times: the ops functions behind it and the
+  * generated table it reads.
+  */
+final case class Query(ops: String, table: String)
+
+object Batch {
+  val Queries: Map[String, Query] = Map(
+    "q_pagerank" -> Query("GraphAlgorithms.pageRank", "lineitem"),
+    "q_communities_refined" -> Query(
+      "GraphAlgorithms.labelPropagation + GraphAlgorithms.refineCommunities", "lineitem"),
+    "q_betweenness_waves" -> Query("GraphAlgorithms.betweenness (wave path)", "orders"),
+    "q_prep_pipeline" -> Query(
+      "DedupOps.exactDuplicates + ShardOps.packShards + TextFunctions gopher/lang kernels",
+      "documents"),
+    "q_dedup_clusters_dist" -> Query(
+      "DedupOps.simhashNearDupPairs + DedupOps.duplicateClusters", "documents"),
+    "q_emb_neardup_lsh" -> Query("DedupOps.embeddingNearDupPairs (LSH bands)", "embeddings"),
+    "q_ann_ivf_kmeans" -> Query("SimilarityOps.ivfIndexKMeans + SimilarityOps.ivfTopK",
+      "embeddings"))
 }

@@ -81,18 +81,19 @@ object Gen {
   // batch tables, shaped like the catalog's parquet inputs
   // ------------------------------------------------------------------
 
-  /** Writes `orders`, `lineitem`, `documents` and `embeddings` parquet
-    * files under `dir`, sized by `orders` rows. Column draws are
-    * functions of (seed, row id), so the tables depend on the seed only.
+  /** Writes those of the `orders`, `lineitem`, `documents` and
+    * `embeddings` parquet files under `dir` that `tables` names, sized by
+    * `orders` rows. Column draws are functions of (seed, row id) or of a
+    * per-table generator, so each table depends on the seed only.
     */
   def writeBatchTables(spark: SparkSession, dir: String, seed: Long,
-      orders: Int): Unit = {
+      orders: Int, tables: Set[String]): Unit = {
     val s = seed.toInt
     def u(id: org.apache.spark.sql.Column, salt: Int) =
       pmod(xxhash64(lit(s), lit(salt), id), lit(1000000007L))
     val parts = math.max(200, orders / 7)
     val custs = math.max(60, orders / 10)
-    spark.range(orders).select(
+    if (tables("orders")) spark.range(orders).select(
         col("id").as("o_orderkey"),
         (u(col("id"), 1) % custs).as("o_custkey"),
         lit("O").as("o_orderstatus"),
@@ -101,8 +102,7 @@ object Gen {
           .as("o_orderdate"),
         lit("3-MEDIUM").as("o_orderpriority"))
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val li = spark.range(orders * 4L)
-    li.select(
+    if (tables("lineitem")) spark.range(orders * 4L).select(
         (u(col("id"), 4) % orders).as("l_orderkey"),
         (u(col("id"), 5) % parts).as("l_partkey"),
         (u(col("id"), 6) % 100).as("l_suppkey"),
@@ -117,29 +117,34 @@ object Gen {
           .as("l_shipdate"))
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
 
-    val docs = math.max(100, orders / 30)
-    val rng = new Rng(seed ^ 0x5DEECE66DL)
-    val langs = IndexedSeq("en", "en", "en", "zh", "es", "de", "fr")
-    val texts = (0 until docs).map(_ => rng.words(10, 99))
-    val docRows = (0 until docs).map { i =>
-      // every 20th document repeats the one seven before it plus two
-      // words: near-duplicates for the dedup and simhash stages
-      val text = if (i % 20 == 19) s"${texts(i - 7)} ${rng.words(1, 1)} dup" else texts(i)
-      (i.toLong, text, langs(rng.int(langs.size)), s"src${i % 20}", text.length.toLong)
-    }
     import spark.implicits._
-    docRows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-    val vecs = math.max(100, orders / 30)
-    val centers = Array.fill(10, 64)(rng.double() * 2 - 1)
-    val embRows = (0 until vecs).map { i =>
-      val label = rng.int(10)
-      val v = centers(label).map(c => c + (rng.double() * 2 - 1) * 0.35)
-      val n = math.sqrt(v.map(x => x * x).sum)
-      (i.toLong, v.map(x => (x / n).toFloat).toSeq, label)
+    if (tables("documents")) {
+      val docs = math.max(100, orders / 30)
+      val rng = new Rng(seed ^ 0x5DEECE66DL)
+      val langs = IndexedSeq("en", "en", "en", "zh", "es", "de", "fr")
+      val texts = (0 until docs).map(_ => rng.words(10, 99))
+      val docRows = (0 until docs).map { i =>
+        // every 20th document repeats the one seven before it plus two
+        // words: near-duplicates for the dedup and simhash stages
+        val text = if (i % 20 == 19) s"${texts(i - 7)} ${rng.words(1, 1)} dup" else texts(i)
+        (i.toLong, text, langs(rng.int(langs.size)), s"src${i % 20}", text.length.toLong)
+      }
+      docRows.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .repartition(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     }
-    embRows.toDF("vec_id", "embedding", "label")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+
+    if (tables("embeddings")) {
+      val vecs = math.max(100, orders / 30)
+      val rng = new Rng(seed ^ 0x9E3779B97F4A7C15L)
+      val centers = Array.fill(10, 64)(rng.double() * 2 - 1)
+      val embRows = (0 until vecs).map { i =>
+        val label = rng.int(10)
+        val v = centers(label).map(c => c + (rng.double() * 2 - 1) * 0.35)
+        val n = math.sqrt(v.map(x => x * x).sum)
+        (i.toLong, v.map(x => (x / n).toFloat).toSeq, label)
+      }
+      embRows.toDF("vec_id", "embedding", "label")
+        .repartition(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
   }
 }

@@ -5,18 +5,21 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
 import Json.metric
 
 /** Workload parameters. Request counts scale with `--seconds`: the base
-  * counts fill about 20 s of requests and queries on 4 cores, and every
-  * script is a fixed number of requests for a given run length.
+  * counts fill about 20 s of requests on 4 cores, and every script is a
+  * fixed number of requests for a given run length. `ingests` is the
+  * corpus-refresh phase after the script; `passes` is how often each
+  * batch query runs (more for a short query, whose single pass is
+  * noisier).
   */
 final case class Spec(name: String, seedTexts: Int, bulkOwn: Int, bulkOther: Int,
     people: Int, searches: Int, adds: Int, updates: Int, deletes: Int,
-    ingests: Int, ingestSize: Int, interleave: Boolean, queries: Seq[String],
-    orders: Int)
+    ingests: Int, ingestSize: Int, queries: Seq[String], passes: Int, orders: Int)
 
 object Spec {
   val Names: Seq[String] = Seq("read_large", "mixed_small")
@@ -35,14 +38,15 @@ object Spec {
     name match {
       case "read_large" => Spec(name, seedTexts = size(300, 20),
         bulkOwn = size(5000, 40), bulkOther = size(5000, 40), people = size(60, 8),
-        searches = n(5), adds = n(2), updates = n(2), deletes = n(2),
-        ingests = n(1), ingestSize = size(25, 4), interleave = false,
-        queries = Seq("q_pagerank"), orders = size(5000, 400))
+        searches = n(6), adds = 0, updates = 0, deletes = 0,
+        ingests = 1, ingestSize = size(25, 4),
+        queries = Seq("q_pagerank"), passes = size(3, 1), orders = size(5000, 400))
       case "mixed_small" => Spec(name, seedTexts = size(300, 20),
         bulkOwn = 0, bulkOther = size(300, 40), people = size(40, 8),
-        searches = n(5), adds = n(2), updates = n(2), deletes = n(2),
-        ingests = n(1), ingestSize = size(25, 4), interleave = true,
-        queries = Seq("q_prep_pipeline", "q_emb_neardup_lsh"), orders = size(5000, 400))
+        searches = n(5), adds = n(3), updates = n(2), deletes = n(2),
+        ingests = 0, ingestSize = 0,
+        queries = Seq("q_prep_pipeline"), passes = size(5, 1),
+        orders = size(5000, 400))
       case other => throw new IllegalArgumentException(
         s"unknown workload '$other' (expected one of ${Names.mkString(", ")})")
     }
@@ -86,8 +90,8 @@ object Digest {
     BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toString
 }
 
-/** Arguments: --workload --seed --seconds --trace --work DIR --key K
-  * [--smoke]. Prints one JSON result line on stdout.
+/** Arguments: --workload --seed --seconds --trace --work DIR
+  * --digest-key K [--smoke]. Prints one JSON result line on stdout.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -115,12 +119,16 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     System.err.println(f"phase spark up at ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    // the digest of a seed is keyed by the benchmark's own sources only,
+    // so a digest recorded on one version of the program checks the
+    // responses of the next
+    val digestFile = s"$work/digests/${opts("--digest-key")}-$workload-$seed-$seconds" +
+      (if (smoke) "-smoke" else "")
     // Runtime.halt skips SparkContext.stop (several seconds of shutdown in
     // local mode); run.py removes the scratch directories afterwards
     val code =
       try {
-        println(new Run(spark, spec, seed, traced, work).result(digestFile =
-          s"$work/digests/${opts("--key")}-$workload-$seed-$seconds${if (smoke) "-smoke" else ""}"))
+        println(new Run(spark, spec, seed, traced, work).result(digestFile))
         0
       } catch {
         case e: Throwable => e.printStackTrace(); 1
@@ -131,8 +139,8 @@ object Main {
   }
 }
 
-/** One run of a workload: set-up (three times), the online warm-up and
-  * timed script, the batch phase, then the result line.
+/** One run of a workload: set-up (five times), the online warm-up, timed
+  * script and refresh phase, the batch passes, then the result line.
   */
 final class Run(spark: SparkSession, spec: Spec, seed: Long, traced: Boolean, work: String) {
   private val errors = new Errors
@@ -147,49 +155,66 @@ final class Run(spark: SparkSession, spec: Spec, seed: Long, traced: Boolean, wo
   def result(digestFile: String): String = {
     val online = new Online(spark, spec, seed, trace, digest, errors)
 
-    Gen.writeBatchTables(spark, dataDir, seed, spec.orders)
-    // set-up: the program's share, seeding the store, three times over
-    val setups = (1 to 3).map { _ =>
+    // set-up: the program's share, seeding the store, five times over;
+    // the first pays the JVM's cold start, the median does not
+    val setups = (1 to 5).map { _ =>
       val t0 = System.nanoTime()
       val s = online.setup()
       ((System.nanoTime() - t0) / 1e9, s)
     }
-    val (store, m, client) = setups.last._2
+    val session = setups.last._2
+    val store = session.store
 
     phase("setup done")
     var step = 0
     var lastSearchAt = trace.map(_.versions(store))
+    System.err.println(s"writes after set-up ${store.writeVersion}")
     online.warmup.foreach { r =>
       val v = trace.map(_.versions(store))
-      errors.op(s"warmup ${r.kind}")(online.run(m, client, r, step))
+      errors.op(s"warmup ${r.kind}")(online.run(session, r, step))
       if (r.kind == "search") lastSearchAt = v
       step += 1
     }
 
-    phase("warm-up done")
+    phase(s"warm-up done (${store.writeVersion} writes)")
     trace.foreach(_.begin(store, lastSearchAt.get))
     val lat = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
-    val t0 = System.nanoTime()
-    online.script.foreach { r =>
+    def timed(r: Req): Unit = {
       val before = trace.map(_.versions(store))
       val s0 = System.nanoTime()
-      errors.op(r.kind)(online.run(m, client, r, step))
+      errors.op(r.kind)(online.run(session, r, step))
       val ms = (System.nanoTime() - s0) / 1e6
       lat.getOrElseUpdate(r.kind, mutable.ArrayBuffer.empty) += ms
       trace.foreach(_.afterOp(store, r.kind, ms, before.get))
       step += 1
     }
+    val t0 = System.nanoTime()
+    online.script.foreach(timed)
     val onlineWallS = (System.nanoTime() - t0) / 1e9
+    online.refresh.foreach(timed)
 
-    phase("online done")
-    val batch = new Batch(spark, dataDir, digest, errors)
-    // a traced run also times the queries plain runs skip; only the
-    // plain runs' queries enter the digest, so both kinds of run agree
+    phase(s"online done (${store.writeVersion} writes)")
     val queries = if (traced) Spec.TracedQueries else spec.queries
+    Gen.writeBatchTables(spark, dataDir, seed, spec.orders,
+      queries.map(Batch.Queries(_).table).toSet)
+    phase("tables written")
+    val batch = new Batch(spark, dataDir, digest, errors)
+    // each of the workload's queries runs `passes` times and reports its
+    // median pass; a traced run also times once the queries plain runs
+    // skip, and charges Spark work to a query for its last pass only.
+    // Only the workload's own queries enter the digest, so plain and
+    // traced runs of one seed agree.
     val walls = queries.map { q =>
-      val digested = spec.queries.contains(q)
-      q -> errors.op(q)(trace.fold(batch.run(q, digested))(_.query(q)(batch.run(q, digested))))
-        .getOrElse(0.0)
+      val own = spec.queries.contains(q)
+      val passes = if (own) spec.passes else 1
+      q -> errors.op(q) {
+        val runs = (1 to passes).map { i =>
+          if (i == passes) trace.fold(batch.execute(q))(_.query(q)(batch.execute(q)))
+          else batch.execute(q)
+        }
+        batch.verify(q, runs.last._1, digested = own)
+        Stats.median(runs.map(_._2))
+      }.getOrElse(0.0)
     }
     val plainWalls = walls.filter { case (q, _) => spec.queries.contains(q) }
     phase("batch done")
@@ -222,15 +247,17 @@ final class Run(spark: SparkSession, spec: Spec, seed: Long, traced: Boolean, wo
       errors.failed, metrics)
   }
 
-  /** The first run of a seed records its digest; later runs of the same
-    * build and seed must reproduce it.
+  /** The first run of a seed without a failed operation records its
+    * digest; every later run of the seed must reproduce it.
     */
   private def checkDigest(file: String, hex: String): Boolean = {
     val p = Paths.get(file)
     if (Files.exists(p)) new String(Files.readAllBytes(p), UTF_8).trim == hex
     else {
-      Files.createDirectories(p.getParent)
-      Files.write(p, hex.getBytes(UTF_8))
+      if (errors.failed == 0) {
+        Files.createDirectories(p.getParent)
+        Files.write(p, hex.getBytes(UTF_8))
+      }
       true
     }
   }
@@ -259,24 +286,20 @@ object Stats {
 }
 
 object Json {
+  val mapper = new ObjectMapper()
+
   def metric(name: String, value: Double, unit: String): (String, (Double, String)) =
     name -> ((value, unit))
 
-  def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" else java.math.BigDecimal.valueOf(d).toPlainString
-
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def result(correct: Boolean, attempted: Int, failed: Int,
       metrics: Seq[(String, (Double, String))]): String = {
-    val ms = metrics.map { case (k, (v, u)) =>
-      s"${str(k)}: {${str("value")}: ${num(v)}, ${str("unit")}: ${str(u)}}"
-    }.mkString(", ")
-    s"""{"correct": $correct, "attempted": $attempted, "failed": $failed, "metrics": {$ms}}"""
+    val root = mapper.createObjectNode()
+      .put("correct", correct).put("attempted", attempted).put("failed", failed)
+    val ms = root.putObject("metrics")
+    metrics.foreach { case (k, (v, u)) =>
+      require(!v.isNaN && !v.isInfinite, s"metric $k is $v")
+      ms.putObject(k).put("value", v).put("unit", u)
+    }
+    mapper.writeValueAsString(root)
   }
 }

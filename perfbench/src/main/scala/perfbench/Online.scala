@@ -22,6 +22,17 @@ final case class UpdateReq(pick: Double, text: String, stale: Boolean) extends R
 }
 final case class DeleteReq(pick: Double, stale: Boolean) extends Req { def kind = "delete" }
 final case class IngestReq(texts: Seq[String]) extends Req { def kind = "ingest" }
+/** Sets the importance of an other-tenant row until `searches` more
+  * searches end on a store checkpoint: see [[Online.warmup]].
+  */
+final case class AlignReq(searches: Int) extends Req { def kind = "align" }
+
+/** A seeded store, the managers of its two tenants, and the client's
+  * view of the benchmark user's memories. `otherIds` are the second
+  * tenant's rows.
+  */
+final case class Session(store: GraphStore, m: MemoryManager, client: Client,
+    other: MemoryManager, otherIds: Seq[String])
 
 /** The client's view of its own memories: every id a call returned,
   * minus the ids it deleted.
@@ -78,17 +89,17 @@ final class Online(spark: SparkSession, spec: Spec, seed: Long, trace: Option[Tr
     * path on the empty store, then bulk rows for this user and for a
     * second tenant whose rows must never appear in this user's results.
     */
-  def setup(): (GraphStore, MemoryManager, Client) = {
+  def setup(): Session = {
     val store = new GraphStore(spark)
     val m = manager(store, User)
+    val other = manager(store, "u1")
     val client = new Client
     val res = m.addReconcileBatch(seedTexts, now = Some(Gen.T0 - 86400000L))
     client.learn(res.flatMap(_.events).flatMap(_.memoryId))
     if (bulkOwn.nonEmpty)
       client.learn(m.addBatch(bulkOwn, now = Some(Gen.T0 - 43200000L)))
-    if (bulkOther.nonEmpty)
-      manager(store, "u1").addBatch(bulkOther, now = Some(Gen.T0 - 43200000L))
-    (store, m, client)
+    val otherIds = other.addBatch(bulkOther, now = Some(Gen.T0 - 43200000L))
+    Session(store, m, client, other, otherIds)
   }
 
   private def search = SearchReq(Gen.queryText(rng, people))
@@ -98,68 +109,92 @@ final class Online(spark: SparkSession, spec: Spec, seed: Long, trace: Option[Tr
   private def delete(i: Int) = DeleteReq(rng.double(), i % 2 == 1)
   private def ingest = IngestReq(Seq.fill(spec.ingestSize)(Gen.memoryText(rng, people)))
 
-  /** Untimed warm-up: every request kind once. */
-  val warmup: Seq[Req] = Seq(search, add, update(0), delete(0))
+  /** Untimed warm-up: every write kind the script issues once, then two
+    * searches, so the JIT has seen every path and the script starts from
+    * warm memos. Every search bumps access counts, a store write, so
+    * search latency grows with the lineage since the store's last
+    * checkpoint (every [[Online.CheckpointEvery]] writes), and adds write
+    * a seed-dependent number of times. Between the searches, `AlignReq`
+    * brings the store to the point where the last warm-up search
+    * triggers a checkpoint, so every seed starts the script at the same
+    * point of that cycle. Its importance patches touch neither the text
+    * nor the graph version, so the memos stay warm.
+    */
+  val warmup: Seq[Req] = {
+    val writes = Seq(spec.adds -> (() => add), spec.updates -> (() => update(0)),
+      spec.deletes -> (() => delete(0)))
+    writes.collect { case (n, req) if n > 0 => req() } ++ Seq(search, AlignReq(1), search)
+  }
 
   /** The timed script, a fixed number of requests whose kinds come in the
     * same order for every seed; only texts and targets depend on it.
     */
-  val script: Seq[Req] = {
-    val reads = Seq.fill(spec.searches)(search)
-    val adds = Seq.fill(spec.adds)(add)
-    val updates = Seq.tabulate(spec.updates)(update)
-    val deletes = Seq.tabulate(spec.deletes)(delete)
-    val body =
-      if (spec.interleave) Online.interleave(Seq(reads, adds, updates, deletes))
-      else reads ++ Online.interleave(Seq(adds, updates, deletes))
-    body ++ Seq.fill(spec.ingests)(ingest)
-  }
+  val script: Seq[Req] = Online.interleave(Seq(
+    Seq.fill(spec.adds)(add), Seq.fill(spec.searches)(search),
+    Seq.tabulate(spec.updates)(update), Seq.tabulate(spec.deletes)(delete)))
+
+  /** Corpus refresh after the script: fixed-size reconcile batches. */
+  val refresh: Seq[Req] = Seq.fill(spec.ingests)(ingest)
 
   /** Runs one request, checks its response and folds it into the
     * digest.
     */
-  def run(m: MemoryManager, client: Client, req: Req, step: Int): Unit = req match {
-    case SearchReq(q) =>
-      val rs = m.search(q, k = 10, now = ms(step))
-      digest.add("search", rs.map(r => s"${r.memoryId}:${Digest.round6(r.score)}"))
-      errors.check(rs.size <= 10, s"search returned ${rs.size} > 10 results")
-      rs.foreach { r =>
-        errors.check(r.userId == User, s"result ${r.memoryId} of user ${r.userId}")
-        errors.check(r.expiredAt.isEmpty, s"result ${r.memoryId} is expired")
-        errors.check(client.knows(r.memoryId), s"result ${r.memoryId} is deleted or unknown")
-      }
-      if (!TemporalOps.detectTemporalHints(q).sortChronologically)
-        errors.check(rs.map(_.score).sliding(2).forall(p => p.size < 2 || p(0) >= p(1)),
-          s"scores not sorted for '$q'")
-    case AddReq(text) =>
-      val ev = m.add(text, now = ms(step)).events
-      count(ev)
-      digest.add("add", ev.map(e => s"${e.event}:${e.memoryId.getOrElse("")}"))
-      val ids = ev.flatMap(_.memoryId)
-      errors.check(ids.nonEmpty && ids.forall(!client.knows(_)), s"add returned ids $ids")
-      client.learn(ids)
-    case IngestReq(texts) =>
-      val res = m.addReconcileBatch(texts, now = ms(step))
-      val ev = res.flatMap(_.events)
-      count(ev)
-      digest.add("ingest", ev.map(e => s"${e.event}:${e.memoryId.getOrElse("")}"))
-      errors.check(res.size == texts.size && ev.nonEmpty, "ingest result not index-aligned")
-      client.learn(ev.flatMap(_.memoryId))
-    case UpdateReq(pick, text, stale) =>
-      val id = client.target(pick, stale)
-      val ok = m.update(id, text, now = ms(step))
-      digest.add("update", Seq(s"$id:$ok"))
-      errors.check(ok == client.knows(id), s"update($id) returned $ok")
-    case DeleteReq(pick, stale) =>
-      val id = client.target(pick, stale)
-      val ok = m.delete(id)
-      digest.add("delete", Seq(s"$id:$ok"))
-      errors.check(ok == client.knows(id), s"delete($id) returned $ok")
-      client.forget(id)
+  def run(session: Session, req: Req, step: Int): Unit = {
+    val Session(store, m, client, other, otherIds) = session
+    req match {
+      case AlignReq(searches) =>
+        val t0 = System.nanoTime()
+        val w0 = store.writeVersion
+        while ((store.writeVersion + searches) % Online.CheckpointEvery != 0) {
+          val ok = other.setImportance(otherIds.head, 0.5)
+          errors.check(ok, s"setImportance(${otherIds.head}) of the other tenant returned false")
+        }
+        System.err.println(f"align ${store.writeVersion - w0} pads ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      case SearchReq(q) =>
+        val rs = m.search(q, k = 10, now = ms(step))
+        digest.add("search", rs.map(r => s"${r.memoryId}:${Digest.round6(r.score)}"))
+        errors.check(rs.size <= 10, s"search returned ${rs.size} > 10 results")
+        rs.foreach { r =>
+          errors.check(r.userId == User, s"result ${r.memoryId} of user ${r.userId}")
+          errors.check(r.expiredAt.isEmpty, s"result ${r.memoryId} is expired")
+          errors.check(client.knows(r.memoryId), s"result ${r.memoryId} is deleted or unknown")
+        }
+        if (!TemporalOps.detectTemporalHints(q).sortChronologically)
+          errors.check(rs.map(_.score).sliding(2).forall(p => p.size < 2 || p(0) >= p(1)),
+            s"scores not sorted for '$q'")
+      case AddReq(text) =>
+        val ev = m.add(text, now = ms(step)).events
+        count(ev)
+        digest.add("add", ev.map(e => s"${e.event}:${e.memoryId.getOrElse("")}"))
+        val ids = ev.flatMap(_.memoryId)
+        errors.check(ids.nonEmpty && ids.forall(!client.knows(_)), s"add returned ids $ids")
+        client.learn(ids)
+      case IngestReq(texts) =>
+        val res = m.addReconcileBatch(texts, now = ms(step))
+        val ev = res.flatMap(_.events)
+        count(ev)
+        digest.add("ingest", ev.map(e => s"${e.event}:${e.memoryId.getOrElse("")}"))
+        errors.check(res.size == texts.size && ev.nonEmpty, "ingest result not index-aligned")
+        client.learn(ev.flatMap(_.memoryId))
+      case UpdateReq(pick, text, stale) =>
+        val id = client.target(pick, stale)
+        val ok = m.update(id, text, now = ms(step))
+        digest.add("update", Seq(s"$id:$ok"))
+        errors.check(ok == client.knows(id), s"update($id) returned $ok")
+      case DeleteReq(pick, stale) =>
+        val id = client.target(pick, stale)
+        val ok = m.delete(id)
+        digest.add("delete", Seq(s"$id:$ok"))
+        errors.check(ok == client.knows(id), s"delete($id) returned $ok")
+        client.forget(id)
+    }
   }
 }
 
 object Online {
+  /** Store-wide checkpoint cadence of `new GraphStore(spark)`. */
+  val CheckpointEvery = 16L
+
   /** Merges the lists so each is spread evenly over the result: the next
     * element comes from the list that is furthest behind its share.
     */

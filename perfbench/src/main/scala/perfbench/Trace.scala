@@ -1,8 +1,5 @@
 package perfbench
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
-
 import scala.collection.mutable
 
 import org.apache.spark.PerfbenchBus
@@ -34,18 +31,6 @@ final class Trace(spark: SparkSession) {
   /** The facade spans the benchmark reports. */
   val Spans: Seq[String] = Seq("memory.search", "memory.add", "memory.candidate_search",
     "memory.update", "memory.delete", "memory.add_reconcile_batch")
-
-  /** Store-wide checkpoint cadence of `new GraphStore(spark)`. */
-  private val CheckpointEvery = 16L
-
-  /** Catalog query → the ops function it exercises, for the detail file. */
-  private val QueryOps = Map(
-    "q_pagerank" -> "GraphAlgorithms.pageRank",
-    "q_betweenness_waves" -> "GraphAlgorithms.betweenness (wave path)",
-    "q_prep_pipeline" -> "DedupOps.exactDuplicates + ShardOps.packShards + TextFunctions gopher/lang kernels",
-    "q_dedup_clusters_dist" -> "DedupOps.simhashNearDupPairs + DedupOps.duplicateClusters",
-    "q_emb_neardup_lsh" -> "DedupOps.embeddingNearDupPairs (LSH bands)",
-    "q_ann_ivf_kmeans" -> "SimilarityOps.ivfIndexKMeans + SimilarityOps.ivfTopK")
 
   private var timedStartMs = Double.MaxValue
   private var lastSearch: Option[(Long, Long)] = None
@@ -80,7 +65,7 @@ final class Trace(spark: SparkSession) {
       lastSearch = Some((before.text, before.graph))
     }
     val after = store.writeVersion
-    val crossed = after / CheckpointEvery - before.write / CheckpointEvery
+    val crossed = after / Online.CheckpointEvery - before.write / Online.CheckpointEvery
     if (crossed > 0) { checkpoints += crossed; checkpointOpMs += ms }
     sample(store)
   }
@@ -193,29 +178,29 @@ final class Trace(spark: SparkSession) {
 
   private def writeDetail(path: String, calls: Map[String, Seq[Call]],
       perQuery: Seq[(String, Double, Work, Double)], lat: Map[String, Seq[Double]]): Unit = {
-    import Json.{num, str}
-    def arr(xs: Seq[String]) = xs.mkString("[", ", ", "]")
-    val spans = Spans.filter(calls.contains).map { sp =>
+    val root = Json.mapper.createObjectNode()
+    val spans = root.putObject("spans")
+    Spans.filter(calls.contains).foreach { sp =>
       val cs = calls(sp)
-      s"${str(sp)}: {${str("calls")}: ${cs.size}, " +
-        s"${str("jobs")}: ${arr(cs.map(_.jobs.toString))}, " +
-        s"${str("stages")}: ${arr(cs.map(_.stages.toString))}, " +
-        s"${str("tasks")}: ${arr(cs.map(_.tasks.toString))}, " +
-        s"${str("self_ms")}: ${arr(cs.map(c => num(c.selfMs)))}, " +
-        s"${str("driver_gap_ms")}: ${arr(cs.map(c => num(c.gapMs)))}}"
+      val o = spans.putObject(sp)
+      o.put("calls", cs.size)
+      cs.foreach { c =>
+        o.withArray("jobs").add(c.jobs)
+        o.withArray("stages").add(c.stages)
+        o.withArray("tasks").add(c.tasks)
+        o.withArray("self_ms").add(c.selfMs)
+        o.withArray("driver_gap_ms").add(c.gapMs)
+      }
     }
-    val queries = perQuery.map { case (q, wall, w, gap) =>
-      s"${str(q)}: {${str("ops")}: ${str(QueryOps.getOrElse(q, ""))}, " +
-        s"${str("wall_s")}: ${num(wall)}, ${str("jobs")}: ${w.jobs}, " +
-        s"${str("stages")}: ${w.stages}, ${str("tasks")}: ${w.tasks}, " +
-        s"${str("driver_gap_ms")}: ${num(gap)}, ${str("executor_cpu_ms")}: ${num(w.cpuMs)}, " +
-        s"${str("shuffle_write_bytes")}: ${w.shuffleWriteBytes}, " +
-        s"${str("spill_bytes")}: ${w.spillBytes}}"
+    val queries = root.putObject("queries")
+    perQuery.foreach { case (q, wall, w, gap) =>
+      queries.putObject(q).put("ops", Batch.Queries(q).ops).put("wall_s", wall)
+        .put("jobs", w.jobs).put("stages", w.stages).put("tasks", w.tasks)
+        .put("driver_gap_ms", gap).put("executor_cpu_ms", w.cpuMs)
+        .put("shuffle_write_bytes", w.shuffleWriteBytes).put("spill_bytes", w.spillBytes)
     }
-    val latency = lat.toSeq.map { case (k, v) => s"${str(k)}: ${arr(v.map(num))}" }
-    val json = s"{${str("spans")}: {${spans.mkString(", ")}}, " +
-      s"${str("queries")}: {${queries.mkString(", ")}}, " +
-      s"${str("latency_ms")}: {${latency.mkString(", ")}}}\n"
-    Files.write(Paths.get(path), json.getBytes(UTF_8))
+    val latency = root.putObject("latency_ms")
+    lat.foreach { case (k, v) => v.foreach(latency.withArray(k).add(_)) }
+    Json.mapper.writerWithDefaultPrettyPrinter().writeValue(new java.io.File(path), root)
   }
 }
