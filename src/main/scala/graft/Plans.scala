@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * With SPARK_GRAFT_PLANS_OUT=<dir> set, each query's formatted plan is
   * additionally written to <dir>/<name><SPARK_GRAFT_PLANS_SUFFIX>.txt
   * (suffix default "" — the r14 optimization round writes _before/_after
-  * pairs). Covers benchExtras too (the bench-only variants).
+  * pairs). Covers benchExtras and benchUntimed too (the bench-only
+  * variants).
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -27,7 +28,7 @@ object Plans {
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = sys.env.get("SPARK_GRAFT_PLANS_OUT")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "")
-    val all = SparkEntry.queries ++ SparkEntry.benchExtras
+    val all = SparkEntry.queries ++ SparkEntry.benchExtras ++ SparkEntry.benchUntimed
     names.foreach { n =>
       all.get(n).foreach { fn =>
         println(s"\n========== $n ==========")

@@ -74,8 +74,7 @@ object SparkEntry {
     // (SampleQueries.kCenterRecomputeBench) is deliberately NOT a
     // per-round row — it reads ~193 s at ANY sf (planning-dominated:
     // step i's projection carries i literal-centroid kernels), which is
-    // the crossover finding itself. One-off sweep recorded in BASELINE
-    // (graft.tools.KCenterSweep).
+    // the crossover finding itself (the one-off sweep is BASELINE §19).
     "q_sample_kcenter_carry" -> (SampleQueries.kCenterCarryBench _),
     // no-split histogram best-fit packing; spec-gated (independent
     // doc-by-doc simulator equality) — the solver is a data-dependent

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 import graft.core.{GraphStore, MemoryTypes}
 import graft.ext._
-import graft.ops.FilterOps
 
 /** CLI entry point over the engine (reference cli.py:16-341):
   * add / search / list / update / delete / history / summarize / stats /

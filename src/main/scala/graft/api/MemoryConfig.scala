@@ -43,7 +43,7 @@ final case class MemoryConfig(
     betweennessSampleRoots: Int = 256,
     // modularity refinement over the LPA partition (the reference runs
     // Louvain here, manager.py:1633-1642). DEFAULT ON at the measured
-    // knee (16 rounds, mod-4 — CommunityDefaultStudy, BASELINE §7b):
+    // knee (16 rounds, mod-4 — BASELINE §7b):
     // on manager-style graphs the refined partition reproduces
     // sequential Louvain's modularity AND its materialized ≥2-member
     // entity sets exactly on the multi-session and shared-hub families
@@ -58,7 +58,7 @@ final case class MemoryConfig(
     // reference's sequential Louvain on the driver (bounded collect,
     // the betweennessExactMaxNodes pattern): small-tenant lifecycles
     // match grafeo-memory exactly, and the synchronous refinement's
-    // tiny-graph swap-oscillation (CommunityDefaultStudy) is moot.
+    // tiny-graph swap-oscillation (BASELINE §7b) is moot.
     // Above it, the distributed LPA + refineCommunities pair runs.
     communityExactMaxNodes: Long = 4096L,
     // push the tenant scope into BOTH hybrid candidate legs instead of

@@ -572,7 +572,7 @@ final class MemoryManager(
   private def candidateSearch(
       facts: Seq[String],
       embeddings: Seq[Array[Float]],
-      memoryType: String = MemoryTypes.Semantic
+      memoryType: String
   ): Seq[(Long, String)] =
     // flatten is fact-major / rank-minor, so first-fact-wins dedup over
     // the per-fact rows reproduces the original flat contract exactly
@@ -587,7 +587,7 @@ final class MemoryManager(
   private def candidateRowsPerFact(
       facts: Seq[String],
       embeddings: Seq[Array[Float]],
-      memoryType: String = MemoryTypes.Semantic
+      memoryType: String
   ): Seq[Seq[(Long, String)]] = tracer.span("memory.candidate_search",
       Map("facts" -> facts.size.toString)) {
     // non-semantic adds reconcile only against their own type
@@ -658,8 +658,8 @@ final class MemoryManager(
       actorId: Option[String],
       role: Option[String],
       metadata: Option[String],
-      importance: Double = 1.0,
-      knownTexts: Map[Long, String] = Map.empty // candidate texts already collected
+      importance: Double,
+      knownTexts: Map[Long, String] // candidate texts already collected
   ): Seq[MemoryEvent] = {
     val events = scala.collection.mutable.ArrayBuffer.empty[MemoryEvent]
     decisions.zipWithIndex.foreach { case (d, i) =>
@@ -722,7 +722,7 @@ final class MemoryManager(
       role: Option[String],
       metadata: Option[String],
       validAt: Option[Long],
-      importance: Double = 1.0
+      importance: Double
   ): MemoryRow =
     MemoryRow(
       id = id, text = text, user_id = config.userId,
@@ -766,7 +766,7 @@ final class MemoryManager(
     * (manager.py:1130-1151). Returns the old text.
     */
   private def expireMemory(id: Long, ts: Long, invalidAt: Option[Long],
-      knownText: Option[String] = None): Option[String] = {
+      knownText: Option[String]): Option[String] = {
     // the reconcile path already collected the target's text during
     // candidate search — skip the per-add existence probe when the
     // caller can vouch for it (per-user lock rules out a concurrent
@@ -966,7 +966,6 @@ final class MemoryManager(
             (coalesce(col("run_id"), col("session_id")) === key))
           .orderBy(col("created_at").desc, col("id").desc)
           .select(col("id")).collect().headOption.map(_.getLong(0))
-        val chain = prev.toSeq ++ newIds
         // sequence numbering mirrors manager.py:1211-1221: prev→new[0]
         // is 0; new[i]→new[i+1] is ALWAYS i+1 (even without a prev)
         val prevEdge = prev.map(p =>
@@ -991,8 +990,6 @@ final class MemoryManager(
   // per-label id spaces → global node keys for cross-label graph algos
   private val MemC = 0L; private val EntC = 1L; private val EpiC = 2L
   private val ComC = 3L; private val HisC = 4L
-  private def gkey(idCol: org.apache.spark.sql.Column, code: Long) =
-    idCol * 8L + code
 
   /** Edges with label-space-disambiguated endpoints. */
   private[graft] def globalEdges: DataFrame = {
@@ -1217,7 +1214,7 @@ final class MemoryManager(
 
   /** G3 partition for the manager graph (the reference runs Louvain at
     * this exact point, manager.py:1633-1642). Two physical plans by
-    * graph size, measured in CommunityDefaultStudy / BASELINE §7b:
+    * graph size, measured in BASELINE §7b:
     * at or below `communityExactMaxNodes` the reference's own
     * sequential Louvain runs on the driver (bounded collect — exact
     * lifecycle fidelity for small tenants, and immune to the

@@ -14,7 +14,6 @@ object TextQueries {
 
   private[catalog] val BpeMergeCount = 12
 
-  private val punctClassScala = "[^.,;:!?'\"()\\[\\]{}-]"
   private val punctClassSql = """[^.,;:!?''"()\[\]{}-]""" // '' = SQL-escaped quote
 
   /** Banded simhash pair graph, computed once per sf dir — shared by

@@ -2,7 +2,7 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** DataFrame-backed labeled-property-graph store (SURVEY §1, S1-S9).

@@ -142,10 +142,6 @@ object HashFunctions {
       GraftSqlShim.expression(text), bits))
   }
 
-  /** Hamming distance between two simhash longs. */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** Jaccard similarity of two shingle arrays. Inputs must be DISTINCT
     * (every producer in this module emits array_distinct output), so
     * |A∪B| = |A|+|B|−|A∩B| — this skips materializing the union array

@@ -76,12 +76,4 @@ object VectorFunctions {
     if (qNorm == 0.0) lit(0.0)
     else cosineSimilarity(emb, array(q.map(lit): _*))
   }
-
-  /** Squared L2 distance (for LSH bucketing / diagnostics). */
-  def l2DistanceSq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0),
-      (acc, x) => acc + x
-    )
 }

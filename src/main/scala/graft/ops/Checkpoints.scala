@@ -49,10 +49,11 @@ private[graft] object Checkpoints {
 
   /** Bounded Observation read (ADVICE r14). `Observation.get` blocks
     * forever if the metrics row is never delivered, and
-    * observe-metrics-on-eager-localCheckpoint is validated empirically
-    * on Spark 4.1 (graft.tools.ObserveProbe) — a Spark upgrade that
-    * re-routes Dataset.checkpoint's action must degrade every iterative
-    * loop to its pre-r14 direct-aggregation probe, not hang it. Awaits
+    * observe-metrics-on-eager-localCheckpoint is a Spark behaviour, not
+    * an API contract (the AlgoSpec "Checkpoints.observedOr" test fails
+    * if it stops holding) — a Spark upgrade that re-routes
+    * Dataset.checkpoint's action must degrade every iterative loop to
+    * its pre-r14 direct-aggregation probe, not hang it. Awaits
     * the observation's public metrics future up to `timeoutMs`; on a
     * healthy session the metrics land with the action and the deadline
     * is never approached. `fallback` recomputes the same exact metrics

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,7 +46,7 @@ object GraphAlgorithms {
     *
     * Convergence vs the reference's run-to-tolerance (1e-6, ≤100
     * iterations — protocol.py:38-40), measured on the sf0.1
-    * contains-graph (QProfile, BASELINE §7c): max |Δrank| = 2.4e-2 at
+    * contains-graph (BASELINE §7c): max |Δrank| = 2.4e-2 at
     * the default 20 iterations, decaying ×0.164 per 10 iterations —
     * callers needing reference-tolerance ranks pass iters ≈ 80; the
     * default stays 20 because the ORDERING the engine consumes (top-k,
@@ -56,47 +56,13 @@ object GraphAlgorithms {
     * Scale shape: outdeg is folded into the checkpointed edge table once
     * (src, dst, outdeg), partitioned by src; ranks stay partitioned by
     * node, so each iteration is exactly ONE shuffle (the dst-keyed
-    * contribution sum). Lineage is cut every 2 iterations — eager
+    * contribution sum). Lineage is cut every 4 iterations — eager
     * materialization every wave costs more than it saves at local[32].
     */
-  def pageRank(edges: DataFrame, iters: Int = 20, damping: Double = 0.85): DataFrame = {
-    val p = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e0 = edges.select(col("src"), col("dst")).distinct()
-    val outdeg = e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val (e, releaseE) = Checkpoints.withRelease(
-      e0.join(outdeg, "src").repartition(col("src")))
-    val (nodes, releaseNodes) = Checkpoints.withRelease(
-      e0.select(col("src").as("node"))
-        .unionByName(e0.select(col("dst").as("node")))
-        .distinct()
-        .repartition(col("node")))
-    var ranks = nodes.withColumn("rank", lit(1.0))
-    var releaseLast: () => Unit = null
-    for (i <- 1 to iters) {
-      // shuffle_hash: both sides are already hash-partitioned on the key,
-      // so SMJ's only extra work would be the per-iteration re-sort —
-      // hash build over the (smaller) rank table skips it
-      val contribs = e
-        .join(ranks.hint("shuffle_hash"), e("src") === ranks("node"))
-        .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
-        .groupBy(col("node"))
-        .agg(sum(col("c")).as("in_sum"))
-      val next = nodes
-        .join(contribs.hint("shuffle_hash"), Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-      if (i % 4 == 0 || i == iters) {
-        val (ck, rel) = Checkpoints.withRelease(next)
-        if (releaseLast != null) releaseLast()
-        releaseLast = rel
-        ranks = ck
-      } else ranks = next
-    }
-    // the final iteration checkpointed `ranks`, so the static tables'
-    // blocks are no longer reachable from the returned plan
-    if (iters >= 1) { releaseE(); releaseNodes() }
-    ranks.select(col("node"), col("rank").as("pagerank"))
-  }
+  def pageRank(edges: DataFrame, iters: Int = 20, damping: Double = 0.85): DataFrame =
+    // reset ≡ 1: (1−d)·1.0 constant-folds, so the plan is the classic one
+    rankLoop(edges, lit(1.0), iters, damping)
+      .select(col("node"), col("rank").as("pagerank"))
 
   /** Personalized PageRank: [[pageRank]] with the teleport mass
     * concentrated on a source set instead of spread uniformly —
@@ -108,11 +74,9 @@ object GraphAlgorithms {
     * as in the base formulation, and the fixed iteration count keeps
     * the result engine-replayable.
     *
-    * Scale shape: identical to [[pageRank]] — one dst-keyed
-    * contribution shuffle per iteration over the co-partitioned
-    * checkpointed edge table; the reset column is a broadcast-free
-    * per-row expression (the source set is a literal IN list, contract:
-    * driver-small).
+    * Scale shape: identical to [[pageRank]]; the reset column is a
+    * broadcast-free per-row expression (the source set is a literal IN
+    * list, contract: driver-small).
     *
     * Output: (node, ppr) for every node of the graph.
     */
@@ -122,6 +86,18 @@ object GraphAlgorithms {
       iters: Int = 20,
       damping: Double = 0.85): DataFrame = {
     require(sources.nonEmpty, "sources must be non-empty")
+    val reset = when(col("node").isin(sources: _*),
+      lit(1.0 / sources.size)).otherwise(lit(0.0))
+    rankLoop(edges, reset, iters, damping)
+      .select(col("node"), col("rank").as("ppr"))
+  }
+
+  /** The damped power iteration both PageRank faces share:
+    * rank⁰ = reset; rankᵗ⁺¹ = (1−d)·reset + d·Σ rankᵗ(u)/outdeg(u).
+    * `reset` is a per-row expression over `node`. Output: (node, rank).
+    */
+  private def rankLoop(edges: DataFrame, reset: Column, iters: Int,
+      damping: Double): DataFrame = {
     val e0 = edges.select(col("src"), col("dst")).distinct()
     val outdeg = e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val (e, releaseE) = Checkpoints.withRelease(
@@ -131,11 +107,12 @@ object GraphAlgorithms {
         .unionByName(e0.select(col("dst").as("node")))
         .distinct()
         .repartition(col("node")))
-    val reset = when(col("node").isin(sources: _*),
-      lit(1.0 / sources.size)).otherwise(lit(0.0))
     var ranks = nodes.withColumn("rank", reset)
     var releaseLast: () => Unit = null
     for (i <- 1 to iters) {
+      // shuffle_hash: both sides are already hash-partitioned on the key,
+      // so SMJ's only extra work would be the per-iteration re-sort —
+      // hash build over the (smaller) rank table skips it
       val contribs = e
         .join(ranks.hint("shuffle_hash"), e("src") === ranks("node"))
         .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
@@ -153,8 +130,10 @@ object GraphAlgorithms {
         ranks = ck
       } else ranks = next
     }
+    // the final iteration checkpointed `ranks`, so the static tables'
+    // blocks are no longer reachable from the returned plan
     if (iters >= 1) { releaseE(); releaseNodes() }
-    ranks.select(col("node"), col("rank").as("ppr"))
+    ranks
   }
 
   /** G2 — exact betweenness centrality (Brandes). Two physical plans,
@@ -396,23 +375,7 @@ object GraphAlgorithms {
     * ((node,label) count → max_by) that partially aggregates map-side —
     * no per-round sort-window and no re-shuffle of the edge table.
     */
-  /** `combineAggregation`: false (default, the measured winner at both
-    * uniform and 10%-hub skew — LpaSkewBench series in BASELINE) =
-    * single-exchange rounds via the repartition(node) layout below;
-    * true = two-exchange rounds whose first aggregation hash-partitions
-    * on (node,label) and so map-side combines a hub's repeated incoming
-    * labels before the shuffle. The combine layout lost 5-24% on
-    * local[32]'s in-memory shuffle, but caps the hub reducer's input at
-    * (#maps × #distinct labels) instead of the hub degree — on a
-    * network-shuffle cluster where one reducer streaming a 10^8-degree
-    * hub is the bottleneck, pass true.
-    */
-  def labelPropagation(
-      edges: DataFrame,
-      rounds: Int = 5,
-      combineAggregation: Boolean = false
-  ): DataFrame = {
-    val p = edges.sparkSession.sessionState.conf.numShufflePartitions
+  def labelPropagation(edges: DataFrame, rounds: Int = 5): DataFrame = {
     // max_by over (cnt, -label) needs numeric negation; non-numeric node
     // ids (the API accepts any orderable type) use the row_number window
     // instead — same argmax, one extra sort per round
@@ -429,31 +392,22 @@ object GraphAlgorithms {
     val (nodes, releaseNodes) = Checkpoints.withRelease(
       und.select(col("src").as("node")).distinct()
         .repartition(col("node")))
-    val combine = combineAggregation
     var labels = nodes.withColumn("label", col("node"))
     var releaseLast: () => Unit = null
     for (i <- 1 to rounds) {
       // most-frequent neighbor label, smallest label on ties: count per
-      // (node,label), then max_by over a (cnt, -label) total order.
-      // Two layouts for the count (identical results, AlgoSpec):
-      //  - single-exchange (uniform graphs): the explicit
-      //    repartition(node) satisfies ClusteredDistribution for BOTH
-      //    aggregation levels (and the non-numeric window), where the
-      //    default hash(node,label) shuffle forced a second node-keyed
-      //    exchange for the argmax — measured 30% faster per round at
-      //    sf0.1. Trade-off: the raw (node,label) rows shuffle
-      //    uncombined.
-      //  - combine (opt-in): hash(node,label) partial aggregation
-      //    map-side combines a hub's repeated labels before the shuffle,
-      //    then a second node-keyed exchange runs the argmax. Measured
-      //    5-24% SLOWER here even with a 10%-of-edges hub (local[32]
-      //    shuffles are in-memory, so the hub reducer is not the
-      //    bottleneck it becomes on a network-shuffle cluster); see
-      //    BASELINE's LpaSkewBench series.
+      // (node,label), then max_by over a (cnt, -label) total order. The
+      // explicit repartition(node) satisfies ClusteredDistribution for
+      // BOTH aggregation levels (and the non-numeric window), where the
+      // default hash(node,label) shuffle forced a second node-keyed
+      // exchange for the argmax — measured 30% faster per round at
+      // sf0.1. The raw (node,label) rows shuffle uncombined; the
+      // map-side-combine layout measured 1.05–1.24× slower even with a
+      // 10%-of-edges hub (BASELINE §7).
       val gathered = und
         .join(labels.hint("shuffle_hash"), und("dst") === labels("node"))
         .select(und("src").as("node"), col("label"))
-      val counted = (if (combine) gathered else gathered.repartition(col("node")))
+      val counted = gathered.repartition(col("node"))
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       val next =
@@ -535,7 +489,7 @@ object GraphAlgorithms {
     * a strict majority of nodes is burst to singletons first — local
     * moving cannot split, so a label-flooded seed (LPA on a hub graph)
     * would be a Q=0 fixpoint. Measured on manager-style entity graphs
-    * (CommunityDefaultStudy, BASELINE §7b): the burst is what lets the
+    * (BASELINE §7b): the burst is what lets the
     * refinement reproduce sequential Louvain's partition on hub-flooded
     * seeds (Q 0.20 → 0.60, Louvain-identical entity sets at 16 rounds),
     * and it does NOT shatter well-clustered seeds — no majority
@@ -705,7 +659,7 @@ object GraphAlgorithms {
     * driver-bounded algorithm paths: the caller gates it by node count
     * (MemoryConfig.communityExactMaxNodes) and the distributed
     * [[labelPropagation]] + [[refineCommunities]] pair takes over
-    * above the bound. Why it exists (CommunityDefaultStudy): the
+    * above the bound. Why it exists (BASELINE §7b): the
     * synchronous residue-scheduled local moving can SWAP-OSCILLATE on
     * tiny graphs when two adjacent nodes share a residue class (the
     * 4-node memory/entity/history star a single `add` builds never
@@ -1069,26 +1023,7 @@ object GraphAlgorithms {
     * where component = the minimum node id in the node's component
     * (deterministic, engine-independent).
     */
-  /** `fuse` = contraction rounds per fixpoint FINGERPRINT (wave
-    * fusion, VERDICT r11 #7): each round still checkpoints — a
-    * large/small-star plan references its input ~a dozen times, so a
-    * lazily-chained double round re-optimizes and re-executes the
-    * unmaterialized intermediate combinatorially (measured: the lazy
-    * variant blew AlgoSpec up from minutes to unbounded) — but the
-    * fingerprint agg runs once per `fuse` rounds, trimming the
-    * dispatch-bound driver loop's job count. Oracle-neutral at any
-    * value: the star-contraction fixpoint is idempotent, so the at most
-    * `fuse−1` extra rounds after convergence change nothing (AlgoSpec
-    * asserts fuse 1 == 2 == 3). MEASURED A LOSS at local[32] (BASELINE
-    * §25 wave-fusion note: fuse=2 read 96 jobs / 7.96 s vs 82 / 5.0 —
-    * AQE emits a job per query stage, so bigger fused plans ADD jobs
-    * and recompute instead of saving dispatch); default stays 1, the
-    * knob remains for multi-executor clusters where a driver round-trip
-    * costs more than a stage.
-    */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
-      fuse: Int = 1): DataFrame = {
-    require(fuse >= 1, "fuse must be >= 1")
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     val und = canonicalEdges(edges)
     val nodes0 = und.select(col("a").as("node")).unionAll(
         und.select(col("b").as("node")))
@@ -1116,7 +1051,7 @@ object GraphAlgorithms {
         .unionAll(m.select(col("m").as("a"), col("u").as("b")))
         .filter(col("a") =!= col("b")).distinct()
     }
-    // fingerprint rides the group's checkpoint job as OBSERVED metrics
+    // fingerprint rides the round's checkpoint job as OBSERVED metrics
     // (r14) — previously a separate agg action per round over the
     // just-written blocks. hash-sum in decimal(38,0): order-free and
     // overflow-free (the long sum would trip ANSI overflow on a
@@ -1145,32 +1080,19 @@ object GraphAlgorithms {
     var rounds = 0
     var converged = fp._1 == 0L
     while (!converged && rounds < maxRounds) {
-      // each round materializes (the star plans re-reference their
-      // input heavily); only the LAST checkpoint of the group survives,
-      // and the group shares one fingerprint
-      var groupRels = List.empty[() => Unit]
-      var stepped = cur
-      var r = 0
-      var obsG: org.apache.spark.sql.Observation = null
-      while (r < fuse) {
-        val step = smallStar(largeStar(stepped))
-        val wrapped =
-          if (r == fuse - 1) {
-            obsG = new org.apache.spark.sql.Observation()
-            observed(step, obsG)
-          } else step
-        val (n, rel) = Checkpoints.withRelease(wrapped)
-        stepped = n
-        groupRels = rel :: groupRels
-        r += 1
-      }
-      val nfp = fpOf(obsG, stepped)
+      // each round materializes: a large/small-star plan references its
+      // input ~a dozen times, so lazily chained rounds would re-execute
+      // the unmaterialized intermediate combinatorially (BASELINE §22
+      // wave-fusion note)
+      val obs = new org.apache.spark.sql.Observation()
+      val (next, rel) = Checkpoints.withRelease(
+        observed(smallStar(largeStar(cur)), obs))
+      val nfp = fpOf(obs, next)
       release()
-      groupRels.tail.foreach(_.apply()) // intermediates of this group
-      cur = stepped; release = groupRels.head
+      cur = next; release = rel
       converged = nfp == fp
       fp = nfp
-      rounds += fuse
+      rounds += 1
     }
     lastCcRounds = rounds
     // fixpoint edge set is a star per component: (min, other). Components
@@ -1199,24 +1121,8 @@ object GraphAlgorithms {
     * Output: (node, core_degree) for the k-core's nodes, where
     * core_degree is the node's degree WITHIN the core.
     */
-  /** `fuse` = peel rounds per materialized action (wave fusion,
-    * VERDICT r11 #7): each round's dropped-node set still checkpoints
-    * (it is referenced by two anti-joins and AQE-broadcast), but the
-    * surviving edge set materializes once per fused group and the
-    * fixpoint test collapses to one count compare — edges strictly
-    * decrease iff any node dropped, since every peeled node had
-    * degree ≥ 1. Oracle-neutral at any value (the k-core is unique and
-    * peeling order is irrelevant; extra post-fixpoint rounds drop
-    * nothing). MEASURED A LOSS at local[32] (BASELINE §25 wave-fusion
-    * note: fuse=2 read 140 jobs / 6.6 s vs 115 / 4.2 — the lazy peel
-    * chain re-executes the previous round's anti-join inside both the
-    * next dropped-set build and the group materialization, and AQE's
-    * per-stage jobs erase the dispatch saving); default stays 1.
-    */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 100,
-      fuse: Int = 1): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    require(fuse >= 1, "fuse must be >= 1")
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -1224,51 +1130,25 @@ object GraphAlgorithms {
     var (cur, release) = Checkpoints.withRelease(canonicalEdges(edges))
     var rounds = 0
     var done = false
-    if (fuse == 1) {
-      // the measured-fastest shape at local[32]: per round one dropped-set
-      // checkpoint (whose emptiness probe rides the checkpoint job as an
-      // observed metric, r14 — previously a separate per-round action)
-      // and one survivor checkpoint — no edge counts anywhere
-      while (!done && rounds < maxRounds) {
-        val obs = new org.apache.spark.sql.Observation()
-        val bad = degrees(cur).filter(col("degree") < k)
-          .select(col("node"))
-          .observe(obs, count(lit(1)).as("n")).localCheckpoint()
-        if (Checkpoints.observedLong(obs, "n")(bad.count()) == 0L) done = true
-        else {
-          val (next, nextRelease) = Checkpoints.withRelease(
-            cur.join(bad.select(col("node").as("a")), Seq("a"), "left_anti")
-              .join(bad.select(col("node").as("b")), Seq("b"), "left_anti")
-              .select(col("a"), col("b")))
-          release(); cur = next; release = nextRelease
-          rounds += 1
-        }
-        Checkpoints.release(bad)
-      }
-    } else {
-      var curEdges = cur.count()
-      done = curEdges == 0L
-      while (!done && rounds < maxRounds) {
-        val bads = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        var nxt = cur
-        var r = 0
-        while (r < fuse) {
-          val bad = degrees(nxt).filter(col("degree") < k)
-            .select(col("node")).localCheckpoint()
-          bads += bad
-          nxt = nxt.join(bad.select(col("node").as("a")), Seq("a"), "left_anti")
+    // per round one dropped-set checkpoint (whose emptiness probe rides
+    // the checkpoint job as an observed metric) and one survivor
+    // checkpoint — no edge counts anywhere. Fusing peel rounds into one
+    // lazy action measured slower (BASELINE §22 wave-fusion note).
+    while (!done && rounds < maxRounds) {
+      val obs = new org.apache.spark.sql.Observation()
+      val bad = degrees(cur).filter(col("degree") < k)
+        .select(col("node"))
+        .observe(obs, count(lit(1)).as("n")).localCheckpoint()
+      if (Checkpoints.observedLong(obs, "n")(bad.count()) == 0L) done = true
+      else {
+        val (next, nextRelease) = Checkpoints.withRelease(
+          cur.join(bad.select(col("node").as("a")), Seq("a"), "left_anti")
             .join(bad.select(col("node").as("b")), Seq("b"), "left_anti")
-            .select(col("a"), col("b"))
-          r += 1
-        }
-        val (next, nextRelease) = Checkpoints.withRelease(nxt)
-        val nextEdges = next.count()
-        bads.foreach(Checkpoints.release)
+            .select(col("a"), col("b")))
         release(); cur = next; release = nextRelease
-        done = nextEdges == curEdges
-        curEdges = nextEdges
-        rounds += fuse
+        rounds += 1
       }
+      Checkpoints.release(bad)
     }
     lastKCoreRounds = rounds
     degrees(cur)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -134,8 +134,6 @@ object QuantileOps {
     require(accuracy > 0, "accuracy must be positive")
     require(percentiles.values.forall(p => p > 0 && p <= 100),
       "percentiles must be integer percents in (0, 100]")
-    val spark = df.sparkSession
-    import spark.implicits._
     val df0 = df.filter(col(valueCol).isNotNull)
     val v = col(valueCol).cast("long")
     val pcts = percentiles.toSeq.sortBy(_._2)

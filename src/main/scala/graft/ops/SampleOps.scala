@@ -173,7 +173,7 @@ object SampleOps {
     *
     * Batched selection on the carry path (r15, VERDICT r14 #8): the
     * loop's floor is the per-ACTION cost (~30-75 ms SQL layer,
-    * LoopOverheadProbe), so each scan now collects the top
+    * OPTIMIZATION_r14), so each scan now collects the top
     * `selectBatch` frontier rows (same (d desc, id) order) and the
     * driver greedily accepts within the batch using a bit-identical
     * replica of the d² kernel (DotProduct accumulates left-to-right in

@@ -16,25 +16,9 @@ object ScoringOps {
     exp(lit(-ratePerDay) * ageDays)
   }
 
-  /** Structural-decay variant: decay rate halved by reinforcement,
-    * rate · (1 − 0.5·reinforcement) (reference scoring.py:391-403).
-    */
-  def modulatedRecencyScore(
-      createdAtMs: Column,
-      nowMs: Long,
-      ratePerDay: Double,
-      reinforcement: Column
-  ): Column = {
-    val ageDays = (lit(nowMs) - createdAtMs).cast("double") / lit(86400000.0)
-    exp(lit(-ratePerDay) * (lit(1.0) - lit(0.5) * reinforcement) * ageDays)
-  }
-
   /** Frequency: min(1, log(1+n)/log(101)) (reference scoring.py:406-411). */
   def frequencyScore(accessCount: Column): Column =
     least(lit(1.0), log(lit(1.0) + accessCount.cast("double")) / log(lit(101.0)))
-
-  /** Clamp to [0,1] (reference scoring.py:95-99). */
-  def clamp01(c: Column): Column = greatest(lit(0.0), least(lit(1.0), c))
 
   /** R5 — composite importance score:
     * wSim·sim + wRec·recency + wFreq·freq + wImp·importance + wTopo·topo.

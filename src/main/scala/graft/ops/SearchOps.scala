@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -55,7 +55,6 @@ object SearchOps {
       b: Double = 0.75
   ): DataFrame = {
     import graft.functions.TextFunctions.tokens
-    val spark = docs.sparkSession
 
     val docTokens = docs
       .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))

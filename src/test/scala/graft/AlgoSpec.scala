@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.api._
 import graft.core._
 import graft.ext._
-import graft.ops.GraphAlgorithms
+import graft.ops.{Checkpoints, GraphAlgorithms}
 
 /** Known-value checks for the whole-graph algorithms (G1-G4). */
 class AlgoSpec extends SparkSuite {
@@ -118,21 +118,6 @@ class AlgoSpec extends SparkSuite {
     val m = GraphAlgorithms.modularity(e,
       GraphAlgorithms.labelPropagation(e, rounds = 5)).collect().head.getDouble(0)
     assert(m > 0.2) // clearly-clustered graph has positive modularity
-  }
-
-  test("labelPropagation: combine and single-exchange layouts agree") {
-    // hub-ish fixture: two cliques + a node 0 linked to everything, so
-    // the two count layouts see real label multiplicity
-    val base = Seq(1L -> 2L, 2L -> 3L, 1L -> 3L, 4L -> 5L, 5L -> 6L, 4L -> 6L)
-    val hub = (1L to 6L).map(0L -> _)
-    val e = edges((base ++ hub): _*)
-    val single = GraphAlgorithms.labelPropagation(e, rounds = 4,
-      combineAggregation = false).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val combine = GraphAlgorithms.labelPropagation(e, rounds = 4,
-      combineAggregation = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(single == combine)
   }
 
   test("refineCommunities: singleton seed resolves the two triangles") {
@@ -581,14 +566,22 @@ class AlgoSpec extends SparkSuite {
 
     assert(GraphAlgorithms.connectedComponents(
       Seq.empty[(Long, Long)].toDF("src", "dst")).isEmpty)
+  }
 
-    // wave fusion is result-neutral: unfused (fuse=1) and deeper fusion
-    // (fuse=3) equal the default on the path graph
-    val cc1 = GraphAlgorithms.connectedComponents(path, fuse = 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cc3 = GraphAlgorithms.connectedComponents(path, fuse = 3).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc1 == ccPath.toMap && cc3 == ccPath.toMap)
+  test("Checkpoints.observedOr: observe metrics arrive from an eager localCheckpoint") {
+    // every iterative loop reads its per-round convergence probe this
+    // way; if a Spark upgrade stops delivering the metrics, each round
+    // would silently wait out the timeout and recompute via the fallback
+    val base = spark.range(0L, 20000L, 1, 4)
+      .select(col("id"), (col("id") % 7).as("moved"))
+    val obs = new org.apache.spark.sql.Observation()
+    val ck = base.observe(obs, count(lit(1)).as("n"), sum(col("moved")).as("m"))
+      .localCheckpoint()
+    var fallbackCalled = false
+    val got = Checkpoints.observedOr(obs) { fallbackCalled = true; Map.empty }
+    assert(!fallbackCalled, "observed metrics did not arrive with the checkpoint")
+    val want = ck.agg(count(lit(1)), sum(col("moved"))).head()
+    assert(got("n") == want.getLong(0) && got("m") == want.getLong(1), got)
   }
 
   test("kCore: peel cascade, empty core, k=1 identity") {
@@ -600,15 +593,6 @@ class AlgoSpec extends SparkSuite {
     val core3 = GraphAlgorithms.kCore(e, 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core3 == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
-
-    // wave fusion is result-neutral — the cascade (6 peels in round 1,
-    // 5 in round 2) lands in ONE fused action at fuse=2 and must still
-    // equal the unfused peel
-    val core3f1 = GraphAlgorithms.kCore(e, 3, fuse = 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val core3f3 = GraphAlgorithms.kCore(e, 3, fuse = 3).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(core3f1 == core3 && core3f3 == core3)
 
     // k=4: the K4's nodes all have in-core degree 3 < 4 — empty core
     assert(GraphAlgorithms.kCore(e, 4).isEmpty)

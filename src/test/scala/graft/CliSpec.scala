@@ -19,6 +19,28 @@ class CliSpec extends SparkSuite {
       clock = () => { tick += 1; T0 + tick * 1000 })
   }
 
+  /** BASELINE §7b's single-pool family, built through the real add
+    * pipeline: eight memories over one richly connected 5-entity pool,
+    * each naming three consecutive pool entities chained by relations.
+    */
+  private def singlePoolManager(config: MemoryConfig): MemoryManager = {
+    val pool = (0 until 5).map(i => s"s0_e$i")
+    val adds = (0 until 8).map { j =>
+      val picked = (0 until 3).map(o => pool((j + o) % pool.size))
+      Extraction(
+        facts = Seq(s"fact s0 m$j"),
+        entities = picked.map(e => ExtractedEntity(e, "thing")),
+        relations = picked.sliding(2).map(p =>
+          ExtractedRelation(p(0), p(1), "related_to")).toSeq)
+    }
+    var tick = 0L
+    val m = new MemoryManager(spark, config, new GraphStore(spark),
+      new MockEmbedder(16), new ScriptedExtractor(adds), new AddAllReconciler,
+      clock = () => { tick += 1; T0 + tick * 1000 })
+    adds.indices.foreach(i => m.add(s"study doc $i", now = Some(T0 + i * 1000L)))
+    m
+  }
+
   test("add / search / list round-trip with JSON output") {
     val m = mkManager()
     val addOut = Cli.run(Seq("add", "Alice works at Acme", "--no-infer"), m)
@@ -90,19 +112,18 @@ class CliSpec extends SparkSuite {
   }
 
   test("stats surfaces the CONFIGURED community partition, not raw LPA") {
-    // the study's single-pool family is the discriminator: Louvain-grade
+    // the single-pool family is the discriminator: Louvain-grade
     // default splits the rich 5-entity cluster into two >=2-member
     // communities (BASELINE 7b), raw LPA floods it into one — so the
     // surfaced community count proves which partition the tools serve
     val cfg = MemoryConfig(userId = "study", enableGraphAlgorithms = true,
       enableCommunitySummaries = true)
-    val mOn = graft.tools.CommunityDefaultStudy.scenarioSingle(spark, cfg)
+    val mOn = singlePoolManager(cfg)
     mOn.recomputeGraphMetricsIfDirty()
     assert(mOn.getCommunities().size == 2)
     assert(Cli.run(Seq("stats"), mOn).contains("\"communities\":2"))
 
-    val mOff = graft.tools.CommunityDefaultStudy.scenarioSingle(spark,
-      cfg.copy(communityRefineRounds = 0))
+    val mOff = singlePoolManager(cfg.copy(communityRefineRounds = 0))
     mOff.recomputeGraphMetricsIfDirty()
     assert(mOff.getCommunities().size == 1)
     assert(Cli.run(Seq("stats"), mOff).contains("\"communities\":1"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.SimilarityOps
@@ -13,34 +14,36 @@ class IvfSpec extends SparkSuite {
 
   private val SfDir = "/root/testdata/sf0.01"
 
+  private def topkSets(df: DataFrame): Map[Long, Set[Long]] =
+    df.select(col("query_id"), col("neighbor_id")).collect()
+      .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+
+  /** Mean per-query recall of `got` against the ground-truth sets. */
+  private def recallOf(got: Map[Long, Set[Long]],
+      truth: Map[Long, Set[Long]]): Double = {
+    val rs = truth.map { case (q, t) =>
+      got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0) }
+    rs.sum / rs.size
+  }
+
   test("k-means IVF recall@10 vs brute force (recall reported)") {
     assume(new java.io.File(s"$SfDir/embeddings.parquet").exists())
     val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 20)
     val k = 10
 
-    def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("neighbor_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-
     val truth = topkSets(SimilarityOps.bruteForceTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", k))
 
-    def recallOf(assigned: org.apache.spark.sql.DataFrame,
-        centroids: org.apache.spark.sql.DataFrame, nProbe: Int): Double = {
-      val got = topkSets(SimilarityOps.ivfTopK(assigned, "vec_id", "embedding",
-        centroids, queries, "vec_id", "embedding", k, nProbe))
-      val recalls = truth.map { case (q, t) =>
-        got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0)
-      }
-      recalls.sum / recalls.size
-    }
+    def ivfRecall(assigned: DataFrame, centroids: DataFrame, nProbe: Int): Double =
+      recallOf(topkSets(SimilarityOps.ivfTopK(assigned, "vec_id", "embedding",
+        centroids, queries, "vec_id", "embedding", k, nProbe)), truth)
 
     val (aStr, cStr) = SimilarityOps.ivfIndex(emb, "vec_id", "embedding", numCells = 8)
-    val strided = recallOf(aStr, cStr, nProbe = 2)
+    val strided = ivfRecall(aStr, cStr, nProbe = 2)
     val (aKm, cKm) = SimilarityOps.ivfIndexKMeans(emb, "vec_id", "embedding",
       numCells = 8, lloydIters = 5)
-    val kmeans = recallOf(aKm, cKm, nProbe = 2)
+    val kmeans = ivfRecall(aKm, cKm, nProbe = 2)
 
     info(f"recall@10 nProbe=2/8: strided=$strided%.3f kmeans=$kmeans%.3f")
     assert(kmeans >= 0.5, s"kmeans recall too low: $kmeans")
@@ -50,8 +53,8 @@ class IvfSpec extends SparkSuite {
     // the registered q_ann_ivf operating point (6-of-8 probes): the
     // isotropic corpus pins recall to the scanned fraction (BASELINE §6),
     // so the deployable-recall bar needs the wide probe
-    val stridedOp = recallOf(aStr, cStr, nProbe = 6)
-    val kmeansOp = recallOf(aKm, cKm, nProbe = 6)
+    val stridedOp = ivfRecall(aStr, cStr, nProbe = 6)
+    val kmeansOp = ivfRecall(aKm, cKm, nProbe = 6)
     info(f"recall@10 nProbe=6/8: strided=$stridedOp%.3f kmeans=$kmeansOp%.3f")
     assert(stridedOp >= 0.9, s"operating-point recall below target: $stridedOp")
     assert(kmeansOp >= 0.9, s"kmeans operating-point recall below target: $kmeansOp")
@@ -61,9 +64,6 @@ class IvfSpec extends SparkSuite {
     assume(new java.io.File(s"$SfDir/embeddings.parquet").exists())
     val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 20)
-    def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("neighbor_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val truth = topkSets(SimilarityOps.bruteForceTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", 10))
     val cb = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding", 8, 64)
@@ -75,9 +75,7 @@ class IvfSpec extends SparkSuite {
     val got = topkSets(SimilarityOps.pqTopKReranked(codes, "vec_id",
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", cb,
       k = 10, shortlist = 100))
-    val recalls = truth.map { case (q, t) =>
-      got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0) }
-    val recall = recalls.sum / recalls.size
+    val recall = recallOf(got, truth)
     info(f"PQ 8x64 + shortlist-100 re-rank recall@10 = $recall%.3f")
     // isotropic corpus = PQ's worst case: recall tracks the scanned
     // fraction (shortlist 100 of 500 vectors = 20% → 0.90; the sf0.1
@@ -90,9 +88,7 @@ class IvfSpec extends SparkSuite {
       SimilarityOps.pqEncode(emb, "vec_id", "embedding", cbKm), "vec_id",
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", cbKm,
       k = 10, shortlist = 100))
-    val recallKm = truth.map { case (q, t) =>
-      gotKm.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0) }
-      .sum / truth.size
+    val recallKm = recallOf(gotKm, truth)
     info(f"PQ kmeans-codebook re-rank recall@10 = $recallKm%.3f")
     assert(recallKm >= recall - 0.05,
       s"Lloyd codebooks lost recall: strided=$recall kmeans=$recallKm")
@@ -106,9 +102,7 @@ class IvfSpec extends SparkSuite {
     val gotBoth = topkSets(SimilarityOps.pqTopKIvf(codesCell, "vec_id",
       emb, "vec_id", "embedding", centroids, queries, "vec_id", "embedding",
       cbKm, k = 10, nProbe = 6, shortlist = 100))
-    val recallBoth = truth.map { case (q, t) =>
-      gotBoth.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0) }
-      .sum / truth.size
+    val recallBoth = recallOf(gotBoth, truth)
     info(f"IVF(6/8) x PQ re-rank recall@10 = $recallBoth%.3f")
     assert(recallBoth >= 0.6, s"composed IVF x PQ recall too low: $recallBoth")
   }
@@ -117,9 +111,6 @@ class IvfSpec extends SparkSuite {
     assume(new java.io.File(s"$SfDir/embeddings.parquet").exists())
     val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 20)
-    def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("neighbor_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val truth = topkSets(SimilarityOps.bruteForceTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", 10))
     val bounds = SimilarityOps.sq8Bounds(emb, "embedding")
@@ -133,9 +124,7 @@ class IvfSpec extends SparkSuite {
     assert(codes.count() == emb.count())
     val got = topkSets(SimilarityOps.sq8TopK(codes, "vec_id",
       queries, "vec_id", "embedding", bounds, k = 10))
-    val recalls = truth.map { case (q, t) =>
-      got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0) }
-    val recall = recalls.sum / recalls.size
+    val recall = recallOf(got, truth)
     info(f"SQ8 recall@10 = $recall%.3f")
     // 8 bits/dim is near-lossless (~0.4%% per-dim step): the quantized
     // ranking should recover essentially the exact top-10
@@ -158,9 +147,6 @@ class IvfSpec extends SparkSuite {
     assume(new java.io.File(s"$SfDir/embeddings.parquet").exists())
     val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 20)
-    def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("neighbor_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val truth = topkSets(SimilarityOps.bruteForceTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", 10))
     val th = SimilarityOps.binaryThresholds(emb, "embedding")
@@ -186,9 +172,7 @@ class IvfSpec extends SparkSuite {
     val got = topkSets(SimilarityOps.binaryTopKReranked(codes, "vec_id",
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", th,
       k = 10, shortlist = 100))
-    val recalls = truth.map { case (q, t) =>
-      got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0) }
-    val recall = recalls.sum / recalls.size
+    val recall = recallOf(got, truth)
     info(f"binary 1-bit/dim + shortlist-100 re-rank recall@10 = $recall%.3f")
     // 1 bit/dim on the isotropic worst-case corpus: recall tracks the
     // scanned fraction like PQ does (shortlist 100 of ~600 ≈ 17%), with
@@ -200,18 +184,12 @@ class IvfSpec extends SparkSuite {
     assume(new java.io.File(s"$SfDir/embeddings.parquet").exists())
     val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 20)
-    def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("neighbor_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val truth = topkSets(SimilarityOps.bruteForceTopK(
       emb, "vec_id", "embedding", queries, "vec_id", "embedding", 10))
     def recallAt(prefix: Int): Double = {
-      val got = topkSets(SimilarityOps.truncatedTopKReranked(
+      recallOf(topkSets(SimilarityOps.truncatedTopKReranked(
         emb, "vec_id", "embedding", queries, "vec_id", "embedding",
-        prefixDims = prefix, k = 10, shortlist = 100))
-      truth.map { case (q, t) =>
-        got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0) }
-        .sum / truth.size
+        prefixDims = prefix, k = 10, shortlist = 100)), truth)
     }
     val r16 = recallAt(16)
     val r64 = recallAt(64)
@@ -240,7 +218,7 @@ class IvfSpec extends SparkSuite {
     // the FULL corpus against the same centroids
     val grown = spark.read.parquet(dir)
     val queries = emb.filter(col("vec_id") < 5)
-    def topk(assigned: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    def topk(assigned: DataFrame): Seq[(Long, Long)] =
       SimilarityOps.ivfTopK(assigned, "vec_id", "embedding", centroids,
           queries, "vec_id", "embedding", k = 10, nProbe = 6)
         .select(col("query_id"), col("neighbor_id")).collect()
@@ -269,19 +247,10 @@ class IvfSpec extends SparkSuite {
     // planted-twin corpus; this pins the deterministic sf0.01 values so
     // a routing regression in the append path fails the build
     assume(new java.io.File(s"$SfDir/embeddings.parquet").exists())
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("neighbor_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    def recall(got: Map[Long, Set[Long]], truth: Map[Long, Set[Long]]): Double = {
-      val rs = truth.map { case (q, t) =>
-        got.get(q).map(g => (g & t).size.toDouble / t.size).getOrElse(0.0)
-      }
-      rs.sum / rs.size
-    }
-    val truth = sets(graft.catalog.SimilarityQueries.ivfAppendBruteforceBench(spark, SfDir))
-    val stale = recall(sets(
+    val truth = topkSets(graft.catalog.SimilarityQueries.ivfAppendBruteforceBench(spark, SfDir))
+    val stale = recallOf(topkSets(
       graft.catalog.SimilarityQueries.ivfAppendStaleBench(spark, SfDir)), truth)
-    val fresh = recall(sets(
+    val fresh = recallOf(topkSets(
       graft.catalog.SimilarityQueries.ivfAppendFreshBench(spark, SfDir)), truth)
     info(f"append recall@10: stale=$stale%.3f fresh=$fresh%.3f")
     assert(fresh >= 0.85, s"fresh re-cluster recall collapsed: $fresh")
@@ -383,6 +352,68 @@ class IvfSpec extends SparkSuite {
     }
   }
 
+  /** Deterministic k-cluster corpus over an (vec_id, embedding) table:
+    * vec_id % clusters picks a center (the first `clusters` corpus
+    * vectors) and the embedding is the float blend toward that center —
+    * structure planted with no RNG, reproducible anywhere.
+    */
+  private def clusteredCorpus(emb: DataFrame, clusters: Int, blend: Double): DataFrame = {
+    val centers = emb.filter(col("vec_id") < clusters)
+      .select(col("vec_id").as("cid"), col("embedding").as("center"))
+    emb.withColumn("cid", pmod(col("vec_id"), lit(clusters.toLong)))
+      .join(broadcast(centers), Seq("cid"))
+      .select(col("vec_id"),
+        expr(s"transform(embedding, (x, i) -> cast($blend * element_at(center, i + 1) + ${1.0 - blend} * x as float))")
+          .as("embedding"))
+  }
+
+  /** recall@10 of all five compression-ladder paths on `corpus` (20
+    * queries), at the shortlist/probe settings of BASELINE §22's
+    * isotropic row.
+    */
+  private def ladderRecalls(corpus: DataFrame): Seq[(String, Double)] = {
+    val (k, shortlist) = (10, 100)
+    val queries = corpus.filter(col("vec_id") < 20)
+    val c = corpus.localCheckpoint()
+    val q = queries.localCheckpoint()
+    val truth = topkSets(SimilarityOps.bruteForceTopK(
+      c, "vec_id", "embedding", q, "vec_id", "embedding", k))
+
+    val sq8 = {
+      val bounds = SimilarityOps.sq8Bounds(c, "embedding")
+      val codes = SimilarityOps.sq8Encode(c, "vec_id", "embedding", bounds)
+      topkSets(SimilarityOps.sq8TopK(codes, "vec_id", q, "vec_id", "embedding",
+        bounds, k))
+    }
+    val bin = {
+      val th = SimilarityOps.binaryThresholds(c, "embedding")
+      val codes = SimilarityOps.binaryEncode(c, "vec_id", "embedding", th)
+      topkSets(SimilarityOps.binaryTopKReranked(codes, "vec_id", c, "vec_id",
+        "embedding", q, "vec_id", "embedding", th, k, shortlist))
+    }
+    val trunc = topkSets(SimilarityOps.truncatedTopKReranked(c, "vec_id",
+      "embedding", q, "vec_id", "embedding", prefixDims = 16, k, shortlist))
+    val pq = {
+      val cb = SimilarityOps.pqCodebooks(c, "vec_id", "embedding", 8, 64)
+      val codes = SimilarityOps.pqEncode(c, "vec_id", "embedding", cb)
+      topkSets(SimilarityOps.pqTopKReranked(codes, "vec_id", c, "vec_id",
+        "embedding", q, "vec_id", "embedding", cb, k, shortlist))
+    }
+    val ivfpq = {
+      val (assigned, centroids) =
+        SimilarityOps.ivfIndex(c, "vec_id", "embedding", numCells = 8)
+      val cb = SimilarityOps.pqCodebooks(c, "vec_id", "embedding", 8, 64)
+      val codes = SimilarityOps.pqEncode(assigned, "vec_id", "embedding", cb,
+        passthrough = Seq("cell"))
+      topkSets(SimilarityOps.pqTopKIvf(codes, "vec_id", c, "vec_id",
+        "embedding", centroids, q, "vec_id", "embedding", cb,
+        k, nProbe = 6, shortlist))
+    }
+    Seq("sq8" -> recallOf(sq8, truth), "binary" -> recallOf(bin, truth),
+      "truncated" -> recallOf(trunc, truth), "pq_rerank" -> recallOf(pq, truth),
+      "ivfpq" -> recallOf(ivfpq, truth))
+  }
+
   test("compression ladder on clustered embeddings: every path clears its clustered-geometry floor") {
     // Every §22 recall number is from the isotropic worst case, where a
     // shortlist path's recall is pinned to its scanned fraction. Real
@@ -394,9 +425,7 @@ class IvfSpec extends SparkSuite {
     // with slack for codebook/threshold sensitivity.
     assume(new java.io.File(s"$SfDir/embeddings.parquet").exists())
     val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
-    val corpus = graft.tools.ClusteredRecallProbe
-      .clusteredCorpus(emb, clusters = 8, blend = 0.5)
-    val rs = graft.tools.ClusteredRecallProbe.ladderRecalls(corpus).toMap
+    val rs = ladderRecalls(clusteredCorpus(emb, clusters = 8, blend = 0.5)).toMap
     rs.foreach { case (p, r) => info(f"$p%-10s clustered recall@10 = $r%.3f") }
     val floors = Map("sq8" -> 0.9, "binary" -> 0.85, "truncated" -> 0.8,
       "pq_rerank" -> 0.85, "ivfpq" -> 0.8)
