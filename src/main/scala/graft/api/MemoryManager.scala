@@ -1,7 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 import graft.ext._
@@ -1280,6 +1281,16 @@ final class MemoryManager(
     ExplainResult(trace.toSeq, results)
   }
 
+  /** The search pipeline as a bounded page (the shape of the add path's
+    * POINT candidate search): Spark computes each candidate leg's top
+    * page and the rows of the page's ids; fusion over the collected
+    * ≤ 2·fetchK + k rows runs on the driver through [[PageFusion]],
+    * bit-identical to the DataFrame operators it replaces. Per search:
+    * one entity lookup, ONE candidate action (the BM25, vector and graph
+    * legs unioned, so AQE runs their stages concurrently), ONE hydration
+    * scan by id, one topology lookup and the relation lookups — the
+    * memories table is scanned, never exchanged (BASELINE §28).
+    */
   private def searchImpl(
       query: String,
       k: Int,
@@ -1298,6 +1309,12 @@ final class MemoryManager(
       Map("user" -> config.userId, "k" -> k.toString)) {
     usageIncr("search")
     recomputeGraphMetricsIfDirty() // lazy G1-G4 maintenance (manager.py:541-549)
+    // ONE store snapshot per search: every read below goes through these
+    // refs, so a concurrent writer can never pair candidates scored on
+    // one version with the rows of another
+    val mem = store.memories
+    val edges = store.edges
+    val entities = store.entities
     val hints = TemporalOps.detectTemporalHints(query)
     val includeExpired = includeExpired0 || hints.includeExpired
     val effectiveK = if (hints.expandLimit) k * 2 else k
@@ -1305,54 +1322,105 @@ final class MemoryManager(
     trace.foreach(_ += ExplainStep("embed_query",
       s"dims=${queryVec.length} hints=${hints.signals.mkString("+")}", 1L))
 
-    // ---- branch A: vector/hybrid (V3) or MMR (V4) ----
-    val mem = store.memories
     val typeFiltered = memoryType match {
       case Some(t) => FilterOps.memoryType(col("memory_type"), t)
       case None => lit(true)
     }
     val predCol = FilterOps.predicatesFor(mem, filters)
-    val vectorResults: DataFrame = {
-      if (diverse) {
-        val base = scopedMemories().filter(predCol && typeFiltered)
-        SearchOps.mmr(base, "embedding", "id", queryVec, effectiveK, config.mmrLambda)
-          .select(col("id"), col("score"))
-      } else {
-        // Faithful mode: candidates fused over the whole store (the
-        // engine's text+vector indexes are unscoped), scope/predicates
-        // post-hoc like search/vector.py:157-163. Scoped mode pushes the
-        // tenant scope into BOTH legs — on a large multi-tenant store
-        // the global top-fetchK page can contain zero rows for the
-        // querying tenant, starving them of results brute-force search
-        // would have found; the post-filter below stays (harmless).
-        val candBase = if (config.scopedHybridCandidates) scopeCol(mem) else mem
-        val nonEmptyEmb = size(col("embedding")) > 0
-        val cand = SearchOps.hybridSearch(
-          candBase.withColumn("embedding",
-            when(nonEmptyEmb, col("embedding")).otherwise(lit(null))),
-          "id", "text", "embedding", query, queryVec, effectiveK,
-          config.rrfK, fetchK = math.max(50, 4 * effectiveK),
-          preparedBm25 = Some(bm25PreparedState()))
-        cand.join(mem, Seq("id"))
-          .filter(col("expired_at").isNull && predCol && typeFiltered)
-          .filter(scopeColExpr)
-          .select(col("id"), col("score"))
-      }
-    }
-    trace.foreach(_ += ExplainStep(if (diverse) "diverse_search" else "hybrid_search",
-      "vector branch", vectorResults.count()))
+    val scope = FilterOps.scopeFilter(config.scopeFilters)
+    // empty embedding → null: the hybrid legs and the re-rank see null
+    val embOrNull = when(size(col("embedding")) > 0, col("embedding")).otherwise(lit(null))
 
-    // ---- branch B: graph search (J2-J4) ----
+    // ---- 1. entity lookup (J2) ----
     val queryEntities = extractor.extractQueryEntities(query)
-    val graphResults = graphSearch(queryEntities, queryVec, effectiveK, memoryType)
-    trace.foreach(_ += ExplainStep("graph_search",
-      s"entities=${queryEntities.map(_.name).mkString(",")}", graphResults.count()))
+    val entIds = entityIdsFor(entities, queryEntities.map(_.name))
 
-    // ---- merge J15/R1 ----
-    val merged = GraphOps.mergeResults(vectorResults, graphResults, "id",
-      config.agreementBonus)
+    // ---- 2. ONE candidate action: every leg's top page ----
+    // Faithful mode fuses candidates over the whole store (the engine's
+    // text+vector indexes are unscoped), scope/predicates post-hoc like
+    // search/vector.py:157-163. Scoped mode pushes the tenant scope into
+    // BOTH legs — on a large multi-tenant store the global top-fetchK
+    // page can contain zero rows for the querying tenant, starving them
+    // of results brute-force search would have found.
+    val live = mem.filter(scope && col("expired_at").isNull) // F3
+    val vectorLegs: Seq[(Int, DataFrame)] =
+      if (diverse)
+        Seq(LegMmr -> SearchOps.mmr(live.filter(predCol && typeFiltered),
+          "embedding", "id", queryVec, effectiveK, config.mmrLambda))
+      else {
+        val candBase = if (config.scopedHybridCandidates) mem.filter(scope) else mem
+        val (bm, vec) = SearchOps.hybridLegs(
+          candBase.withColumn("embedding", embOrNull), "id", "text", "embedding",
+          query, queryVec, fetchK = math.max(50, 4 * effectiveK),
+          preparedBm25 = Some(bm25PreparedState()))
+        Seq(LegBm25 -> bm.withColumnRenamed("bm25", "score"),
+          LegVector -> vec.withColumnRenamed("cos", "score"))
+      }
+    val legs = vectorLegs ++
+      graphLeg(entIds, live.filter(typeFiltered), edges, queryVec, effectiveK)
+        .map(LegGraph -> _)
+    val candidates: Map[Int, Seq[(Long, Option[Double])]] =
+      legs.map { case (leg, df) =>
+          df.select(col("id"), col("score"), lit(leg).as("leg")) }
+        .reduce(_.unionByName(_))
+        .collect().toSeq
+        .map(r => (r.getInt(2), (r.getLong(0),
+          if (r.isNullAt(1)) None else Some(r.getDouble(1)))))
+        .groupMap(_._1)(_._2)
+        .withDefaultValue(Nil)
+
+    // ---- 3. ONE hydration scan: the candidates' rows + row predicates ----
+    // every keep flag is the existing Spark Column (FilterOps' null
+    // rules), coalesced so only TRUE keeps, as in a filter
+    val keep = (c: Column) => coalesce(c, lit(false))
+    val postKeep = Seq(
+      Some(if (includeExpired) lit(true) else col("expired_at").isNull),
+      timeAfter.map(t => col("created_at") >= t),
+      timeBefore.map(t => col("created_at") <= t),
+      pointInTime.map(pit =>
+        FilterOps.validAtPointInTime(col("valid_at"), col("invalid_at"), pit))
+    ).flatten.reduce(_ && _)
+    val candIds = candidates.values.flatten.map(_._1).toSeq.distinct
+    val rows: Map[Long, Row] =
+      if (candIds.isEmpty) Map.empty
+      else mem.filter(col("id").isin(candIds: _*))
+        .select(resultCols ++ Seq(
+          VectorFunctions.cosineToQuery(embOrNull, queryVec).as("cos"),
+          embOrNull.isNotNull.as("has_embedding"),
+          keep(if (config.scopedHybridCandidates) scope else lit(true)).as("in_docs"),
+          keep(col("expired_at").isNull && predCol && typeFiltered && scope)
+            .as("vector_keep"),
+          keep(postKeep).as("post_keep"),
+          col("pagerank"), col("betweenness")): _*)
+        .collect()
+        .map(r => r.getLong(0) -> r).toMap
+    def flag(id: Long, c: String): Boolean =
+      rows.get(id).exists(r => r.getBoolean(r.fieldIndex(c)))
+
+    // ---- 4. driver fusion (V3 re-rank, J15/R1 merge, F3-F5, R2/R3) ----
+    val vectorResults: Seq[(Long, Double)] =
+      if (diverse) candidates(LegMmr).map { case (id, s) => id -> s.get }
+      else {
+        val reranked = PageFusion.rrf(
+            Seq(candidates(LegBm25), candidates(LegVector)), config.rrfK)
+          .filter { case (id, _) => flag(id, "in_docs") }
+          .map { case (id, fused) =>
+            val r = rows(id)
+            id -> PageFusion.rerank(fused, r.getBoolean(r.fieldIndex("has_embedding")),
+              optD(r, "cos"))
+          }
+        PageFusion.byScoreDesc(reranked)(_._2, _._1).take(effectiveK)
+          .filter { case (id, _) => flag(id, "vector_keep") }
+      }
+    trace.foreach(_ += ExplainStep(if (diverse) "diverse_search" else "hybrid_search",
+      "vector branch", vectorResults.size.toLong))
+    val graphResults = candidates(LegGraph).map { case (id, s) => id -> s.get }
+    trace.foreach(_ += ExplainStep("graph_search",
+      s"entities=${queryEntities.map(_.name).mkString(",")}", graphResults.size.toLong))
+
+    val merged = PageFusion.merge(vectorResults, graphResults, config.agreementBonus)
     trace.foreach(_ += ExplainStep("merge", "full-outer + agreement bonus",
-      merged.count()))
+      merged.size.toLong))
 
     // ---- filter chain F3/F4/F5 ----
     // memories has its own `source` column ("summarize" marker) — the
@@ -1363,39 +1431,37 @@ final class MemoryManager(
     // whose candidate generators do the same (search/vector.py:54,157,
     // graph.py:136); expired memories are reachable via get_all
     // (include_expired=true) and history, not via search.
-    val withProps = merged.join(
-      store.memories.withColumnRenamed("source", "mem_source"), Seq("id"))
-    var filtered = if (includeExpired) withProps
-      else withProps.filter(col("expired_at").isNull)
-    timeAfter.foreach(t => filtered = filtered.filter(col("created_at") >= t))
-    timeBefore.foreach(t => filtered = filtered.filter(col("created_at") <= t))
-    pointInTime.foreach { pit =>
-      filtered = filtered.filter(
-        FilterOps.validAtPointInTime(col("valid_at"), col("invalid_at"), pit))
-      trace.foreach(_ += ExplainStep("point_in_time_filter", s"pit=$pit",
-        filtered.count()))
-    }
+    var filtered = merged.filter { case (id, _, _) => flag(id, "post_keep") }
+    pointInTime.foreach(pit => trace.foreach(_ += ExplainStep("point_in_time_filter",
+      s"pit=$pit", filtered.size.toLong)))
 
     // ---- boost chain R2/R3 ----
-    // topology scores feed both the R2 boost and R5's wTopo term —
-    // version-memoized across searches (see topologyScoresDf)
-    lazy val topoDf = topologyScoresDf()
+    // topology scores feed both the R2 boost and R5's wTopo term: one
+    // lookup of the page's ids in the version-memoized topology table
+    val topo: Map[Long, Double] =
+      if ((config.enableTopologyBoost || config.enableImportance && config.weightTopology > 0)
+          && filtered.nonEmpty)
+        topologyScoresDf().filter(col("mem").isin(filtered.map(_._1): _*))
+          .select(col("mem"), col("topology_score")).collect()
+          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      else Map.empty
     if (config.enableTopologyBoost) {
-      filtered = filtered
-        .join(topoDf.withColumnRenamed("mem", "id"), Seq("id"), "left")
-        .withColumn("score", ScoringOps.topologyBoost(col("score"),
-          col("topology_score"), config.topologyBoostFactor))
-        .drop("topology_score")
-      trace.foreach(_ += ExplainStep("topology_boost", "applied", filtered.count()))
+      filtered = filtered.map { case (id, s, src) =>
+        (id, PageFusion.topologyBoost(s, topo.get(id), config.topologyBoostFactor), src) }
+      trace.foreach(_ += ExplainStep("topology_boost", "applied", filtered.size.toLong))
     }
     if (config.crossSessionFactor > 0) {
-      filtered = filtered.withColumn("score", ScoringOps.crossSessionBoost(
-        col("score"), col("pagerank"), col("betweenness"), config.crossSessionFactor))
-      trace.foreach(_ += ExplainStep("cross_session_boost", "applied", filtered.count()))
+      filtered = filtered.map { case (id, s, src) =>
+        val r = rows(id)
+        (id, PageFusion.crossSessionBoost(s, optD(r, "pagerank"), optD(r, "betweenness"),
+          config.crossSessionFactor), src)
+      }
+      trace.foreach(_ += ExplainStep("cross_session_boost", "applied", filtered.size.toLong))
     }
 
-    // ---- collect the candidate page (bounded by merge of 2 top-k sets)
-    var page: Seq[ResultRow] = collectResults(filtered)
+    // ---- the hydrated candidate page (bounded by merge of 2 top-k sets)
+    var page: Seq[ResultRow] = PageFusion.byScoreDesc(filtered)(_._2, _._1)
+      .map { case (id, s, src) => toResultRow(rows(id), s, src) }
 
     // ---- R4 rerank ----
     if (rerank) reranker.foreach { rr =>
@@ -1409,16 +1475,9 @@ final class MemoryManager(
     if (config.enableImportance) {
       val ts = now.getOrElse(clock())
       val ids = page.map(_.id)
-      // wTopo > 0 pulls A5 topology per result (shared topoDf, computed
-      // once even when R2 also ran); structural decay pulls A6
-      // reinforcement to modulate the recency rate (scoring.py:15-125)
-      val topoMap: Map[Long, Double] =
-        if (config.weightTopology > 0 && ids.nonEmpty)
-          topoDf
-            .filter(col("mem").isin(ids: _*))
-            .select(col("mem"), col("topology_score")).collect()
-            .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        else Map.empty
+      // wTopo > 0 reads A5 topology per result (the lookup above);
+      // structural decay pulls A6 reinforcement to modulate the recency
+      // rate (scoring.py:15-125)
       val reinfMap: Map[Long, Double] =
         if (config.enableStructuralDecay && ids.nonEmpty)
           reinforcementDf()
@@ -1438,11 +1497,12 @@ final class MemoryManager(
         val recency = math.exp(-rate * ageDays)
         val freq = math.min(1.0,
           math.log(1.0 + r.accessCount.getOrElse(0L).toDouble) / math.log(101.0))
+        val wTopo = if (config.weightTopology > 0) topo.getOrElse(r.id, 0.0) else 0.0
         val score = config.weightSimilarity * r.score +
           config.weightRecency * recency +
           config.weightFrequency * freq +
           config.weightImportance * r.importance.getOrElse(1.0) +
-          config.weightTopology * topoMap.getOrElse(r.id, 0.0)
+          config.weightTopology * wTopo
         r.copy(score = score)
       }.sortBy(r => (-r.score, r.id))
       store.bumpAccess(page.map(_.id), ts)
@@ -1462,79 +1522,75 @@ final class MemoryManager(
     // J6/F8 — decorate the RETURNED page with relation triples (every
     // reference search response carries them, vector.py:56/162/268)
     val top = page.take(k)
-    val rels = relationsFor(top.map(_.id))
+    val rels = relationsFor(top.map(_.id), edges, entities)
     top.map(r => r.copy(relations = rels.getOrElse(r.id, Nil)).toSearchResult)
   }
 
-  private def scopeColExpr = FilterOps.scopeFilter(config.scopeFilters)
+  // candidate legs of the one candidate action
+  private val LegBm25 = 0; private val LegVector = 1
+  private val LegMmr = 2; private val LegGraph = 3
 
-  /** J2-J4 — graph branch with the reference's exact fallback scores
-    * (search/graph.py:89-199): exact-name lookup with lower() fallback;
-    * 1-hop score = max(0, cos) or 0.3 without embedding; 2-hop adds
-    * RELATION-connected memories at max(0, cos·0.7) or 0.2; 1-hop wins
-    * dedup; expired skipped.
+  /** J2 — ids of the query's entities: exact-name lookup with the
+    * reference's lower() fallback (search/graph.py:89-108). The fallback
+    * is PER ENTITY: an entity with an exact hit keeps it, one without
+    * falls back to case-insensitive — not all-or-nothing across the set.
+    * One scan serves both (the fallback candidates ride along).
     */
-  private def graphSearch(
-      entities: Seq[ExtractedEntity],
-      queryVec: Array[Float],
-      k: Int,
-      memoryType: Option[String]
-  ): DataFrame = {
-    import spark.implicits._
-    val emptyOut = Seq.empty[(Long, Double)].toDF("id", "score")
-    if (entities.isEmpty) emptyOut
+  private def entityIdsFor(entities: DataFrame, names: Seq[String]): Seq[Long] =
+    if (names.isEmpty) Nil
     else {
-      val names = entities.map(_.name)
-      val ents = scopeCol2(store.entities)
-      // the lowercase fallback is PER ENTITY (graph.py:100-108): an
-      // entity with an exact hit keeps it, an entity without one falls
-      // back to case-insensitive — not all-or-nothing across the set
-      val exact = ents.filter(col("name").isin(names: _*))
-      val exactNames = exact.select(col("name")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val missingLower = names.filterNot(exactNames).map(_.toLowerCase).distinct
-      val entIds =
-        if (missingLower.isEmpty) exact
-        else exact.unionByName(
-          ents.filter(lower(col("name")).isin(missingLower: _*))).distinct()
-      val he = store.edges.filter(col("edge_type") === EdgeTypes.HasEntity)
-      val mem = scopedMemories() // F3 applied
-      val typeOk = memoryType match {
-        case Some(t) => FilterOps.memoryType(col("memory_type"), t)
-        case None => lit(true)
-      }
+      val hits = scopeCol2(entities)
+        .filter(col("name").isin(names: _*) ||
+          lower(col("name")).isin(names.map(_.toLowerCase).distinct: _*))
+        .select(col("id"), col("name"), lower(col("name")))
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      val exactNames = hits.map(_._2).filter(names.contains).toSet
+      val missingLower = names.filterNot(exactNames).map(_.toLowerCase).toSet
+      hits.collect {
+        case (id, name, lc) if exactNames(name) || missingLower(lc) => id
+      }.distinct.toSeq
+    }
+
+  /** J3-J4 — graph leg with the reference's exact fallback scores
+    * (search/graph.py:110-199): 1-hop score = max(0, cos) or 0.3
+    * without embedding; 2-hop adds RELATION-connected memories at
+    * max(0, cos·0.7) or 0.2; 1-hop wins dedup. `live` is the scoped,
+    * non-expired, type-filtered memory table; each hop's id set is
+    * broadcast into its scan (no exchange of the memories table).
+    * None when no query entity matched.
+    */
+  private def graphLeg(
+      entIds: Seq[Long],
+      live: DataFrame,
+      edges: DataFrame,
+      queryVec: Array[Float],
+      k: Int
+  ): Option[DataFrame] =
+    if (entIds.isEmpty) None
+    else {
+      val he = edges.filter(col("edge_type") === EdgeTypes.HasEntity)
       val nonEmptyEmb = size(col("embedding")) > 0
       val cosExpr = greatest(lit(0.0),
         VectorFunctions.cosineToQuery(col("embedding"), queryVec))
-
-      val oneHop = he
-        .join(broadcast(entIds.select(col("id").as("ent"))), he("dst") === col("ent"))
-        .select(he("src").as("id")).distinct()
-        .join(mem, Seq("id"))
-        .filter(typeOk)
-        .withColumn("score", when(nonEmptyEmb, cosExpr).otherwise(lit(0.3)))
-        .select(col("id"), col("score"))
-
-      val twoHopDf =
+      val oneHopIds = he.filter(col("dst").isin(entIds: _*)).select(col("src").as("id"))
+      val oneHop = live.join(broadcast(oneHopIds), Seq("id"), "left_semi")
+        .select(col("id"), when(nonEmptyEmb, cosExpr).otherwise(lit(0.3)).as("score"))
+      val hops =
         if (config.graphSearchDepth >= 2) {
-          val rel = store.edges.filter(col("edge_type") === EdgeTypes.Relation)
-          val e2 = rel
-            .join(broadcast(entIds.select(col("id").as("e1"))), rel("src") === col("e1"))
-            .select(rel("dst").as("ent")).distinct()
-          he.join(broadcast(e2), he("dst") === col("ent"))
-            .select(he("src").as("id")).distinct()
-            .join(mem, Seq("id"))
-            .filter(typeOk)
-            .withColumn("score",
-              when(nonEmptyEmb, greatest(lit(0.0), cosExpr * 0.7)).otherwise(lit(0.2)))
-            .select(col("id"), col("score"))
-            .join(oneHop.select(col("id")), Seq("id"), "left_anti") // 1-hop wins
-        } else emptyOut
-      oneHop.unionByName(twoHopDf)
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(k)
+          val e2 = edges
+            .filter(col("edge_type") === EdgeTypes.Relation && col("src").isin(entIds: _*))
+            .select(col("dst").as("ent"))
+          val twoHopIds = he.join(broadcast(e2), he("dst") === col("ent"), "left_semi")
+            .select(col("src").as("id"))
+          oneHop.unionByName(live
+            .join(broadcast(twoHopIds), Seq("id"), "left_semi")
+            .join(broadcast(oneHopIds), Seq("id"), "left_anti") // 1-hop wins
+            .select(col("id"), when(nonEmptyEmb, greatest(lit(0.0), cosExpr * 0.7))
+              .otherwise(lit(0.2)).as("score")))
+        } else oneHop
+      Some(hops.orderBy(col("score").desc, col("id").asc).limit(k))
     }
-  }
 
   private def scopeCol2(df: DataFrame): DataFrame = {
     val base = df.filter(col("user_id") === config.userId)
@@ -1559,57 +1615,73 @@ final class MemoryManager(
 
   /** F8/J6 — relation triples for a bounded page of memory ids:
     * memory -HAS_ENTITY-> e -RELATION-> t, decorated with entity names
-    * (search/vector.py:384-409). ONE batched join for the whole page
-    * where the reference issues a per-result probe; triples are ordered
-    * (source, relation, target) for determinism.
+    * (search/vector.py:384-409). Where the reference issues a per-result
+    * probe, this runs at most three single-stage lookups for the whole
+    * page — its HAS_ENTITY edges, the RELATION edges out of those
+    * entities, the names involved — and joins them on the driver.
+    * Distinct triples ordered (mem, source, relation, target) with
+    * Spark's string order.
     */
-  private def relationsFor(ids: Seq[Long]): Map[Long, Seq[RelationTriple]] =
-    if (ids.isEmpty) Map.empty
-    else {
-      val he = store.edges
-        .filter(col("edge_type") === EdgeTypes.HasEntity && col("src").isin(ids: _*))
-        .select(col("src").as("mem"), col("dst").as("ent"))
-      val rel = store.edges
-        .filter(col("edge_type") === EdgeTypes.Relation)
-        .select(col("src").as("ent"), col("dst").as("tgt"),
-          coalesce(col("props").getItem("relation_type"), lit("")).as("relation"))
-      val eName = store.entities.select(col("id"), col("name"))
-      he.join(rel, Seq("ent"))
-        .join(eName.select(col("id").as("ent"), col("name").as("source_name")), Seq("ent"))
-        .join(eName.select(col("id").as("tgt"), col("name").as("target_name")), Seq("tgt"))
-        .select(col("mem"), col("source_name"), col("relation"), col("target_name"))
-        .distinct()
-        .orderBy(col("mem"), col("source_name"), col("relation"), col("target_name"))
-        .collect()
-        .map(r => r.getLong(0) ->
-          RelationTriple(r.getString(1), r.getString(2), r.getString(3)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    }
+  private def relationsFor(
+      ids: Seq[Long],
+      edges: DataFrame,
+      entities: DataFrame
+  ): Map[Long, Seq[RelationTriple]] = {
+    def lookup(df: DataFrame, c: String, keys: Iterable[Long]): Array[Row] =
+      if (keys.isEmpty) Array.empty else df.filter(col(c).isin(keys.toSeq: _*)).collect()
+    val he = lookup(edges.filter(col("edge_type") === EdgeTypes.HasEntity)
+      .select(col("src"), col("dst")), "src", ids.distinct)
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val rel = lookup(edges.filter(col("edge_type") === EdgeTypes.Relation)
+      .select(col("src"), col("dst"),
+        coalesce(col("props").getItem("relation_type"), lit(""))), "src", he.map(_._2).distinct)
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val names = lookup(entities.select(col("id"), col("name")), "id",
+        (rel.map(_._1) ++ rel.map(_._2)).distinct)
+      .map(r => r.getLong(0) -> r.getString(1)).groupMap(_._1)(_._2)
+    val relsBySrc = rel.groupBy(_._1)
+    val utf8 = Ordering.by[String, UTF8String](UTF8String.fromString)
+    val triples = (for {
+      (mem, ent) <- he
+      (_, tgt, relation) <- relsBySrc.getOrElse(ent, Array.empty)
+      source <- names.getOrElse(ent, Array.empty)
+      target <- names.getOrElse(tgt, Array.empty)
+    } yield (mem, source, relation, target)).distinct
+      .sorted(Ordering.Tuple4(Ordering.Long, utf8, utf8, utf8))
+    triples.groupMap(_._1)(t => RelationTriple(t._2, t._3, t._4))
+      .view.mapValues(_.toSeq).toMap
+  }
 
-  private def collectResults(df: DataFrame): Seq[ResultRow] = {
-    def optL(r: Row, c: String): Option[Long] =
-      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getLong(r.fieldIndex(c)))
-    def optD(r: Row, c: String): Option[Double] =
-      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getDouble(r.fieldIndex(c)))
-    def optS(r: Row, c: String): Option[String] =
-      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getString(r.fieldIndex(c)))
-    df.select(col("id"), col("score"), col("source"), col("text"),
-        col("metadata"), col("actor_id"), col("role"),
-        coalesce(col("memory_type"), lit(MemoryTypes.Default)).as("memory_type"),
-        col("created_at"), col("learned_at"), col("session_id"),
-        col("expired_at"), col("valid_at"), col("invalid_at"),
-        col("importance"), col("access_count"))
+  // the result columns of a memory row, in ResultRow order (id first)
+  private val resultCols: Seq[Column] = Seq(col("id"), col("text"),
+    col("metadata"), col("actor_id"), col("role"),
+    coalesce(col("memory_type"), lit(MemoryTypes.Default)).as("memory_type"),
+    col("created_at"), col("learned_at"), col("session_id"),
+    col("expired_at"), col("valid_at"), col("invalid_at"),
+    col("importance"), col("access_count"))
+
+  private def optL(r: Row, c: String): Option[Long] =
+    if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getLong(r.fieldIndex(c)))
+  private def optD(r: Row, c: String): Option[Double] =
+    if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getDouble(r.fieldIndex(c)))
+  private def optS(r: Row, c: String): Option[String] =
+    if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getString(r.fieldIndex(c)))
+
+  private def toResultRow(r: Row, score: Double, source: String): ResultRow =
+    ResultRow(r.getLong(0), r.getString(1), score, source,
+      optS(r, "metadata"), optS(r, "actor_id"), optS(r, "role"),
+      r.getString(r.fieldIndex("memory_type")),
+      optL(r, "created_at"), optL(r, "learned_at"), optS(r, "session_id"),
+      optL(r, "expired_at"), optL(r, "valid_at"), optL(r, "invalid_at"),
+      optD(r, "importance"), optL(r, "access_count"))
+
+  private def collectResults(df: DataFrame): Seq[ResultRow] =
+    df.select(resultCols ++ Seq(col("score"), col("source")): _*)
       .orderBy(col("score").desc, col("id").asc)
       .collect()
-      .map { r =>
-        ResultRow(r.getLong(0), r.getString(3), r.getDouble(1), r.getString(2),
-          optS(r, "metadata"), optS(r, "actor_id"), optS(r, "role"),
-          r.getString(r.fieldIndex("memory_type")),
-          optL(r, "created_at"), optL(r, "learned_at"), optS(r, "session_id"),
-          optL(r, "expired_at"), optL(r, "valid_at"), optL(r, "invalid_at"),
-          optD(r, "importance"), optL(r, "access_count"))
-      }.toSeq
-  }
+      .map(r => toResultRow(r, r.getDouble(r.fieldIndex("score")),
+        r.getString(r.fieldIndex("source"))))
+      .toSeq
 
   // ------------------------------------------------------------------
   // other entry points

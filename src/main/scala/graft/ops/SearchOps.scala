@@ -157,7 +157,10 @@ object SearchOps {
     * fusion — ranking uses an unpartitioned window, which is correct and
     * cheap on candidate pages (≤ a few hundred rows) but would serialize
     * an unlimited input onto one partition. hybridSearch honors this by
-    * limiting both legs to fetchK first.
+    * limiting both legs to fetchK first. The online path
+    * (`MemoryManager.search`) does not call this operator: it collects
+    * the two [[hybridLegs]] pages and fuses them on the driver with
+    * [[PageFusion.rrf]], the bit-identical twin of this sum.
     */
   def rrfFuse(
       inputs: Seq[(DataFrame, String)],
@@ -194,19 +197,8 @@ object SearchOps {
       fetchK: Int = 50,
       preparedBm25: Option[(DataFrame, Long, Double)] = None
   ): DataFrame = {
-    val terms = queryText.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
-    val bmScores = preparedBm25 match {
-      case Some(p) => bm25Prepared(p, idCol, terms)
-      case None => bm25(docs, idCol, textCol, terms)
-    }
-    val bm = bmScores
-      .orderBy(col("bm25").desc, col(idCol).asc)
-      .limit(fetchK)
-    val vec = docs
-      .withColumn("cos", VectorFunctions.cosineToQuery(col(embCol), queryVec))
-      .select(col(idCol), col("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(fetchK)
+    val (bm, vec) = hybridLegs(docs, idCol, textCol, embCol, queryText, queryVec,
+      fetchK, preparedBm25)
     val fused = rrfFuse(Seq((bm, "bm25"), (vec, "cos")), idCol, rrfK)
     // Re-rank fused candidates by clamped cosine; rows without a stored
     // embedding fall back on the fused score: max(0, 1-fused) when
@@ -228,6 +220,37 @@ object SearchOps {
       .select(col(idCol), col("rrf_score"), col("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
+  }
+
+  /** V3's two candidate legs, each its top-fetchK page ordered by
+    * (score desc, id asc): BM25 (idCol, bm25) over the query's terms and
+    * cosine (idCol, cos) against the query vector. [[hybridSearch]]
+    * fuses them in Spark; `MemoryManager.search` collects them.
+    */
+  def hybridLegs(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      embCol: String,
+      queryText: String,
+      queryVec: Array[Float],
+      fetchK: Int,
+      preparedBm25: Option[(DataFrame, Long, Double)]
+  ): (DataFrame, DataFrame) = {
+    val terms = queryText.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
+    val bmScores = preparedBm25 match {
+      case Some(p) => bm25Prepared(p, idCol, terms)
+      case None => bm25(docs, idCol, textCol, terms)
+    }
+    val bm = bmScores
+      .orderBy(col("bm25").desc, col(idCol).asc)
+      .limit(fetchK)
+    val vec = docs
+      .withColumn("cos", VectorFunctions.cosineToQuery(col(embCol), queryVec))
+      .select(col(idCol), col("cos"))
+      .orderBy(col("cos").desc, col(idCol).asc)
+      .limit(fetchK)
+    (bm, vec)
   }
 
   /** V4 — MMR diverse search (reference search/vector.py:194-291):

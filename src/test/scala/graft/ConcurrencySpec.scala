@@ -48,6 +48,42 @@ class ConcurrencySpec extends SparkSuite {
     users.foreach(u => assert(mgr(u).getAll().size == 5))
   }
 
+  test("searches racing a deleting/updating writer read one snapshot: in scope, hydrated") {
+    val store = new GraphStore(spark, checkpointEvery = 4)
+    def mgr(user: String) = new MemoryManager(spark,
+      MemoryConfig(userId = user, enableImportance = true, enableTopologyBoost = true),
+      store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+    val alice = mgr("alice")
+    val ids = alice.addBatch((1 to 40).map(i => s"note $i about Acme Corp and Bob Smith"),
+      now = Some(T0)).map(_.toLong)
+    alice.add("Alice Chen works at Acme Corp.", now = Some(T0))
+    mgr("bob").addBatch((1 to 20).map(i => s"note $i about Acme Corp"), now = Some(T0))
+    val writer = new Thread(() => ids.take(12).zipWithIndex.foreach { case (id, i) =>
+      if (i % 2 == 0) alice.delete(id.toString)
+      else alice.update(id.toString, s"rewritten note $i about Acme Corp")
+    })
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[SearchResult]()
+    val readers = (1 to 2).map { t =>
+      val m = mgr("alice")
+      new Thread(() => (1 to 5).foreach { i =>
+        try m.search(s"Acme Corp note $i", k = 5 + t, now = Some(T0 + i))
+          .foreach(results.add)
+        catch { case e: Throwable => failures.add(e) }
+      })
+    }
+    writer.start(); readers.foreach(_.start())
+    writer.join(); readers.foreach(_.join())
+    assert(failures.isEmpty, failures.toString)
+    assert(!results.isEmpty)
+    val aliceIds = alice.getAll(includeExpired = true).map(_.memoryId).toSet ++
+      ids.map(_.toString)
+    results.forEach { r =>
+      assert(r.userId == "alice" && aliceIds(r.memoryId), r.toString)
+      assert(r.text != null, r.toString)
+    }
+  }
+
   test("access bumps do not retrigger whole-graph metric recompute") {
     val m = new MemoryManager(spark,
       MemoryConfig(userId = "alice", enableGraphAlgorithms = true,

@@ -545,6 +545,123 @@ class ManagerSpec extends SparkSuite {
     assert(ex.results.nonEmpty)
   }
 
+  test("search branches pinned: depth-2 graph, time range, temporal hints, boosts, filters, explain") {
+    import graft.ops.FilterOps._
+    import spark.implicits._
+    val store = new GraphStore(spark)
+    def mgr(cfg: MemoryConfig) = new MemoryManager(spark, cfg, store,
+      new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler,
+      reranker = Some(new HashReranker), clock = () => T0 + 100000)
+    val seed = mgr(MemoryConfig(userId = "alice"))
+    Seq(
+      "Alice Chen works at Acme Corp.",
+      "Acme Corp builds rockets in Texas.",
+      "Bob Smith met Alice Chen in Paris.",
+      "Paris hosts the Spring Expo.",
+      "Dana Lee previously worked at Globex.",
+      "Globex moved to Berlin."
+    ).zipWithIndex.foreach { case (t, i) => seed.add(t, now = Some(T0 + i * 1000L)) }
+    seed.add("garden notes about tomatoes", infer = false, memoryType = "procedural",
+      metadata = Some("""{"topic": "garden"}"""), now = Some(T0 + 7000))
+    seed.add("garden notes about roses", infer = false,
+      metadata = Some("""{"topic": "garden"}"""), now = Some(T0 + 8000))
+    seed.add("kitchen notes about bread", infer = false, memoryType = "procedural",
+      metadata = Some("""{"topic": "kitchen"}"""), now = Some(T0 + 9000))
+    mgr(MemoryConfig(userId = "bob")).add("Alice Chen visits Bob Smith.", now = Some(T0))
+    val ids = store.memories.select("id").as[Long].collect().sorted
+    store.patchMemories(
+      ids.map(i => (i, Some(0.01 * i), Some(0.05 * (i % 3)))).toSeq
+        .toDF("id", "pagerank", "betweenness"),
+      Seq("pagerank", "betweenness"))
+    store.patchMemories(Seq((5L, Some(T0 + 50000))).toDF("id", "expired_at"),
+      Seq("expired_at"))
+
+    def fmt(rs: Seq[SearchResult]): Seq[String] =
+      rs.map(r => f"${r.memoryId}:${r.score}%.6f:${r.source}")
+    val boosted = mgr(MemoryConfig(userId = "alice", graphSearchDepth = 2,
+      enableTopologyBoost = true, crossSessionFactor = 0.5))
+    val plain = mgr(MemoryConfig(userId = "alice"))
+    val ex = boosted.explain("Alice Chen", k = 5)
+    val actual = Seq(
+      "depth2_boosts" -> fmt(boosted.search("Alice Chen", k = 5)),
+      "depth2_relation_hop" -> fmt(boosted.search("Bob Smith", k = 6)),
+      "time_range" -> fmt(plain.search("Acme Corp rockets", k = 8,
+        timeAfter = Some(T0 + 1000), timeBefore = Some(T0 + 4000))),
+      "chrono_hint" -> fmt(plain.search("when did Alice Chen first join", k = 2)),
+      "expired_hint" -> fmt(plain.search("Dana Lee previously worked", k = 5)),
+      "filters_and_type" -> fmt(plain.search("garden notes", k = 10,
+        filters = Map("metadata.topic" -> Eq("garden")),
+        memoryType = Some("procedural"))),
+      "explain_results" -> fmt(ex.results),
+      "explain_steps" -> ex.steps.map(s => s"${s.name}=${s.count}"),
+      "importance_topology" -> fmt(mgr(MemoryConfig(userId = "alice",
+        enableImportance = true, weightTopology = 0.2, enableStructuralDecay = true,
+        enableTopologyBoost = true)).search("Alice Chen rockets", k = 4))
+    )
+    // recorded on the DataFrame search pipeline (before the bounded-page
+    // rewrite); the rewrite must reproduce it exactly
+    val expected = Seq[(String, Seq[String])](
+      "depth2_boosts" -> Seq("8:0.389105:vector", "3:0.061755:both", "9:0.004095:vector", "6:0.000000:vector", "1:0.000000:both"),
+      "depth2_relation_hop" -> Seq("9:0.585519:vector", "4:0.482844:vector", "1:0.000000:both", "2:0.000000:vector", "3:0.000000:both"),
+      "time_range" -> Seq("2:0.000000:both", "3:0.000000:vector", "4:0.000000:vector"),
+      "chrono_hint" -> Seq("1:0.000000:both", "2:0.000000:vector"),
+      "expired_hint" -> Seq("7:0.456497:vector", "6:0.403903:vector", "1:0.296517:vector", "9:0.139300:vector", "8:0.051577:vector"),
+      "filters_and_type" -> Seq("7:0.000000:vector"),
+      "explain_results" -> Seq("8:0.389105:vector", "3:0.061755:both", "9:0.004095:vector", "6:0.000000:vector", "1:0.000000:both"),
+      "explain_steps" -> Seq("embed_query=1", "hybrid_search=5", "graph_search=4", "merge=7", "topology_boost=7", "cross_session_boost=7", "final=5"),
+      "importance_topology" -> Seq("3:0.736031:both", "1:0.584976:graph", "7:0.501029:vector", "9:0.489417:vector")
+    )
+    assert(actual == expected, actual.map { case (n, v) =>
+      v.map("\"" + _ + "\"").mkString(s"\"$n\" -> Seq(", ", ", ")") }.mkString(",\n"))
+  }
+
+  test("job-count guard: a warm search runs a fixed number of Spark jobs") {
+    // entity lookup 1; the candidate action 3 (the BM25, vector and
+    // graph legs in one union, whose AQE query stages run as jobs);
+    // hydration 1; topology 1; relations 3 (deterministic per BASELINE
+    // §20). A re-introduced exchange or join of the memories table, or a
+    // per-step recount, moves this number.
+    val store = new GraphStore(spark, checkpointEvery = 1000)
+    val m = new MemoryManager(spark,
+      MemoryConfig(userId = "alice", enableImportance = true, enableTopologyBoost = true),
+      store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+    m.addReconcileBatch((1 to 12).map(i =>
+      s"Alice Chen met Bob Smith about plan $i. Bob Smith works at Acme Corp."),
+      now = Some(T0))
+    m.addBatch((1 to 200).map(i => s"bulk note $i"), now = Some(T0))
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      started.set(0); ended.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        // listener events arrive asynchronously: wait until every job
+        // that started has ended, then for a quiet period
+        val deadline = System.currentTimeMillis() + 10000
+        var last = -1
+        while ((started.get() != ended.get() || started.get() != last) &&
+            System.currentTimeMillis() < deadline) {
+          last = started.get(); Thread.sleep(300)
+        }
+      } finally spark.sparkContext.removeSparkListener(listener)
+      started.get()
+    }
+    val query = "Alice Chen met Bob Smith about plan 3"
+    m.search("Bob Smith works", k = 10) // builds the BM25 and topology memos
+    val hits = m.search(query, k = 10)
+    assert(hits.head.text == query && hits.head.source == "both")
+    assert(hits.head.relations.nonEmpty)
+    val jobs = jobsOf(m.search(query, k = 10))
+    assert(jobs == 9, s"warm search ran $jobs Spark jobs")
+  }
+
   test("addReconcileBatch == sequential add loop on a conflict-free batch") {
     // same scripts, same seeds, same timestamp: the batched path must
     // land the identical store state — memories and history row-for-row

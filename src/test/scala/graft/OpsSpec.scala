@@ -212,6 +212,91 @@ class OpsSpec extends SparkSuite {
       (1L, 0.8 * 1.1, "both"), (2L, 0.5, "vector"), (3L, 0.4, "graph")))
   }
 
+  test("PageFusion: driver fusion equals the DataFrame operators bit for bit on generated pages") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.functions.VectorFunctions
+    import graft.ops.{PageFusion, ScoringOps}
+    def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+    val words = Seq("alpha", "beta", "gamma", "delta")
+    val rnd = new scala.util.Random(7)
+    def vec(): Array[Float] = Array.fill(4)(rnd.between(-1.0f, 1.0f))
+    val shared = vec() // rows carrying it tie on cosine: id breaks the tie
+    val zero = Array.fill(4)(0.0f)
+    (0 until 12).foreach { page =>
+      val query = if (page % 4 == 3) zero else vec() // all-zero query vector
+      val rrfK = Seq(0.0, 1.0, 60.0)(page % 3) // rrfK 0: fused rrf reaches 2
+      val docs = (1 to 24).map { i =>
+        val emb: Array[Float] = rnd.nextInt(6) match {
+          case 0 => null
+          case 1 => Array.empty[Float]
+          case 2 => shared
+          case _ => vec()
+        }
+        (rnd.nextInt(1000).toLong * 100 + i,
+          Seq.fill(1 + rnd.nextInt(4))(words(rnd.nextInt(words.size))).mkString(" "), emb)
+      }.toDF("id", "text", "embedding")
+        .withColumn("embedding", when(size(col("embedding")) > 0, col("embedding")))
+      val qText = "alpha gamma"
+      val (k, fetchK) = (5, 8)
+
+      // re-rank + RRF: hybridSearch vs collected legs fused on the driver
+      val want = SearchOps.hybridSearch(docs, "id", "text", "embedding", qText, query,
+          k, rrfK, fetchK)
+        .collect().map(r => (r.getLong(0), bits(r.getDouble(1)), bits(r.getDouble(2)))).toSeq
+      val (bm, vc) = SearchOps.hybridLegs(docs, "id", "text", "embedding", qText, query,
+        fetchK, None)
+      def leg(df: DataFrame) = df.collect().toSeq
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+      val fused = PageFusion.rrf(Seq(leg(bm), leg(vc)), rrfK)
+      val hyd = docs.select(col("id"), col("embedding").isNotNull,
+          VectorFunctions.cosineToQuery(col("embedding"), query))
+        .collect().map(r => r.getLong(0) -> r).toMap
+      val got = PageFusion.byScoreDesc(fused.map { case (id, f) =>
+          val h = hyd(id)
+          (id, f, PageFusion.rerank(f, h.getBoolean(1),
+            if (h.isNullAt(2)) None else Some(h.getDouble(2))))
+        })(_._3, _._1).take(k)
+        .map { case (id, f, sc) => (id, bits(f), bits(sc)) }
+      assert(got == want, s"page $page")
+      if (rrfK == 0.0) assert(fused.exists(_._2 >= 1.0))
+
+      // merge + boosts + final order on pages with overlapping ids and ties
+      val ids = docs.select("id").as[Long].collect().toSeq
+      def scores(n: Int) = rnd.shuffle(ids).take(n).map(id => id ->
+        (if (rnd.nextInt(4) == 0) 0.25 else rnd.nextDouble()))
+      val v = scores(8); val g = scores(8)
+      val props = ids.map { id =>
+        def opt(hi: Double) = rnd.nextInt(4) match {
+          case 0 => None
+          case 1 => Some(0.0)
+          case _ => Some(rnd.nextDouble() * hi)
+        }
+        (id, opt(1.0), opt(0.3), opt(0.3))
+      }
+      val propDf = props.toDF("id", "topo", "pagerank", "betweenness")
+      val bonus = 0.1 * (page % 3)
+      val wantMerged = GraphOps.mergeResults(v.toDF("id", "score"), g.toDF("id", "score"),
+          "id", bonus)
+        .join(propDf, Seq("id"), "left")
+        .withColumn("score", ScoringOps.topologyBoost(col("score"), col("topo"), 0.2))
+        .withColumn("score", ScoringOps.crossSessionBoost(col("score"), col("pagerank"),
+          col("betweenness"), 0.5))
+        .orderBy(col("score").desc, col("id").asc)
+        .collect().map { case Row(id: Long, sc: Double, src: String, _, _, _) =>
+          (id, bits(sc), src) }.toSeq
+      val p = props.map(r => r._1 -> r).toMap
+      val gotMerged = PageFusion.byScoreDesc(PageFusion.merge(v, g, bonus).map {
+          case (id, sc, src) =>
+            val (_, topo, pr, bt) = p(id)
+            (id, PageFusion.crossSessionBoost(
+              PageFusion.topologyBoost(sc, topo, 0.2), pr, bt, 0.5), src)
+        })(_._2, _._1)
+        .map { case (id, sc, src) => (id, bits(sc), src) }
+      assert(gotMerged == wantMerged, s"page $page")
+      assert(gotMerged.map(_._3).toSet == Set("both", "vector", "graph"))
+    }
+  }
+
   test("latestPerKey: as-of top-1 per key") {
     val df = Seq(
       ("u1", 10L, 1L), ("u1", 20L, 2L), ("u1", 30L, 3L),
