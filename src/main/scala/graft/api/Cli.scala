@@ -8,9 +8,9 @@ import graft.ext._
 /** CLI entry point over the engine (reference cli.py:16-341):
   * add / search / list / update / delete / history / summarize / stats /
   * explain, JSON on stdout. Global flags: --user <id>, --store <dir>
-  * (parquet persistence root; loaded on start, persisted back after
-  * mutating commands), --no-infer for add, -k / --type / --min-score
-  * where the reference accepts them.
+  * (parquet snapshot root; loaded on start, a new snapshot published
+  * after each successful mutating command), --no-infer for add, -k /
+  * --type / --min-score where the reference accepts them.
   *
   * The LLM-backed traits are deterministic local impls (the container
   * has no model endpoint): SHA-256 mock embedder, heuristic extractor,
@@ -147,14 +147,32 @@ object Cli {
   private def isMutating(cmd: String): Boolean =
     Set("add", "update", "delete", "summarize")(cmd)
 
-  def main(argv: Array[String]): Unit = {
-    val args = argv.toSeq
+  /** One CLI invocation: load the `--store` snapshot (when the
+    * directory exists), run the command, and persist a SUCCESSFUL
+    * mutation as the store's next snapshot — a failed add must not
+    * publish partially-applied state. Returns the JSON to print.
+    */
+  private[graft] def runOnStore(args: Seq[String], spark: SparkSession): String = {
     def opt(name: String): Option[String] = {
       val i = args.indexOf(name)
       if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
     }
     val user = opt("--user").orElse(sys.env.get("GRAFT_USER")).getOrElse("default")
     val storeDir = opt("--store").orElse(sys.env.get("GRAFT_STORE"))
+    val store = new GraphStore(spark)
+    storeDir.filter(d => new java.io.File(d).exists()).foreach(store.load)
+    val dims = sys.env.get("GRAFT_DIMS").map(_.toInt).getOrElse(64)
+    val m = new MemoryManager(spark,
+      MemoryConfig(userId = user, embeddingDimensions = dims),
+      store, new MockEmbedder(dims), new HeuristicExtractor,
+      new AddAllReconciler)
+    val (_, cmd) = commandOf(args)
+    val (out, ok) = runChecked(args, m)
+    if (ok && isMutating(cmd)) storeDir.foreach(store.persist)
+    out
+  }
+
+  def main(argv: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-cli")
@@ -163,20 +181,7 @@ object Cli {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try {
-      val store = new GraphStore(spark)
-      storeDir.filter(d => new java.io.File(d).exists()).foreach(store.load)
-      val dims = sys.env.get("GRAFT_DIMS").map(_.toInt).getOrElse(64)
-      val m = new MemoryManager(spark,
-        MemoryConfig(userId = user, embeddingDimensions = dims),
-        store, new MockEmbedder(dims), new HeuristicExtractor,
-        new AddAllReconciler)
-      val (_, cmd) = commandOf(args)
-      val (out, ok) = runChecked(args, m)
-      println(out)
-      // persist only SUCCESSFUL mutations — a failed add must not write
-      // partially-applied state over the on-disk store
-      if (ok && isMutating(cmd)) storeDir.foreach(store.persist)
-    } finally spark.stop()
+    try println(runOnStore(argv.toSeq, spark))
+    finally spark.stop()
   }
 }

@@ -33,6 +33,7 @@ final class MemoryManager(
     tracer: graft.trace.Tracer = graft.trace.NoopTracer
 ) {
 
+  import MemoryManager.{AddCall, ItemPlan}
   import MemoryTypes.{Default => DefaultType}
 
   /** Fact count at or below which candidate search takes the per-fact
@@ -88,8 +89,11 @@ final class MemoryManager(
   // W1/W2/W3 — add pipeline
   // ------------------------------------------------------------------
 
-  /** W1 — full add pipeline (manager.py:197-326). Deterministic when the
-    * injected traits and `now` are.
+  /** W1 — full add pipeline (manager.py:197-326), the one-item case of
+    * [[addReconcileBatch]]: same plan, same write routine. With
+    * `infer = false` the text is stored as one ADD, without extraction
+    * or candidate search. Deterministic when the injected traits and
+    * `now` are.
     */
   def add(
       text: String,
@@ -105,57 +109,13 @@ final class MemoryManager(
   ): AddResult = lockFor(config.userId).synchronized {
     tracer.span("memory.add", Map("user" -> config.userId, "infer" -> infer.toString)) {
     usageIncr("add")
-    val ts = now.getOrElse(clock())
-    if (!infer) {
-      val id = createMemory(text, Some(embedder.embedOne(text)), ts,
-        memoryType, sessionId, runId, actorId, role, metadata, validAt = None,
-        importance = importance)
-      recordHistory("ADD", id, ts, None, Some(text), actorId, role)
-      linkSessionOrEpisode(Seq(id), Nil, text, sessionId, runId, ts)
-      AddResult(Seq(MemoryEvent("ADD", Some(id.toString), text)))
-    } else {
-      // combined extraction with the reference's fallback ladder:
-      // combined fails → separate facts + entities legs
-      // (extraction/entities.py:96-132)
-      val extraction =
-        try extractor.extract(text)
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            val facts = extractor.extractFactsOnly(text)
-            val (ents, rels) = extractor.extractEntitiesOnly(text)
-            Extraction(facts, ents, rels)
-        }
-      if (extraction.facts.isEmpty) AddResult(Nil)
-      else {
-        val temporal: Map[Int, TemporalAnnotation] =
-          if (config.enableBitemporal)
-            extractor.annotateTemporal(extraction.facts).map(a => a.factIndex -> a).toMap
-          else Map.empty
-        val embeddings = embedder.embed(extraction.facts)
-        val candidates = candidateSearch(extraction.facts, embeddings, memoryType)
-        val decisions =
-          if (candidates.isEmpty)
-            // fast path: nothing to reconcile against → all ADD without a
-            // model call (reconciliation/memories.py:88-90)
-            extraction.facts.map(f => Decision(DecisionAction.Add, f, None))
-          else reconciler.reconcile(extraction.facts, candidates)
-        val events = executeDecisions(decisions, embeddings, temporal, ts,
-          memoryType, sessionId, runId, actorId, role, metadata, importance,
-          knownTexts = candidates.toMap)
-        storeGraph(extraction, events.flatMap(_.memoryId).map(_.toLong))
-        // session chains link only ADD events (manager.py:315 filters
-        // e.action == MemoryAction.ADD), but the episode's PRODUCED
-        // edges cover EVERY event carrying a memory id — _create_episode
-        // receives the full events list (manager.py:316, 1252-1255);
-        // episode creation requires a non-empty event list
-        linkSessionOrEpisode(
-          events.filter(_.event == "ADD").flatMap(_.memoryId).map(_.toLong),
-          extraction.entities, text, sessionId, runId, ts,
-          hasEvents = events.nonEmpty,
-          producedIds = events.flatMap(_.memoryId).map(_.toLong).distinct)
-        AddResult(events)
-      }
-    }
+    val call = AddCall(now.getOrElse(clock()), memoryType, sessionId, runId,
+      actorId, role, metadata, importance)
+    val plans =
+      if (infer) planItems(Seq(text), memoryType)
+      else Seq(ItemPlan(text, Extraction(Seq(text), Nil, Nil), Map.empty,
+        Seq(embedder.embedOne(text)), Seq(Decision(DecisionAction.Add, text, None)), Nil))
+    writeItems(plans, call).head
     }
   }
 
@@ -210,13 +170,11 @@ final class MemoryManager(
       newMemoryRow(store.nextMemoryId(), t, Some(e), ts, memoryType,
         sessionId, runId, None, None, None, None, importance)
     }
+    val (hist, histEdges) =
+      rows.map(r => historyEntry("ADD", r.id, ts, None, Some(r.text))).unzip
     store.appendMemories(rows)
-    val hist = rows.map(r =>
-      HistoryRow(store.nextHistoryId(), r.id, "ADD", ts, None, Some(r.text), None, None))
     store.appendHistory(hist)
-    // memory → History NODE edges (history ids, not the memory's own id)
-    store.appendEdges(hist.map(h =>
-      EdgeRow(store.nextEdgeId(), h.memory_id, h.id, EdgeTypes.HasHistory, Map.empty)))
+    store.appendEdges(histEdges)
     rows.map(_.id.toString)
     }
   }
@@ -232,32 +190,34 @@ final class MemoryManager(
     * (manager.py:339-343 — each add sees the store its predecessors
     * left); this is the documented scale alternative for corpus-refresh
     * ingest, where per-add driver round-trips dominate (B6 measured the
-    * loop at ≈1 add/s; BASELINE §8).
+    * loop at ≈1 add/s; BASELINE §8). [[add]] is the one-item case.
     *
-    * INTRA-BATCH SEMANTICS (the documented contract):
-    *   - Candidates and reconciliation targets resolve against the
-    *     PRE-BATCH store snapshot. Facts from different batch items do
-    *     not see each other as candidates, and a memory created by item
-    *     i is never a target for item j.
-    *   - If several decisions expire the same target, the expiry
-    *     applies once (all share the batch timestamp; first decision's
-    *     bitemporal invalid_at wins); every such decision still records
-    *     its own history event, exactly as the sequential loop would at
-    *     equal timestamps.
-    *   - An UPDATE/DELETE whose target is absent from the pre-batch
-    *     store behaves like the sequential path: no expiry patch, but
-    *     the UPDATE still creates its memory/supersedes edge/history
-    *     row (with old_text = null).
-    *   - Entity upsert is one merged first-appearance pass; on a
-    *     conflict-free batch the assigned ids equal the sequential
-    *     loop's. Relation reconciliation consults pre-batch relation
-    *     edges only.
-    *   - Episode NEXT_EPISODE / session LEADS_TO chains link the batch
-    *     linearly: the pre-batch predecessor is resolved once (after
-    *     batch expiries), then item i chains to item i+1. The
-    *     sequential path's same-call quirk (an item's own UPDATE-created
-    *     memory can become its chain predecessor) is intentionally not
-    *     reproduced — the linear chain is what a batch caller means.
+    * INTRA-BATCH SEMANTICS (the documented contract). Candidates,
+    * reconciliation targets, inherited entity edges and existing
+    * relations resolve against the store as it was BEFORE the call:
+    * facts of different items never see each other as candidates.
+    * Entity ids follow first appearance across the batch (one merged
+    * upsert). Memory, history, edge and episode ids follow decision
+    * visit order, so [[add]] — the one-item case — keeps its ids.
+    *   1. An item with no facts writes nothing: none of its entities
+    *      or relations are stored.
+    *   2. `reconcileRelations` is called for an item only when it has
+    *      existing triples around its entities.
+    *   3. Session LEADS_TO and episode NEXT_EPISODE chains link the
+    *      items in order. The first item's session predecessor is the
+    *      latest non-expired scoped memory of the chain key that this
+    *      item did not ADD and no later item created (looked up after
+    *      the call's expiries), so its own UPDATE-created memory counts;
+    *      the reference links ADD events only (manager.py:315).
+    *   4. Several decisions on one target produce one expiry (all share
+    *      the call's timestamp); in bitemporal mode its invalid_at is
+    *      the last defined value among them. Each decision still
+    *      records its own history event.
+    *   5. Episode MENTIONS edges use the upsert's entity ids, the ones
+    *      the HAS_ENTITY edges use (scoped to the graph name).
+    *   6. A target that did not exist before the call is not expired;
+    *      an UPDATE of it still creates its memory, SUPERSEDES edge and
+    *      history row (with old_text = null).
     *
     * Returns one [[AddResult]] per input text, index-aligned.
     */
@@ -274,10 +234,23 @@ final class MemoryManager(
   ): Seq[AddResult] = lockFor(config.userId).synchronized {
     tracer.span("memory.add_reconcile_batch", Map("n" -> texts.size.toString)) {
     usageIncr("add_reconcile_batch")
-    if (texts.isEmpty) return Seq.empty
-    val ts = now.getOrElse(clock())
+    if (texts.isEmpty) Seq.empty
+    else {
+      val call = AddCall(now.getOrElse(clock()), memoryType, sessionId, runId,
+        actorId, role, metadata, importance)
+      writeItems(planItems(texts, memoryType), call)
+    }
+    }
+  }
 
-    // 1. extraction per item — same combined→separate fallback ladder as add()
+  /** Extraction → temporal annotation → ONE embed call over every fact →
+    * ONE candidate search against the current store → per-item
+    * reconcile (a driver trait call per item with facts).
+    */
+  private def planItems(texts: Seq[String], memoryType: String): Seq[ItemPlan] = {
+    // combined extraction with the reference's fallback ladder:
+    // combined fails → separate facts + entities legs
+    // (extraction/entities.py:96-132)
     val extractions = texts.map { text =>
       try extractor.extract(text)
       catch {
@@ -292,52 +265,62 @@ final class MemoryManager(
         extractor.annotateTemporal(ex.facts).map(a => a.factIndex -> a).toMap
       else Map.empty
     }
-
-    // 2. ONE embed call over every fact of every item
     val allFacts = extractions.flatMap(_.facts)
-    val allEmbs = if (allFacts.isEmpty) Seq.empty else embedder.embed(allFacts)
+    val (allEmbs, perFact) =
+      if (allFacts.isEmpty) (Seq.empty, Seq.empty)
+      else {
+        val embs = embedder.embed(allFacts)
+        (embs, candidateRowsPerFact(allFacts, embs, memoryType))
+      }
     val offsets = extractions.scanLeft(0)(_ + _.facts.size)
-
-    // 3. ONE candidate-search job against the pre-batch store
-    val perFact = candidateRowsPerFact(allFacts, allEmbs, memoryType)
-
-    // 4. per-item reconcile (driver trait call, like the loop): each
-    // item's candidates = its facts' rows, fact-major/rank-minor,
-    // first-wins dedup WITHIN the item only
-    val candsPerItem: Seq[Seq[(Long, String)]] = extractions.indices.map { i =>
-      (offsets(i) until offsets(i + 1)).flatMap(perFact(_)).distinctBy(_._1)
-    }
-    val decisionsPerItem: Seq[Seq[Decision]] = extractions.zipWithIndex.map {
-      case (ex, i) =>
+    extractions.indices.map { i =>
+      val ex = extractions(i)
+      // an item's candidates = its facts' rows, fact-major/rank-minor,
+      // first-wins dedup WITHIN the item only
+      val cands = (offsets(i) until offsets(i + 1)).flatMap(perFact(_)).distinctBy(_._1)
+      val decisions =
         if (ex.facts.isEmpty) Nil
-        else if (candsPerItem(i).isEmpty)
-          ex.facts.map(f => Decision(DecisionAction.Add, f, None))
-        else reconciler.reconcile(ex.facts, candsPerItem(i))
+        // fast path: nothing to reconcile against → all ADD without a
+        // model call (reconciliation/memories.py:88-90)
+        else if (cands.isEmpty) ex.facts.map(f => Decision(DecisionAction.Add, f, None))
+        else reconciler.reconcile(ex.facts, cands)
+      ItemPlan(texts(i), ex, temporal(i), allEmbs.slice(offsets(i), offsets(i + 1)),
+        decisions, cands)
     }
+  }
 
-    // 5. batched resolution of everything the executor needs:
-    //    update-text embeddings (one call), off-candidate target texts
-    //    (one lookup), inherited entity edges (one lookup)
-    val updateTexts = decisionsPerItem.flatten.collect {
-      case d if d.action == DecisionAction.Update && d.targetMemoryId.nonEmpty => d.text
-    }
+  /** The one write routine of every reconciled add (the SCD2 decision
+    * executor, manager.py:854-1035, plus graph and episode store,
+    * manager.py:1182-1307 and 1646-1767): batched lookups, the decision
+    * loop on the driver, then ONE append per table, one expiry and one
+    * relation-edge delete. Ids are assigned in decision
+    * visit order. The rules are [[addReconcileBatch]]'s.
+    */
+  private def writeItems(plans: Seq[ItemPlan], call: AddCall): Seq[AddResult] = {
+    import call.{ts, actorId, role}
+    // batched resolution of everything the decision loop needs:
+    // update-text embeddings (one call), off-candidate target texts
+    // (one lookup), inherited entity edges (one lookup)
+    val allDecisions = plans.flatMap(_.decisions)
+    val updates = allDecisions.filter(d =>
+      d.action == DecisionAction.Update && d.targetMemoryId.nonEmpty)
     val updateEmbs =
-      if (updateTexts.isEmpty) Iterator.empty else embedder.embed(updateTexts).iterator
-    val knownTexts: Map[Long, String] = candsPerItem.flatten.toMap
-    val targets = decisionsPerItem.flatten
+      if (updates.isEmpty) Iterator.empty else embedder.embed(updates.map(_.text)).iterator
+    val knownTexts: Map[Long, String] = plans.flatMap(_.candidates).toMap
+    val missingTargets = allDecisions
       .collect { case d if d.targetMemoryId.nonEmpty &&
         d.action != DecisionAction.Add && d.action != DecisionAction.None =>
-        d.targetMemoryId.get }.distinct
-    val missingTargets = targets.filterNot(knownTexts.contains)
+        d.targetMemoryId.get }
+      .distinct.filterNot(knownTexts.contains)
     val fetchedTexts: Map[Long, String] =
       if (missingTargets.isEmpty) Map.empty
       else store.memories.filter(col("id").isin(missingTargets: _*))
         .select(col("id"), col("text")).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
     val targetText: Map[Long, String] = knownTexts ++ fetchedTexts
-    val updTargets = decisionsPerItem.flatten.collect {
-      case d if d.action == DecisionAction.Update && d.targetMemoryId.nonEmpty =>
-        d.targetMemoryId.get }.distinct
+    // J10 — a replacement inherits its superseded memory's HAS_ENTITY
+    // edges (manager.py:1153-1180)
+    val updTargets = updates.map(_.targetMemoryId.get).distinct
     val inheritedEnts: Map[Long, Seq[Long]] =
       if (updTargets.isEmpty) Map.empty
       else store.edges
@@ -347,60 +330,43 @@ final class MemoryManager(
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct }
 
-    // 6. drive the decision loop ON THE DRIVER, accumulating rows;
-    // memory/history ids are assigned in the sequential loop's visit
-    // order, so a conflict-free batch lands with identical ids
+    // the decision loop ON THE DRIVER, accumulating rows
     val newMems = Vector.newBuilder[MemoryRow]
     val histRows = Vector.newBuilder[HistoryRow]
     val newEdges = Vector.newBuilder[EdgeRow]
     val expiries = scala.collection.mutable.LinkedHashMap.empty[Long, Option[Long]]
-    val eventsPerItem = scala.collection.mutable.ArrayBuffer.empty[Seq[MemoryEvent]]
-    val createdPerItem = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
 
     def mkMemory(text: String, emb: Option[Array[Float]],
         validAt: Option[Long]): Long = {
-      emb.foreach { e =>
-        require(e.isEmpty || e.length == config.embeddingDimensions,
-          s"embedding dimension ${e.length} != configured ${config.embeddingDimensions}")
-      }
       val id = store.nextMemoryId()
-      newMems += newMemoryRow(id, text, emb, ts, memoryType, sessionId,
-        runId, actorId, role, metadata, validAt, importance)
+      newMems += newMemoryRow(id, text, emb, ts, call.memoryType, call.sessionId,
+        call.runId, actorId, role, call.metadata, validAt, call.importance)
       id
     }
     def mkHistory(event: String, memoryId: Long, oldText: Option[String],
         newText: Option[String]): Unit = {
-      val hid = store.nextHistoryId()
-      histRows += HistoryRow(hid, memoryId, event, ts, oldText, newText,
-        actorId, role)
-      newEdges += EdgeRow(store.nextEdgeId(), memoryId, hid,
-        EdgeTypes.HasHistory, Map.empty)
+      val (h, e) = historyEntry(event, memoryId, ts, oldText, newText, actorId, role)
+      histRows += h
+      newEdges += e
     }
+    // W6 — soft expiry; invalid_at only in bitemporal mode
+    // (manager.py:1130-1151). Returns the old text.
     def expire(target: Long, invalidAt: Option[Long]): Option[String] = {
       val known = targetText.get(target)
-      if (known.isDefined && !expiries.contains(target))
-        expiries(target) = if (config.enableBitemporal) invalidAt else None
+      if (known.isDefined) {
+        val inv = if (config.enableBitemporal) invalidAt else None
+        expiries(target) = inv.orElse(expiries.getOrElse(target, None))
+      }
       known
     }
 
-    decisionsPerItem.zipWithIndex.foreach { case (decisions, item) =>
-      val events = scala.collection.mutable.ArrayBuffer.empty[MemoryEvent]
-      val created = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val itemEmbs = allEmbs.slice(offsets(item), offsets(item + 1))
-      decisions.zipWithIndex.foreach { case (d, i) =>
-        val factValidAt = temporal(item).get(i).flatMap(_.validAt)
+    val (events, created) = plans.map { plan =>
+      val evs = Vector.newBuilder[MemoryEvent]
+      val made = Vector.newBuilder[Long]
+      plan.decisions.zipWithIndex.foreach { case (d, i) =>
+        val factValidAt = plan.temporal.get(i).flatMap(_.validAt)
         d.action match {
-          case DecisionAction.Add =>
-            val id = mkMemory(d.text, itemEmbs.lift(i), factValidAt)
-            mkHistory("ADD", id, None, Some(d.text))
-            events += MemoryEvent("ADD", Some(id.toString), d.text)
-            created += id
-          case DecisionAction.Update if d.targetMemoryId.isEmpty =>
-            val id = mkMemory(d.text, itemEmbs.lift(i), factValidAt)
-            mkHistory("ADD", id, None, Some(d.text))
-            events += MemoryEvent("ADD", Some(id.toString), d.text)
-            created += id
-          case DecisionAction.Update =>
+          case DecisionAction.Update if d.targetMemoryId.nonEmpty =>
             val target = d.targetMemoryId.get
             val oldText = expire(target, Some(factValidAt.getOrElse(ts)))
             val id = mkMemory(d.text, Some(updateEmbs.next()), factValidAt)
@@ -410,43 +376,46 @@ final class MemoryManager(
               newEdges += EdgeRow(store.nextEdgeId(), id, e,
                 EdgeTypes.HasEntity, Map.empty))
             mkHistory("UPDATE", id, oldText, Some(d.text))
-            events += MemoryEvent("UPDATE", Some(id.toString), d.text, oldText)
-            created += id
-          case DecisionAction.Delete if d.targetMemoryId.isEmpty => ()
-          case DecisionAction.Delete =>
+            evs += MemoryEvent("UPDATE", Some(id.toString), d.text, oldText)
+            made += id
+          // UPDATE without target downgrades to ADD (manager.py:910-943)
+          case DecisionAction.Add | DecisionAction.Update =>
+            val id = mkMemory(d.text, plan.embeddings.lift(i), factValidAt)
+            mkHistory("ADD", id, None, Some(d.text))
+            evs += MemoryEvent("ADD", Some(id.toString), d.text)
+            made += id
+          case DecisionAction.Delete if d.targetMemoryId.nonEmpty =>
             val target = d.targetMemoryId.get
             val oldText = expire(target, None)
             mkHistory("DELETE", target, oldText, None)
-            events += MemoryEvent("DELETE", Some(target.toString),
+            evs += MemoryEvent("DELETE", Some(target.toString),
               oldText.getOrElse(""), oldText)
-          case DecisionAction.None => ()
+          // NONE, and DELETE without target (skipped, manager.py:1003)
+          case _ => ()
         }
       }
-      eventsPerItem += events.toSeq
-      createdPerItem += created.toSeq
-    }
+      (evs.result(), made.result())
+    }.unzip
 
-    // 7. graph store, batched: one merged first-appearance entity
-    // upsert (conflict-free ids equal the sequential loop's), HAS_ENTITY
-    // cross products per item, relation reconciliation vs the PRE-BATCH
-    // relation edges with one delete + one append
-    val allEnts = extractions.flatMap(_.entities)
-    val entityIdsAll: Map[String, Long] = upsertEntities(allEnts)
-    extractions.zipWithIndex.foreach { case (ex, item) =>
-      if (ex.entities.nonEmpty) {
-        val itemEntIds = ex.entities.flatMap(e => entityIdsAll.get(e.name))
-          .distinct.sorted
-        for {
-          m <- eventsPerItem(item).flatMap(_.memoryId).map(_.toLong)
-          e <- itemEntIds
-        } newEdges += EdgeRow(store.nextEdgeId(), m, e, EdgeTypes.HasEntity,
-          Map.empty)
-      }
+    // W9/W10 — graph store: one merged first-appearance entity upsert
+    // over the items with facts; every event memory of an item links to
+    // every entity it extracted (the reference's cross product);
+    // relation reconciliation against the pre-call relation edges with
+    // one delete
+    val factful = plans.indices.filter(i => plans(i).extraction.facts.nonEmpty)
+    val entityIds: Map[String, Long] =
+      upsertEntities(factful.flatMap(i => plans(i).extraction.entities))
+    def idsOf(ents: Seq[ExtractedEntity]): Seq[Long] =
+      ents.flatMap(e => entityIds.get(e.name)).distinct.sorted
+    factful.foreach { i =>
+      for {
+        m <- events(i).flatMap(_.memoryId).map(_.toLong)
+        e <- idsOf(plans(i).extraction.entities)
+      } newEdges += EdgeRow(store.nextEdgeId(), m, e, EdgeTypes.HasEntity, Map.empty)
     }
-    val itemsWithRels = extractions.filter(_.relations.nonEmpty)
-    if (itemsWithRels.nonEmpty) {
-      val touched = itemsWithRels
-        .flatMap(_.entities.flatMap(e => entityIdsAll.get(e.name))).distinct
+    val withRels = factful.map(plans(_).extraction).filter(_.relations.nonEmpty)
+    val touched = withRels.flatMap(ex => idsOf(ex.entities)).distinct
+    if (touched.nonEmpty) {
       val existing = existingRelations(touched)
       val names =
         if (existing.isEmpty) Map.empty[Long, String]
@@ -454,57 +423,47 @@ final class MemoryManager(
           .filter(col("id").isin(existing.flatMap(e => Seq(e._2, e._3)).distinct: _*))
           .select(col("id"), col("name")).collect()
           .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val deleteIds = itemsWithRels.flatMap { ex =>
-        val itemEntIds = ex.entities.flatMap(e => entityIdsAll.get(e.name)).toSet
-        val itemTriples = existing.filter(e => itemEntIds.contains(e._2))
+      // the trait decides which existing triples to drop; delete the
+      // FIRST matching edge per rejected (source, target, relation_type),
+      // like manager.py:1753-1767
+      val deleteIds = withRels.flatMap { ex =>
+        val own = idsOf(ex.entities).toSet
+        val triples = existing.filter(e => own.contains(e._2))
           .map { case (eid, s, t, rt) =>
             (eid, ExtractedRelation(names.getOrElse(s, s.toString),
               names.getOrElse(t, t.toString), rt)) }
-        val toDelete = reconciler.reconcileRelations(
-          ex.relations, itemTriples.map(_._2))
-        toDelete.flatMap { d =>
-          itemTriples.find { case (_, r) =>
+        if (triples.isEmpty) Nil
+        else reconciler.reconcileRelations(ex.relations, triples.map(_._2)).flatMap { d =>
+          triples.find { case (_, r) =>
             r.source == d.source && r.target == d.target &&
               r.relationType == d.relationType
           }.map(_._1)
         }
       }.distinct
       store.deleteEdgesById(deleteIds)
-      itemsWithRels.foreach { ex =>
-        ex.relations.foreach { r =>
-          for {
-            s <- entityIdsAll.get(r.source)
-            t <- entityIdsAll.get(r.target)
-          } newEdges += EdgeRow(store.nextEdgeId(), s, t, EdgeTypes.Relation,
-            Map("relation_type" -> r.relationType))
-        }
-      }
+      for {
+        ex <- withRels
+        r <- ex.relations
+        s <- entityIds.get(r.source)
+        t <- entityIds.get(r.target)
+      } newEdges += EdgeRow(store.nextEdgeId(), s, t, EdgeTypes.Relation,
+        Map("relation_type" -> r.relationType))
     }
 
-    // 8. ONE append per table + at most two expiry patches (with and
-    // without bitemporal invalid_at)
+    // ONE append per table + one expiry
     store.appendMemories(newMems.result())
-    if (expiries.nonEmpty) {
-      import spark.implicits._
-      val (bi, plain) = expiries.toSeq.partition(_._2.isDefined)
-      if (plain.nonEmpty)
-        store.patchMemories(
-          plain.map { case (id, _) => (id, ts) }.toDF("id", "expired_at"),
-          Seq("expired_at"))
-      if (bi.nonEmpty)
-        store.patchMemories(
-          bi.map { case (id, inv) => (id, ts, inv.get) }
-            .toDF("id", "expired_at", "invalid_at"),
-          Seq("expired_at", "invalid_at"))
-    }
+    store.expireMemories(ts, expiries.toSeq)
     store.appendHistory(histRows.result())
 
-    // 9. linear batch chaining: pre-batch predecessor resolved ONCE
-    // (post-expiry), then item → item within the batch
-    val chainKey = runId.orElse(config.runId).orElse(sessionId)
+    // W11/J11 — episodes + NEXT_EPISODE, or the LEADS_TO session chain
+    // (manager.py:1182-1307). The chain key must match what newMemoryRow
+    // STORES in run_id; reference: config.run_id or sid (manager.py:314)
+    val chainKey = call.runId.orElse(config.runId).orElse(call.sessionId)
     if (config.enableEpisodes) {
+      // episode creation requires a non-empty event list
+      val first = events.indexWhere(_.nonEmpty)
       var prevEp: Option[Long] =
-        if (chainKey.isEmpty) None
+        if (first < 0) None
         else chainKey.flatMap { key =>
           store.episodes
             .filter(col("user_id") === config.userId &&
@@ -514,76 +473,65 @@ final class MemoryManager(
             .select(col("id")).collect().headOption.map(_.getLong(0))
         }
       val epRows = Vector.newBuilder[EpisodeRow]
-      texts.indices.foreach { item =>
-        if (eventsPerItem(item).nonEmpty) {
-          val epId = store.nextEpisodeId()
-          epRows += EpisodeRow(epId, texts(item), "message", config.userId,
-            ts, sessionId, runId.orElse(config.runId))
-          val prodIds = eventsPerItem(item).flatMap(_.memoryId).map(_.toLong).distinct
-          prodIds.foreach(m => newEdges += EdgeRow(store.nextEdgeId(), epId,
-            m, EdgeTypes.Produced, Map.empty))
-          val mentioned = extractions(item).entities
-            .flatMap(e => entityIdsAll.get(e.name)).distinct.sorted
-          mentioned.foreach(e => newEdges += EdgeRow(store.nextEdgeId(),
-            epId, e, EdgeTypes.Mentions, Map.empty))
-          if (chainKey.nonEmpty) {
-            prevEp.foreach(p => newEdges += EdgeRow(store.nextEdgeId(), p,
-              epId, EdgeTypes.NextEpisode, Map.empty))
-            prevEp = Some(epId)
-          }
+      plans.indices.filter(events(_).nonEmpty).foreach { item =>
+        // episode rows store the EFFECTIVE run id (per-call or config),
+        // which the chain lookup above matches (manager.py:1245-1246)
+        val epId = store.nextEpisodeId()
+        epRows += EpisodeRow(epId, plans(item).text, "message", config.userId,
+          ts, call.sessionId, call.runId.orElse(config.runId))
+        // PRODUCED covers EVERY event carrying a memory id
+        // (manager.py:316, 1252-1255)
+        events(item).flatMap(_.memoryId).map(_.toLong).distinct.foreach(m =>
+          newEdges += EdgeRow(store.nextEdgeId(), epId, m, EdgeTypes.Produced, Map.empty))
+        idsOf(plans(item).extraction.entities).foreach(e =>
+          newEdges += EdgeRow(store.nextEdgeId(), epId, e, EdgeTypes.Mentions, Map.empty))
+        if (chainKey.nonEmpty) {
+          prevEp.foreach(p => newEdges += EdgeRow(store.nextEdgeId(), p,
+            epId, EdgeTypes.NextEpisode, Map.empty))
+          prevEp = Some(epId)
         }
       }
       store.appendEpisodes(epRows.result())
     } else chainKey.foreach { key =>
-      val createdAll = createdPerItem.flatten.toSeq
+      // session chains link only ADD events (manager.py:315)
+      val addIds = events.map(_.filter(_.event == "ADD").flatMap(_.memoryId).map(_.toLong))
+      val first = created.indexWhere(_.nonEmpty)
+      // J11 — as-of: latest non-expired memory of this user+run that the
+      // first creating item did not ADD and no later item created
+      // (manager.py:1182-1223)
       var prev: Option[Long] =
-        if (createdPerItem.forall(_.isEmpty)) None
+        if (first < 0 || addIds(first).isEmpty) None
         else scopeCol(store.memories)
           .filter(col("expired_at").isNull &&
-            !col("id").isin(createdAll: _*) &&
+            !col("id").isin(addIds(first) ++ created.drop(first + 1).flatten: _*) &&
             (coalesce(col("run_id"), col("session_id")) === key))
           .orderBy(col("created_at").desc, col("id").desc)
           .select(col("id")).collect().headOption.map(_.getLong(0))
-      texts.indices.foreach { item =>
-        val addIds = eventsPerItem(item).filter(_.event == "ADD")
-          .flatMap(_.memoryId).map(_.toLong)
-        if (addIds.nonEmpty) {
+      plans.indices.foreach { item =>
+        // sequence numbering mirrors manager.py:1211-1221: prev→new[0]
+        // is 0; new[i]→new[i+1] is ALWAYS i+1 (even without a prev)
+        val ids = addIds(item)
+        if (ids.nonEmpty) {
           prev.foreach(p => newEdges += EdgeRow(store.nextEdgeId(), p,
-            addIds.head, EdgeTypes.LeadsTo, Map("sequence" -> "0")))
-          addIds.sliding(2).zipWithIndex.foreach {
+            ids.head, EdgeTypes.LeadsTo, Map("sequence" -> "0")))
+          ids.sliding(2).zipWithIndex.foreach {
             case (Seq(a, b), i) => newEdges += EdgeRow(store.nextEdgeId(),
               a, b, EdgeTypes.LeadsTo, Map("sequence" -> (i + 1).toString))
             case _ => ()
           }
         }
-        if (createdPerItem(item).nonEmpty)
-          prev = Some(createdPerItem(item).last)
+        if (created(item).nonEmpty) prev = Some(created(item).last)
       }
     }
     store.appendEdges(newEdges.result())
-    eventsPerItem.map(AddResult(_)).toSeq
-    }
+    events.map(AddResult(_))
   }
 
   /** J12 — reconciliation-candidate search: top-k cosine per fact above
-    * the threshold over the user's non-expired memories, dedup across
-    * facts first-wins (search/vector.py:294-348). One distributed job
-    * for all facts.
-    */
-  private def candidateSearch(
-      facts: Seq[String],
-      embeddings: Seq[Array[Float]],
-      memoryType: String
-  ): Seq[(Long, String)] =
-    // flatten is fact-major / rank-minor, so first-fact-wins dedup over
-    // the per-fact rows reproduces the original flat contract exactly
-    candidateRowsPerFact(facts, embeddings, memoryType)
-      .flatten.distinctBy(_._1)
-
-  /** J12, per-fact shape: rank-ordered candidate rows for EACH fact
-    * (index-aligned with `facts`), before any cross-fact dedup — the
-    * form [[addReconcileBatch]] needs, where facts from different batch
-    * items must not dedup against each other.
+    * the threshold over the user's non-expired memories
+    * (search/vector.py:294-348), rank-ordered rows for EACH fact
+    * (index-aligned with `facts`) before any cross-fact dedup, so facts
+    * of different batch items never dedup against each other.
     */
   private def candidateRowsPerFact(
       facts: Seq[String],
@@ -647,70 +595,6 @@ final class MemoryManager(
     }
   }
 
-  /** W2 — the SCD2 decision executor (manager.py:854-1035). */
-  private def executeDecisions(
-      decisions: Seq[Decision],
-      embeddings: Seq[Array[Float]],
-      temporal: Map[Int, TemporalAnnotation],
-      ts: Long,
-      memoryType: String,
-      sessionId: Option[String],
-      runId: Option[String],
-      actorId: Option[String],
-      role: Option[String],
-      metadata: Option[String],
-      importance: Double,
-      knownTexts: Map[Long, String] // candidate texts already collected
-  ): Seq[MemoryEvent] = {
-    val events = scala.collection.mutable.ArrayBuffer.empty[MemoryEvent]
-    decisions.zipWithIndex.foreach { case (d, i) =>
-      val factValidAt = temporal.get(i).flatMap(_.validAt)
-      d.action match {
-        case DecisionAction.Add =>
-          val emb = embeddings.lift(i)
-          val id = createMemory(d.text, emb, ts, memoryType, sessionId,
-            runId, actorId, role, metadata, factValidAt, importance)
-          recordHistory("ADD", id, ts, None, Some(d.text), actorId, role)
-          events += MemoryEvent("ADD", Some(id.toString), d.text)
-
-        case DecisionAction.Update if d.targetMemoryId.isEmpty =>
-          // UPDATE without target downgrades to ADD (manager.py:910-943)
-          val emb = embeddings.lift(i)
-          val id = createMemory(d.text, emb, ts, memoryType, sessionId,
-            runId, actorId, role, metadata, factValidAt, importance)
-          recordHistory("ADD", id, ts, None, Some(d.text), actorId, role)
-          events += MemoryEvent("ADD", Some(id.toString), d.text)
-
-        case DecisionAction.Update =>
-          val target = d.targetMemoryId.get
-          val oldText = expireMemory(target, ts, Some(factValidAt.getOrElse(ts)),
-            knownText = knownTexts.get(target))
-          val emb = embedder.embedOne(d.text)
-          val id = createMemory(d.text, Some(emb), ts, memoryType, sessionId,
-            runId, actorId, role, metadata, factValidAt, importance)
-          store.appendEdges(Seq(EdgeRow(store.nextEdgeId(), id, target,
-            EdgeTypes.Supersedes, Map.empty)))
-          inheritEntityEdges(target, id)
-          recordHistory("UPDATE", id, ts, oldText, Some(d.text), actorId, role)
-          events += MemoryEvent("UPDATE", Some(id.toString), d.text, oldText)
-
-        case DecisionAction.Delete if d.targetMemoryId.isEmpty =>
-          () // DELETE without target is skipped (manager.py:1003)
-
-        case DecisionAction.Delete =>
-          val target = d.targetMemoryId.get
-          val oldText = expireMemory(target, ts, None,
-            knownText = knownTexts.get(target))
-          recordHistory("DELETE", target, ts, oldText, None, actorId, role)
-          events += MemoryEvent("DELETE", Some(target.toString),
-            oldText.getOrElse(""), oldText)
-
-        case DecisionAction.None => ()
-      }
-    }
-    events.toSeq
-  }
-
   private def newMemoryRow(
       id: Long,
       text: String,
@@ -724,7 +608,11 @@ final class MemoryManager(
       metadata: Option[String],
       validAt: Option[Long],
       importance: Double
-  ): MemoryRow =
+  ): MemoryRow = {
+    embedding.foreach { e =>
+      require(e.isEmpty || e.length == config.embeddingDimensions,
+        s"embedding dimension ${e.length} != configured ${config.embeddingDimensions}")
+    }
     MemoryRow(
       id = id, text = text, user_id = config.userId,
       created_at = ts, updated_at = ts, learned_at = ts,
@@ -739,132 +627,24 @@ final class MemoryManager(
       embedding = embedding.getOrElse(Array.empty[Float]),
       source = None
     )
-
-  private def createMemory(
-      text: String,
-      embedding: Option[Array[Float]],
-      ts: Long,
-      memoryType: String,
-      sessionId: Option[String],
-      runId: Option[String],
-      actorId: Option[String],
-      role: Option[String],
-      metadata: Option[String],
-      validAt: Option[Long],
-      importance: Double = 1.0
-  ): Long = {
-    embedding.foreach { e =>
-      require(e.isEmpty || e.length == config.embeddingDimensions,
-        s"embedding dimension ${e.length} != configured ${config.embeddingDimensions}")
-    }
-    val id = store.nextMemoryId()
-    store.appendMemories(Seq(newMemoryRow(id, text, embedding, ts,
-      memoryType, sessionId, runId, actorId, role, metadata, validAt, importance)))
-    id
   }
 
-  /** W6 — soft expiry; sets invalid_at only in bitemporal mode
-    * (manager.py:1130-1151). Returns the old text.
+  /** W8 — a history entry: the History node row and its HAS_HISTORY
+    * edge (history.py:28-60; the non-CDC fallback path is the faithful
+    * one). The caller appends both.
     */
-  private def expireMemory(id: Long, ts: Long, invalidAt: Option[Long],
-      knownText: Option[String]): Option[String] = {
-    // the reconcile path already collected the target's text during
-    // candidate search — skip the per-add existence probe when the
-    // caller can vouch for it (per-user lock rules out a concurrent
-    // delete between the two)
-    val cur = knownText.orElse(store.memories.filter(col("id") === id)
-      .select(col("text")).collect().headOption.map(_.getString(0)))
-    if (cur.isDefined) {
-      import spark.implicits._
-      val inv: Option[Long] = if (config.enableBitemporal) invalidAt else None
-      inv match {
-        case Some(v) =>
-          store.patchMemories(
-            Seq((id, ts, v)).toDF("id", "expired_at", "invalid_at"),
-            Seq("expired_at", "invalid_at"))
-        case None =>
-          store.patchMemories(
-            Seq((id, ts)).toDF("id", "expired_at"), Seq("expired_at"))
-      }
-    }
-    cur
-  }
-
-  /** W8 — history entry as a History node + HAS_HISTORY edge
-    * (history.py:28-60; the non-CDC fallback path is the faithful one).
-    */
-  private def recordHistory(
+  private def historyEntry(
       event: String,
       memoryId: Long,
       ts: Long,
       oldText: Option[String],
       newText: Option[String],
-      actorId: Option[String],
-      role: Option[String]
-  ): Unit = {
+      actorId: Option[String] = None,
+      role: Option[String] = None
+  ): (HistoryRow, EdgeRow) = {
     val hid = store.nextHistoryId()
-    store.appendHistory(Seq(HistoryRow(hid, memoryId, event, ts, oldText,
-      newText, actorId, role)))
-    store.appendEdges(Seq(EdgeRow(store.nextEdgeId(), memoryId, hid,
-      EdgeTypes.HasHistory, Map.empty)))
-  }
-
-  /** J10 — copy HAS_ENTITY edges from a superseded memory to its
-    * replacement (manager.py:1153-1180).
-    */
-  private def inheritEntityEdges(oldId: Long, newId: Long): Unit = {
-    val ents = store.edges
-      .filter(col("edge_type") === EdgeTypes.HasEntity && col("src") === oldId)
-      .select(col("dst")).collect().map(_.getLong(0)).toSeq.distinct
-    store.appendEdges(ents.map(e =>
-      EdgeRow(store.nextEdgeId(), newId, e, EdgeTypes.HasEntity, Map.empty)))
-  }
-
-  /** W9/W10 — entity upsert + HAS_ENTITY/RELATION edge store
-    * (manager.py:1646-1767). Every event memory links to every extracted
-    * entity, matching the reference's cross product.
-    */
-  private def storeGraph(extraction: Extraction, memoryIds: Seq[Long]): Unit = {
-    if (extraction.entities.nonEmpty) {
-      val entityIds: Map[String, Long] = upsertEntities(extraction.entities)
-      store.appendEdges(for {
-        m <- memoryIds
-        e <- entityIds.values.toSeq.sorted
-      } yield EdgeRow(store.nextEdgeId(), m, e, EdgeTypes.HasEntity, Map.empty))
-
-      if (extraction.relations.nonEmpty) {
-        // W10 — relation reconciliation: the trait decides which existing
-        // triples to drop; delete the FIRST matching edge per rejected
-        // (source, target, relation_type), like manager.py:1753-1767
-        val existing = existingRelations(entityIds.values.toSeq)
-        if (existing.nonEmpty) {
-          val names = store.entities
-            .filter(col("id").isin(existing.flatMap(e => Seq(e._2, e._3)).distinct: _*))
-            .select(col("id"), col("name")).collect()
-            .map(r => r.getLong(0) -> r.getString(1)).toMap
-          val existingTriples = existing.map { case (eid, s, t, rt) =>
-            (eid, ExtractedRelation(names.getOrElse(s, s.toString),
-              names.getOrElse(t, t.toString), rt))
-          }
-          val toDelete = reconciler.reconcileRelations(
-            extraction.relations, existingTriples.map(_._2))
-          val deleteIds = toDelete.flatMap { d =>
-            existingTriples.find { case (_, r) =>
-              r.source == d.source && r.target == d.target &&
-                r.relationType == d.relationType
-            }.map(_._1)
-          }.distinct
-          store.deleteEdgesById(deleteIds)
-        }
-        store.appendEdges(extraction.relations.flatMap { r =>
-          for {
-            s <- entityIds.get(r.source)
-            t <- entityIds.get(r.target)
-          } yield EdgeRow(store.nextEdgeId(), s, t, EdgeTypes.Relation,
-            Map("relation_type" -> r.relationType))
-        })
-      }
-    }
+    (HistoryRow(hid, memoryId, event, ts, oldText, newText, actorId, role),
+      EdgeRow(store.nextEdgeId(), memoryId, hid, EdgeTypes.HasHistory, Map.empty))
   }
 
   /** W9 — BATCHED entity upsert: one lookup join for every entity of the
@@ -906,81 +686,6 @@ final class MemoryManager(
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getMap[String, String](3).getOrElse("relation_type", "")))
       .toSeq
-
-  /** W11/J11 — episode creation + chains, or LEADS_TO session chain
-    * (manager.py:1182-1307).
-    */
-  private def linkSessionOrEpisode(
-      newIds: Seq[Long],
-      entities: Seq[ExtractedEntity],
-      content: String,
-      sessionId: Option[String],
-      runId: Option[String],
-      ts: Long,
-      hasEvents: Boolean = true,
-      producedIds: Seq[Long] = Nil
-  ): Unit = {
-    // chain key must match what newMemoryRow STORES in run_id
-    // (runId.orElse(config.runId)) or the prev-link lookup silently never
-    // matches when config.runId is set; reference: config.run_id or sid
-    // (manager.py:314)
-    val chainKey = runId.orElse(config.runId).orElse(sessionId)
-    if (config.enableEpisodes && hasEvents) {
-      val epId = store.nextEpisodeId()
-      // episode rows store the EFFECTIVE run id (per-call or config) —
-      // the reference stores config.run_id (manager.py:1245-1246) and
-      // the chain lookup below matches coalesce(run_id, session_id)
-      // against chainKey, so the stored value must equal the key or
-      // NEXT_EPISODE linking silently never fires when config.runId set
-      store.appendEpisodes(Seq(EpisodeRow(epId, content, "message",
-        config.userId, ts, sessionId, runId.orElse(config.runId))))
-      val prodIds = if (producedIds.nonEmpty) producedIds else newIds
-      store.appendEdges(prodIds.map(m =>
-        EdgeRow(store.nextEdgeId(), epId, m, EdgeTypes.Produced, Map.empty)))
-      // one lookup for ALL mentioned entities (was a per-entity probe)
-      val entNames = entities.map(_.name).distinct
-      val entIds =
-        if (entNames.isEmpty) Nil
-        else store.entities
-          .filter(col("user_id") === config.userId && col("name").isin(entNames: _*))
-          .groupBy(col("name")).agg(min(col("id")).as("id"))
-          .orderBy(col("id"))
-          .select(col("id")).collect().map(_.getLong(0)).toSeq
-      store.appendEdges(entIds.map(e =>
-        EdgeRow(store.nextEdgeId(), epId, e, EdgeTypes.Mentions, Map.empty)))
-      // NEXT_EPISODE from the previous episode of the same user+run
-      chainKey.foreach { key =>
-        val prev = store.episodes
-          .filter(col("user_id") === config.userId && col("id") =!= epId &&
-            (col("run_id") === key || (col("run_id").isNull && col("session_id") === key)))
-          .orderBy(col("created_at").desc, col("id").desc)
-          .select(col("id")).collect().headOption.map(_.getLong(0))
-        prev.foreach(p => store.appendEdges(Seq(EdgeRow(store.nextEdgeId(),
-          p, epId, EdgeTypes.NextEpisode, Map.empty))))
-      }
-    } else chainKey.foreach { key =>
-      if (newIds.nonEmpty) {
-        // J11 — as-of: latest non-expired memory of this user+run that is
-        // not one of the new ids (manager.py:1182-1223)
-        val prev = scopeCol(store.memories)
-          .filter(col("expired_at").isNull && !col("id").isin(newIds: _*) &&
-            (coalesce(col("run_id"), col("session_id")) === key))
-          .orderBy(col("created_at").desc, col("id").desc)
-          .select(col("id")).collect().headOption.map(_.getLong(0))
-        // sequence numbering mirrors manager.py:1211-1221: prev→new[0]
-        // is 0; new[i]→new[i+1] is ALWAYS i+1 (even without a prev)
-        val prevEdge = prev.map(p =>
-          EdgeRow(store.nextEdgeId(), p, newIds.head, EdgeTypes.LeadsTo,
-            Map("sequence" -> "0")))
-        val newEdges = newIds.sliding(2).zipWithIndex.collect {
-          case (Seq(a, b), i) =>
-            EdgeRow(store.nextEdgeId(), a, b, EdgeTypes.LeadsTo,
-              Map("sequence" -> (i + 1).toString))
-        }.toSeq
-        store.appendEdges(prevEdge.toSeq ++ newEdges)
-      }
-    }
-  }
 
   // ------------------------------------------------------------------
   // G1-G4 — whole-graph metrics + communities (manager.py:1585-1644,
@@ -1724,12 +1429,11 @@ final class MemoryManager(
     old match {
       case None => false
       case Some(oldText) =>
-        import spark.implicits._
-        val emb = embedder.embedOne(newText)
-        store.patchMemories(
-          Seq((id, newText, ts, emb)).toDF("id", "text", "updated_at", "embedding"),
-          Seq("text", "updated_at", "embedding"))
-        recordHistory("UPDATE", id, ts, Some(oldText), Some(newText), None, None)
+        store.setMemory(id, Seq("text" -> lit(newText), "updated_at" -> lit(ts),
+          "embedding" -> typedLit(embedder.embedOne(newText))))
+        val (h, e) = historyEntry("UPDATE", id, ts, Some(oldText), Some(newText))
+        store.appendHistory(Seq(h))
+        store.appendEdges(Seq(e))
         true
     }
   }
@@ -1760,11 +1464,7 @@ final class MemoryManager(
     require(importance >= 0.0 && importance <= 1.0, "importance must be in [0, 1]")
     val id = memoryId.toLong
     val exists = !store.memories.filter(col("id") === id).isEmpty
-    if (exists) {
-      import spark.implicits._
-      store.patchMemories(Seq((id, importance)).toDF("id", "importance"),
-        Seq("importance"))
-    }
+    if (exists) store.setMemory(id, Seq("importance" -> lit(importance)))
     exists
   }
 
@@ -1998,26 +1698,54 @@ final class MemoryManager(
       // (with ADD history) first, then DERIVED_FROM from every summary
       // to every original, then ONE delete-with-history pass per batch —
       // a per-summary loop would duplicate DELETE history and delete
-      // calls whenever the summarizer returns more than one text
+      // calls whenever the summarizer returns more than one text. Rows
+      // are built on the driver and land with one append per table.
       val summaries = summarizer.summarize(batch.map(_._2)).filter(_.nonEmpty)
-      val newIds = summaries.map { s =>
-        val id = createMemory(s, Some(embedder.embedOne(s)), ts,
-          MemoryTypes.Semantic, None, None, None, None, None, None)
-        import spark.implicits._
-        store.patchMemories(Seq((id, "summarize")).toDF("id", "source"), Seq("source"))
-        recordHistory("ADD", id, ts, None, Some(s), None, None)
-        id
+      val embs = if (summaries.isEmpty) Nil else embedder.embed(summaries)
+      val rows = summaries.zip(embs).map { case (s, e) =>
+        newMemoryRow(store.nextMemoryId(), s, Some(e), ts, MemoryTypes.Semantic,
+          None, None, None, None, None, None, 1.0).copy(source = Some("summarize"))
       }
-      store.appendEdges(for {
-        nid <- newIds
+      val (addHist, addEdges) =
+        rows.map(r => historyEntry("ADD", r.id, ts, None, Some(r.text))).unzip
+      val derived = for {
+        r <- rows
         (orig, _) <- batch
-      } yield EdgeRow(store.nextEdgeId(), nid, orig, EdgeTypes.DerivedFrom, Map.empty))
-      batch.foreach { case (orig, t) =>
-        recordHistory("DELETE", orig, ts, Some(t), None, None, None)
-      }
+      } yield EdgeRow(store.nextEdgeId(), r.id, orig, EdgeTypes.DerivedFrom, Map.empty)
+      val (delHist, delEdges) = batch.map { case (orig, t) =>
+        historyEntry("DELETE", orig, ts, Some(t), None) }.unzip
+      store.appendMemories(rows)
+      store.appendHistory(addHist ++ delHist)
+      store.appendEdges(addEdges ++ derived ++ delEdges)
       store.deleteMemories(batch.map(_._1))
-      newIds.map(_.toString)
+      rows.map(_.id.toString)
     }.toSeq
     }
   }
+}
+
+object MemoryManager {
+
+  /** The per-call fields every row of one reconciled add carries. */
+  private final case class AddCall(
+      ts: Long,
+      memoryType: String,
+      sessionId: Option[String],
+      runId: Option[String],
+      actorId: Option[String],
+      role: Option[String],
+      metadata: Option[String],
+      importance: Double)
+
+  /** One item of a reconciled add, planned: its extraction, the
+    * embedding of each fact, the reconciler's decisions and the
+    * candidate rows it saw (their texts resolve UPDATE/DELETE targets).
+    */
+  private final case class ItemPlan(
+      text: String,
+      extraction: Extraction,
+      temporal: Map[Int, TemporalAnnotation],
+      embeddings: Seq[Array[Float]],
+      decisions: Seq[Decision],
+      candidates: Seq[(Long, String)])
 }

@@ -1,8 +1,12 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** DataFrame-backed labeled-property-graph store (SURVEY §1, S1-S9).
@@ -10,13 +14,18 @@ import org.apache.spark.sql.functions._
   * One DataFrame per label plus a single typed edge table. Mutations are
   * the three Spark-native write shapes:
   *   - append       = `unionByName` of a small new-rows DataFrame,
-  *   - upsert/patch = broadcast left-join MERGE (patch rows win on the
-  *                    patched columns, base rows pass through),
-  *   - delete       = `left_anti` join on the id set.
+  *   - upsert/patch = a projection over driver-known ids and literal
+  *                    values, or, for a DataFrame patch, a broadcast
+  *                    left-join MERGE (patch rows win on the patched
+  *                    columns, base rows pass through),
+  *   - delete       = a filter on a driver-known id set, or a
+  *                    `left_anti` join on a predicate's id frame.
   * Lineage is truncated with an eager `localCheckpoint` every
-  * `checkpointEvery` mutations so a long-lived session stays flat. At
-  * warehouse scale the same three shapes write Parquet partitions
-  * (persist/load below); the in-session DataFrames are the hot state.
+  * `checkpointEvery` mutations so a long-lived session stays flat; until
+  * then every scan re-runs the joins in it, one broadcast job each,
+  * which is why driver-known writes avoid them. At warehouse scale the
+  * same three shapes write Parquet partitions (persist/load below); the
+  * in-session DataFrames are the hot state.
   *
   * Ids are per-label sequences (reference ids are engine-global,
   * protocol.py:17-27; per-label spaces are equivalent here because every
@@ -185,6 +194,38 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     tick()
   }
 
+  /** W6 soft expiry of driver-known ids: expired_at = `ts` on each id,
+    * invalid_at where one is given. One projection, like [[bumpAccess]]:
+    * a join-shaped patch would add a broadcast job to every later scan
+    * of the table until the next checkpoint truncates it.
+    */
+  def expireMemories(ts: Long, invalidAt: Seq[(Long, Option[Long])]): Unit =
+    this.synchronized {
+      if (invalidAt.nonEmpty) {
+        val expired = when(col("id").isin(invalidAt.map(_._1): _*), lit(ts))
+          .otherwise(col("expired_at"))
+        // one branch per distinct invalid_at value (usually one: the op ts)
+        val invalid = invalidAt.collect { case (id, Some(v)) => v -> id }
+          .groupMap(_._1)(_._2)
+          .foldLeft(col("invalid_at")) { case (c, (v, ids)) =>
+            when(col("id").isin(ids: _*), lit(v)).otherwise(c) }
+        memories = memories.withColumns(Map("expired_at" -> expired, "invalid_at" -> invalid))
+        tick()
+      }
+    }
+
+  /** Sets literal values on ONE memory row — one projection, no join
+    * (see [[expireMemories]]); [[patchMemories]] is for DataFrame
+    * patches.
+    */
+  def setMemory(id: Long, values: Seq[(String, Column)]): Unit = this.synchronized {
+    if (values.exists(_._1 == "importance")) importanceVer += 1
+    if (values.exists(_._1 == "text")) textVer += 1
+    memories = memories.withColumns(values.map { case (c, v) =>
+      c -> when(col("id") === id, v).otherwise(col(c)) }.toMap)
+    tick()
+  }
+
   /** R5 side effect — access_count += 1, last_accessed = now for the
     * given ids (scoring.py:117-122), as one batched MERGE.
     */
@@ -207,8 +248,10 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
 
   def deleteMemories(ids: Seq[Long]): Unit = this.synchronized {
     if (ids.nonEmpty) {
-      val d = ids.toDF("__did")
-      memories = memories.join(d, memories("id") === col("__did"), "left_anti")
+      // a filter on the driver-small id set, not an anti-join: a scan
+      // of the table runs no broadcast job for it
+      val idSet = ids.toSet.toSeq
+      memories = memories.filter(!col("id").isin(idSet: _*))
       // cascade: edges whose MEMORY endpoint was deleted disappear with
       // it. Ids are per-label sequences (they overlap across labels!),
       // so each edge type must match ONLY the endpoint that is a Memory:
@@ -218,7 +261,6 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
       // deliberately NOT cascaded: consolidation (W7) creates provenance
       // edges to originals it then hard-deletes (manager.py:1905-1912) —
       // the tombstone reference is the provenance record.
-      val idSet = ids.toSet.toSeq
       val srcDead = col("src").isin(idSet: _*)
       val dstDead = col("dst").isin(idSet: _*)
       val dead =
@@ -290,40 +332,86 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
 
   // ---- persistence (S8) ----
 
+  /** Writes the six tables into a fresh `dir/snap-<n>/`, then publishes
+    * it by atomically replacing `dir/MANIFEST`, whose one line names the
+    * snapshot. Only after that switch does the store rebind its tables
+    * to the new snapshot and delete the older ones. A write that fails
+    * leaves MANIFEST, and the snapshot it names, as they were; and no
+    * table is ever overwritten while a lazily bound store reads it (a
+    * store loaded from `snap-<n>` persists into `snap-<n+1>`).
+    */
   def persist(dir: String): Unit = this.synchronized {
-    // memories are partitioned by a user bucket so the F1 scope filter
-    // prunes partitions at the parquet scan — at warehouse scale a
-    // single-tenant read touches 1/64th of the files (user_id itself
-    // would explode the partition count at millions of tenants).
-    // A 0-row partitioned write emits no schema-bearing files and the
-    // read-back fails UNABLE_TO_INFER_SCHEMA — write flat when empty.
-    val mem = memories.withColumn("user_bucket", pmod(crc32(col("user_id")), lit(64)))
-    if (memories.isEmpty)
-      mem.write.mode("overwrite").parquet(s"$dir/memories")
-    else
-      mem.write.mode("overwrite").partitionBy("user_bucket").parquet(s"$dir/memories")
-    val tables = Seq(
-      "entities" -> entities, "episodes" -> episodes,
-      "communities" -> communities, "history" -> history, "edges" -> edges)
-    tables.foreach { case (n, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/$n")
+    val root = Paths.get(dir)
+    Files.createDirectories(root)
+    val n = snapshotDirs(root).map(_._1).maxOption.getOrElse(0) + 1
+    val snap = root.resolve(s"snap-$n")
+    try {
+      // memories are partitioned by a user bucket so the F1 scope filter
+      // prunes partitions at the parquet scan — at warehouse scale a
+      // single-tenant read touches 1/64th of the files (user_id itself
+      // would explode the partition count at millions of tenants).
+      // A 0-row partitioned write emits no schema-bearing files and the
+      // read-back fails UNABLE_TO_INFER_SCHEMA — write flat when empty.
+      val mem = memories.withColumn("user_bucket", pmod(crc32(col("user_id")), lit(64)))
+      if (memories.isEmpty) mem.write.parquet(s"$snap/memories")
+      else mem.write.partitionBy("user_bucket").parquet(s"$snap/memories")
+      Seq("entities" -> entities, "episodes" -> episodes,
+        "communities" -> communities, "history" -> history, "edges" -> edges)
+        .foreach { case (t, df) => df.write.parquet(s"$snap/$t") }
+      val tmp = root.resolve("MANIFEST.tmp")
+      Files.write(tmp, s"snap-$n\n".getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, root.resolve("MANIFEST"), StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        deleteTree(snap)
+        throw e
     }
+    bind(snap.toString)
+    snapshotDirs(root).filter(_._1 != n).foreach { case (_, p) => deleteTree(p) }
   }
 
+  /** Binds the tables to the snapshot `dir/MANIFEST` names and resumes
+    * every id sequence after its loaded maximum.
+    */
   def load(dir: String): Unit = this.synchronized {
-    def rd(n: String): DataFrame = spark.read.parquet(s"$dir/$n")
-    memories = rd("memories").drop("user_bucket")
-    entities = rd("entities")
-    episodes = rd("episodes"); communities = rd("communities")
-    history = rd("history"); edges = rd("edges")
+    val manifest = Paths.get(dir, "MANIFEST")
+    if (!Files.exists(manifest))
+      throw new java.io.FileNotFoundException(
+        s"$dir holds no store snapshot: $manifest is missing")
+    val snap = new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8).trim
+    bind(Paths.get(dir, snap).toString)
     def maxId(df: DataFrame, c: String): Long =
       if (df.isEmpty) 0L
       else df.agg(max(col(c))).head().getLong(0)
     memoryIds.set(maxId(memories, "id")); entityIds.set(maxId(entities, "id"))
     episodeIds.set(maxId(episodes, "id")); communityIds.set(maxId(communities, "id"))
     historyIds.set(maxId(history, "id")); edgeIds.set(maxId(edges, "edge_id"))
+  }
+
+  private def bind(snap: String): Unit = {
+    def rd(t: String): DataFrame = spark.read.parquet(s"$snap/$t")
+    memories = rd("memories").drop("user_bucket")
+    entities = rd("entities")
+    episodes = rd("episodes"); communities = rd("communities")
+    history = rd("history"); edges = rd("edges")
     importanceVer += 1
     textVer += 1
-    tick(structural = true) // the whole edge table changed
+    tick(structural = true) // every table was replaced
   }
+
+  private def snapshotDirs(root: Path): Seq[(Int, Path)] = {
+    val listing = Files.list(root)
+    try listing.iterator().asScala.toSeq.flatMap { p =>
+      val name = p.getFileName.toString
+      if (name.startsWith("snap-")) name.drop(5).toIntOption.map(_ -> p) else None
+    } finally listing.close()
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).iterator().asScala
+        .foreach(f => Files.delete(f))
+      finally walk.close()
+    }
 }

@@ -128,4 +128,15 @@ class CliSpec extends SparkSuite {
     assert(mOff.getCommunities().size == 1)
     assert(Cli.run(Seq("stats"), mOff).contains("\"communities\":1"))
   }
+  test("two adds on one --store keep both memories (load → run → persist)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli").resolve("store").toString
+    def cli(args: String*) = Cli.runOnStore(Seq("--store", dir) ++ args, spark)
+    assert(cli("add", "first stored note", "--no-infer").contains("\"ADD\""))
+    assert(cli("add", "second stored note", "--no-infer").contains("\"ADD\""))
+    val listed = cli("list")
+    assert(listed.contains("first stored note") && listed.contains("second stored note"))
+    // one published snapshot remains; the superseded one was deleted
+    val snaps = new java.io.File(dir).list().filter(_.startsWith("snap-")).toSeq
+    assert(snaps == Seq("snap-2"))
+  }
 }

@@ -162,4 +162,32 @@ class EpisodeSpec extends SparkSuite {
     assert(r.events.head.memoryId.contains("3"))
     assert(m2.search("persisted fact one", k = 1).head.text == "persisted fact one")
   }
+  test("persistence (S8): a persist that fails mid-write keeps the previous snapshot") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-torn").toString
+    val m = new MemoryManager(spark, MemoryConfig(userId = "alice"),
+      new GraphStore(spark), new MockEmbedder(16),
+      new ScriptedExtractor(Nil), new AddAllReconciler)
+    m.add("saved fact", infer = false, now = Some(T0))
+    def rows(s: GraphStore): Seq[Seq[String]] =
+      Seq(s.memories, s.entities, s.episodes, s.communities, s.history, s.edges)
+        .map(_.collect().map(_.toString).sorted.toSeq)
+    val saved = rows(m.store)
+    m.store.persist(dir)
+    m.add("unsaved fact", infer = false, now = Some(T0 + 1000))
+    // the edges table is written last: the five before it land in the
+    // new snapshot directory, then its evaluation throws
+    val boom = udf((id: Long) => { if (id > 0) throw new IllegalStateException("boom"); true })
+    m.store.edges = m.store.edges.filter(boom(col("edge_id")))
+    intercept[Exception](m.store.persist(dir))
+    val store2 = new GraphStore(spark)
+    store2.load(dir)
+    assert(rows(store2) == saved)
+    assert(new java.io.File(dir).list().filter(_.startsWith("snap-")).toSeq == Seq("snap-1"))
+  }
+
+  test("persistence (S8): load of a directory without a snapshot fails clearly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-none").toString
+    val e = intercept[java.io.FileNotFoundException](new GraphStore(spark).load(dir))
+    assert(e.getMessage.contains("MANIFEST"))
+  }
 }

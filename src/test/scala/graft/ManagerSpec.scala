@@ -760,4 +760,383 @@ class ManagerSpec extends SparkSuite {
     // both DELETE decisions recorded their history
     assert(store.history.filter(col("event") === "DELETE").count() == 2)
   }
+  // ---- write-path pins ------------------------------------------------
+
+  /** Embedder that records every `embed` call it receives. */
+  private final class RecordingEmbedder(dims: Int) extends Embedder {
+    private val inner = new MockEmbedder(dims)
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    override def dimensions: Int = dims
+    override def embed(texts: Seq[String]): Seq[Array[Float]] = {
+      calls += s"embed(${texts.mkString(",")})"
+      inner.embed(texts)
+    }
+  }
+
+  /** Scripted reconciler that records its calls; relation reconciliation
+    * drops every existing triple whose source and type a new relation
+    * restates (a person works at one place).
+    */
+  private final class RecordingReconciler(decisions: Seq[Seq[Decision]])
+      extends Reconciler {
+    private val inner = new ScriptedReconciler(decisions)
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    override def reconcile(facts: Seq[String],
+        candidates: Seq[(Long, String)]): Seq[Decision] = {
+      calls += s"reconcile(${facts.mkString(",")}; ${candidates.mkString(",")})"
+      inner.reconcile(facts, candidates)
+    }
+    override def reconcileRelations(newRelations: Seq[ExtractedRelation],
+        existing: Seq[ExtractedRelation]): Seq[ExtractedRelation] = {
+      calls += s"relations(${newRelations.mkString(",")}; ${existing.mkString(",")})"
+      existing.filter(e => newRelations.exists(n =>
+        n.source == e.source && n.relationType == e.relationType))
+    }
+  }
+
+  /** Scripted extractor with per-fact valid_at annotations. */
+  private final class TemporalExtractor(outputs: Seq[Extraction],
+      validAt: Map[String, Long]) extends Extractor {
+    private val inner = new ScriptedExtractor(outputs)
+    override def extract(text: String): Extraction = inner.extract(text)
+    override def annotateTemporal(facts: Seq[String]): Seq[TemporalAnnotation] =
+      facts.zipWithIndex.flatMap { case (f, i) =>
+        validAt.get(f).map(v => TemporalAnnotation(i, Some(v), None)) }
+  }
+
+  /** Every row of every table, ordered by id; embeddings as a hash. */
+  private def dumpStore(s: GraphStore): Seq[String] = {
+    def cell(v: Any): String = v match {
+      case null => "-"
+      case a: scala.collection.Seq[_] if a.headOption.exists(_.isInstanceOf[Float]) || a.isEmpty =>
+        s"emb#${a.map(_.toString).mkString(",").hashCode}"
+      case m: scala.collection.Map[_, _] =>
+        m.toSeq.map { case (k, x) => s"$k=$x" }.sorted.mkString("{", ",", "}")
+      case x => x.toString
+    }
+    def table(tag: String, df: org.apache.spark.sql.DataFrame, key: String) =
+      df.orderBy(col(key)).collect().toSeq.map(r => s"$tag " + r.toSeq.map(cell).mkString("|"))
+    table("mem", s.memories, "id") ++ table("his", s.history, "id") ++
+      table("edge", s.edges, "edge_id") ++ table("ent", s.entities, "id") ++
+      table("epi", s.episodes, "id")
+  }
+
+  test("add pins the store, events and model calls of every write-path case") {
+    val T1 = T0 + 10000
+    def run(config: MemoryConfig, outputs: Seq[Extraction],
+        decisions: Seq[Seq[Decision]], validAt: Map[String, Long] = Map.empty)(
+        body: MemoryManager => Seq[AddResult]): Seq[String] = {
+      val emb = new RecordingEmbedder(16)
+      val rec = new RecordingReconciler(decisions)
+      val m = new MemoryManager(spark, config, new GraphStore(spark), emb,
+        new TemporalExtractor(outputs, validAt), rec, clock = () => T0)
+      val results = body(m)
+      results.zipWithIndex.flatMap { case (r, i) =>
+        r.events.map(e => s"event $i ${e.event}|${e.memoryId.getOrElse("-")}|" +
+          s"${e.text}|${e.previousText.getOrElse("-")}") } ++
+        dumpStore(m.store) ++ emb.calls.map("call " + _) ++ rec.calls.map("call " + _)
+    }
+    val cfg = MemoryConfig(userId = "alice", reconciliationThreshold = 0.0)
+    val actual = Seq[(String, Seq[String])](
+      // rule 3: the UPDATE-created memory is the session predecessor of the ADD
+      "update_add_session" -> run(cfg,
+        Seq(Extraction(Seq("alice works at acme"), Seq(ExtractedEntity("alice", "person")), Nil),
+          Extraction(Seq("alice works at beta", "bob joined beta"),
+            Seq(ExtractedEntity("alice", "person"), ExtractedEntity("bob", "person"),
+              ExtractedEntity("beta", "org")), Nil)),
+        Seq(Seq(Decision(DecisionAction.Update, "alice works at beta", Some(1L)),
+          Decision(DecisionAction.Add, "bob joined beta", None)))) { m =>
+        Seq(m.add("Alice works at Acme", sessionId = Some("s1"), now = Some(T0)),
+          m.add("Alice and Bob at Beta", sessionId = Some("s1"), now = Some(T1)))
+      },
+      "no_infer_session" -> run(cfg, Nil, Nil) { m =>
+        Seq(m.add("first note", infer = false, sessionId = Some("s1"), now = Some(T0)),
+          m.add("second note", infer = false, sessionId = Some("s1"), now = Some(T1)))
+      },
+      "no_infer_session_episodes" -> run(cfg.copy(enableEpisodes = true), Nil, Nil) { m =>
+        Seq(m.add("first note", infer = false, sessionId = Some("s1"), now = Some(T0)),
+          m.add("second note", infer = false, sessionId = Some("s1"), now = Some(T1)))
+      },
+      "episodes_entities" -> run(cfg.copy(enableEpisodes = true),
+        Seq(Extraction(Seq("alice met bob"),
+            Seq(ExtractedEntity("alice", "person"), ExtractedEntity("bob", "person")), Nil),
+          Extraction(Seq("bob visits carol"),
+            Seq(ExtractedEntity("carol", "person"), ExtractedEntity("bob", "person")), Nil)),
+        Seq(Seq(Decision(DecisionAction.Add, "bob visits carol", None)))) { m =>
+        Seq(m.add("Alice met Bob", runId = Some("r1"), now = Some(T0)),
+          m.add("Bob visits Carol", runId = Some("r1"), now = Some(T1)))
+      },
+      // rule 4: two decisions on one target, one expiry
+      "bitemporal_update_delete" -> run(cfg.copy(enableBitemporal = true),
+        Seq(Extraction(Seq("dana lives in oslo"), Seq(ExtractedEntity("dana", "person")), Nil),
+          Extraction(Seq("dana lives in rome", "forget oslo"),
+            Seq(ExtractedEntity("dana", "person")), Nil)),
+        Seq(Seq(Decision(DecisionAction.Update, "dana lives in rome", Some(1L)),
+          Decision(DecisionAction.Delete, "", Some(1L)))),
+        validAt = Map("dana lives in rome" -> (T0 + 5000))) { m =>
+        Seq(m.add("Dana lives in Oslo", now = Some(T0)),
+          m.add("Dana moved to Rome", now = Some(T1)))
+      },
+      // rule 1: entities and relations without facts write nothing
+      "entities_no_facts" -> run(cfg,
+        Seq(Extraction(Seq("erin likes tea"), Nil, Nil),
+          Extraction(Nil, Seq(ExtractedEntity("erin", "person"), ExtractedEntity("tea", "drink")),
+            Seq(ExtractedRelation("erin", "tea", "likes")))), Nil) { m =>
+        Seq(m.add("Erin likes tea", now = Some(T0)), m.add("Hmm", now = Some(T1)))
+      },
+      // rule 2: relations reconciled only against existing triples
+      "relation_reconciliation" -> run(cfg,
+        Seq(Extraction(Seq("alice works at acme"),
+            Seq(ExtractedEntity("alice", "person"), ExtractedEntity("acme", "org")),
+            Seq(ExtractedRelation("alice", "acme", "works_at"))),
+          Extraction(Seq("alice works at beta"),
+            Seq(ExtractedEntity("alice", "person"), ExtractedEntity("beta", "org")),
+            Seq(ExtractedRelation("alice", "beta", "works_at"))),
+          Extraction(Seq("carol knows dave"),
+            Seq(ExtractedEntity("carol", "person"), ExtractedEntity("dave", "person")),
+            Seq(ExtractedRelation("carol", "dave", "knows")))),
+        Seq(Seq(Decision(DecisionAction.Add, "alice works at beta", None)),
+          Seq(Decision(DecisionAction.Add, "carol knows dave", None)))) { m =>
+        Seq(m.add("Alice works at Acme", now = Some(T0)),
+          m.add("Alice works at Beta", now = Some(T1)),
+          m.add("Carol knows Dave", now = Some(T1 + 1000)))
+      }
+    )
+    // recorded on the per-row write path; the one write routine must
+    // reproduce it exactly
+    val expected = Seq[(String, Seq[String])](
+      "update_add_session" -> Seq(
+        "event 0 ADD|1|alice works at acme|-",
+        "event 1 UPDATE|2|alice works at beta|alice works at acme",
+        "event 1 ADD|3|bob joined beta|-",
+        "mem 1|alice works at acme|alice|1700000000000|1700000000000|1700000000000|semantic|-|-|1700000010000|s1|-|-|-|-|-|-|-|-|-|emb#-90563661|-|-|-|-",
+        "mem 2|alice works at beta|alice|1700000010000|1700000010000|1700000010000|semantic|-|-|-|s1|-|-|-|-|-|-|-|-|-|emb#1357709428|-|-|-|-",
+        "mem 3|bob joined beta|alice|1700000010000|1700000010000|1700000010000|semantic|-|-|-|s1|-|-|-|-|-|-|-|-|-|emb#-894253453|-|-|-|-",
+        "his 1|1|ADD|1700000000000|-|alice works at acme|-|-",
+        "his 2|2|UPDATE|1700000010000|alice works at acme|alice works at beta|-|-",
+        "his 3|3|ADD|1700000010000|-|bob joined beta|-|-",
+        "edge 1|1|1|HAS_HISTORY|{}",
+        "edge 2|1|1|HAS_ENTITY|{}",
+        "edge 3|2|1|SUPERSEDES|{}",
+        "edge 4|2|1|HAS_ENTITY|{}",
+        "edge 5|2|2|HAS_HISTORY|{}",
+        "edge 6|3|3|HAS_HISTORY|{}",
+        "edge 7|2|1|HAS_ENTITY|{}",
+        "edge 8|2|2|HAS_ENTITY|{}",
+        "edge 9|2|3|HAS_ENTITY|{}",
+        "edge 10|3|1|HAS_ENTITY|{}",
+        "edge 11|3|2|HAS_ENTITY|{}",
+        "edge 12|3|3|HAS_ENTITY|{}",
+        "edge 13|2|3|LEADS_TO|{sequence=0}",
+        "ent 1|alice|person|alice|-",
+        "ent 2|bob|person|alice|-",
+        "ent 3|beta|org|alice|-",
+        "call embed(alice works at acme)",
+        "call embed(alice works at beta,bob joined beta)",
+        "call embed(alice works at beta)",
+        "call reconcile(alice works at beta,bob joined beta; (1,alice works at acme))"),
+      "no_infer_session" -> Seq(
+        "event 0 ADD|1|first note|-",
+        "event 1 ADD|2|second note|-",
+        "mem 1|first note|alice|1700000000000|1700000000000|1700000000000|semantic|-|-|-|s1|-|-|-|-|-|-|-|-|-|emb#-356021839|-|-|-|-",
+        "mem 2|second note|alice|1700000010000|1700000010000|1700000010000|semantic|-|-|-|s1|-|-|-|-|-|-|-|-|-|emb#1937236397|-|-|-|-",
+        "his 1|1|ADD|1700000000000|-|first note|-|-",
+        "his 2|2|ADD|1700000010000|-|second note|-|-",
+        "edge 1|1|1|HAS_HISTORY|{}",
+        "edge 2|2|2|HAS_HISTORY|{}",
+        "edge 3|1|2|LEADS_TO|{sequence=0}",
+        "call embed(first note)",
+        "call embed(second note)"),
+      "no_infer_session_episodes" -> Seq(
+        "event 0 ADD|1|first note|-",
+        "event 1 ADD|2|second note|-",
+        "mem 1|first note|alice|1700000000000|1700000000000|1700000000000|semantic|-|-|-|s1|-|-|-|-|-|-|-|-|-|emb#-356021839|-|-|-|-",
+        "mem 2|second note|alice|1700000010000|1700000010000|1700000010000|semantic|-|-|-|s1|-|-|-|-|-|-|-|-|-|emb#1937236397|-|-|-|-",
+        "his 1|1|ADD|1700000000000|-|first note|-|-",
+        "his 2|2|ADD|1700000010000|-|second note|-|-",
+        "edge 1|1|1|HAS_HISTORY|{}",
+        "edge 2|1|1|PRODUCED|{}",
+        "edge 3|2|2|HAS_HISTORY|{}",
+        "edge 4|2|2|PRODUCED|{}",
+        "edge 5|1|2|NEXT_EPISODE|{}",
+        "epi 1|first note|message|alice|1700000000000|s1|-",
+        "epi 2|second note|message|alice|1700000010000|s1|-",
+        "call embed(first note)",
+        "call embed(second note)"),
+      "episodes_entities" -> Seq(
+        "event 0 ADD|1|alice met bob|-",
+        "event 1 ADD|2|bob visits carol|-",
+        "mem 1|alice met bob|alice|1700000000000|1700000000000|1700000000000|semantic|-|-|-|-|-|r1|-|-|-|-|-|-|-|emb#-5122467|-|-|-|-",
+        "mem 2|bob visits carol|alice|1700000010000|1700000010000|1700000010000|semantic|-|-|-|-|-|r1|-|-|-|-|-|-|-|emb#976549657|-|-|-|-",
+        "his 1|1|ADD|1700000000000|-|alice met bob|-|-",
+        "his 2|2|ADD|1700000010000|-|bob visits carol|-|-",
+        "edge 1|1|1|HAS_HISTORY|{}",
+        "edge 2|1|1|HAS_ENTITY|{}",
+        "edge 3|1|2|HAS_ENTITY|{}",
+        "edge 4|1|1|PRODUCED|{}",
+        "edge 5|1|1|MENTIONS|{}",
+        "edge 6|1|2|MENTIONS|{}",
+        "edge 7|2|2|HAS_HISTORY|{}",
+        "edge 8|2|2|HAS_ENTITY|{}",
+        "edge 9|2|3|HAS_ENTITY|{}",
+        "edge 10|2|2|PRODUCED|{}",
+        "edge 11|2|2|MENTIONS|{}",
+        "edge 12|2|3|MENTIONS|{}",
+        "edge 13|1|2|NEXT_EPISODE|{}",
+        "ent 1|alice|person|alice|-",
+        "ent 2|bob|person|alice|-",
+        "ent 3|carol|person|alice|-",
+        "epi 1|Alice met Bob|message|alice|1700000000000|-|r1",
+        "epi 2|Bob visits Carol|message|alice|1700000010000|-|r1",
+        "call embed(alice met bob)",
+        "call embed(bob visits carol)",
+        "call reconcile(bob visits carol; (1,alice met bob))"),
+      "bitemporal_update_delete" -> Seq(
+        "event 0 ADD|1|dana lives in oslo|-",
+        "event 1 UPDATE|2|dana lives in rome|dana lives in oslo",
+        "event 1 DELETE|1|dana lives in oslo|dana lives in oslo",
+        "mem 1|dana lives in oslo|alice|1700000000000|1700000000000|1700000000000|semantic|-|1700000005000|1700000010000|-|-|-|-|-|-|-|-|-|-|emb#569456633|-|-|-|-",
+        "mem 2|dana lives in rome|alice|1700000010000|1700000010000|1700000010000|semantic|1700000005000|-|-|-|-|-|-|-|-|-|-|-|-|emb#14694665|-|-|-|-",
+        "his 1|1|ADD|1700000000000|-|dana lives in oslo|-|-",
+        "his 2|2|UPDATE|1700000010000|dana lives in oslo|dana lives in rome|-|-",
+        "his 3|1|DELETE|1700000010000|dana lives in oslo|-|-|-",
+        "edge 1|1|1|HAS_HISTORY|{}",
+        "edge 2|1|1|HAS_ENTITY|{}",
+        "edge 3|2|1|SUPERSEDES|{}",
+        "edge 4|2|1|HAS_ENTITY|{}",
+        "edge 5|2|2|HAS_HISTORY|{}",
+        "edge 6|1|3|HAS_HISTORY|{}",
+        "edge 7|2|1|HAS_ENTITY|{}",
+        "edge 8|1|1|HAS_ENTITY|{}",
+        "ent 1|dana|person|alice|-",
+        "call embed(dana lives in oslo)",
+        "call embed(dana lives in rome,forget oslo)",
+        "call embed(dana lives in rome)",
+        "call reconcile(dana lives in rome,forget oslo; (1,dana lives in oslo))"),
+      "entities_no_facts" -> Seq(
+        "event 0 ADD|1|erin likes tea|-",
+        "mem 1|erin likes tea|alice|1700000000000|1700000000000|1700000000000|semantic|-|-|-|-|-|-|-|-|-|-|-|-|-|emb#-750131715|-|-|-|-",
+        "his 1|1|ADD|1700000000000|-|erin likes tea|-|-",
+        "edge 1|1|1|HAS_HISTORY|{}",
+        "call embed(erin likes tea)"),
+      "relation_reconciliation" -> Seq(
+        "event 0 ADD|1|alice works at acme|-",
+        "event 1 ADD|2|alice works at beta|-",
+        "event 2 ADD|3|carol knows dave|-",
+        "mem 1|alice works at acme|alice|1700000000000|1700000000000|1700000000000|semantic|-|-|-|-|-|-|-|-|-|-|-|-|-|emb#-90563661|-|-|-|-",
+        "mem 2|alice works at beta|alice|1700000010000|1700000010000|1700000010000|semantic|-|-|-|-|-|-|-|-|-|-|-|-|-|emb#1357709428|-|-|-|-",
+        "mem 3|carol knows dave|alice|1700000011000|1700000011000|1700000011000|semantic|-|-|-|-|-|-|-|-|-|-|-|-|-|emb#-1413760849|-|-|-|-",
+        "his 1|1|ADD|1700000000000|-|alice works at acme|-|-",
+        "his 2|2|ADD|1700000010000|-|alice works at beta|-|-",
+        "his 3|3|ADD|1700000011000|-|carol knows dave|-|-",
+        "edge 1|1|1|HAS_HISTORY|{}",
+        "edge 2|1|1|HAS_ENTITY|{}",
+        "edge 3|1|2|HAS_ENTITY|{}",
+        "edge 5|2|2|HAS_HISTORY|{}",
+        "edge 6|2|1|HAS_ENTITY|{}",
+        "edge 7|2|3|HAS_ENTITY|{}",
+        "edge 8|1|3|RELATION|{relation_type=works_at}",
+        "edge 9|3|3|HAS_HISTORY|{}",
+        "edge 10|3|4|HAS_ENTITY|{}",
+        "edge 11|3|5|HAS_ENTITY|{}",
+        "edge 12|4|5|RELATION|{relation_type=knows}",
+        "ent 1|alice|person|alice|-",
+        "ent 2|acme|org|alice|-",
+        "ent 3|beta|org|alice|-",
+        "ent 4|carol|person|alice|-",
+        "ent 5|dave|person|alice|-",
+        "call embed(alice works at acme)",
+        "call embed(alice works at beta)",
+        "call embed(carol knows dave)",
+        "call reconcile(alice works at beta; (1,alice works at acme))",
+        "call relations(ExtractedRelation(alice,beta,works_at); ExtractedRelation(alice,acme,works_at))",
+        "call reconcile(carol knows dave; (1,alice works at acme),(2,alice works at beta))")
+    )
+    assert(actual == expected, actual.map { case (n, v) =>
+      v.map("\"" + _ + "\"").mkString(s"\"$n\" -> Seq(\n      ", ",\n      ", ")") }
+      .mkString(",\n    "))
+  }
+  test("addReconcileBatch: a fact-less item stores none of its entities or relations") {
+    val store = new GraphStore(spark)
+    val m = new MemoryManager(spark, MemoryConfig(userId = "alice"), store,
+      new MockEmbedder(16),
+      new ScriptedExtractor(Seq(
+        Extraction(Nil, Seq(ExtractedEntity("erin", "person"), ExtractedEntity("tea", "drink")),
+          Seq(ExtractedRelation("erin", "tea", "likes"))),
+        Extraction(Seq("frank drinks coffee"), Nil, Nil))),
+      new AddAllReconciler)
+    val rs = m.addReconcileBatch(Seq("Hmm", "Frank drinks coffee"), now = Some(T0))
+    assert(rs.map(_.events.map(_.event)) == Seq(Nil, Seq("ADD")))
+    assert(store.entities.isEmpty)
+    assert(store.edges.filter(col("edge_type") === EdgeTypes.Relation).isEmpty)
+    assert(store.edges.filter(col("edge_type") === EdgeTypes.HasEntity).isEmpty)
+  }
+
+  test("addReconcileBatch: several bitemporal decisions on one target keep the last invalid_at") {
+    val (v1, v2) = (T0 + 100L, T0 + 200L)
+    val store = new GraphStore(spark)
+    val m = new MemoryManager(spark,
+      MemoryConfig(userId = "alice", enableBitemporal = true, reconciliationThreshold = 0.0),
+      store, new MockEmbedder(16),
+      new TemporalExtractor(Seq(Extraction(Seq("gus moved to lima"), Nil, Nil),
+        Extraction(Seq("gus moved to quito"), Nil, Nil)),
+        Map("gus moved to lima" -> v1, "gus moved to quito" -> v2)),
+      new ScriptedReconciler(Seq(
+        Seq(Decision(DecisionAction.Update, "gus moved to lima", Some(1L))),
+        Seq(Decision(DecisionAction.Update, "gus moved to quito", Some(1L))))))
+    m.addBatch(Seq("gus lives in bogota"), now = Some(T0))
+    m.addReconcileBatch(Seq("Gus to Lima", "Gus to Quito"), now = Some(T0 + 1000))
+    val old = store.memories.filter(col("id") === 1).collect().head
+    assert(old.getLong(old.fieldIndex("expired_at")) == T0 + 1000)
+    assert(old.getLong(old.fieldIndex("invalid_at")) == v2)
+  }
+
+  test("episode MENTIONS edges point at the entity of the manager's own graph") {
+    val store = new GraphStore(spark)
+    def mgr(graph: String) = new MemoryManager(spark,
+      MemoryConfig(userId = "alice", graphName = Some(graph), enableEpisodes = true),
+      store, new MockEmbedder(16),
+      new ScriptedExtractor(Seq(Extraction(Seq(s"alice is in $graph"),
+        Seq(ExtractedEntity("alice", "person")), Nil))),
+      new AddAllReconciler)
+    mgr("g1").add("Alice in g1", now = Some(T0))
+    mgr("g2").add("Alice in g2", now = Some(T0 + 1000))
+    val g2Alice = store.entities.filter(col("graph_name") === "g2")
+      .select("id").collect().map(_.getLong(0)).toSeq
+    assert(g2Alice == Seq(2L))
+    def dsts(edgeType: String, src: Long) = store.edges
+      .filter(col("edge_type") === edgeType && col("src") === src)
+      .select("dst").collect().map(_.getLong(0)).toSeq
+    assert(dsts(EdgeTypes.HasEntity, 2L) == Seq(2L))
+    assert(dsts(EdgeTypes.Mentions, 2L) == Seq(2L)) // episode 2 → g2's alice
+  }
+
+  test("write-count guard: a reconciled add writes each table once") {
+    // UPDATE + ADD pairs against seeded targets, 3 new entities, 2
+    // relations, no session: one entity append, one memory append, one
+    // expiry, one history append, one edge append — however many facts
+    // the add carries
+    def writes(pairs: Int): Long = {
+      val store = new GraphStore(spark)
+      val decisions = (1 to pairs).flatMap(i => Seq(
+        Decision(DecisionAction.Update, s"fact $i updated", Some(i.toLong)),
+        Decision(DecisionAction.Add, s"fact $i added", None)))
+      val m = new MemoryManager(spark,
+        MemoryConfig(userId = "alice", reconciliationThreshold = 0.0), store,
+        new MockEmbedder(16),
+        new ScriptedExtractor(Seq(Extraction(decisions.map(_.text),
+          Seq(ExtractedEntity("e1", "t"), ExtractedEntity("e2", "t"), ExtractedEntity("e3", "t")),
+          Seq(ExtractedRelation("e1", "e2", "r"), ExtractedRelation("e2", "e3", "r"))))),
+        new ScriptedReconciler(Seq(decisions)))
+      m.addBatch((1 to pairs).map(i => s"fact $i"), now = Some(T0))
+      val before = store.writeVersion
+      val r = m.add("scripted", now = Some(T0 + 1000))
+      assert(r.events.map(_.event) == (1 to pairs).flatMap(_ => Seq("UPDATE", "ADD")))
+      store.writeVersion - before
+    }
+    val two = writes(1)
+    assert(two == 5, s"a 2-fact add wrote $two times")
+    val six = writes(3)
+    assert(six == two, s"writes grew with facts: $two -> $six")
+  }
 }
