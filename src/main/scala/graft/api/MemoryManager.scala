@@ -33,7 +33,7 @@ final class MemoryManager(
     tracer: graft.trace.Tracer = graft.trace.NoopTracer
 ) {
 
-  import MemoryManager.{AddCall, ItemPlan}
+  import MemoryManager.{AddCall, ItemPlan, PageGraph}
   import MemoryTypes.{Default => DefaultType}
 
   /** Fact count at or below which candidate search takes the per-fact
@@ -723,45 +723,18 @@ final class MemoryManager(
 
   private var metricsVersion = -1L
 
-  // ---- search-path metric memos -----------------------------------
-  // topology and reinforcement are WHOLE-GRAPH aggregations; computing
-  // them per search (the pre-r9 shape) re-aggregates the full edge
-  // table on every query — the wrong shape at 100 TB, where metric
-  // refresh must amortize across reads. Both memoize on the exact
-  // store versions their inputs depend on: topology reads only
-  // HAS_ENTITY edges (graphVersion); reinforcement additionally reads
-  // (created_at, importance) of memories — created_at is immutable and
-  // an edgeless new memory can't shift any other memory's score, so
-  // (graphVersion, importanceVersion) is a precise key. bumpAccess
-  // deliberately invalidates neither (the r6 dirty-flag rationale).
-  private var topoMemoKey = -1L
-  private var topoMemo: DataFrame = _
-  private def topologyScoresDf(): DataFrame = this.synchronized {
-    if (store.graphVersion != topoMemoKey) {
-      topoMemo = GraphOps.topologyScores(
-          store.edges.filter(col("edge_type") === EdgeTypes.HasEntity))
-        .select(col("mem"), col("topology_score"))
-        .localCheckpoint()
-      topoMemoKey = store.graphVersion
-    }
-    topoMemo
-  }
-  // BM25 prepared corpus (the text-index artifact): the tokenized
-  // (id, dl, toks) table + corpus stats, keyed on textVersion so only
-  // text-row changes (append/delete/text-patch/load) rebuild it —
-  // pre-r9 every search re-tokenized the whole store for its BM25 leg
-  private var bm25MemoKey = -1L
-  private var bm25Memo: (DataFrame, Long, Double) = _
-  private def bm25PreparedState(): (DataFrame, Long, Double) = this.synchronized {
-    if (store.textVersion != bm25MemoKey) {
-      val base =
-        if (config.scopedHybridCandidates) scopeCol(store.memories)
-        else store.memories
-      bm25Memo = SearchOps.bm25Prepare(base, "id", "text")
-      bm25MemoKey = store.textVersion
-    }
-    bm25Memo
-  }
+  // ---- search-path state across requests ---------------------------
+  // Nothing on the search path aggregates the whole graph per request,
+  // and no write makes the next search rebuild a whole-store memo: the
+  // page's topology scores come from its own edge lookups (pageGraph),
+  // and the BM25 prepared corpus is kept up to date from the store's
+  // text deltas (Bm25Corpus). Reinforcement (structural decay only) is
+  // still a whole-graph aggregation, memoized on the exact store
+  // versions its inputs depend on: (graphVersion, importanceVersion) —
+  // created_at is immutable and an edgeless new memory can't shift any
+  // other memory's score. bumpAccess moves neither key.
+  private[graft] val bm25Corpus = new Bm25Corpus(store,
+    if (config.scopedHybridCandidates) Some(config.scopeFilters) else None)
 
   private var reinfMemoKey = (-1L, -1L)
   private var reinfMemo: DataFrame = _
@@ -1057,7 +1030,7 @@ final class MemoryManager(
         val (bm, vec) = SearchOps.hybridLegs(
           candBase.withColumn("embedding", embOrNull), "id", "text", "embedding",
           query, queryVec, fetchK = math.max(50, 4 * effectiveK),
-          preparedBm25 = Some(bm25PreparedState()))
+          preparedBm25 = Some(bm25Corpus.prepared()))
         Seq(LegBm25 -> bm.withColumnRenamed("bm25", "score"),
           LegVector -> vec.withColumnRenamed("cos", "score"))
       }
@@ -1141,14 +1114,12 @@ final class MemoryManager(
       s"pit=$pit", filtered.size.toLong)))
 
     // ---- boost chain R2/R3 ----
-    // topology scores feed both the R2 boost and R5's wTopo term: one
-    // lookup of the page's ids in the version-memoized topology table
+    // topology scores feed both the R2 boost and R5's wTopo term; they
+    // come from the page's own edges, which the relations below reuse
+    val pageEdges = pageGraph(filtered.map(_._1), edges)
     val topo: Map[Long, Double] =
-      if ((config.enableTopologyBoost || config.enableImportance && config.weightTopology > 0)
-          && filtered.nonEmpty)
-        topologyScoresDf().filter(col("mem").isin(filtered.map(_._1): _*))
-          .select(col("mem"), col("topology_score")).collect()
-          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      if (config.enableTopologyBoost || config.enableImportance && config.weightTopology > 0)
+        PageFusion.topologyScores(filtered.map(_._1).toSet, pageEdges.hasEntity)
       else Map.empty
     if (config.enableTopologyBoost) {
       filtered = filtered.map { case (id, s, src) =>
@@ -1227,7 +1198,7 @@ final class MemoryManager(
     // J6/F8 — decorate the RETURNED page with relation triples (every
     // reference search response carries them, vector.py:56/162/268)
     val top = page.take(k)
-    val rels = relationsFor(top.map(_.id), edges, entities)
+    val rels = relationsFor(top.map(_.id), pageEdges, entities)
     top.map(r => r.copy(relations = rels.getOrElse(r.id, Nil)).toSearchResult)
   }
 
@@ -1318,43 +1289,67 @@ final class MemoryManager(
       validAt, invalidAt, relations)
   }
 
-  /** F8/J6 — relation triples for a bounded page of memory ids:
-    * memory -HAS_ENTITY-> e -RELATION-> t, decorated with entity names
-    * (search/vector.py:384-409). Where the reference issues a per-result
-    * probe, this runs at most three single-stage lookups for the whole
-    * page — its HAS_ENTITY edges, the RELATION edges out of those
-    * entities, the names involved — and joins them on the driver.
+  /** The graph around a page of memory ids, from two lookups of the
+    * search's snapshot `edges`: the page's HAS_ENTITY rows give its
+    * entities E; one scan then reads every HAS_ENTITY (mem, entity) row
+    * into E and the RELATION (src, dst, relation_type) rows out of E.
+    * The first set holds the page's own rows, so it is all that
+    * [[PageFusion.topologyScores]] needs. Fan-in: a hub entity brings
+    * every memory linked to it, the bound the graph leg's broadcast
+    * 1-hop set already accepts.
+    */
+  private def pageGraph(ids: Seq[Long], edges: DataFrame): PageGraph = {
+    val he = col("edge_type") === EdgeTypes.HasEntity
+    val ents =
+      if (ids.isEmpty) Nil
+      else edges.filter(he && col("src").isin(ids: _*)).select(col("dst"))
+        .collect().map(_.getLong(0)).toSeq.distinct
+    if (ents.isEmpty) PageGraph(Nil, Nil)
+    else {
+      val rows = edges
+        .filter(he && col("dst").isin(ents: _*) ||
+          col("edge_type") === EdgeTypes.Relation && col("src").isin(ents: _*))
+        .select(he, col("src"), col("dst"),
+          coalesce(col("props").getItem("relation_type"), lit("")))
+        .collect()
+      val (hasEntity, relations) = rows.partition(_.getBoolean(0))
+      PageGraph(hasEntity.map(r => r.getLong(1) -> r.getLong(2)).toSeq,
+        relations.map(r => (r.getLong(1), r.getLong(2), r.getString(3))).toSeq)
+    }
+  }
+
+  /** F8/J6 — relation triples for the returned page `ids` (a subset of
+    * the [[PageGraph]]'s page): memory -HAS_ENTITY-> e -RELATION-> t,
+    * decorated with entity names (search/vector.py:384-409). Where the
+    * reference issues a per-result probe, this reads the page graph's
+    * rows, looks the names involved up once and joins on the driver.
     * Distinct triples ordered (mem, source, relation, target) with
     * Spark's string order.
     */
   private def relationsFor(
       ids: Seq[Long],
-      edges: DataFrame,
+      pageEdges: PageGraph,
       entities: DataFrame
   ): Map[Long, Seq[RelationTriple]] = {
-    def lookup(df: DataFrame, c: String, keys: Iterable[Long]): Array[Row] =
-      if (keys.isEmpty) Array.empty else df.filter(col(c).isin(keys.toSeq: _*)).collect()
-    val he = lookup(edges.filter(col("edge_type") === EdgeTypes.HasEntity)
-      .select(col("src"), col("dst")), "src", ids.distinct)
-      .map(r => r.getLong(0) -> r.getLong(1))
-    val rel = lookup(edges.filter(col("edge_type") === EdgeTypes.Relation)
-      .select(col("src"), col("dst"),
-        coalesce(col("props").getItem("relation_type"), lit(""))), "src", he.map(_._2).distinct)
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    val names = lookup(entities.select(col("id"), col("name")), "id",
-        (rel.map(_._1) ++ rel.map(_._2)).distinct)
-      .map(r => r.getLong(0) -> r.getString(1)).groupMap(_._1)(_._2)
+    val idSet = ids.toSet
+    val he = pageEdges.hasEntity.filter(r => idSet(r._1))
+    val ents = he.map(_._2).toSet
+    val rel = pageEdges.relations.filter(r => ents(r._1))
+    val keys = (rel.map(_._1) ++ rel.map(_._2)).distinct
+    val names =
+      if (keys.isEmpty) Map.empty[Long, Seq[String]]
+      else entities.select(col("id"), col("name")).filter(col("id").isin(keys: _*))
+        .collect().toSeq.map(r => r.getLong(0) -> r.getString(1)).groupMap(_._1)(_._2)
     val relsBySrc = rel.groupBy(_._1)
     val utf8 = Ordering.by[String, UTF8String](UTF8String.fromString)
     val triples = (for {
       (mem, ent) <- he
-      (_, tgt, relation) <- relsBySrc.getOrElse(ent, Array.empty)
-      source <- names.getOrElse(ent, Array.empty)
-      target <- names.getOrElse(tgt, Array.empty)
+      (_, tgt, relation) <- relsBySrc.getOrElse(ent, Nil)
+      source <- names.getOrElse(ent, Nil)
+      target <- names.getOrElse(tgt, Nil)
     } yield (mem, source, relation, target)).distinct
       .sorted(Ordering.Tuple4(Ordering.Long, utf8, utf8, utf8))
     triples.groupMap(_._1)(t => RelationTriple(t._2, t._3, t._4))
-      .view.mapValues(_.toSeq).toMap
   }
 
   // the result columns of a memory row, in ResultRow order (id first)
@@ -1725,6 +1720,11 @@ final class MemoryManager(
 }
 
 object MemoryManager {
+
+  /** A search page's graph: see `pageGraph`. */
+  private final case class PageGraph(
+      hasEntity: Seq[(Long, Long)],
+      relations: Seq[(Long, Long, String)])
 
   /** The per-call fields every row of one reconciled add carries. */
   private final case class AddCall(

@@ -6,8 +6,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
+
+import GraphStore._
 
 /** DataFrame-backed labeled-property-graph store (SURVEY §1, S1-S9).
   *
@@ -75,13 +77,45 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
   @volatile private var importanceVer = 0L
   // text-version: ticked by mutations that change the (id, text) row
   // set — memory appends/deletes/loads and text patches — the inputs of
-  // text-index-shaped state (BM25 prepared corpus); access bumps and
-  // expiry/metric patches do NOT tick it
+  // text-index-shaped state (BM25 prepared corpus, which follows the
+  // text-delta log below); access bumps and expiry/metric patches do
+  // NOT tick it
   @volatile private var textVer = 0L
   def writeVersion: Long = version
   def graphVersion: Long = graphVer
   def importanceVersion: Long = importanceVer
   def textVersion: Long = textVer
+
+  // the text-delta log: textLog(i) is what text version logFloor + i + 1
+  // did to the (id, text) rows. A tick whose rows the driver does not
+  // know (load, predicate delete, DataFrame text patch, null text)
+  // empties it and moves the floor; each checkpoint drops the entries
+  // older than the previous checkpoint, so the log spans one to two
+  // checkpoint cycles and holds no embeddings
+  private val textLog = scala.collection.mutable.ArrayBuffer.empty[TextDelta]
+  private var logFloor = 0L
+  private var textAtCheckpoint = 0L
+  private var checkpoints = 0L
+
+  private def textTick(delta: Option[TextDelta]): Unit = {
+    textVer += 1
+    delta match {
+      case Some(d) => textLog += d
+      case None => textLog.clear(); logFloor = textVer
+    }
+  }
+
+  /** The text version, the memories table at it and the store's
+    * checkpoint count, read together, with the deltas that lead from
+    * text version `since` to it — None when the log no longer reaches
+    * back to `since`.
+    */
+  def textChangesSince(since: Long): TextChanges = this.synchronized {
+    val deltas =
+      if (since >= logFloor && since <= textVer) Some(textLog.drop((since - logFloor).toInt).toList)
+      else None
+    TextChanges(textVer, memories, checkpoints, deltas)
+  }
 
   /** Driver-appended rows arrive SIZE-SLICED (r15, guide §2/§6):
     * `createDataset` of an in-process list parallelizes to
@@ -111,7 +145,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     * in-session store is the documented driver-small hot state — the
     * warehouse-scale path writes parquet partitions instead.
     */
-  private def boundParts(df: DataFrame): DataFrame = {
+  private[graft] def boundParts(df: DataFrame): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions > 2 * par) df.coalesce(par) else df
   }
@@ -127,6 +161,10 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
       communities = boundParts(communities).localCheckpoint()
       history = boundParts(history).localCheckpoint()
       edges = boundParts(edges).localCheckpoint()
+      checkpoints += 1
+      val stale = (textAtCheckpoint - logFloor).toInt
+      if (stale > 0) { textLog.remove(0, stale); logFloor = textAtCheckpoint }
+      textAtCheckpoint = textVer
     }
   }
 
@@ -136,7 +174,9 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     if (rows.nonEmpty) {
       memories = memories.unionByName(newRows(spark.createDataset(rows), rows.size))
       importanceVer += 1
-      textVer += 1
+      textTick(
+        if (rows.exists(_.text == null)) None
+        else Some(TextsAppended(rows.map(TextRow(_)))))
       tick()
     }
   }
@@ -179,7 +219,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     */
   def patchMemories(patch: DataFrame, setCols: Seq[String]): Unit = this.synchronized {
     if (setCols.contains("importance")) importanceVer += 1
-    if (setCols.contains("text")) textVer += 1
+    if (setCols.contains("text")) textTick(None)
     val p = broadcast(
       patch.select(
         (col("id").as("__pid") +: setCols.map(c => col(c).as(s"__p_$c"))): _*))
@@ -220,7 +260,9 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     */
   def setMemory(id: Long, values: Seq[(String, Column)]): Unit = this.synchronized {
     if (values.exists(_._1 == "importance")) importanceVer += 1
-    if (values.exists(_._1 == "text")) textVer += 1
+    values.collectFirst { case ("text", v) => v }.foreach { v =>
+      textTick(GraftSqlShim.stringLiteral(v).map(TextSet(id, _)))
+    }
     memories = memories.withColumns(values.map { case (c, v) =>
       c -> when(col("id") === id, v).otherwise(col(c)) }.toMap)
     tick()
@@ -270,7 +312,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
           (srcDead || dstDead))
       edges = edges.filter(!dead)
       importanceVer += 1
-      textVer += 1
+      textTick(Some(TextsRemoved(idSet)))
       tick(structural = true)
     }
   }
@@ -307,7 +349,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
             (srcDead || dstDead))
         edges = marked.filter(!dead).drop("__dsrc", "__ddst")
         importanceVer += 1
-        textVer += 1
+        textTick(None)
         tick(structural = true)
       }
       n
@@ -395,7 +437,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     episodes = rd("episodes"); communities = rd("communities")
     history = rd("history"); edges = rd("edges")
     importanceVer += 1
-    textVer += 1
+    textTick(None)
     tick(structural = true) // every table was replaced
   }
 
@@ -414,4 +456,34 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
         .foreach(f => Files.delete(f))
       finally walk.close()
     }
+}
+
+object GraphStore {
+
+  /** A memory row's id and text with its scope columns (F1: user_id,
+    * agent_id, run_id, graph_name), the ones that are not null.
+    */
+  final case class TextRow(id: Long, text: String, scope: Map[String, String]) {
+    /** Whether the row passes `FilterOps.scopeFilter(filters)`. */
+    def inScope(filters: Map[String, String]): Boolean =
+      filters.forall { case (k, v) => scope.get(k).contains(v) }
+  }
+  object TextRow {
+    def apply(r: MemoryRow): TextRow = TextRow(r.id, r.text,
+      (Option(r.user_id).map("user_id" -> _) ++ r.agent_id.map("agent_id" -> _) ++
+        r.run_id.map("run_id" -> _) ++ r.graph_name.map("graph_name" -> _)).toMap)
+  }
+
+  /** What one text-version tick did to the memories' (id, text) rows. */
+  sealed trait TextDelta
+  final case class TextsAppended(rows: Seq[TextRow]) extends TextDelta
+  final case class TextsRemoved(ids: Seq[Long]) extends TextDelta
+  final case class TextSet(id: Long, text: String) extends TextDelta
+
+  /** See [[GraphStore.textChangesSince]]. */
+  final case class TextChanges(
+      version: Long,
+      memories: DataFrame,
+      checkpoints: Long,
+      deltas: Option[Seq[TextDelta]])
 }

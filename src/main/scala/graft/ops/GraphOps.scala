@@ -250,7 +250,10 @@ object GraphOps {
     * (reference scoring.py:230-242):
     * 0.6·min(1, log(1+degree)/log(11)) + 0.4·sharedRatio, where
     * sharedRatio = fraction of the memory's entities that are linked to
-    * at least one OTHER memory. Two aggregations, no N+1 probing.
+    * at least one OTHER memory. Two aggregations, no N+1 probing. The
+    * catalog queries use this whole-graph form; `MemoryManager.search`
+    * scores only its page, on the driver, with the bit-identical
+    * [[PageFusion.topologyScores]].
     */
   def topologyScores(hasEntityEdges: DataFrame): DataFrame = {
     val e = hasEntityEdges.select(col("src").as("mem"), col("dst").as("ent")).distinct()

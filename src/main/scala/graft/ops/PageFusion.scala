@@ -14,6 +14,8 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
   *   - [[merge]] — [[GraphOps.mergeResults]];
   *   - [[topologyBoost]] / [[crossSessionBoost]] — the [[ScoringOps]]
   *     columns of the same names;
+  *   - [[topologyScores]] — [[GraphOps.topologyScores]], for the
+  *     memories whose entities' edges were collected;
   *   - [[byScoreDesc]] — `ORDER BY score DESC, id ASC`.
   *
   * OpsSpec checks the equality on generated pages.
@@ -87,6 +89,24 @@ object PageFusion {
   /** score × (1 + factor·coalesce(topo, 0)). */
   def topologyBoost(score: Double, topo: Option[Double], factor: Double): Double =
     score * (1.0 + factor * topo.getOrElse(0.0))
+
+  /** [[GraphOps.topologyScores]]' `topology_score` of each memory in
+    * `mems` that has an entity, from the HAS_ENTITY (mem, entity) rows of
+    * every entity those memories link to (more rows do no harm):
+    * 0.6·min(1, log(1 + degree)/log(11)) + 0.4·sharedRatio over the
+    * distinct rows, with Spark's `log` (StrictMath.log) and `avg` (the
+    * exact count of shared entities over the degree).
+    */
+  def topologyScores(mems: Set[Long], hasEntity: Seq[(Long, Long)]): Map[Long, Double] = {
+    val e = hasEntity.distinct
+    val memCount = e.groupMapReduce(_._2)(_ => 1)(_ + _)
+    e.filter(r => mems(r._1)).groupMap(_._1)(_._2).map { case (mem, ents) =>
+      val degree = ents.size.toDouble
+      val sharedRatio = ents.count(memCount(_) > 1).toDouble / degree
+      mem -> (0.6 * least(1.0, StrictMath.log(1.0 + degree) / StrictMath.log(11.0)) +
+        0.4 * sharedRatio)
+    }
+  }
 
   /** score × (1 + factor·(0.7·min(1, 10·pagerank) + 0.3·min(1, 10·betweenness))). */
   def crossSessionBoost(

@@ -54,11 +54,7 @@ object SearchOps {
       k1: Double = 1.2,
       b: Double = 0.75
   ): DataFrame = {
-    import graft.functions.TextFunctions.tokens
-
-    val docTokens = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")))
+    val docTokens = bm25Tokens(docs, idCol, textCol)
 
     val corpus = docTokens.agg(
       count(lit(1)).as("n_docs"),
@@ -92,22 +88,27 @@ object SearchOps {
       .select(col("doc_id").as(idCol), col("bm25"))
   }
 
-  /** Query-independent BM25 corpus state — the materialized text-index
-    * artifact a per-query scan reuses: the tokenized doc table
-    * (doc_id, dl, toks), checkpointed so tokenization never re-runs per
-    * query, plus (n_docs, avgdl). At 100 TB this is the table a real
-    * deployment maintains incrementally; here it memoizes in the
-    * manager on the store's textVersion.
+  /** The tokenized doc table (doc_id, toks, dl) BM25 scores. */
+  def bm25Tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    import graft.functions.TextFunctions.tokens
+    docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .withColumn("dl", size(col("toks")))
+  }
+
+  /** Query-independent BM25 corpus state — the text-index artifact a
+    * per-query scan reuses: the [[bm25Tokens]] table, checkpointed so
+    * tokenization never re-runs per query, plus (n_docs, avgdl). This is
+    * the from-scratch build. `MemoryManager.search` keeps the same state
+    * up to date from the store's write deltas instead (`Bm25Corpus`:
+    * deleted and re-texted ids filtered out, new texts unioned in, n and
+    * avgdl from driver-side token counts) and rebuilds it only after a
+    * write whose rows the driver does not know.
     */
   def bm25Prepare(
       docs: DataFrame,
       idCol: String,
       textCol: String): (DataFrame, Long, Double) = {
-    import graft.functions.TextFunctions.tokens
-    val docTokens = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")))
-      .localCheckpoint()
+    val docTokens = bm25Tokens(docs, idCol, textCol).localCheckpoint()
     val st = docTokens.agg(
       count(lit(1)).as("n_docs"),
       avg(col("dl").cast("double")).as("avgdl")).collect()(0)

@@ -13,4 +13,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftSqlShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The string of a `lit(s)` column; None for any other column. */
+  def stringLiteral(c: Column): Option[String] = c.node match {
+    case internal.Literal(s: String, _, _) => Some(s)
+    case _ => None
+  }
 }

@@ -50,24 +50,30 @@ class ConcurrencySpec extends SparkSuite {
 
   test("searches racing a deleting/updating writer read one snapshot: in scope, hydrated") {
     val store = new GraphStore(spark, checkpointEvery = 4)
-    def mgr(user: String) = new MemoryManager(spark,
-      MemoryConfig(userId = user, enableImportance = true, enableTopologyBoost = true),
+    def mgr(user: String, scoped: Boolean = false) = new MemoryManager(spark,
+      MemoryConfig(userId = user, enableImportance = true, enableTopologyBoost = true,
+        scopedHybridCandidates = scoped),
       store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
     val alice = mgr("alice")
     val ids = alice.addBatch((1 to 40).map(i => s"note $i about Acme Corp and Bob Smith"),
       now = Some(T0)).map(_.toLong)
     alice.add("Alice Chen works at Acme Corp.", now = Some(T0))
     mgr("bob").addBatch((1 to 20).map(i => s"note $i about Acme Corp"), now = Some(T0))
+    // the writer adds, updates and deletes while both readers' BM25
+    // corpora refresh from the store's deltas
     val writer = new Thread(() => ids.take(12).zipWithIndex.foreach { case (id, i) =>
-      if (i % 2 == 0) alice.delete(id.toString)
-      else alice.update(id.toString, s"rewritten note $i about Acme Corp")
+      i % 3 match {
+        case 0 => alice.delete(id.toString)
+        case 1 => alice.update(id.toString, s"rewritten note $i about Acme Corp")
+        case _ => alice.add(s"fresh note $i about Acme Corp", infer = false, now = Some(T0 + i))
+      }
     })
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val results = new java.util.concurrent.ConcurrentLinkedQueue[SearchResult]()
-    val readers = (1 to 2).map { t =>
-      val m = mgr("alice")
+    val searchers = Seq(mgr("alice"), mgr("alice", scoped = true))
+    val readers = searchers.zipWithIndex.map { case (m, t) =>
       new Thread(() => (1 to 5).foreach { i =>
-        try m.search(s"Acme Corp note $i", k = 5 + t, now = Some(T0 + i))
+        try m.search(s"Acme Corp note $i", k = 6 + t, now = Some(T0 + i))
           .foreach(results.add)
         catch { case e: Throwable => failures.add(e) }
       })
@@ -82,6 +88,9 @@ class ConcurrencySpec extends SparkSuite {
       assert(r.userId == "alice" && aliceIds(r.memoryId), r.toString)
       assert(r.text != null, r.toString)
     }
+    // no delta was applied twice or skipped
+    searchers.foreach(m => CorpusCheck.assertFresh(m,
+      Seq(Seq("acme", "note"), Seq("rewritten"), Seq("fresh", "corp")), "after the race"))
   }
 
   test("access bumps do not retrigger whole-graph metric recompute") {

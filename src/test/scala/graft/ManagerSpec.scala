@@ -156,18 +156,7 @@ class ManagerSpec extends SparkSuite {
     def run(nEnts: Int): Long = {
       val ents = (1 to nEnts).map(i => ExtractedEntity(s"e$i", "t"))
       val m = mkManager(outputs = Seq(Extraction(Seq("f"), ents, Nil)))
-      val counter = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        m.add("msg", now = Some(T0))
-        Thread.sleep(300) // let queued listener events drain
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
+      SparkJobs.count(spark)(m.add("msg", now = Some(T0))).toLong
     }
     val one = run(1)
     val eight = run(8)
@@ -618,9 +607,10 @@ class ManagerSpec extends SparkSuite {
   test("job-count guard: a warm search runs a fixed number of Spark jobs") {
     // entity lookup 1; the candidate action 3 (the BM25, vector and
     // graph legs in one union, whose AQE query stages run as jobs);
-    // hydration 1; topology 1; relations 3 (deterministic per BASELINE
-    // §20). A re-introduced exchange or join of the memories table, or a
-    // per-step recount, moves this number.
+    // hydration 1; the page's graph 2 (its entities, then their edges:
+    // topology and relations share them); relation names 1
+    // (deterministic per BASELINE §20). A re-introduced exchange or join
+    // of the memories table, or a per-step recount, moves this number.
     val store = new GraphStore(spark, checkpointEvery = 1000)
     val m = new MemoryManager(spark,
       MemoryConfig(userId = "alice", enableImportance = true, enableTopologyBoost = true),
@@ -629,37 +619,118 @@ class ManagerSpec extends SparkSuite {
       s"Alice Chen met Bob Smith about plan $i. Bob Smith works at Acme Corp."),
       now = Some(T0))
     m.addBatch((1 to 200).map(i => s"bulk note $i"), now = Some(T0))
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val ended = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.incrementAndGet()
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        ended.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      started.set(0); ended.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // listener events arrive asynchronously: wait until every job
-        // that started has ended, then for a quiet period
-        val deadline = System.currentTimeMillis() + 10000
-        var last = -1
-        while ((started.get() != ended.get() || started.get() != last) &&
-            System.currentTimeMillis() < deadline) {
-          last = started.get(); Thread.sleep(300)
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
-      started.get()
-    }
     val query = "Alice Chen met Bob Smith about plan 3"
-    m.search("Bob Smith works", k = 10) // builds the BM25 and topology memos
+    m.search("Bob Smith works", k = 10) // builds the BM25 corpus
     val hits = m.search(query, k = 10)
     assert(hits.head.text == query && hits.head.source == "both")
     assert(hits.head.relations.nonEmpty)
-    val jobs = jobsOf(m.search(query, k = 10))
-    assert(jobs == 9, s"warm search ran $jobs Spark jobs")
+    val jobs = SparkJobs.count(spark)(m.search(query, k = 10))
+    assert(jobs == 8, s"warm search ran $jobs Spark jobs")
+  }
+
+  test("job-count guard: a search right after each kind of write runs the warm search's jobs") {
+    // no write makes the next search rebuild a whole-store memo: the
+    // BM25 corpus applies the write's deltas on the driver, topology
+    // comes from the page's own edges. So the first search after a
+    // write runs the jobs of the warm search that repeats it (the
+    // candidate action's AQE jobs depend on the data, so the warm count
+    // is taken per step). The one extra job allowed is the corpus's
+    // localCheckpoint in the first refresh after a store checkpoint,
+    // and it must land there. Without importance scoring a search bumps
+    // no access counts, so no store checkpoint falls inside one.
+    val every = 12
+    val store = new GraphStore(spark, checkpointEvery = every)
+    val m = new MemoryManager(spark,
+      MemoryConfig(userId = "alice", enableTopologyBoost = true,
+        consolidationBatchSize = 100, consolidationPreserveRecent = 0,
+        consolidationProtectThreshold = 0.5),
+      store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+    val bulk = m.addBatch((1 to 40).map(i => s"bulk note $i"), now = Some(T0))
+    m.addReconcileBatch((1 to 12).map(i =>
+      s"Alice Chen met Bob Smith about plan $i. Bob Smith works at Acme Corp."),
+      now = Some(T0 + 1000))
+    val query = "Alice Chen met Bob Smith about plan 3"
+    // the store checkpoint count when the last search refreshed its corpus
+    var refreshedIn = 0L
+    def search(): Int = {
+      refreshedIn = store.writeVersion / every
+      SparkJobs.count(spark) {
+        val hits = m.search(query, k = 10)
+        assert(hits.head.text == query && hits.head.relations.nonEmpty)
+      }
+    }
+    search()
+    val writes = Seq[(String, () => Unit)](
+      "add" -> (() => m.add("Carol Diaz joined Acme Corp as plan lead.", now = Some(T0 + 1))),
+      "add(infer = false)" -> (() => m.add("plan notes kept raw", infer = false, now = Some(T0 + 2))),
+      "addBatch" -> (() => m.addBatch(Seq("bulk plan a", "", "bulk plan b"), now = Some(T0 + 3))),
+      "update" -> (() => m.update(bulk(0), "bulk note rewritten", now = Some(T0 + 4))),
+      "delete" -> (() => m.delete(bulk(1))),
+      "summarize" -> (() => assert(m.summarize(now = Some(T0 + 5)).nonEmpty)),
+      "add again" -> (() => m.add("Dan Eve met Alice Chen about plan 9.", now = Some(T0 + 6))),
+      "update again" -> (() => m.update(bulk(2), "another rewrite", now = Some(T0 + 7))))
+    val afterCheckpoint = writes.map { case (name, write) =>
+      write()
+      val crossed = store.writeVersion / every > refreshedIn
+      val jobs = search()
+      val warm = search()
+      if (crossed) assert(jobs == warm + 1, s"search after $name (store checkpoint): $jobs jobs, warm $warm")
+      else assert(jobs == warm, s"search after $name: $jobs jobs, warm $warm")
+      crossed
+    }
+    assert(afterCheckpoint.count(identity) >= 1, "no store checkpoint fell inside the sequence")
+  }
+
+  test("the maintained BM25 corpus equals a fresh bm25Prepare after every write") {
+    val store = new GraphStore(spark, checkpointEvery = 5)
+    def mgr(user: String, scoped: Boolean) = new MemoryManager(spark,
+      MemoryConfig(userId = user, scopedHybridCandidates = scoped,
+        consolidationBatchSize = 3, consolidationPreserveRecent = 2),
+      store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+    val alice = mgr("alice", scoped = false)
+    val bob = mgr("bob", scoped = true)
+    val queries = Seq(Seq("plan", "acme"), Seq("note", "note", "bob"), Seq("zebra"))
+    def check(step: String): Unit = {
+      CorpusCheck.assertFresh(alice, queries, s"alice after $step")
+      CorpusCheck.assertFresh(bob, queries, s"bob after $step")
+    }
+    check("nothing")
+    val rnd = new scala.util.Random(11)
+    val words = Seq("plan", "acme", "note", "bob", "alice", "report", "plan", "q3")
+    def text(): String = Seq.fill(1 + rnd.nextInt(6))(words(rnd.nextInt(words.size))).mkString(" ")
+    (1 to 14).foreach { step =>
+      val m = if (rnd.nextBoolean()) alice else bob
+      val ids = m.getAll().map(_.memoryId)
+      val op = step % 6 // every kind of write, in turn
+      op match {
+        case 0 => m.add(s"Bob Smith met Acme Corp about ${text()}.", now = Some(T0 + step))
+        case 1 => m.add(text(), infer = false, now = Some(T0 + step))
+        case 2 => m.addBatch(Seq(text(), "", text()), now = Some(T0 + step))
+        case 3 if ids.nonEmpty => m.update(ids(rnd.nextInt(ids.size)), text(), now = Some(T0 + step))
+        case 4 if ids.nonEmpty => m.delete(ids(rnd.nextInt(ids.size)))
+        case _ => m.summarize(now = Some(T0 + step))
+      }
+      check(s"step $step (op $op)")
+      if (step % 4 == 0) alice.search("plan acme note", k = 5, now = Some(T0 + step))
+    }
+    // writes whose rows the driver does not know: the log restarts, so
+    // the next refresh is a full build
+    def fullBuild(step: String)(write: => Unit): Unit = {
+      val before = store.textVersion
+      write
+      assert(store.textChangesSince(before).deltas.isEmpty, step)
+      check(step)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("bm25-corpus").toString
+    fullBuild("persist + load") { store.persist(dir); store.load(dir) }
+    fullBuild("a DataFrame text patch") {
+      import spark.implicits._
+      store.patchMemories(Seq((alice.getAll().head.memoryId.toLong, "patched plan text"))
+        .toDF("id", "text"), Seq("text"))
+    }
+    fullBuild("deleteAll")(bob.deleteAll())
+    alice.add("plan after the rebuild", infer = false, now = Some(T0 + 99))
+    check("an add after the rebuild")
   }
 
   test("addReconcileBatch == sequential add loop on a conflict-free batch") {

@@ -297,6 +297,50 @@ class OpsSpec extends SparkSuite {
     }
   }
 
+  test("PageFusion.topologyScores from a page's own edges equals GraphOps.topologyScores bit for bit") {
+    import graft.api.{MemoryConfig, MemoryManager}
+    import graft.core.{EdgeRow, EdgeTypes, GraphStore}
+    import graft.ext.{AddAllReconciler, HeuristicExtractor}
+    import graft.ops.PageFusion
+    val rnd = new scala.util.Random(5)
+    val names = Seq("Acme Corp", "Bob Smith", "Carol Diaz", "Dan Eve", "Erin Fox", "Gil Hart")
+    (0 until 2).foreach { g =>
+      val store = new GraphStore(spark)
+      def mgr(user: String) = new MemoryManager(spark, MemoryConfig(userId = user), store,
+        new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+      val (alice, bob) = (mgr("alice"), mgr("bob"))
+      // Acme Corp is the hub: every entity-bearing text names it
+      def text(): String = ("Acme Corp" +: Seq.fill(1 + rnd.nextInt(3))(
+        names(rnd.nextInt(names.size)))).mkString("", " met ", ".")
+      alice.addBatch(Seq("no entities here", "plain note"), now = Some(1L)) // edgeless
+      (1 to 6 + g).foreach(i => (if (i % 3 == 0) bob else alice).add(text(), now = Some(i.toLong)))
+      // degree 11: the min(1, …) clamp binds
+      alice.add(("Acme Corp" +: ('A' to 'J').map(c => s"${c}x Team")).mkString(" and ") + ".",
+        now = Some(20L))
+      def he = store.edges.filter(col("edge_type") === EdgeTypes.HasEntity)
+      val some = he.select("src", "dst").as[(Long, Long)].collect().toSeq
+      store.appendEdges(some.take(3).map { case (m, e) =>
+        EdgeRow(store.nextEdgeId(), m, e, EdgeTypes.HasEntity, Map.empty) }) // duplicates
+      val mems = store.memories.select("id").as[Long].collect().toSeq.sorted
+      store.expireMemories(30L, Seq(mems(3) -> None, mems(5) -> Some(25L)))
+      alice.delete(mems(4).toString); bob.delete(mems(mems.size - 2).toString)
+
+      val want = GraphOps.topologyScores(he).select("mem", "topology_score")
+        .as[(Long, Double)].collect().toMap
+      val rows = he.select("src", "dst").as[(Long, Long)].collect().toSeq
+      assert(rows.groupBy(_._1).values.exists(_.map(_._2).distinct.size >= 10))
+      assert(rows.size > rows.distinct.size)
+      def bits(m: Map[Long, Double]) = m.map { case (k, v) => k -> java.lang.Double.doubleToRawLongBits(v) }
+      assert(bits(PageFusion.topologyScores(mems.toSet, rows)) == bits(want), s"graph $g")
+      (0 until 6).foreach { p =>
+        val page = rnd.shuffle(mems).take(1 + rnd.nextInt(mems.size)).toSet
+        val ents = rows.filter(r => page(r._1)).map(_._2).toSet
+        val got = PageFusion.topologyScores(page, rows.filter(r => ents(r._2)))
+        assert(bits(got) == bits(want.filter(r => page(r._1))), s"graph $g page $p")
+      }
+    }
+  }
+
   test("latestPerKey: as-of top-1 per key") {
     val df = Seq(
       ("u1", 10L, 1L), ("u1", 20L, 2L), ("u1", 30L, 3L),
