@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Whole-graph analytics (SURVEY §2.8, G1-G3) as deterministic
   * DataFrame iteration — no driver-side graph materialization on the
@@ -19,13 +20,18 @@ import org.apache.spark.sql.functions._
   */
 object GraphAlgorithms {
 
-  /** Edge-count bound under which exact Brandes betweenness runs as a
-    * broadcast graph with root-parallel executors instead of
-    * (root,node)-keyed BFS waves. Wave scheduling costs ~0.3 s per
-    * depth level at local[32]; a deep small graph (session chains) pays
-    * that 2·diameter times for data that fits in one broadcast. Above
-    * the bound the wave implementation — O(V·E) but fully distributed —
-    * takes over; callers at real scale pass sampled `roots`.
+  /** Distinct-edge bound under which a graph runs in one JVM. Two
+    * operators pick their physical plan by it:
+    *  - exact Brandes [[betweenness]] broadcasts the adjacency and runs
+    *    root-parallel executors instead of (root,node)-keyed BFS waves.
+    *    Wave scheduling costs ~0.3 s per depth level at local[32]; a
+    *    deep small graph (session chains) pays that 2·diameter times for
+    *    data that fits in one broadcast;
+    *  - PageRank / PPR ([[pageRank]]) run the power iteration on the
+    *    driver instead of one Spark job per iteration.
+    * Above the bound the distributed plans take over: waves (O(V·E),
+    * callers at real scale pass sampled `roots`) and the DataFrame
+    * rank loop.
     */
   val BroadcastEdgeLimit = 500000L
 
@@ -53,26 +59,36 @@ object GraphAlgorithms {
     * score boosts) is stable well before the absolute values are, and
     * the fixed count is what keeps the DuckDB oracle replayable.
     *
-    * Scale shape: outdeg is folded into the checkpointed edge table once
-    * (src, dst, outdeg), partitioned by src; ranks stay partitioned by
-    * node, so each iteration is exactly ONE shuffle (the dst-keyed
-    * contribution sum). Lineage is cut every 4 iterations — eager
-    * materialization every wave costs more than it saves at local[32].
+    * Scale shape: two plans, one recurrence. The distinct edge table is
+    * checkpointed once and counted by an observation on that job.
+    *  - At most [[BroadcastEdgeLimit]] distinct edges with integral node
+    *    ids: the checkpoint is collected and the iteration runs on the
+    *    driver over index arrays; the result is a local relation, so the
+    *    whole call costs the checkpoint and the collect.
+    *  - Otherwise: outdeg is folded into a checkpointed edge table
+    *    (src, dst, outdeg), partitioned by src; ranks stay partitioned by
+    *    node, so each iteration is exactly ONE shuffle (the dst-keyed
+    *    contribution sum). Lineage is cut every 4 iterations — eager
+    *    materialization every wave costs more than it saves at local[32].
+    * Both plans evaluate the same double operations per term; only the
+    * order of each node's in-sum differs, so ranks agree to within
+    * 1e-12 relative (AlgoSpec), well inside the 6-decimal rounding the
+    * catalog queries report.
     */
   def pageRank(edges: DataFrame, iters: Int = 20, damping: Double = 0.85): DataFrame =
     // reset ≡ 1: (1−d)·1.0 constant-folds, so the plan is the classic one
-    rankLoop(edges, lit(1.0), iters, damping)
+    rankLoop(edges, lit(1.0), _ => 1.0, iters, damping)
       .select(col("node"), col("rank").as("pagerank"))
 
   /** Personalized PageRank: [[pageRank]] with the teleport mass
     * concentrated on a source set instead of spread uniformly —
     * rank⁰(v) = reset(v); rankᵗ⁺¹(v) = (1−d)·reset(v) +
-    * d·Σ rankᵗ(u)/outdeg(u), reset(v) = 1/|S| for v ∈ S else 0. The
-    * relevance-propagation primitive: scores measure proximity to the
-    * sources through the link structure (recommendation seeds, memory
-    * anchors), not global importance. Dangling mass is dropped exactly
-    * as in the base formulation, and the fixed iteration count keeps
-    * the result engine-replayable.
+    * d·Σ rankᵗ(u)/outdeg(u), reset(v) = 1/|S| for v ∈ S else 0, S the
+    * DISTINCT sources. The relevance-propagation primitive: scores
+    * measure proximity to the sources through the link structure
+    * (recommendation seeds, memory anchors), not global importance.
+    * Dangling mass is dropped exactly as in the base formulation, and
+    * the fixed iteration count keeps the result engine-replayable.
     *
     * Scale shape: identical to [[pageRank]]; the reset column is a
     * broadcast-free per-row expression (the source set is a literal IN
@@ -85,28 +101,77 @@ object GraphAlgorithms {
       sources: Seq[Long],
       iters: Int = 20,
       damping: Double = 0.85): DataFrame = {
-    require(sources.nonEmpty, "sources must be non-empty")
-    val reset = when(col("node").isin(sources: _*),
-      lit(1.0 / sources.size)).otherwise(lit(0.0))
-    rankLoop(edges, reset, iters, damping)
+    val (reset, resetOf) = sourceReset(sources)
+    rankLoop(edges, reset, resetOf, iters, damping)
       .select(col("node"), col("rank").as("ppr"))
+  }
+
+  /** PPR's reset 1/|S| on the distinct sources S, as the Spark loop's
+    * column over `node` and as the driver loop's function of a node id.
+    */
+  private[graft] def sourceReset(
+      sources: Seq[Long]): (Column, java.lang.Long => Double) = {
+    require(sources.nonEmpty, "sources must be non-empty")
+    val s = sources.distinct
+    val w = 1.0 / s.size
+    val set = s.toSet
+    (when(col("node").isin(s: _*), lit(w)).otherwise(lit(0.0)),
+      v => if (v != null && set(v.longValue)) w else 0.0)
   }
 
   /** The damped power iteration both PageRank faces share:
     * rank⁰ = reset; rankᵗ⁺¹ = (1−d)·reset + d·Σ rankᵗ(u)/outdeg(u).
-    * `reset` is a per-row expression over `node`. Output: (node, rank).
+    * `reset` is a per-row expression over `node` for the Spark loop;
+    * `resetOf` is the same function of a node id for the driver loop
+    * (null for a null endpoint: Spark's `reset` sees a null `node`).
+    * Output: (node, rank), `node` typed as `src ∪ dst`, `rank` double.
+    *
+    * `driverEdgeLimit` is the plan seam (see [[pageRank]]): a graph
+    * with more distinct edges runs the Spark loop; tests pass −1 to
+    * force it.
     */
-  private def rankLoop(edges: DataFrame, reset: Column, iters: Int,
-      damping: Double): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst")).distinct()
-    val outdeg = e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+  private[graft] def rankLoop(edges: DataFrame, reset: Column,
+      resetOf: java.lang.Long => Double, iters: Int, damping: Double,
+      driverEdgeLimit: Long = BroadcastEdgeLimit): DataFrame = {
+    val obs = new org.apache.spark.sql.Observation()
+    val (e0, releaseE0) = Checkpoints.withRelease(
+      edges.select(col("src"), col("dst")).distinct()
+        .observe(obs, count(lit(1)).as("m")))
+    val nodeField = e0.select(col("src").as("node"))
+      .unionByName(e0.select(col("dst").as("node"))).schema("node")
+    val integral = nodeField.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (integral &&
+        Checkpoints.observedLong(obs, "m")(e0.count()) <= driverEdgeLimit) {
+      val rows = e0.select(col("src").cast(nodeField.dataType),
+        col("dst").cast(nodeField.dataType)).collect()
+      releaseE0()
+      edges.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rankOnDriver(rows, resetOf, iters, damping): _*),
+        StructType(Seq(nodeField, StructField("rank", DoubleType, nullable = false))))
+    } else rankOnSpark(e0, releaseE0, reset, iters, damping)
+  }
+
+  /** [[rankLoop]]'s Spark plan over the checkpointed distinct edges
+    * `e0`, which it releases once its own static tables are materialized.
+    */
+  private def rankOnSpark(e0: DataFrame, releaseE0: () => Unit,
+      reset: Column, iters: Int, damping: Double): DataFrame = {
+    // outdeg as a count over the src partition: one exchange by src
+    // (which the repartition then keeps) instead of an aggregation and
+    // a join. Null-src rows stay but, like every null key, never match
+    // a rank row.
     val (e, releaseE) = Checkpoints.withRelease(
-      e0.join(outdeg, "src").repartition(col("src")))
+      e0.withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
+        .repartition(col("src")))
     val (nodes, releaseNodes) = Checkpoints.withRelease(
       e0.select(col("src").as("node"))
         .unionByName(e0.select(col("dst").as("node")))
         .distinct()
         .repartition(col("node")))
+    releaseE0()
     var ranks = nodes.withColumn("rank", reset)
     var releaseLast: () => Unit = null
     for (i <- 1 to iters) {
@@ -134,6 +199,54 @@ object GraphAlgorithms {
     // blocks are no longer reachable from the returned plan
     if (iters >= 1) { releaseE(); releaseNodes() }
     ranks
+  }
+
+  /** [[rankLoop]]'s recurrence over collected distinct edges, with the
+    * Spark loop's join semantics: a null endpoint counts toward its
+    * source's outdegree, but no rank flows to or from it (the Spark
+    * joins never match null keys), and a null node keeps
+    * (1−d)·reset(null). Output: (node, rank) per distinct endpoint.
+    */
+  private def rankOnDriver(edges: Array[Row],
+      resetOf: java.lang.Long => Double, iters: Int,
+      damping: Double): Array[Row] = {
+    val index = new java.util.HashMap[Any, Integer]()
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def idx(v: Any): Int = {
+      val i = index.get(v)
+      if (i != null) i.intValue
+      else { index.put(v, nodes.size); nodes += v; nodes.size - 1 }
+    }
+    val src = edges.map(e => idx(e.get(0)))
+    val dst = edges.map(e => idx(e.get(1)))
+    val n = nodes.size
+    val outdeg = new Array[Long](n)
+    src.foreach(u => outdeg(u) += 1)
+    // the edges rank flows along: both endpoints non-null
+    val flow = edges.indices.filter(k => !edges(k).isNullAt(0) && !edges(k).isNullAt(1)).toArray
+    val reset = nodes.map(v =>
+      resetOf(if (v == null) null else java.lang.Long.valueOf(
+        v.asInstanceOf[Number].longValue))).toArray
+    var rank = reset.clone()
+    var it = 0
+    while (it < iters) {
+      val inSum = new Array[Double](n)
+      var k = 0
+      while (k < flow.length) {
+        val u = src(flow(k))
+        inSum(dst(flow(k))) += rank(u) / outdeg(u).toDouble
+        k += 1
+      }
+      val next = new Array[Double](n)
+      var v = 0
+      while (v < n) {
+        next(v) = (1.0 - damping) * reset(v) + damping * inSum(v)
+        v += 1
+      }
+      rank = next
+      it += 1
+    }
+    nodes.indices.map(v => Row(nodes(v), rank(v))).toArray
   }
 
   /** G2 — exact betweenness centrality (Brandes). Two physical plans,

@@ -32,6 +32,108 @@ class AlgoSpec extends SparkSuite {
     assert(pr(2L) == pr(3L))
   }
 
+  /** A graph with every shape the two PageRank plans must agree on:
+    * sinks, self-loops, duplicate edges, a hub, two components and
+    * null endpoints on both sides.
+    */
+  private def rankGraph(seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val random = Seq.fill(300)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    val hub = (100L to 140L).flatMap(v => Seq(99L -> v, v -> 99L)) ++ Seq(99L -> 99L)
+    val sinks = Seq(1L -> 500L, 2L -> 501L, 3L -> 500L)
+    val pairs = (random ++ random.take(25) ++ hub ++ sinks)
+      .map { case (a, b) => (Option(a), Option(b)) }
+    (pairs ++ Seq((Some(7L), None), (None, Some(8L)), (None, None)))
+      .toDF("src", "dst")
+  }
+
+  private def rankMap(df: org.apache.spark.sql.DataFrame): Map[Any, Double] =
+    df.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+
+  private def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The driver plan against the forced Spark loop: same schema, same
+    * nodes, values equal up to summation order.
+    */
+  private def assertSameRanks(driver: org.apache.spark.sql.DataFrame,
+      sparkLoop: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    assert(driver.schema == sparkLoop.schema, what)
+    val (a, b) = (rankMap(driver), rankMap(sparkLoop))
+    assert(a.keySet == b.keySet, what)
+    a.foreach { case (node, x) =>
+      val y = b(node)
+      assert(math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(x)),
+        s"$what node $node: $x vs $y")
+      assert(r6(x) == r6(y), s"$what node $node: $x vs $y")
+    }
+  }
+
+  private def sparkLoopPageRank(g: org.apache.spark.sql.DataFrame, iters: Int) =
+    GraphAlgorithms.rankLoop(g, lit(1.0), _ => 1.0, iters, 0.85,
+      driverEdgeLimit = -1L).select(col("node"), col("rank").as("pagerank"))
+
+  private def sparkLoopPpr(g: org.apache.spark.sql.DataFrame, sources: Seq[Long],
+      iters: Int) = {
+    val (reset, resetOf) = GraphAlgorithms.sourceReset(sources)
+    GraphAlgorithms.rankLoop(g, reset, resetOf, iters, 0.85,
+      driverEdgeLimit = -1L).select(col("node"), col("rank").as("ppr"))
+  }
+
+  test("pageRank / PPR: the driver plan equals the Spark loop") {
+    val g = rankGraph(7)
+    for (iters <- Seq(0, 1, 20)) {
+      assertSameRanks(GraphAlgorithms.pageRank(g, iters),
+        sparkLoopPageRank(g, iters), s"pageRank iters=$iters")
+      // source 9999 is absent from the graph: its share of the mass is lost
+      val sources = Seq(1L, 99L, 9999L)
+      assertSameRanks(GraphAlgorithms.personalizedPageRank(g, sources, iters),
+        sparkLoopPpr(g, sources, iters), s"ppr iters=$iters")
+    }
+    // null endpoints: a null node keeps (1−d)·reset and gets no in-flow
+    val pr = rankMap(GraphAlgorithms.pageRank(g, 20))
+    assert(pr(null) == 1.0 - 0.85)
+    assert(rankMap(GraphAlgorithms.personalizedPageRank(g, Seq(1L), 20))(null) == 0.0)
+
+    val intIds = Seq((1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (5, 6), (1, 2))
+      .toDF("src", "dst")
+    assertSameRanks(GraphAlgorithms.pageRank(intIds, 20),
+      sparkLoopPageRank(intIds, 20), "pageRank Int ids")
+    assert(GraphAlgorithms.pageRank(intIds).schema("node").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assertSameRanks(GraphAlgorithms.personalizedPageRank(intIds, Seq(1L, 7L), 20),
+      sparkLoopPpr(intIds, Seq(1L, 7L), 20), "ppr Int ids")
+
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assertSameRanks(GraphAlgorithms.pageRank(empty, 20),
+      sparkLoopPageRank(empty, 20), "pageRank empty")
+    assert(GraphAlgorithms.pageRank(empty, 20).collect().isEmpty)
+  }
+
+  test("personalizedPageRank: duplicate sources count once") {
+    val g = rankGraph(11)
+    for (ppr <- Seq[(Seq[Long], Int) => org.apache.spark.sql.DataFrame](
+        GraphAlgorithms.personalizedPageRank(g, _, _),
+        sparkLoopPpr(g, _, _))) {
+      assert(rankMap(ppr(Seq(1L, 1L, 2L), 20)) == rankMap(ppr(Seq(1L, 2L), 20)))
+      // rank⁰ is the reset: 1/2 per distinct source, total mass 1
+      val reset = rankMap(ppr(Seq(1L, 1L, 2L), 0))
+      assert(reset(1L) == 0.5 && reset(2L) == 0.5 && reset.values.sum == 1.0)
+    }
+  }
+
+  test("pageRank: job counts of the driver plan and the Spark loop") {
+    val g = rankGraph(3)
+    // the distinct-edge checkpoint (shuffle map + result) and its
+    // collect; the ranks are a local relation, collected with no job
+    val driverJobs = SparkJobs.count(spark)(GraphAlgorithms.pageRank(g, 20).collect())
+    assert(driverJobs == 3, s"driver plan ran $driverJobs jobs")
+    // 52 here while its edge and node tables each re-ran the distinct;
+    // both now read the one checkpoint, and outdeg is a window count
+    val loopJobs = SparkJobs.count(spark)(sparkLoopPageRank(g, 20).collect())
+    assert(loopJobs <= 51, s"Spark loop ran $loopJobs jobs")
+  }
+
   test("betweenness: directed chain interior nodes") {
     // 1→2→3→4: node v at position i: (i-1)(L-i) pairs; norm (n-1)(n-2)=6
     val bc = GraphAlgorithms.betweenness(edges(1L -> 2L, 2L -> 3L, 3L -> 4L))
@@ -534,8 +636,6 @@ class AlgoSpec extends SparkSuite {
       rank = nodes.map(n =>
         n -> ((1.0 - 0.85) * reset(n) + 0.85 * in(n))).toMap
     }
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val got = GraphAlgorithms.personalizedPageRank(
         edges(es: _*), sources, iters = 20)
       .collect().map(r => r.getLong(0) -> r6(r.getDouble(1))).toMap

@@ -7,34 +7,43 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.SparkSession
 
 /** Counts the Spark jobs a block of code starts. Listener events arrive
-  * asynchronously, so after the block one marker job runs and the count
-  * is read once the listener has seen the marker end: one listener queue
-  * delivers events in order, so by then every job the block started has
-  * delivered its start and its end.
+  * asynchronously, and one listener queue delivers them in order, so the
+  * block is bracketed by two marker jobs: events delivered before the
+  * first marker's end belong to earlier work and are ignored, and the
+  * count is read once the second marker's end has arrived, by when every
+  * job the block started has delivered its start and its end. Only ends
+  * of jobs whose start was counted are counted, so a job of earlier work
+  * that is still running cannot unbalance the check.
   */
 object SparkJobs {
   private val MarkerKey = "graft.test.jobCountMarker"
 
   def count(spark: SparkSession)(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val started, ended = new AtomicInteger
-    val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val markerEnded = new CountDownLatch(1)
+    val started, ended, markersEnded = new AtomicInteger
+    val startedIds, markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val firstMarkerEnded, lastMarkerEnded = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(MarkerKey) != null)) markerIds.add(e.jobId)
-        else started.incrementAndGet()
+        else if (markersEnded.get == 1) { startedIds.add(e.jobId); started.incrementAndGet() }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerIds.contains(e.jobId)) markerEnded.countDown()
-        else ended.incrementAndGet()
+        if (markerIds.contains(e.jobId)) {
+          if (markersEnded.incrementAndGet() == 1) firstMarkerEnded.countDown()
+          else lastMarkerEnded.countDown()
+        } else if (startedIds.contains(e.jobId)) ended.incrementAndGet()
     }
-    sc.addSparkListener(listener)
-    try {
-      body
+    def marker(ended: CountDownLatch): Unit = {
       sc.setLocalProperty(MarkerKey, "1")
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(MarkerKey, null)
-      assert(markerEnded.await(60, TimeUnit.SECONDS), "the marker job's end never arrived")
+      assert(ended.await(60, TimeUnit.SECONDS), "a marker job's end never arrived")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(firstMarkerEnded)
+      body
+      marker(lastMarkerEnded)
     } finally sc.removeSparkListener(listener)
     assert(started.get() == ended.get(), s"${started.get()} jobs started, ${ended.get()} ended")
     started.get()
