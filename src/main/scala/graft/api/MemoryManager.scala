@@ -724,16 +724,15 @@ final class MemoryManager(
   private var metricsVersion = -1L
 
   // ---- search-path state across requests ---------------------------
-  // Nothing on the search path aggregates the whole graph per request,
-  // and no write makes the next search rebuild a whole-store memo: the
-  // page's topology scores come from its own edge lookups (pageGraph),
-  // and the BM25 prepared corpus is kept up to date from the store's
-  // text deltas (Bm25Corpus). Reinforcement (structural decay only) is
-  // still a whole-graph aggregation, memoized on the exact store
-  // versions its inputs depend on: (graphVersion, importanceVersion) —
-  // created_at is immutable and an edgeless new memory can't shift any
-  // other memory's score. bumpAccess moves neither key.
-  private[graft] val bm25Corpus = new Bm25Corpus(store,
+  // A search reads the serving index, which the store's row deltas keep
+  // up to date, and Spark only above the index's budget; no write makes
+  // the next search rebuild a whole-store memo. Reinforcement
+  // (structural decay only) is still a whole-graph aggregation,
+  // memoized on the exact store versions its inputs depend on:
+  // (graphVersion, importanceVersion) — created_at is immutable and an
+  // edgeless new memory can't shift any other memory's score.
+  // bumpAccess moves neither key.
+  private[graft] val servingIndex = ServingIndex.of(store,
     if (config.scopedHybridCandidates) Some(config.scopeFilters) else None)
 
   private var reinfMemoKey = (-1L, -1L)
@@ -960,14 +959,17 @@ final class MemoryManager(
   }
 
   /** The search pipeline as a bounded page (the shape of the add path's
-    * POINT candidate search): Spark computes each candidate leg's top
-    * page and the rows of the page's ids; fusion over the collected
-    * ≤ 2·fetchK + k rows runs on the driver through [[PageFusion]],
-    * bit-identical to the DataFrame operators it replaces. Per search:
-    * one entity lookup, ONE candidate action (the BM25, vector and graph
-    * legs unioned, so AQE runs their stages concurrently), ONE hydration
-    * scan by id, one topology lookup and the relation lookups — the
-    * memories table is scanned, never exchanged (BASELINE §28).
+    * POINT candidate search): each candidate leg's top page and the rows
+    * of the page's ids are read, then fusion over the ≤ 2·fetchK + k rows
+    * runs on the driver through [[PageFusion]], bit-identical to the
+    * DataFrame operators it replaces. The reads come from the serving
+    * index ([[ServingIndex]]: no Spark job) or, above its budget, from
+    * Spark over one store snapshot ([[SparkReads]]: one entity lookup,
+    * ONE candidate action with the legs unioned so AQE runs their stages
+    * concurrently, ONE hydration scan by id, the page graph and the
+    * relation names — the memories table is scanned, never exchanged,
+    * BASELINE §28). Both evaluate the same filter, keep and score
+    * `Column`s.
     */
   private def searchImpl(
       query: String,
@@ -987,12 +989,6 @@ final class MemoryManager(
       Map("user" -> config.userId, "k" -> k.toString)) {
     usageIncr("search")
     recomputeGraphMetricsIfDirty() // lazy G1-G4 maintenance (manager.py:541-549)
-    // ONE store snapshot per search: every read below goes through these
-    // refs, so a concurrent writer can never pair candidates scored on
-    // one version with the rows of another
-    val mem = store.memories
-    val edges = store.edges
-    val entities = store.entities
     val hints = TemporalOps.detectTemporalHints(query)
     val includeExpired = includeExpired0 || hints.includeExpired
     val effectiveK = if (hints.expandLimit) k * 2 else k
@@ -1004,119 +1000,111 @@ final class MemoryManager(
       case Some(t) => FilterOps.memoryType(col("memory_type"), t)
       case None => lit(true)
     }
-    val predCol = FilterOps.predicatesFor(mem, filters)
+    val predCol = FilterOps.predicatesFor(store.memories, filters)
     val scope = FilterOps.scopeFilter(config.scopeFilters)
     // empty embedding → null: the hybrid legs and the re-rank see null
     val embOrNull = when(size(col("embedding")) > 0, col("embedding")).otherwise(lit(null))
-
-    // ---- 1. entity lookup (J2) ----
     val queryEntities = extractor.extractQueryEntities(query)
-    val entIds = entityIdsFor(entities, queryEntities.map(_.name))
 
-    // ---- 2. ONE candidate action: every leg's top page ----
-    // Faithful mode fuses candidates over the whole store (the engine's
-    // text+vector indexes are unscoped), scope/predicates post-hoc like
-    // search/vector.py:157-163. Scoped mode pushes the tenant scope into
-    // BOTH legs — on a large multi-tenant store the global top-fetchK
-    // page can contain zero rows for the querying tenant, starving them
-    // of results brute-force search would have found.
-    val live = mem.filter(scope && col("expired_at").isNull) // F3
-    val vectorLegs: Seq[(Int, DataFrame)] =
-      if (diverse)
-        Seq(LegMmr -> SearchOps.mmr(live.filter(predCol && typeFiltered),
-          "embedding", "id", queryVec, effectiveK, config.mmrLambda))
-      else {
-        val candBase = if (config.scopedHybridCandidates) mem.filter(scope) else mem
-        val (bm, vec) = SearchOps.hybridLegs(
-          candBase.withColumn("embedding", embOrNull), "id", "text", "embedding",
-          query, queryVec, fetchK = math.max(50, 4 * effectiveK),
-          preparedBm25 = Some(bm25Corpus.prepared()))
-        Seq(LegBm25 -> bm.withColumnRenamed("bm25", "score"),
-          LegVector -> vec.withColumnRenamed("cos", "score"))
-      }
-    val legs = vectorLegs ++
-      graphLeg(entIds, live.filter(typeFiltered), edges, queryVec, effectiveK)
-        .map(LegGraph -> _)
-    val candidates: Map[Int, Seq[(Long, Option[Double])]] =
-      legs.map { case (leg, df) =>
-          df.select(col("id"), col("score"), lit(leg).as("leg")) }
-        .reduce(_.unionByName(_))
-        .collect().toSeq
-        .map(r => (r.getInt(2), (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getDouble(1)))))
-        .groupMap(_._1)(_._2)
-        .withDefaultValue(Nil)
+    /** Steps 1-3 and the fusion through the filter chain: every read of
+      * the search, up to the filtered page with its rows and graph.
+      */
+    def read(reads: SearchReads): ReadPage = {
+      // ---- 1. entity lookup (J2) ----
+      val entIds = reads.entityIds(queryEntities.map(_.name))
 
-    // ---- 3. ONE hydration scan: the candidates' rows + row predicates ----
-    // every keep flag is the existing Spark Column (FilterOps' null
-    // rules), coalesced so only TRUE keeps, as in a filter
-    val keep = (c: Column) => coalesce(c, lit(false))
-    val postKeep = Seq(
-      Some(if (includeExpired) lit(true) else col("expired_at").isNull),
-      timeAfter.map(t => col("created_at") >= t),
-      timeBefore.map(t => col("created_at") <= t),
-      pointInTime.map(pit =>
-        FilterOps.validAtPointInTime(col("valid_at"), col("invalid_at"), pit))
-    ).flatten.reduce(_ && _)
-    val candIds = candidates.values.flatten.map(_._1).toSeq.distinct
-    val rows: Map[Long, Row] =
-      if (candIds.isEmpty) Map.empty
-      else mem.filter(col("id").isin(candIds: _*))
-        .select(resultCols ++ Seq(
-          VectorFunctions.cosineToQuery(embOrNull, queryVec).as("cos"),
-          embOrNull.isNotNull.as("has_embedding"),
-          keep(if (config.scopedHybridCandidates) scope else lit(true)).as("in_docs"),
-          keep(col("expired_at").isNull && predCol && typeFiltered && scope)
-            .as("vector_keep"),
-          keep(postKeep).as("post_keep"),
-          col("pagerank"), col("betweenness")): _*)
-        .collect()
-        .map(r => r.getLong(0) -> r).toMap
-    def flag(id: Long, c: String): Boolean =
-      rows.get(id).exists(r => r.getBoolean(r.fieldIndex(c)))
+      // ---- 2. every leg's top page ----
+      // Faithful mode fuses candidates over the whole store (the engine's
+      // text+vector indexes are unscoped), scope/predicates post-hoc like
+      // search/vector.py:157-163. Scoped mode pushes the tenant scope into
+      // BOTH legs — on a large multi-tenant store the global top-fetchK
+      // page can contain zero rows for the querying tenant, starving them
+      // of results brute-force search would have found.
+      val live = scope && col("expired_at").isNull // F3
+      val candidates: Map[Int, Seq[(Long, Option[Double])]] = reads.candidates(
+        LegQuery(query, queryVec, effectiveK, diverse, live, predCol, typeFiltered,
+          embOrNull, entIds))
 
-    // ---- 4. driver fusion (V3 re-rank, J15/R1 merge, F3-F5, R2/R3) ----
-    val vectorResults: Seq[(Long, Double)] =
-      if (diverse) candidates(LegMmr).map { case (id, s) => id -> s.get }
-      else {
-        val reranked = PageFusion.rrf(
-            Seq(candidates(LegBm25), candidates(LegVector)), config.rrfK)
-          .filter { case (id, _) => flag(id, "in_docs") }
-          .map { case (id, fused) =>
-            val r = rows(id)
-            id -> PageFusion.rerank(fused, r.getBoolean(r.fieldIndex("has_embedding")),
-              optD(r, "cos"))
-          }
-        PageFusion.byScoreDesc(reranked)(_._2, _._1).take(effectiveK)
-          .filter { case (id, _) => flag(id, "vector_keep") }
-      }
-    trace.foreach(_ += ExplainStep(if (diverse) "diverse_search" else "hybrid_search",
-      "vector branch", vectorResults.size.toLong))
-    val graphResults = candidates(LegGraph).map { case (id, s) => id -> s.get }
-    trace.foreach(_ += ExplainStep("graph_search",
-      s"entities=${queryEntities.map(_.name).mkString(",")}", graphResults.size.toLong))
+      // ---- 3. ONE hydration read: the candidates' rows + row predicates ----
+      // every keep flag is the existing Spark Column (FilterOps' null
+      // rules), coalesced so only TRUE keeps, as in a filter
+      val keep = (c: Column) => coalesce(c, lit(false))
+      val postKeep = Seq(
+        Some(if (includeExpired) lit(true) else col("expired_at").isNull),
+        timeAfter.map(t => col("created_at") >= t),
+        timeBefore.map(t => col("created_at") <= t),
+        pointInTime.map(pit =>
+          FilterOps.validAtPointInTime(col("valid_at"), col("invalid_at"), pit))
+      ).flatten.reduce(_ && _)
+      val candIds = candidates.values.flatten.map(_._1).toSeq.distinct
+      val rows: Map[Long, Row] =
+        if (candIds.isEmpty) Map.empty
+        else reads.hydrate(candIds, resultCols ++ Seq(
+            VectorFunctions.cosineToQuery(embOrNull, queryVec).as("cos"),
+            embOrNull.isNotNull.as("has_embedding"),
+            keep(if (config.scopedHybridCandidates) scope else lit(true)).as("in_docs"),
+            keep(col("expired_at").isNull && predCol && typeFiltered && scope)
+              .as("vector_keep"),
+            keep(postKeep).as("post_keep"),
+            col("pagerank"), col("betweenness")))
+      def flag(id: Long, c: String): Boolean =
+        rows.get(id).exists(r => r.getBoolean(r.fieldIndex(c)))
 
-    val merged = PageFusion.merge(vectorResults, graphResults, config.agreementBonus)
-    trace.foreach(_ += ExplainStep("merge", "full-outer + agreement bonus",
-      merged.size.toLong))
+      // ---- 4. driver fusion (V3 re-rank, J15/R1 merge, F3-F5, R2/R3) ----
+      val vectorResults: Seq[(Long, Double)] =
+        if (diverse) candidates(LegMmr).map { case (id, s) => id -> s.get }
+        else {
+          val reranked = PageFusion.rrf(
+              Seq(candidates(LegBm25), candidates(LegVector)), config.rrfK)
+            .filter { case (id, _) => flag(id, "in_docs") }
+            .map { case (id, fused) =>
+              val r = rows(id)
+              id -> PageFusion.rerank(fused, r.getBoolean(r.fieldIndex("has_embedding")),
+                optD(r, "cos"))
+            }
+          PageFusion.byScoreDesc(reranked)(_._2, _._1).take(effectiveK)
+            .filter { case (id, _) => flag(id, "vector_keep") }
+        }
+      trace.foreach(_ += ExplainStep(if (diverse) "diverse_search" else "hybrid_search",
+        "vector branch", vectorResults.size.toLong))
+      val graphResults = candidates(LegGraph).map { case (id, s) => id -> s.get }
+      trace.foreach(_ += ExplainStep("graph_search",
+        s"entities=${queryEntities.map(_.name).mkString(",")}", graphResults.size.toLong))
 
-    // ---- filter chain F3/F4/F5 ----
-    // memories has its own `source` column ("summarize" marker) — the
-    // merge result's source (vector/graph/both) wins at the API.
-    // NOTE on includeExpired: both candidate branches above pre-drop
-    // expired rows, so this flag only disables the (already-moot)
-    // post-merge filter — a quirk ported FAITHFULLY from the reference,
-    // whose candidate generators do the same (search/vector.py:54,157,
-    // graph.py:136); expired memories are reachable via get_all
-    // (include_expired=true) and history, not via search.
-    var filtered = merged.filter { case (id, _, _) => flag(id, "post_keep") }
-    pointInTime.foreach(pit => trace.foreach(_ += ExplainStep("point_in_time_filter",
-      s"pit=$pit", filtered.size.toLong)))
+      val merged = PageFusion.merge(vectorResults, graphResults, config.agreementBonus)
+      trace.foreach(_ += ExplainStep("merge", "full-outer + agreement bonus",
+        merged.size.toLong))
+
+      // ---- filter chain F3/F4/F5 ----
+      // memories has its own `source` column ("summarize" marker) — the
+      // merge result's source (vector/graph/both) wins at the API.
+      // NOTE on includeExpired: both candidate branches above pre-drop
+      // expired rows, so this flag only disables the (already-moot)
+      // post-merge filter — a quirk ported FAITHFULLY from the reference,
+      // whose candidate generators do the same (search/vector.py:54,157,
+      // graph.py:136); expired memories are reachable via get_all
+      // (include_expired=true) and history, not via search.
+      val filtered = merged.filter { case (id, _, _) => flag(id, "post_keep") }
+      pointInTime.foreach(pit => trace.foreach(_ += ExplainStep("point_in_time_filter",
+        s"pit=$pit", filtered.size.toLong)))
+      // the page's own edges: topology and the relations below read them
+      val pageEdges = reads.pageGraph(filtered.map(_._1))
+      ReadPage(rows, filtered, pageEdges, reads.entityNamesFor(pageEdges))
+    }
+    // the index path holds the index's lock from its sync through its
+    // last read, so every read sees one store version; the Spark path
+    // reads the tables and corpus the index synced to, outside the lock.
+    // The model calls above and the reranking, scoring and access bump
+    // below run outside it
+    val ReadPage(rows, filtered0, pageEdges, entityNames) = servingIndex.synchronized {
+      if (servingIndex.sync()) Right(read(new IndexReads(servingIndex)))
+      else Left(servingIndex.sparkInput)
+    }.fold({ case (tables, corpus) =>
+      read(new SparkReads(tables.memories, tables.edges, tables.entities, corpus)) }, identity)
+    var filtered = filtered0
 
     // ---- boost chain R2/R3 ----
-    // topology scores feed both the R2 boost and R5's wTopo term; they
-    // come from the page's own edges, which the relations below reuse
-    val pageEdges = pageGraph(filtered.map(_._1), edges)
+    // topology scores feed both the R2 boost and R5's wTopo term
     val topo: Map[Long, Double] =
       if (config.enableTopologyBoost || config.enableImportance && config.weightTopology > 0)
         PageFusion.topologyScores(filtered.map(_._1).toSet, pageEdges.hasEntity)
@@ -1198,75 +1186,247 @@ final class MemoryManager(
     // J6/F8 — decorate the RETURNED page with relation triples (every
     // reference search response carries them, vector.py:56/162/268)
     val top = page.take(k)
-    val rels = relationsFor(top.map(_.id), pageEdges, entities)
+    val rels = relationsFor(top.map(_.id), pageEdges, entityNames)
     top.map(r => r.copy(relations = rels.getOrElse(r.id, Nil)).toSearchResult)
   }
 
-  // candidate legs of the one candidate action
+  /** What a search's reads yield: the candidates' hydrated rows, the
+    * filtered page of (id, score, source), its graph and the entity names
+    * of its relations.
+    */
+  private case class ReadPage(
+      rows: Map[Long, Row],
+      filtered: Seq[(Long, Double, String)],
+      pageEdges: PageGraph,
+      entityNames: Seq[Long] => Map[Long, Seq[String]])
+
+  // candidate legs
   private val LegBm25 = 0; private val LegVector = 1
   private val LegMmr = 2; private val LegGraph = 3
 
-  /** J2 — ids of the query's entities: exact-name lookup with the
-    * reference's lower() fallback (search/graph.py:89-108). The fallback
-    * is PER ENTITY: an entity with an exact hit keeps it, one without
-    * falls back to case-insensitive — not all-or-nothing across the set.
-    * One scan serves both (the fallback candidates ride along).
+  /** What the candidate legs of one search need: the query, its
+    * embedding, the page size k, the MMR switch, the live-row filter
+    * (scope, not expired), the filter predicates (the MMR leg's), the
+    * memory-type filter (the MMR and graph legs'), the embedding-or-null
+    * column and the query's entity ids.
     */
-  private def entityIdsFor(entities: DataFrame, names: Seq[String]): Seq[Long] =
-    if (names.isEmpty) Nil
-    else {
-      val hits = scopeCol2(entities)
-        .filter(col("name").isin(names: _*) ||
-          lower(col("name")).isin(names.map(_.toLowerCase).distinct: _*))
-        .select(col("id"), col("name"), lower(col("name")))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      val exactNames = hits.map(_._2).filter(names.contains).toSet
-      val missingLower = names.filterNot(exactNames).map(_.toLowerCase).toSet
-      hits.collect {
-        case (id, name, lc) if exactNames(name) || missingLower(lc) => id
-      }.distinct.toSeq
+  private case class LegQuery(
+      text: String,
+      vec: Array[Float],
+      k: Int,
+      diverse: Boolean,
+      live: Column,
+      preds: Column,
+      typeFilter: Column,
+      embOrNull: Column,
+      entIds: Seq[Long]) {
+    def fetchK: Int = math.max(50, 4 * k)
+    // the graph leg's 1-hop and 2-hop scores (search/graph.py:110-199)
+    private def cos = greatest(lit(0.0), VectorFunctions.cosineToQuery(col("embedding"), vec))
+    private def nonEmptyEmb = size(col("embedding")) > 0
+    def oneHopScore: Column = when(nonEmptyEmb, cos).otherwise(lit(0.3))
+    def twoHopScore: Column = when(nonEmptyEmb, greatest(lit(0.0), cos * 0.7)).otherwise(lit(0.2))
+  }
+
+  /** The reads of one search: the serving index's or Spark's. */
+  private trait SearchReads {
+    /** J2 — ids of the query's entities: exact-name lookup with the
+      * reference's lower() fallback (search/graph.py:89-108). The
+      * fallback is PER ENTITY: an entity with an exact hit keeps it, one
+      * without falls back to case-insensitive — not all-or-nothing
+      * across the set.
+      */
+    def entityIds(names: Seq[String]): Seq[Long]
+    /** Every leg's page of (id, score), by leg. */
+    def candidates(q: LegQuery): Map[Int, Seq[(Long, Option[Double])]]
+    /** The rows of `ids`, projected to `cols`. */
+    def hydrate(ids: Seq[Long], cols: Seq[Column]): Map[Long, Row]
+    /** The graph around a page of memory ids: every HAS_ENTITY
+      * (mem, entity) edge into the page's entities and the RELATION
+      * (src, dst, relation_type) edges out of them. The first set holds
+      * the page's own rows, so it is all that
+      * [[PageFusion.topologyScores]] needs. Fan-in: a hub entity brings
+      * every memory linked to it, the bound the graph leg's 1-hop set
+      * already accepts.
+      */
+    def pageGraph(ids: Seq[Long]): PageGraph
+    /** Entity names by id, for ids among the endpoints of `page`'s
+      * relations, readable once the reads are over.
+      */
+    def entityNamesFor(page: PageGraph): Seq[Long] => Map[Long, Seq[String]]
+  }
+
+  private final class IndexReads(index: ServingIndex) extends SearchReads {
+    def entityIds(names: Seq[String]): Seq[Long] =
+      if (names.isEmpty) Nil else index.entityIds(names, config.userId, config.graphName)
+
+    def candidates(q: LegQuery): Map[Int, Seq[(Long, Option[Double])]] = {
+      // one analysis binds the columns of every leg that runs
+      val graphLive = q.live && q.typeFilter
+      val vectorCols =
+        if (q.diverse)
+          Seq(VectorFunctions.cosineToQuery(col("embedding"), q.vec), graphLive && q.preds)
+        else Seq(VectorFunctions.cosineToQuery(q.embOrNull, q.vec), lit(true))
+      val graphCols =
+        if (q.entIds.isEmpty) Nil
+        else Seq(graphLive, q.oneHopScore) ++
+          (if (config.graphSearchDepth >= 2) Seq(q.twoHopScore) else Nil)
+      val bound = index.bind(vectorCols ++ graphCols)
+      val Seq(score, keep) = bound.take(2).toSeq
+      val vector =
+        if (q.diverse) {
+          val cands = index.scoreTop(score, keep, 4 * q.k)
+            .map { case (id, s) => (id, index.embedding(id), s.get) }
+          Seq(LegMmr -> SearchOps.mmrSelect(cands, q.k, config.mmrLambda)
+            .map { case (id, s) => id -> Some(s) })
+        } else Seq(
+          LegBm25 -> index.bm25Top(SearchOps.queryTerms(q.text), q.fetchK),
+          LegVector -> index.scoreTop(score, keep, q.fetchK))
+      val graph = bound.drop(2).toSeq match {
+        case Seq() => Nil
+        case live +: oneHop +: twoHop =>
+          val oneHopIds = index.memoriesOf(q.entIds)
+          val twoHopPage = twoHop.flatMap(index.scoreTop(_, live, Int.MaxValue,
+            Some(index.memoriesOf(index.relationTargets(q.entIds)) -- oneHopIds)))
+          Seq(LegGraph -> (index.scoreTop(oneHop, live, Int.MaxValue, Some(oneHopIds)) ++
+            twoHopPage).sortBy(r => (r._2, r._1))(PageFusion.scoreDesc).take(q.k))
+      }
+      (vector ++ graph).toMap.withDefaultValue(Nil)
     }
 
-  /** J3-J4 — graph leg with the reference's exact fallback scores
-    * (search/graph.py:110-199): 1-hop score = max(0, cos) or 0.3
-    * without embedding; 2-hop adds RELATION-connected memories at
-    * max(0, cos·0.7) or 0.2; 1-hop wins dedup. `live` is the scoped,
-    * non-expired, type-filtered memory table; each hop's id set is
-    * broadcast into its scan (no exchange of the memories table).
-    * None when no query entity matched.
-    */
-  private def graphLeg(
-      entIds: Seq[Long],
-      live: DataFrame,
-      edges: DataFrame,
-      queryVec: Array[Float],
-      k: Int
-  ): Option[DataFrame] =
-    if (entIds.isEmpty) None
-    else {
-      val he = edges.filter(col("edge_type") === EdgeTypes.HasEntity)
-      val nonEmptyEmb = size(col("embedding")) > 0
-      val cosExpr = greatest(lit(0.0),
-        VectorFunctions.cosineToQuery(col("embedding"), queryVec))
-      val oneHopIds = he.filter(col("dst").isin(entIds: _*)).select(col("src").as("id"))
-      val oneHop = live.join(broadcast(oneHopIds), Seq("id"), "left_semi")
-        .select(col("id"), when(nonEmptyEmb, cosExpr).otherwise(lit(0.3)).as("score"))
-      val hops =
-        if (config.graphSearchDepth >= 2) {
-          val e2 = edges
-            .filter(col("edge_type") === EdgeTypes.Relation && col("src").isin(entIds: _*))
-            .select(col("dst").as("ent"))
-          val twoHopIds = he.join(broadcast(e2), he("dst") === col("ent"), "left_semi")
-            .select(col("src").as("id"))
-          oneHop.unionByName(live
-            .join(broadcast(twoHopIds), Seq("id"), "left_semi")
-            .join(broadcast(oneHopIds), Seq("id"), "left_anti") // 1-hop wins
-            .select(col("id"), when(nonEmptyEmb, greatest(lit(0.0), cosExpr * 0.7))
-              .otherwise(lit(0.2)).as("score")))
-        } else oneHop
-      Some(hops.orderBy(col("score").desc, col("id").asc).limit(k))
+    def hydrate(ids: Seq[Long], cols: Seq[Column]): Map[Long, Row] = index.hydrate(ids, cols)
+
+    def pageGraph(ids: Seq[Long]): PageGraph = {
+      val (he, rel) = index.pageGraph(ids)
+      PageGraph(he, rel)
     }
+
+    /** Every endpoint's name, read now, while the index's lock is held. */
+    def entityNamesFor(page: PageGraph): Seq[Long] => Map[Long, Seq[String]] = {
+      val names = index.names(page.relations.flatMap(r => Seq(r._1, r._2)))
+      ids => ids.flatMap(id => names.get(id).map(id -> _)).toMap
+    }
+  }
+
+  /** The Spark reads over one snapshot of the store's tables, with the
+    * BM25 corpus (token table, n, avgdl) the serving index keeps.
+    */
+  private final class SparkReads(mem: DataFrame, edges: DataFrame, entities: DataFrame,
+      corpus: (DataFrame, Long, Double)) extends SearchReads {
+
+    def entityIds(names: Seq[String]): Seq[Long] =
+      if (names.isEmpty) Nil
+      else {
+        // one scan serves both the exact and the fallback names
+        val hits = scopeCol2(entities)
+          .filter(col("name").isin(names: _*) ||
+            lower(col("name")).isin(names.map(_.toLowerCase).distinct: _*))
+          .select(col("id"), col("name"), lower(col("name")))
+          .collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+        val exactNames = hits.map(_._2).filter(names.contains).toSet
+        val missingLower = names.filterNot(exactNames).map(_.toLowerCase).toSet
+        hits.collect {
+          case (id, name, lc) if exactNames(name) || missingLower(lc) => id
+        }.distinct.toSeq
+      }
+
+    /** ONE candidate action: the legs unioned. */
+    def candidates(q: LegQuery): Map[Int, Seq[(Long, Option[Double])]] = {
+      val live = mem.filter(q.live)
+      val vectorLegs: Seq[(Int, DataFrame)] =
+        if (q.diverse)
+          Seq(LegMmr -> SearchOps.mmr(live.filter(q.preds && q.typeFilter),
+            "embedding", "id", q.vec, q.k, config.mmrLambda))
+        else {
+          val candBase =
+            if (config.scopedHybridCandidates)
+              mem.filter(FilterOps.scopeFilter(config.scopeFilters))
+            else mem
+          val (bm, vec) = SearchOps.hybridLegs(
+            candBase.withColumn("embedding", q.embOrNull), "id", "text", "embedding",
+            q.text, q.vec, q.fetchK, preparedBm25 = Some(corpus))
+          Seq(LegBm25 -> bm.withColumnRenamed("bm25", "score"),
+            LegVector -> vec.withColumnRenamed("cos", "score"))
+        }
+      val legs = vectorLegs ++ graphLeg(q, live.filter(q.typeFilter)).map(LegGraph -> _)
+      legs.map { case (leg, df) =>
+          df.select(col("id"), col("score"), lit(leg).as("leg")) }
+        .reduce(_.unionByName(_))
+        .collect().toSeq
+        .map(r => (r.getInt(2), (r.getLong(0),
+          if (r.isNullAt(1)) None else Some(r.getDouble(1)))))
+        .groupMap(_._1)(_._2)
+        .withDefaultValue(Nil)
+    }
+
+    /** J3-J4 — graph leg with the reference's exact fallback scores
+      * (search/graph.py:110-199): 1-hop score = max(0, cos) or 0.3
+      * without embedding; 2-hop adds RELATION-connected memories at
+      * max(0, cos·0.7) or 0.2; 1-hop wins dedup. `live` is the scoped,
+      * non-expired, type-filtered memory table; each hop's id set is
+      * broadcast into its scan (no exchange of the memories table).
+      * None when no query entity matched.
+      */
+    private def graphLeg(q: LegQuery, live: DataFrame): Option[DataFrame] =
+      if (q.entIds.isEmpty) None
+      else {
+        val he = edges.filter(col("edge_type") === EdgeTypes.HasEntity)
+        val oneHopIds = he.filter(col("dst").isin(q.entIds: _*)).select(col("src").as("id"))
+        val oneHop = live.join(broadcast(oneHopIds), Seq("id"), "left_semi")
+          .select(col("id"), q.oneHopScore.as("score"))
+        val hops =
+          if (config.graphSearchDepth >= 2) {
+            val e2 = edges
+              .filter(col("edge_type") === EdgeTypes.Relation && col("src").isin(q.entIds: _*))
+              .select(col("dst").as("ent"))
+            val twoHopIds = he.join(broadcast(e2), he("dst") === col("ent"), "left_semi")
+              .select(col("src").as("id"))
+            oneHop.unionByName(live
+              .join(broadcast(twoHopIds), Seq("id"), "left_semi")
+              .join(broadcast(oneHopIds), Seq("id"), "left_anti") // 1-hop wins
+              .select(col("id"), q.twoHopScore.as("score")))
+          } else oneHop
+        Some(hops.orderBy(col("score").desc, col("id").asc).limit(q.k))
+      }
+
+    /** ONE hydration scan by id. */
+    def hydrate(ids: Seq[Long], cols: Seq[Column]): Map[Long, Row] =
+      mem.filter(col("id").isin(ids: _*)).select(cols: _*).collect()
+        .map(r => r.getLong(0) -> r).toMap
+
+    /** Two lookups: the page's HAS_ENTITY rows give its entities E; one
+      * scan then reads every HAS_ENTITY row into E and the RELATION rows
+      * out of E.
+      */
+    def pageGraph(ids: Seq[Long]): PageGraph = {
+      val he = col("edge_type") === EdgeTypes.HasEntity
+      val ents =
+        if (ids.isEmpty) Nil
+        else edges.filter(he && col("src").isin(ids: _*)).select(col("dst"))
+          .collect().map(_.getLong(0)).toSeq.distinct
+      if (ents.isEmpty) PageGraph(Nil, Nil)
+      else {
+        val rows = edges
+          .filter(he && col("dst").isin(ents: _*) ||
+            col("edge_type") === EdgeTypes.Relation && col("src").isin(ents: _*))
+          .select(he, col("src"), col("dst"),
+            coalesce(col("props").getItem("relation_type"), lit("")))
+          .collect()
+        val (hasEntity, relations) = rows.partition(_.getBoolean(0))
+        PageGraph(hasEntity.map(r => r.getLong(1) -> r.getLong(2)).toSeq,
+          relations.map(r => (r.getLong(1), r.getLong(2), r.getString(3))).toSeq)
+      }
+    }
+
+    /** One lookup, of the names the returned page needs, when asked. */
+    def entityNamesFor(page: PageGraph): Seq[Long] => Map[Long, Seq[String]] = entityNames
+
+    private def entityNames(ids: Seq[Long]): Map[Long, Seq[String]] =
+      if (ids.isEmpty) Map.empty
+      else entities.select(col("id"), col("name")).filter(col("id").isin(ids: _*))
+        .collect().toSeq.map(r => r.getLong(0) -> r.getString(1)).groupMap(_._1)(_._2)
+  }
 
   private def scopeCol2(df: DataFrame): DataFrame = {
     val base = df.filter(col("user_id") === config.userId)
@@ -1289,35 +1449,6 @@ final class MemoryManager(
       validAt, invalidAt, relations)
   }
 
-  /** The graph around a page of memory ids, from two lookups of the
-    * search's snapshot `edges`: the page's HAS_ENTITY rows give its
-    * entities E; one scan then reads every HAS_ENTITY (mem, entity) row
-    * into E and the RELATION (src, dst, relation_type) rows out of E.
-    * The first set holds the page's own rows, so it is all that
-    * [[PageFusion.topologyScores]] needs. Fan-in: a hub entity brings
-    * every memory linked to it, the bound the graph leg's broadcast
-    * 1-hop set already accepts.
-    */
-  private def pageGraph(ids: Seq[Long], edges: DataFrame): PageGraph = {
-    val he = col("edge_type") === EdgeTypes.HasEntity
-    val ents =
-      if (ids.isEmpty) Nil
-      else edges.filter(he && col("src").isin(ids: _*)).select(col("dst"))
-        .collect().map(_.getLong(0)).toSeq.distinct
-    if (ents.isEmpty) PageGraph(Nil, Nil)
-    else {
-      val rows = edges
-        .filter(he && col("dst").isin(ents: _*) ||
-          col("edge_type") === EdgeTypes.Relation && col("src").isin(ents: _*))
-        .select(he, col("src"), col("dst"),
-          coalesce(col("props").getItem("relation_type"), lit("")))
-        .collect()
-      val (hasEntity, relations) = rows.partition(_.getBoolean(0))
-      PageGraph(hasEntity.map(r => r.getLong(1) -> r.getLong(2)).toSeq,
-        relations.map(r => (r.getLong(1), r.getLong(2), r.getString(3))).toSeq)
-    }
-  }
-
   /** F8/J6 — relation triples for the returned page `ids` (a subset of
     * the [[PageGraph]]'s page): memory -HAS_ENTITY-> e -RELATION-> t,
     * decorated with entity names (search/vector.py:384-409). Where the
@@ -1329,17 +1460,13 @@ final class MemoryManager(
   private def relationsFor(
       ids: Seq[Long],
       pageEdges: PageGraph,
-      entities: DataFrame
+      entityNames: Seq[Long] => Map[Long, Seq[String]]
   ): Map[Long, Seq[RelationTriple]] = {
     val idSet = ids.toSet
     val he = pageEdges.hasEntity.filter(r => idSet(r._1))
     val ents = he.map(_._2).toSet
     val rel = pageEdges.relations.filter(r => ents(r._1))
-    val keys = (rel.map(_._1) ++ rel.map(_._2)).distinct
-    val names =
-      if (keys.isEmpty) Map.empty[Long, Seq[String]]
-      else entities.select(col("id"), col("name")).filter(col("id").isin(keys: _*))
-        .collect().toSeq.map(r => r.getLong(0) -> r.getString(1)).groupMap(_._1)(_._2)
+    val names = entityNames((rel.map(_._1) ++ rel.map(_._2)).distinct)
     val relsBySrc = rel.groupBy(_._1)
     val utf8 = Ordering.by[String, UTF8String](UTF8String.fromString)
     val triples = (for {

@@ -51,8 +51,8 @@ object AlgoQueries {
     prMemo.synchronized {
       prMemo.getOrElseUpdate(s.sparkContext.applicationId + dir, {
         graft.trace.MemoLog.record("pagerank")
-        GraphAlgorithms.pageRank(containsEdges(s, dir), PrIters, Damping)
-          .localCheckpoint()
+        graft.ops.Checkpoints.unlessLocal(
+          GraphAlgorithms.pageRank(containsEdges(s, dir), PrIters, Damping))
       })
     }
 

@@ -1,6 +1,7 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 
 /** Table loading + shared DuckDB-SQL fragments for the oracle catalog.
   *
@@ -15,8 +16,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - DuckDB lambda indexes are 1-based, Spark's are 0-based.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `spark.read.parquet` of `dir/name.parquet` with its schema read on
+    * the driver: schema inference runs a one-task Spark job per load to
+    * read one footer, which every catalog query paid once per table.
+    * The footer read here is the one that job performs, so the schema is
+    * the same; see [[GraftSqlShim.parquetFooterSchema]] for the layouts it
+    * covers (Spark infers the others, as before).
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    GraftSqlShim.parquetFooterSchema(spark, new Path(path))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** DuckDB: canonical token list of a text column (mirror of
     * TextFunctions.tokens).

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import GraphStore._
@@ -76,45 +76,46 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
   // graphVersion (edge-only) tracks
   @volatile private var importanceVer = 0L
   // text-version: ticked by mutations that change the (id, text) row
-  // set — memory appends/deletes/loads and text patches — the inputs of
-  // text-index-shaped state (BM25 prepared corpus, which follows the
-  // text-delta log below); access bumps and expiry/metric patches do
-  // NOT tick it
+  // set — memory appends/deletes/loads and text patches; access bumps
+  // and expiry/metric patches do NOT tick it
   @volatile private var textVer = 0L
   def writeVersion: Long = version
   def graphVersion: Long = graphVer
   def importanceVersion: Long = importanceVer
   def textVersion: Long = textVer
 
-  // the text-delta log: textLog(i) is what text version logFloor + i + 1
-  // did to the (id, text) rows. A tick whose rows the driver does not
-  // know (load, predicate delete, DataFrame text patch, null text)
-  // empties it and moves the floor; each checkpoint drops the entries
-  // older than the previous checkpoint, so the log spans one to two
-  // checkpoint cycles and holds no embeddings
-  private val textLog = scala.collection.mutable.ArrayBuffer.empty[TextDelta]
+  // the row-delta log: rowLog(i) is what write version logFloor + i + 1
+  // did to the rows of memories, entities and edges, as the driver knows
+  // them. A write whose rows the driver does not know (load, predicate
+  // delete, DataFrame patch) empties it and moves the floor. Entries
+  // every registered reader has applied are dropped when a reader reads
+  // (readers are weakly held: a dropped manager does not pin the log),
+  // and each checkpoint drops the entries older than the previous
+  // checkpoint, so an idle reader pins at most two checkpoint cycles
+  private val rowLog = scala.collection.mutable.ArrayBuffer.empty[RowDelta]
   private var logFloor = 0L
-  private var textAtCheckpoint = 0L
-  private var checkpoints = 0L
+  private var versionAtCheckpoint = 0L
+  private val readers = new java.util.WeakHashMap[AnyRef, java.lang.Long]()
 
-  private def textTick(delta: Option[TextDelta]): Unit = {
-    textVer += 1
-    delta match {
-      case Some(d) => textLog += d
-      case None => textLog.clear(); logFloor = textVer
-    }
+  private def trimTo(v: Long): Unit = {
+    val n = (math.min(v, version) - logFloor).toInt
+    if (n > 0) { rowLog.remove(0, n); logFloor += n }
   }
 
-  /** The text version, the memories table at it and the store's
-    * checkpoint count, read together, with the deltas that lead from
-    * text version `since` to it — None when the log no longer reaches
-    * back to `since`.
+  /** The write version and the memories, entities and edges tables at
+    * it, read together, with the deltas that lead from write version
+    * `since` to it — None when the log no longer reaches back to
+    * `since`. `reader` is recorded as having applied everything up to
+    * the returned version, so entries every reader has applied leave the
+    * log.
     */
-  def textChangesSince(since: Long): TextChanges = this.synchronized {
+  def rowChangesSince(reader: AnyRef, since: Long): RowChanges = this.synchronized {
     val deltas =
-      if (since >= logFloor && since <= textVer) Some(textLog.drop((since - logFloor).toInt).toList)
+      if (since >= logFloor && since <= version) Some(rowLog.drop((since - logFloor).toInt).toList)
       else None
-    TextChanges(textVer, memories, checkpoints, deltas)
+    readers.put(reader, version)
+    trimTo(readers.values.asScala.map(_.longValue).min)
+    RowChanges(version, memories, entities, edges, deltas)
   }
 
   /** Driver-appended rows arrive SIZE-SLICED (r15, guide §2/§6):
@@ -150,8 +151,15 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     if (df.rdd.getNumPartitions > 2 * par) df.coalesce(par) else df
   }
 
-  private def tick(structural: Boolean = false): Unit = {
+  /** One write: `delta` is what it did to the rows the log covers, None
+    * when the driver does not know its rows.
+    */
+  private def tick(delta: Option[RowDelta], structural: Boolean = false): Unit = {
     version += 1
+    delta match {
+      case Some(d) => rowLog += d
+      case None => rowLog.clear(); logFloor = version
+    }
     if (structural) graphVer += 1
     mutations += 1
     if (mutations % checkpointEvery == 0) {
@@ -161,10 +169,8 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
       communities = boundParts(communities).localCheckpoint()
       history = boundParts(history).localCheckpoint()
       edges = boundParts(edges).localCheckpoint()
-      checkpoints += 1
-      val stale = (textAtCheckpoint - logFloor).toInt
-      if (stale > 0) { textLog.remove(0, stale); logFloor = textAtCheckpoint }
-      textAtCheckpoint = textVer
+      trimTo(versionAtCheckpoint)
+      versionAtCheckpoint = version
     }
   }
 
@@ -174,40 +180,39 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     if (rows.nonEmpty) {
       memories = memories.unionByName(newRows(spark.createDataset(rows), rows.size))
       importanceVer += 1
-      textTick(
-        if (rows.exists(_.text == null)) None
-        else Some(TextsAppended(rows.map(TextRow(_)))))
-      tick()
+      textVer += 1
+      tick(Some(MemoriesAppended(rows)))
     }
   }
   def appendEntities(rows: Seq[EntityRow]): Unit = this.synchronized {
     if (rows.nonEmpty) {
       entities = entities.unionByName(newRows(spark.createDataset(rows), rows.size))
-      tick()
+      tick(Some(EntitiesAppended(rows)))
     }
   }
   def appendEpisodes(rows: Seq[EpisodeRow]): Unit = this.synchronized {
     if (rows.nonEmpty) {
       episodes = episodes.unionByName(newRows(spark.createDataset(rows), rows.size))
-      tick()
+      tick(Some(OtherTables))
     }
   }
   def appendCommunities(rows: Seq[CommunityRow]): Unit = this.synchronized {
     if (rows.nonEmpty) {
       communities = communities.unionByName(newRows(spark.createDataset(rows), rows.size))
-      tick()
+      tick(Some(OtherTables))
     }
   }
   def appendHistory(rows: Seq[HistoryRow]): Unit = this.synchronized {
     if (rows.nonEmpty) {
       history = history.unionByName(newRows(spark.createDataset(rows), rows.size))
-      tick()
+      tick(Some(OtherTables))
     }
   }
   def appendEdges(rows: Seq[EdgeRow]): Unit = this.synchronized {
     if (rows.nonEmpty) {
       edges = edges.unionByName(newRows(spark.createDataset(rows), rows.size))
-      tick(structural = true)
+      tick(Some(EdgesAppended(rows.filter(r => LoggedEdgeTypes(r.edge_type)))),
+        structural = true)
     }
   }
 
@@ -219,7 +224,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     */
   def patchMemories(patch: DataFrame, setCols: Seq[String]): Unit = this.synchronized {
     if (setCols.contains("importance")) importanceVer += 1
-    if (setCols.contains("text")) textTick(None)
+    if (setCols.contains("text")) textVer += 1
     val p = broadcast(
       patch.select(
         (col("id").as("__pid") +: setCols.map(c => col(c).as(s"__p_$c"))): _*))
@@ -231,7 +236,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
         else memories(c)
       }: _*)
     memories = merged
-    tick()
+    tick(None)
   }
 
   /** W6 soft expiry of driver-known ids: expired_at = `ts` on each id,
@@ -249,8 +254,9 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
           .groupMap(_._1)(_._2)
           .foldLeft(col("invalid_at")) { case (c, (v, ids)) =>
             when(col("id").isin(ids: _*), lit(v)).otherwise(c) }
-        memories = memories.withColumns(Map("expired_at" -> expired, "invalid_at" -> invalid))
-        tick()
+        val values = Seq("expired_at" -> expired, "invalid_at" -> invalid)
+        memories = memories.withColumns(values.toMap)
+        tick(Some(MemoriesSet(invalidAt.map(_._1), values)))
       }
     }
 
@@ -260,12 +266,10 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     */
   def setMemory(id: Long, values: Seq[(String, Column)]): Unit = this.synchronized {
     if (values.exists(_._1 == "importance")) importanceVer += 1
-    values.collectFirst { case ("text", v) => v }.foreach { v =>
-      textTick(GraftSqlShim.stringLiteral(v).map(TextSet(id, _)))
-    }
-    memories = memories.withColumns(values.map { case (c, v) =>
-      c -> when(col("id") === id, v).otherwise(col(c)) }.toMap)
-    tick()
+    if (values.exists(_._1 == "text")) textVer += 1
+    val projected = values.map { case (c, v) => c -> when(col("id") === id, v).otherwise(col(c)) }
+    memories = memories.withColumns(projected.toMap)
+    tick(Some(MemoriesSet(Seq(id), projected)))
   }
 
   /** R5 side effect — access_count += 1, last_accessed = now for the
@@ -274,15 +278,14 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
   def bumpAccess(ids: Seq[Long], nowMs: Long): Unit = this.synchronized {
     if (ids.nonEmpty) {
       val idSet = ids.toSet.toSeq
-      memories = memories
-        .withColumn(
-          "access_count",
+      val values = Seq(
+        "access_count" ->
           when(col("id").isin(idSet: _*), coalesce(col("access_count"), lit(0L)) + 1L)
-            .otherwise(col("access_count")))
-        .withColumn(
-          "last_accessed",
+            .otherwise(col("access_count")),
+        "last_accessed" ->
           when(col("id").isin(idSet: _*), lit(nowMs)).otherwise(col("last_accessed")))
-      tick()
+      memories = values.foldLeft(memories) { case (df, (c, v)) => df.withColumn(c, v) }
+      tick(Some(MemoriesSet(idSet, values)))
     }
   }
 
@@ -312,8 +315,8 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
           (srcDead || dstDead))
       edges = edges.filter(!dead)
       importanceVer += 1
-      textTick(Some(TextsRemoved(idSet)))
-      tick(structural = true)
+      textVer += 1
+      tick(Some(MemoriesDeleted(idSet)), structural = true)
     }
   }
 
@@ -349,16 +352,17 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
             (srcDead || dstDead))
         edges = marked.filter(!dead).drop("__dsrc", "__ddst")
         importanceVer += 1
-        textTick(None)
-        tick(structural = true)
+        textVer += 1
+        tick(None, structural = true)
       }
       n
     }
 
   def deleteEdgesById(ids: Seq[Long]): Unit = this.synchronized {
     if (ids.nonEmpty) {
-      edges = edges.filter(!col("edge_id").isin(ids.toSet.toSeq: _*))
-      tick(structural = true)
+      val idSet = ids.toSet.toSeq
+      edges = edges.filter(!col("edge_id").isin(idSet: _*))
+      tick(Some(EdgesDeleted(idSet)), structural = true)
     }
   }
 
@@ -368,7 +372,7 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
       communities = communities.filter(!col("id").isin(idSet: _*))
       edges = edges.filter(
         !(col("edge_type") === EdgeTypes.HasMember && col("src").isin(idSet: _*)))
-      tick(structural = true)
+      tick(Some(OtherTables), structural = true)
     }
   }
 
@@ -437,8 +441,8 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
     episodes = rd("episodes"); communities = rd("communities")
     history = rd("history"); edges = rd("edges")
     importanceVer += 1
-    textTick(None)
-    tick(structural = true) // every table was replaced
+    textVer += 1
+    tick(None, structural = true) // every table was replaced
   }
 
   private def snapshotDirs(root: Path): Seq[(Int, Path)] = {
@@ -460,30 +464,35 @@ final class GraphStore(val spark: SparkSession, checkpointEvery: Int = 16) {
 
 object GraphStore {
 
-  /** A memory row's id and text with its scope columns (F1: user_id,
-    * agent_id, run_id, graph_name), the ones that are not null.
+  /** The edge types whose rows the row-delta log carries: the ones a
+    * search reads (HAS_ENTITY, RELATION). Appends of other types log
+    * their write with none of their rows.
     */
-  final case class TextRow(id: Long, text: String, scope: Map[String, String]) {
-    /** Whether the row passes `FilterOps.scopeFilter(filters)`. */
-    def inScope(filters: Map[String, String]): Boolean =
-      filters.forall { case (k, v) => scope.get(k).contains(v) }
-  }
-  object TextRow {
-    def apply(r: MemoryRow): TextRow = TextRow(r.id, r.text,
-      (Option(r.user_id).map("user_id" -> _) ++ r.agent_id.map("agent_id" -> _) ++
-        r.run_id.map("run_id" -> _) ++ r.graph_name.map("graph_name" -> _)).toMap)
-  }
+  val LoggedEdgeTypes: Set[String] = Set(EdgeTypes.HasEntity, EdgeTypes.Relation)
 
-  /** What one text-version tick did to the memories' (id, text) rows. */
-  sealed trait TextDelta
-  final case class TextsAppended(rows: Seq[TextRow]) extends TextDelta
-  final case class TextsRemoved(ids: Seq[Long]) extends TextDelta
-  final case class TextSet(id: Long, text: String) extends TextDelta
+  /** What one write did to the rows of memories, entities and edges. */
+  sealed trait RowDelta
+  final case class MemoriesAppended(rows: Seq[MemoryRow]) extends RowDelta
+  final case class EntitiesAppended(rows: Seq[EntityRow]) extends RowDelta
+  /** The appended edges of the [[LoggedEdgeTypes]]. */
+  final case class EdgesAppended(rows: Seq[EdgeRow]) extends RowDelta
+  /** Deleted memories, with [[GraphStore.deleteMemories]]' cascade of
+    * their edges (HAS_ENTITY edges out of them, among others).
+    */
+  final case class MemoriesDeleted(ids: Seq[Long]) extends RowDelta
+  final case class EdgesDeleted(ids: Seq[Long]) extends RowDelta
+  /** The projection `memories.withColumns(values)`, which changes no row
+    * but those of `ids`.
+    */
+  final case class MemoriesSet(ids: Seq[Long], values: Seq[(String, Column)]) extends RowDelta
+  /** A write to history, episodes or communities, or of their edges. */
+  case object OtherTables extends RowDelta
 
-  /** See [[GraphStore.textChangesSince]]. */
-  final case class TextChanges(
+  /** See [[GraphStore.rowChangesSince]]. */
+  final case class RowChanges(
       version: Long,
       memories: DataFrame,
-      checkpoints: Long,
-      deltas: Option[Seq[TextDelta]])
+      entities: DataFrame,
+      edges: DataFrame,
+      deltas: Option[Seq[RowDelta]])
 }

@@ -45,7 +45,7 @@ object GraftHash {
     * exact row-level mirror of
     * `filter(split(lower(text), "[^a-z0-9]+"), _ =!= "")`.
     */
-  private def tokenize(text: UTF8String): Array[String] = {
+  private[graft] def tokenize(text: UTF8String): Array[String] = {
     val raw = TokenPattern.split(text.toLowerCase.toString, -1)
     var count = 0
     var i = 0

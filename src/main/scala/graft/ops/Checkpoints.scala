@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Eager localCheckpoint with an RDD-level release handle.
@@ -35,6 +36,16 @@ private[graft] object Checkpoints {
       case _              => () => ()
     }
     (ck, release)
+  }
+
+  /** `df.localCheckpoint()`, unless the optimizer already reduces `df`
+    * to a local relation (rows held in the plan, such as the result of a
+    * driver-side loop): checkpointing that would run a job to copy rows
+    * that are already on the driver. [[release]] is a no-op for it.
+    */
+  def unlessLocal(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
+    case _: LocalRelation => df
+    case _ => df.localCheckpoint()
   }
 
   /** Free the blocks of an ALREADY-checkpointed Dataset (memo caches

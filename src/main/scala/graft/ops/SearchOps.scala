@@ -98,11 +98,9 @@ object SearchOps {
   /** Query-independent BM25 corpus state — the text-index artifact a
     * per-query scan reuses: the [[bm25Tokens]] table, checkpointed so
     * tokenization never re-runs per query, plus (n_docs, avgdl). This is
-    * the from-scratch build. `MemoryManager.search` keeps the same state
-    * up to date from the store's write deltas instead (`Bm25Corpus`:
-    * deleted and re-texted ids filtered out, new texts unioned in, n and
-    * avgdl from driver-side token counts) and rebuilds it only after a
-    * write whose rows the driver does not know.
+    * the from-scratch build. `MemoryManager.search` keeps n and avgdl up
+    * to date from the store's write deltas instead (`ServingIndex`,
+    * driver-side token counts).
     */
   def bm25Prepare(
       docs: DataFrame,
@@ -223,6 +221,10 @@ object SearchOps {
       .limit(k)
   }
 
+  /** The distinct BM25 terms of a query text, lower-cased. */
+  def queryTerms(queryText: String): Seq[String] =
+    queryText.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq.distinct
+
   /** V3's two candidate legs, each its top-fetchK page ordered by
     * (score desc, id asc): BM25 (idCol, bm25) over the query's terms and
     * cosine (idCol, cos) against the query vector. [[hybridSearch]]
@@ -238,7 +240,7 @@ object SearchOps {
       fetchK: Int,
       preparedBm25: Option[(DataFrame, Long, Double)]
   ): (DataFrame, DataFrame) = {
-    val terms = queryText.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
+    val terms = queryTerms(queryText)
     val bmScores = preparedBm25 match {
       case Some(p) => bm25Prepared(p, idCol, terms)
       case None => bm25(docs, idCol, textCol, terms)
@@ -281,7 +283,18 @@ object SearchOps {
           r.getDouble(2)
         )
       )
+    import spark.implicits._
+    mmrSelect(cands.toSeq, k, lambda).zipWithIndex
+      .map { case ((id, score), rank) => (id, score, rank + 1) }
+      .toDF(idCol, "score", "mmr_rank")
+  }
 
+  /** [[mmr]]'s greedy selection over its collected candidates
+    * (id, embedding, cosine to the query), ordered by (cosine desc, id
+    * asc): the selected (id, cosine) in selection order.
+    */
+  def mmrSelect(cands: Seq[(Long, Array[Float], Double)], k: Int,
+      lambda: Double): Seq[(Long, Double)] = {
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) {
@@ -319,12 +332,7 @@ object SearchOps {
       val origIdx = cands.indexWhere(_._1 == chosen._1)
       selected += ((chosen._1, chosen._3, origIdx))
     }
-
-    import spark.implicits._
-    selected.zipWithIndex
-      .map { case ((id, score, _), rank) => (id, score, rank + 1) }
-      .toSeq
-      .toDF(idCol, "score", "mmr_rank")
+    selected.map { case (id, score, _) => (id, score) }.toSeq
   }
 
   /** Large-k face of [[mmr]] (SURVEY §2.4): the greedy selection runs

@@ -126,12 +126,12 @@ class AlgoSpec extends SparkSuite {
     val g = rankGraph(3)
     // the distinct-edge checkpoint (shuffle map + result) and its
     // collect; the ranks are a local relation, collected with no job
-    val driverJobs = SparkJobs.count(spark)(GraphAlgorithms.pageRank(g, 20).collect())
-    assert(driverJobs == 3, s"driver plan ran $driverJobs jobs")
+    val driverJobs = SparkJobs.run(spark)(GraphAlgorithms.pageRank(g, 20).collect())
+    assert(driverJobs.size == 3, s"driver plan ran ${driverJobs.size} jobs: ${driverJobs.mkString("; ")}")
     // 52 here while its edge and node tables each re-ran the distinct;
     // both now read the one checkpoint, and outdeg is a window count
-    val loopJobs = SparkJobs.count(spark)(sparkLoopPageRank(g, 20).collect())
-    assert(loopJobs <= 51, s"Spark loop ran $loopJobs jobs")
+    val loopJobs = SparkJobs.run(spark)(sparkLoopPageRank(g, 20).collect())
+    assert(loopJobs.size <= 51, s"Spark loop ran ${loopJobs.size} jobs: ${loopJobs.mkString("; ")}")
   }
 
   test("betweenness: directed chain interior nodes") {

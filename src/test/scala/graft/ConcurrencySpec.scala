@@ -59,8 +59,8 @@ class ConcurrencySpec extends SparkSuite {
       now = Some(T0)).map(_.toLong)
     alice.add("Alice Chen works at Acme Corp.", now = Some(T0))
     mgr("bob").addBatch((1 to 20).map(i => s"note $i about Acme Corp"), now = Some(T0))
-    // the writer adds, updates and deletes while both readers' BM25
-    // corpora refresh from the store's deltas
+    // the writer adds, updates and deletes while both readers' serving
+    // indexes apply the store's deltas
     val writer = new Thread(() => ids.take(12).zipWithIndex.foreach { case (id, i) =>
       i % 3 match {
         case 0 => alice.delete(id.toString)
@@ -88,9 +88,39 @@ class ConcurrencySpec extends SparkSuite {
       assert(r.userId == "alice" && aliceIds(r.memoryId), r.toString)
       assert(r.text != null, r.toString)
     }
-    // no delta was applied twice or skipped
-    searchers.foreach(m => CorpusCheck.assertFresh(m,
+    // no delta was applied twice or skipped: each reader's serving
+    // index equals one built fresh from the tables
+    searchers.foreach(m => IndexCheck.assertFresh(m,
       Seq(Seq("acme", "note"), Seq("rewritten"), Seq("fresh", "corp")), "after the race"))
+  }
+
+  test("a search waiting on its embedder holds no lock another search of the store needs") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val store = new GraphStore(spark)
+    val entered, release, done = new CountDownLatch(1)
+    val blocking = new Embedder {
+      private val mock = new MockEmbedder(16)
+      val dimensions = 16
+      def embed(texts: Seq[String]): Seq[Array[Float]] = {
+        if (texts.exists(_.contains("blocked"))) { entered.countDown(); release.await(60, TimeUnit.SECONDS) }
+        mock.embed(texts)
+      }
+    }
+    def mgr(user: String, embedder: Embedder) = new MemoryManager(spark,
+      MemoryConfig(userId = user), store, embedder, new HeuristicExtractor, new AddAllReconciler)
+    val alice = mgr("alice", blocking)
+    val bob = mgr("bob", new MockEmbedder(16))
+    assert(alice.servingIndex eq bob.servingIndex)
+    alice.addBatch((1 to 10).map(i => s"alice note $i"), now = Some(T0))
+    bob.addBatch((1 to 10).map(i => s"bob note $i"), now = Some(T0))
+    val waiting = new Thread(() => alice.search("blocked note", k = 3))
+    waiting.start()
+    try {
+      assert(entered.await(60, TimeUnit.SECONDS))
+      new Thread(() => { bob.search("bob note 4", k = 3); done.countDown() }).start()
+      assert(done.await(60, TimeUnit.SECONDS), "the search waited for the embedding of another")
+    } finally release.countDown()
+    waiting.join()
   }
 
   test("access bumps do not retrigger whole-graph metric recompute") {

@@ -604,44 +604,63 @@ class ManagerSpec extends SparkSuite {
       v.map("\"" + _ + "\"").mkString(s"\"$n\" -> Seq(", ", ", ")") }.mkString(",\n"))
   }
 
-  test("job-count guard: a warm search runs a fixed number of Spark jobs") {
-    // entity lookup 1; the candidate action 3 (the BM25, vector and
-    // graph legs in one union, whose AQE query stages run as jobs);
-    // hydration 1; the page's graph 2 (its entities, then their edges:
-    // topology and relations share them); relation names 1
-    // (deterministic per BASELINE §20). A re-introduced exchange or join
-    // of the memories table, or a per-step recount, moves this number.
+  /** The guarded store of the warm-search guards: 12 entity-bearing
+    * memories and 200 bulk rows, searched once so every state is warm.
+    */
+  private def warmStore(sparkPath: Boolean): (MemoryManager, String) = {
     val store = new GraphStore(spark, checkpointEvery = 1000)
     val m = new MemoryManager(spark,
       MemoryConfig(userId = "alice", enableImportance = true, enableTopologyBoost = true),
       store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+    if (sparkPath) m.servingIndex.budget = 0L
     m.addReconcileBatch((1 to 12).map(i =>
       s"Alice Chen met Bob Smith about plan $i. Bob Smith works at Acme Corp."),
       now = Some(T0))
     m.addBatch((1 to 200).map(i => s"bulk note $i"), now = Some(T0))
     val query = "Alice Chen met Bob Smith about plan 3"
-    m.search("Bob Smith works", k = 10) // builds the BM25 corpus
+    m.search("Bob Smith works", k = 10)
     val hits = m.search(query, k = 10)
     assert(hits.head.text == query && hits.head.source == "both")
     assert(hits.head.relations.nonEmpty)
-    val jobs = SparkJobs.count(spark)(m.search(query, k = 10))
-    assert(jobs == 8, s"warm search ran $jobs Spark jobs")
+    (m, query)
   }
 
-  test("job-count guard: a search right after each kind of write runs the warm search's jobs") {
-    // no write makes the next search rebuild a whole-store memo: the
-    // BM25 corpus applies the write's deltas on the driver, topology
-    // comes from the page's own edges. So the first search after a
-    // write runs the jobs of the warm search that repeats it (the
-    // candidate action's AQE jobs depend on the data, so the warm count
-    // is taken per step). The one extra job allowed is the corpus's
-    // localCheckpoint in the first refresh after a store checkpoint,
-    // and it must land there. Without importance scoring a search bumps
-    // no access counts, so no store checkpoint falls inside one.
-    val every = 12
-    val store = new GraphStore(spark, checkpointEvery = every)
+  test("job-count guard: a warm search runs a fixed number of Spark jobs") {
+    // the Spark path (the serving index's budget forced to 0): entity
+    // lookup 1; the candidate action 3 (the BM25, vector and graph legs
+    // in one union, whose AQE query stages run as jobs); hydration 1;
+    // the page's graph 2 (its entities, then their edges: topology and
+    // relations share them); relation names 1 (deterministic per
+    // BASELINE §20). A re-introduced exchange or join of the memories
+    // table, or a per-step recount, moves this number.
+    val (m, query) = warmStore(sparkPath = true)
+    val jobs = SparkJobs.run(spark)(m.search(query, k = 10))
+    assert(jobs.size == 8, s"warm search ran ${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
+  }
+
+  test("job-count guard: a warm search on the serving index runs no Spark job") {
+    val (m, query) = warmStore(sparkPath = false)
+    val jobs = SparkJobs.run(spark)(m.search(query, k = 10))
+    assert(jobs.isEmpty, s"warm search ran ${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
+  }
+
+  /** The writes of the post-write guards, each once, on a manager built
+    * by [[postWriteManager]].
+    */
+  private def writesOf(m: MemoryManager, bulk: Seq[String]): Seq[(String, () => Unit)] = Seq(
+    "add" -> (() => m.add("Carol Diaz joined Acme Corp as plan lead.", now = Some(T0 + 1))),
+    "add(infer = false)" -> (() => m.add("plan notes kept raw", infer = false, now = Some(T0 + 2))),
+    "addBatch" -> (() => m.addBatch(Seq("bulk plan a", "", "bulk plan b"), now = Some(T0 + 3))),
+    "update" -> (() => m.update(bulk(0), "bulk note rewritten", now = Some(T0 + 4))),
+    "delete" -> (() => m.delete(bulk(1))),
+    "setImportance" -> (() => m.setImportance(bulk(3), 0.25)),
+    "summarize" -> (() => assert(m.summarize(now = Some(T0 + 5)).nonEmpty)),
+    "add again" -> (() => m.add("Dan Eve met Alice Chen about plan 9.", now = Some(T0 + 6))),
+    "update again" -> (() => m.update(bulk(2), "another rewrite", now = Some(T0 + 7))))
+
+  private def postWriteManager(store: GraphStore, importance: Boolean): (MemoryManager, Seq[String]) = {
     val m = new MemoryManager(spark,
-      MemoryConfig(userId = "alice", enableTopologyBoost = true,
+      MemoryConfig(userId = "alice", enableTopologyBoost = true, enableImportance = importance,
         consolidationBatchSize = 100, consolidationPreserveRecent = 0,
         consolidationProtectThreshold = 0.5),
       store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
@@ -649,79 +668,113 @@ class ManagerSpec extends SparkSuite {
     m.addReconcileBatch((1 to 12).map(i =>
       s"Alice Chen met Bob Smith about plan $i. Bob Smith works at Acme Corp."),
       now = Some(T0 + 1000))
+    (m, bulk)
+  }
+
+  test("job-count guard: a search right after each kind of write runs the warm search's jobs") {
+    // the Spark path: no write makes the next search rebuild a
+    // whole-store memo (the BM25 statistics follow the write's deltas on
+    // the driver, topology comes from the page's own edges), so the
+    // first search after a write runs the jobs of the warm search that
+    // repeats it (the candidate action's AQE jobs depend on the data,
+    // so the warm count is taken per step), also across a store
+    // checkpoint. Without importance scoring a search bumps no access
+    // counts, so no store checkpoint falls inside one.
+    val every = 12
+    val store = new GraphStore(spark, checkpointEvery = every)
+    val (m, bulk) = postWriteManager(store, importance = false)
+    m.servingIndex.budget = 0L
     val query = "Alice Chen met Bob Smith about plan 3"
-    // the store checkpoint count when the last search refreshed its corpus
-    var refreshedIn = 0L
-    def search(): Int = {
-      refreshedIn = store.writeVersion / every
-      SparkJobs.count(spark) {
+    def search(): Seq[String] = SparkJobs.run(spark) {
+      val hits = m.search(query, k = 10)
+      assert(hits.head.text == query && hits.head.relations.nonEmpty)
+    }
+    search()
+    val checkpointsBefore = store.writeVersion / every
+    writesOf(m, bulk).foreach { case (name, write) =>
+      write()
+      val jobs = search()
+      val warm = search()
+      assert(jobs.size == warm.size,
+        s"search after $name: ${jobs.mkString("; ")}; warm: ${warm.mkString("; ")}")
+    }
+    assert(store.writeVersion / every > checkpointsBefore, "no store checkpoint fell inside the sequence")
+  }
+
+  test("job-count guard: a search right after each kind of write on the serving index runs no Spark job") {
+    // the index applies each write's deltas on the driver; the only jobs
+    // allowed are the store checkpoint's, in a search whose access bump
+    // is the write that triggers it
+    val every = 12
+    val store = new GraphStore(spark, checkpointEvery = every)
+    val (m, bulk) = postWriteManager(store, importance = true)
+    val query = "Alice Chen met Bob Smith about plan 3"
+    def search(step: String): Unit = {
+      val before = store.writeVersion / every
+      val jobs = SparkJobs.run(spark) {
         val hits = m.search(query, k = 10)
         assert(hits.head.text == query && hits.head.relations.nonEmpty)
       }
+      if (store.writeVersion / every == before)
+        assert(jobs.isEmpty, s"search after $step ran ${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
     }
-    search()
-    val writes = Seq[(String, () => Unit)](
-      "add" -> (() => m.add("Carol Diaz joined Acme Corp as plan lead.", now = Some(T0 + 1))),
-      "add(infer = false)" -> (() => m.add("plan notes kept raw", infer = false, now = Some(T0 + 2))),
-      "addBatch" -> (() => m.addBatch(Seq("bulk plan a", "", "bulk plan b"), now = Some(T0 + 3))),
-      "update" -> (() => m.update(bulk(0), "bulk note rewritten", now = Some(T0 + 4))),
-      "delete" -> (() => m.delete(bulk(1))),
-      "summarize" -> (() => assert(m.summarize(now = Some(T0 + 5)).nonEmpty)),
-      "add again" -> (() => m.add("Dan Eve met Alice Chen about plan 9.", now = Some(T0 + 6))),
-      "update again" -> (() => m.update(bulk(2), "another rewrite", now = Some(T0 + 7))))
-    val afterCheckpoint = writes.map { case (name, write) =>
+    search("set-up")
+    writesOf(m, bulk).foreach { case (name, write) =>
       write()
-      val crossed = store.writeVersion / every > refreshedIn
-      val jobs = search()
-      val warm = search()
-      if (crossed) assert(jobs == warm + 1, s"search after $name (store checkpoint): $jobs jobs, warm $warm")
-      else assert(jobs == warm, s"search after $name: $jobs jobs, warm $warm")
-      crossed
+      search(name)
+      search(s"$name, warm")
     }
-    assert(afterCheckpoint.count(identity) >= 1, "no store checkpoint fell inside the sequence")
+    IndexCheck.assertFresh(m, Seq(Seq("plan", "acme")), "after the writes")
   }
 
-  test("the maintained BM25 corpus equals a fresh bm25Prepare after every write") {
+  test("the maintained serving index equals a fresh build after every write") {
     val store = new GraphStore(spark, checkpointEvery = 5)
     def mgr(user: String, scoped: Boolean) = new MemoryManager(spark,
-      MemoryConfig(userId = user, scopedHybridCandidates = scoped,
+      MemoryConfig(userId = user, scopedHybridCandidates = scoped, enableImportance = true,
         consolidationBatchSize = 3, consolidationPreserveRecent = 2),
       store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
     val alice = mgr("alice", scoped = false)
     val bob = mgr("bob", scoped = true)
+    // carol's index is forced off serving: it keeps the Spark path's
+    // token table from the same deltas
+    val carol = mgr("carol", scoped = true)
+    carol.servingIndex.budget = 0L
     val queries = Seq(Seq("plan", "acme"), Seq("note", "note", "bob"), Seq("zebra"))
     def check(step: String): Unit = {
-      CorpusCheck.assertFresh(alice, queries, s"alice after $step")
-      CorpusCheck.assertFresh(bob, queries, s"bob after $step")
+      IndexCheck.assertFresh(alice, queries, s"alice after $step")
+      IndexCheck.assertFresh(bob, queries, s"bob after $step")
+      IndexCheck.assertFresh(carol, queries, s"carol after $step")
     }
     check("nothing")
     val rnd = new scala.util.Random(11)
     val words = Seq("plan", "acme", "note", "bob", "alice", "report", "plan", "q3")
     def text(): String = Seq.fill(1 + rnd.nextInt(6))(words(rnd.nextInt(words.size))).mkString(" ")
-    (1 to 14).foreach { step =>
-      val m = if (rnd.nextBoolean()) alice else bob
+    (1 to 16).foreach { step =>
+      val m = Seq(alice, bob, carol)(rnd.nextInt(3))
       val ids = m.getAll().map(_.memoryId)
-      val op = step % 6 // every kind of write, in turn
+      val op = step % 7 // every kind of write, in turn
       op match {
         case 0 => m.add(s"Bob Smith met Acme Corp about ${text()}.", now = Some(T0 + step))
         case 1 => m.add(text(), infer = false, now = Some(T0 + step))
         case 2 => m.addBatch(Seq(text(), "", text()), now = Some(T0 + step))
         case 3 if ids.nonEmpty => m.update(ids(rnd.nextInt(ids.size)), text(), now = Some(T0 + step))
         case 4 if ids.nonEmpty => m.delete(ids(rnd.nextInt(ids.size)))
+        case 5 if ids.nonEmpty => m.setImportance(ids(rnd.nextInt(ids.size)), 0.5)
         case _ => m.summarize(now = Some(T0 + step))
       }
       check(s"step $step (op $op)")
+      // a search bumps access counts: the projection delta of bumpAccess
       if (step % 4 == 0) alice.search("plan acme note", k = 5, now = Some(T0 + step))
     }
     // writes whose rows the driver does not know: the log restarts, so
-    // the next refresh is a full build
+    // the next search rebuilds
     def fullBuild(step: String)(write: => Unit): Unit = {
-      val before = store.textVersion
+      val before = store.writeVersion
       write
-      assert(store.textChangesSince(before).deltas.isEmpty, step)
+      assert(store.rowChangesSince(new Object, before).deltas.isEmpty, step)
       check(step)
     }
-    val dir = java.nio.file.Files.createTempDirectory("bm25-corpus").toString
+    val dir = java.nio.file.Files.createTempDirectory("serving-index").toString
     fullBuild("persist + load") { store.persist(dir); store.load(dir) }
     fullBuild("a DataFrame text patch") {
       import spark.implicits._
@@ -731,6 +784,161 @@ class ManagerSpec extends SparkSuite {
     fullBuild("deleteAll")(bob.deleteAll())
     alice.add("plan after the rebuild", infer = false, now = Some(T0 + 99))
     check("an add after the rebuild")
+  }
+
+  test("the index's budget counts the graph: rows that fit with edges that do not take the Spark path, collecting no edge") {
+    val store = new GraphStore(spark, checkpointEvery = 1000)
+    val m = new MemoryManager(spark, MemoryConfig(userId = "alice"),
+      store, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+    m.addBatch((1 to 5).map(i => s"plan note $i"), now = Some(T0))
+    // a few kB of rows; 4000 RELATION edges are estimated at ~640 kB
+    store.appendEdges((1 to 4000).map(i =>
+      EdgeRow(100000L + i, 1L, 2L, EdgeTypes.Relation, Map("relation_type" -> "knows"))))
+    def build(budget: Long): (Boolean, Seq[String]) = {
+      var index: ServingIndex = null
+      val jobs = SparkJobs.run(spark) { index = ServingIndex.fromTables(store, None, budget) }
+      (index.contents.head == true, jobs)
+    }
+    def collects(jobs: Seq[String]): Int = jobs.count(_.startsWith("collect at"))
+    val (fits, fitJobs) = build(ServingIndex.DefaultBudget)
+    // rows and edges (the store has no entity: that collect runs no job)
+    assert(fits && collects(fitJobs) == 2, fitJobs.mkString("; "))
+    val (small, smallJobs) = build(100000L)
+    assert(!small, "a budget below the graph's estimate still served")
+    // the sizing aggregate, the token table's checkpoint and its token
+    // counts: no collect of rows, entities or edges
+    assert(collects(smallJobs) == 1, smallJobs.mkString("; "))
+    // the manager's index: its deltas push it over the same budget
+    m.servingIndex.budget = 100000L
+    val hits = m.search("plan note 3", k = 3)
+    assert(hits.head.text == "plan note 3")
+    assert(m.servingIndex.contents.head == false)
+  }
+
+  test("a store's managers share the index of their document scope, under one budget") {
+    val store = new GraphStore(spark)
+    def mgr(user: String, scoped: Boolean, on: GraphStore = store) = new MemoryManager(spark,
+      MemoryConfig(userId = user, scopedHybridCandidates = scoped),
+      on, new MockEmbedder(16), new HeuristicExtractor, new AddAllReconciler)
+    val faithful = mgr("alice", scoped = false).servingIndex
+    assert(mgr("bob", scoped = false).servingIndex eq faithful)
+    val alice = mgr("alice", scoped = true)
+    val bob = mgr("bob", scoped = true)
+    assert(mgr("alice", scoped = true).servingIndex eq alice.servingIndex)
+    assert(!(bob.servingIndex eq alice.servingIndex) && !(alice.servingIndex eq faithful))
+    assert(!(mgr("alice", scoped = false, new GraphStore(spark)).servingIndex eq faithful))
+    alice.addBatch((1 to 20).map(i => s"alice note $i"), now = Some(T0))
+    bob.addBatch((1 to 30).map(i => s"bob note $i"), now = Some(T0))
+    def sync(m: MemoryManager): Boolean = m.servingIndex.synchronized(m.servingIndex.sync())
+    assert(sync(alice) && sync(bob))
+    val (a, b) = (alice.servingIndex.heldBytes, bob.servingIndex.heldBytes)
+    // each index fits the budget alone, not both together: the one that
+    // syncs while the other holds its rows leaves serving
+    Seq(alice, bob).foreach(_.servingIndex.budget = math.max(a, b) + math.min(a, b) / 2)
+    assert(!sync(alice))
+    assert(sync(bob))
+    assert(alice.search("alice note 7", k = 3).head.text == "alice note 7")
+  }
+
+  test("index path and forced Spark path return the same responses") {
+    // two stores built by the same script, one searched on the serving
+    // index and one on Spark: every response equal, ids in the same
+    // order, scores within 1e-12 relative (BM25's per-term sum is the
+    // one place whose summation order is not fixed)
+    import graft.ops.FilterOps._
+    def build(sparkPath: Boolean, scoped: Boolean, depth: Int): Seq[Seq[String]] = {
+      val store = new GraphStore(spark, checkpointEvery = 7)
+      // texts with "raw" in them get an empty embedding
+      val embedder = new Embedder {
+        private val mock = new MockEmbedder(16)
+        val dimensions = 16
+        def embed(texts: Seq[String]): Seq[Array[Float]] =
+          texts.map(t => if (t.contains("raw")) Array.empty[Float] else mock.embedOne(t))
+      }
+      def mgr(user: String) = {
+        val m = new MemoryManager(spark,
+          MemoryConfig(userId = user, scopedHybridCandidates = scoped, graphSearchDepth = depth,
+            enableImportance = true, enableTopologyBoost = true, enableBitemporal = true,
+            crossSessionFactor = 0.3),
+          store, embedder, new HeuristicExtractor, new AddAllReconciler,
+          reranker = Some(new HashReranker), clock = () => T0 + 500000)
+        if (sparkPath) m.servingIndex.budget = 0L
+        m
+      }
+      val alice = mgr("alice")
+      val bob = mgr("bob")
+      val rnd = new scala.util.Random(7)
+      val people = Seq("Alice Chen", "Bob Smith", "Carol Diaz", "Dana Lee")
+      val orgs = Seq("Acme Corp", "Globex", "Initech")
+      val words = Seq("plan", "rockets", "garden", "notes", "review", "launch", "raw")
+      def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+      def fact(): String =
+        s"${pick(people)} works at ${pick(orgs)}. ${pick(people)} met ${pick(people)} about ${pick(words)}."
+      val responses = Seq.newBuilder[Seq[String]]
+      def fmt(rs: Seq[SearchResult]): Seq[String] = rs.map(r =>
+        s"${r.memoryId}|${r.source}|${r.score}|${r.relations.mkString(",")}")
+      def searches(step: Int): Unit = {
+        val now = Some(T0 + 100000 + step)
+        responses += fmt(alice.search(s"${pick(people)} ${pick(words)}", k = 5, now = now))
+        responses += fmt(alice.search(s"when did ${pick(people)} first join", k = 3, now = now))
+        responses += fmt(alice.search(s"${pick(people)} previously worked", k = 4, now = now))
+        responses += fmt(alice.search(s"${pick(words)} notes", k = 6, memoryType = Some("procedural"),
+          filters = Map("metadata.topic" -> Eq("garden")), now = now))
+        responses += fmt(alice.search(s"${pick(words)} ${pick(orgs)}", k = 5,
+          timeAfter = Some(T0 + 2000), timeBefore = Some(T0 + 40000), now = now))
+        responses += fmt(alice.search(s"${pick(people)}", k = 4, pointInTime = Some(T0 + 3000),
+          now = now))
+        responses += fmt(alice.search(s"${pick(words)} ${pick(people)}", k = 4, diverse = true,
+          now = now))
+        responses += fmt(alice.search(s"${pick(people)} ${pick(orgs)}", k = 3, rerank = true,
+          now = now))
+        responses += fmt(bob.search(s"${pick(people)} ${pick(words)}", k = 5, now = now))
+        val ex = alice.explain(s"${pick(people)} ${pick(words)}", k = 4)
+        responses += fmt(ex.results) ++ ex.steps.map(s => s"${s.name}=${s.count}")
+      }
+      (1 to 14).foreach { i =>
+        val m = if (i % 4 == 0) bob else alice
+        i % 7 match {
+          case 0 => m.addBatch(Seq(s"${pick(words)} ${pick(words)}", "", fact()), now = Some(T0 + i * 1000L))
+          case 1 => m.add(s"${pick(words)} notes about ${pick(words)}", infer = false,
+            memoryType = "procedural", metadata = Some("""{"topic": "garden"}"""),
+            now = Some(T0 + i * 1000L))
+          case _ => m.add(fact(), now = Some(T0 + i * 1000L))
+        }
+      }
+      searches(0)
+      val ids = alice.getAll().map(_.memoryId)
+      alice.update(ids(1), s"${pick(people)} now works at ${pick(orgs)}.", now = Some(T0 + 60000))
+      alice.delete(ids(2))
+      alice.setImportance(ids(3), 0.2)
+      alice.add(s"${pick(people)} works at ${pick(orgs)}.", now = Some(T0 + 61000)) // expires on UPDATE
+      searches(1)
+      val dir = java.nio.file.Files.createTempDirectory("index-equivalence").toString
+      store.persist(dir)
+      store.load(dir)
+      searches(2)
+      alice.add(fact(), now = Some(T0 + 62000))
+      searches(3)
+      responses.result()
+    }
+    def parse(r: String): (String, String, Double, String) = r.split('|') match {
+      case Array(id, src, score, rels) => (id, src, score.toDouble, rels)
+      case Array(id, src, score) => (id, src, score.toDouble, "")
+      case other => (other.mkString("|"), "", 0.0, "")
+    }
+    for (scoped <- Seq(false, true); depth <- Seq(1, 2)) {
+      val index = build(sparkPath = false, scoped, depth)
+      val sparkSide = build(sparkPath = true, scoped, depth)
+      assert(index.size == sparkSide.size)
+      index.zip(sparkSide).zipWithIndex.foreach { case ((a, b), i) =>
+        val clue = s"scoped=$scoped depth=$depth response $i:\n  index $a\n  spark $b"
+        assert(a.size == b.size, clue)
+        a.map(parse).zip(b.map(parse)).foreach { case (x, y) =>
+          assert(x._1 == y._1 && x._2 == y._2 && x._4 == y._4, clue)
+          assert(math.abs(x._3 - y._3) <= 1e-12 * math.max(1.0, math.abs(y._3)), clue)
+        }
+      }
+    }
   }
 
   test("addReconcileBatch == sequential add loop on a conflict-free batch") {

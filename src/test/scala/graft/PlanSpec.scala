@@ -596,4 +596,54 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       p.take(3000))
   }
+
+  test("Tables.load reads the schema Spark infers, without a Spark job") {
+    val tables = Option(new java.io.File(SfDir).list()).toSeq.flatten
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+    assume(tables.nonEmpty)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    try Seq("false", "true").foreach { nanosAsLong =>
+      spark.conf.set(key, nanosAsLong)
+      tables.foreach { t =>
+        var loaded: org.apache.spark.sql.DataFrame = null
+        val jobs = SparkJobs.run(spark) { loaded = catalog.Tables.load(spark, SfDir, t) }
+        assert(jobs.isEmpty, s"$t: ${jobs.mkString("; ")}")
+        assert(loaded.schema == spark.read.parquet(s"$SfDir/$t.parquet").schema,
+          s"$t with nanosAsLong=$nanosAsLong")
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("Tables.load reads a table rewritten at the same path with its new schema") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-load").toString
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/t.parquet")
+    assert(catalog.Tables.load(spark, dir, "t").schema.fieldNames.toSeq == Seq("id", "name"))
+    Seq((2.5, 7, true)).toDF("score", "n", "flag").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = catalog.Tables.load(spark, dir, "t")
+    assert(again.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(again.collect().map(r => (r.getDouble(0), r.getInt(1), r.getBoolean(2))).toSeq ==
+      Seq((2.5, 7, true)))
+  }
+
+  test("catalog job guard: q_pagerank and q_prep_pipeline jobs per pass") {
+    // a pass after the one that built the memos, as the repository
+    // benchmark times them: loading (no schema job), PageRank's driver
+    // plan (its distinct-edge checkpoint and collect; the local result is
+    // not checkpointed again), the sort and collect
+    assume(new java.io.File(s"$SfDir/documents.parquet").exists())
+    val registry = SparkEntry.queries ++ SparkEntry.benchExtras
+    def pass(q: String): Seq[String] = {
+      graft.trace.MemoLog.currentQuery = q
+      val jobs = SparkJobs.run(spark)(registry(q)(spark, SfDir).collect())
+      graft.trace.MemoLog.clearMemos(graft.trace.MemoLog.memosBuiltBy(q))
+      jobs
+    }
+    Seq("q_pagerank" -> 6, "q_prep_pipeline" -> 16).foreach { case (q, n) =>
+      pass(q)
+      val jobs = pass(q)
+      assert(jobs.size == n, s"$q ran ${jobs.size} Spark jobs per pass: ${jobs.mkString("; ")}")
+    }
+  }
 }

@@ -4,6 +4,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Counts the Spark jobs a block of code starts. Listener events arrive
@@ -13,20 +15,29 @@ import org.apache.spark.sql.SparkSession
   * count is read once the second marker's end has arrived, by when every
   * job the block started has delivered its start and its end. Only ends
   * of jobs whose start was counted are counted, so a job of earlier work
-  * that is still running cannot unbalance the check.
+  * that is still running cannot unbalance the check. [[run]] also names
+  * each counted job by its first stage (e.g. `parquet at Tables.scala:19`),
+  * so a guard that fails can say which job came or went.
   */
 object SparkJobs {
   private val MarkerKey = "graft.test.jobCountMarker"
 
-  def count(spark: SparkSession)(body: => Unit): Int = {
+  def count(spark: SparkSession)(body: => Unit): Int = run(spark)(body).size
+
+  /** The first-stage names of the jobs `body` starts, in start order. */
+  def run(spark: SparkSession)(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
+    val names = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
     val started, ended, markersEnded = new AtomicInteger
     val startedIds, markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val firstMarkerEnded, lastMarkerEnded = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(MarkerKey) != null)) markerIds.add(e.jobId)
-        else if (markersEnded.get == 1) { startedIds.add(e.jobId); started.incrementAndGet() }
+        else if (markersEnded.get == 1) {
+          startedIds.add(e.jobId); started.incrementAndGet()
+          names.put(e.jobId, e.stageInfos.sortBy(_.stageId).headOption.fold("?")(_.name))
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (markerIds.contains(e.jobId)) {
           if (markersEnded.incrementAndGet() == 1) firstMarkerEnded.countDown()
@@ -46,6 +57,6 @@ object SparkJobs {
       marker(lastMarkerEnded)
     } finally sc.removeSparkListener(listener)
     assert(started.get() == ended.get(), s"${started.get()} jobs started, ${ended.get()} ended")
-    started.get()
+    names.values.asScala.toSeq
   }
 }
