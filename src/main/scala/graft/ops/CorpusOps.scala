@@ -542,20 +542,19 @@ object CorpusOps {
       numMerges: Int,
       wordpiece: Boolean): Seq[(Long, String, String, Long, Double)] = {
     require(numMerges > 0, "numMerges must be positive")
-    var words = df
+    val words = Checkpoints.carry(Checkpoints.checkpoint(df
       .select(explode(graft.functions.TextFunctions.tokens(col(textCol)))
         .as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       // filter guards the regex-split's trailing empty slot (Java
       // split-with-negative-limit semantics); symbols are never empty
       .select(col("freq"),
-        filter(split(col("word"), ""), s => length(s) > 0).as("syms"))
-      .localCheckpoint()
+        filter(split(col("word"), ""), s => length(s) > 0).as("syms"))))
     val merges = Seq.newBuilder[(Long, String, String, Long, Double)]
     var exhausted = false
     var k = 0
     while (k < numMerges && !exhausted) {
-      def pairRows = words
+      def pairRows = words.df
         .select(col("freq"),
           explode(zip_with(col("syms"),
             slice(col("syms"), lit(2), greatest(lit(0), size(col("syms")) - 1)),
@@ -578,7 +577,7 @@ object CorpusOps {
           // three consumers below share the exchange via
           // ReuseExchange); counts are the same exact integers
           val counts = pairRows
-            .unionByName(words.select(explode(col("syms")).as("l"),
+            .unionByName(words.df.select(explode(col("syms")).as("l"),
               lit(null).cast("string").as("r"), col("freq")))
             .groupBy(col("l"), col("r"))
             .agg(sum(col("freq")).as("cnt"))
@@ -599,13 +598,12 @@ object CorpusOps {
         val row = best.head
         val (l, r, cnt) = (row.getString(0), row.getString(1), row.getLong(2))
         merges += ((k.toLong, l, r, cnt, row.getDouble(3)))
-        words = words.select(col("freq"),
-            graft.functions.TextFunctions.bpeMergeStep(col("syms"), l, r)
-              .as("syms"))
-          .localCheckpoint()
+        words.advance(words.df.select(col("freq"),
+          graft.functions.TextFunctions.bpeMergeStep(col("syms"), l, r).as("syms")))
         k += 1
       }
     }
+    words.close()
     merges.result()
   }
 

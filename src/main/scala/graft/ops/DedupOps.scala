@@ -627,41 +627,32 @@ object DedupOps {
     */
   private def clustersMinLabel(pairs: DataFrame): DataFrame = {
     val e = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val (und, releaseUnd) = graft.ops.Checkpoints.withRelease(e
+    val (und, releaseUnd) = Checkpoints.withRelease(e
       .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    val nodes = und.select(col("src").as("doc")).distinct()
-    var (labelsCk, releaseLabels) = graft.ops.Checkpoints.withRelease(
-      nodes.withColumn("cluster", col("doc")))
-    var labels = labelsCk
-    var changed = 1L
-    while (changed > 0) {
-      // ONE checkpoint per round; the label view derives from it lazily
-      // (a second checkpoint of the same materialized data bought
-      // nothing and doubled the block-manager footprint per round).
-      // The changed-label count rides the checkpoint job as an observed
-      // metric (r14) — previously a separate filter+count action per
-      // round — and superseded rounds release their actual checkpoint
-      // blocks (Dataset.unpersist does not reach them; Checkpoints.scala)
-      val obs = new org.apache.spark.sql.Observation()
-      val (next, relNext) = graft.ops.Checkpoints.withRelease(und
+    // a round's state is (doc, cluster, next_cluster); the labels it
+    // hands on are a lazy view of that one checkpoint (a second
+    // checkpoint of the same materialized data bought nothing and doubled
+    // the block-manager footprint per round)
+    def labelsOf(state: DataFrame): DataFrame =
+      state.select(col("doc"), col("next_cluster").as("cluster"))
+    val last = Checkpoints.iterate("clustersMinLabel", Checkpoints.checkpoint(
+        und.select(col("src").as("doc")).distinct().withColumn("next_cluster", col("doc"))),
+      Int.MaxValue,
+      probes = Seq(coalesce(sum(when(col("next_cluster") < col("cluster"),
+        1L).otherwise(0L)), lit(0L)).as("c")),
+      stop = rs => rs.size > 1 && rs.last.long("c") == 0L) { (state, _) =>
+      val labels = labelsOf(state)
+      und
         .join(labels.withColumnRenamed("doc", "dst"), Seq("dst"))
         .groupBy(col("src").as("doc"))
         .agg(min(col("cluster")).as("nbr_min"))
         .join(labels, Seq("doc"))
         .select(col("doc"), col("cluster"),
           least(col("cluster"), col("nbr_min")).as("next_cluster"))
-        .observe(obs, coalesce(sum(when(col("next_cluster") < col("cluster"),
-          1L).otherwise(0L)), lit(0L)).as("c")))
-      changed = Checkpoints.observedLong(obs, "c")(
-        next.agg(coalesce(sum(when(col("next_cluster") < col("cluster"),
-          1L).otherwise(0L)), lit(0L))).head.getLong(0))
-      releaseLabels()
-      releaseLabels = relNext
-      labels = next.select(col("doc"), col("next_cluster").as("cluster"))
     }
     releaseUnd()
-    labels.withColumn("is_canonical", col("doc") === col("cluster"))
+    labelsOf(last).withColumn("is_canonical", col("doc") === col("cluster"))
   }
 
   /** Quality-ranked survivor selection: keep the best-scoring member of

@@ -10,13 +10,7 @@ import org.apache.spark.sql.types._
   * unbounded paths, every pass a keyed join/aggregation, so the same
   * code runs on a 1000-executor cluster. Determinism (fixed iteration
   * counts, total-order tie-breaks) is what makes these oracle-checkable.
-  *
-  * Iteration discipline (applies to PageRank and LPA): the static sides
-  * (edges, nodes) are hash-repartitioned on their join key ONCE and
-  * localCheckpoint'd, and every per-iteration aggregation keys on the
-  * same column — so after the first wave the only exchange per
-  * iteration is the one the algorithm genuinely needs (the contribution
-  * aggregation), not a re-shuffle of the full edge table.
+  * The loops run on [[Checkpoints]]' round and wave drivers.
   */
 object GraphAlgorithms {
 
@@ -34,13 +28,6 @@ object GraphAlgorithms {
     * rank loop.
     */
   val BroadcastEdgeLimit = 500000L
-
-  /** Rounds the most recent [[refineCommunities]] call on this JVM
-    * actually executed before its early-exit (or `rounds` cap) fired.
-    * Bench/test telemetry only — written once per call on the driver,
-    * not safe under concurrent refinements.
-    */
-  @volatile var lastRefineRounds: Int = -1
 
   /** G1 — static PageRank, the classic damped formulation GraphX's
     * Pregel implements (reference params: damping 0.85,
@@ -133,48 +120,44 @@ object GraphAlgorithms {
   private[graft] def rankLoop(edges: DataFrame, reset: Column,
       resetOf: java.lang.Long => Double, iters: Int, damping: Double,
       driverEdgeLimit: Long = BroadcastEdgeLimit): DataFrame = {
-    val obs = new org.apache.spark.sql.Observation()
-    val (e0, releaseE0) = Checkpoints.withRelease(
-      edges.select(col("src"), col("dst")).distinct()
-        .observe(obs, count(lit(1)).as("m")))
-    val nodeField = e0.select(col("src").as("node"))
-      .unionByName(e0.select(col("dst").as("node"))).schema("node")
+    val e0 = Checkpoints.checkpoint(
+      edges.select(col("src"), col("dst")).distinct(), count(lit(1)).as("m"))
+    val nodeField = e0.df.select(col("src").as("node"))
+      .unionByName(e0.df.select(col("dst").as("node"))).schema("node")
     val integral = nodeField.dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    if (integral &&
-        Checkpoints.observedLong(obs, "m")(e0.count()) <= driverEdgeLimit) {
-      val rows = e0.select(col("src").cast(nodeField.dataType),
+    if (integral && e0.long("m") <= driverEdgeLimit) {
+      val rows = e0.df.select(col("src").cast(nodeField.dataType),
         col("dst").cast(nodeField.dataType)).collect()
-      releaseE0()
+      e0.release()
       edges.sparkSession.createDataFrame(
         java.util.Arrays.asList(rankOnDriver(rows, resetOf, iters, damping): _*),
         StructType(Seq(nodeField, StructField("rank", DoubleType, nullable = false))))
-    } else rankOnSpark(e0, releaseE0, reset, iters, damping)
+    } else rankOnSpark(e0, reset, iters, damping)
   }
 
   /** [[rankLoop]]'s Spark plan over the checkpointed distinct edges
     * `e0`, which it releases once its own static tables are materialized.
     */
-  private def rankOnSpark(e0: DataFrame, releaseE0: () => Unit,
+  private def rankOnSpark(e0: Checkpoints.Checkpoint,
       reset: Column, iters: Int, damping: Double): DataFrame = {
     // outdeg as a count over the src partition: one exchange by src
     // (which the repartition then keeps) instead of an aggregation and
     // a join. Null-src rows stay but, like every null key, never match
     // a rank row.
     val (e, releaseE) = Checkpoints.withRelease(
-      e0.withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
+      e0.df.withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
         .repartition(col("src")))
     val (nodes, releaseNodes) = Checkpoints.withRelease(
-      e0.select(col("src").as("node"))
-        .unionByName(e0.select(col("dst").as("node")))
+      e0.df.select(col("src").as("node"))
+        .unionByName(e0.df.select(col("dst").as("node")))
         .distinct()
         .repartition(col("node")))
-    releaseE0()
-    var ranks = nodes.withColumn("rank", reset)
-    var releaseLast: () => Unit = null
-    for (i <- 1 to iters) {
+    e0.release()
+    val ranks = Checkpoints.iterate("rankLoop",
+        Checkpoints.Checkpoint(nodes.withColumn("rank", reset)), iters, every = 4) { (ranks, _) =>
       // shuffle_hash: both sides are already hash-partitioned on the key,
       // so SMJ's only extra work would be the per-iteration re-sort —
       // hash build over the (smaller) rank table skips it
@@ -183,17 +166,11 @@ object GraphAlgorithms {
         .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
         .groupBy(col("node"))
         .agg(sum(col("c")).as("in_sum"))
-      val next = nodes
+      nodes
         .join(contribs.hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"),
           (lit(1.0 - damping) * reset +
             lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-      if (i % 4 == 0 || i == iters) {
-        val (ck, rel) = Checkpoints.withRelease(next)
-        if (releaseLast != null) releaseLast()
-        releaseLast = rel
-        ranks = ck
-      } else ranks = next
     }
     // the final iteration checkpointed `ranks`, so the static tables'
     // blocks are no longer reachable from the returned plan
@@ -384,52 +361,18 @@ object GraphAlgorithms {
     val roots = rootsOpt.getOrElse(nodes.select(col("node").as("root")))
 
     // ---- forward BFS with path counting ----
-    // per-LEVEL frontiers (root, node, sigma), each checkpointed once —
-    // the backward sweep consumes levels directly, so neither phase ever
-    // re-materializes the whole accumulated state (the previous
-    // all-state union/join per level made wave cost quadratic in depth).
-    // The visited set for the anti-join is a lazy union of the already-
-    // checkpointed frontiers, re-checkpointed only every few levels to
-    // bound plan depth.
-    val frontiers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    frontiers += roots.select(col("root"), col("root").as("node"))
-      .withColumn("sigma", lit(1.0))
-      .localCheckpoint()
-    var visited = frontiers.head
-    var releaseVisited: () => Unit = null // the re-checkpoint copy we own
-    var sinceCkpt = 0
-    var done = false
-    while (!done) {
-      // the emptiness probe rides the checkpoint job as an observed row
-      // count (r14) — previously a separate isEmpty action per level
-      val obsW = new org.apache.spark.sql.Observation()
-      val (next, releaseNext) = Checkpoints.withRelease(frontiers.last
-        .join(e, frontiers.last("node") === e("src"))
+    // per-LEVEL frontiers (root, node, sigma): the backward sweep
+    // consumes levels directly
+    val frontiers = Checkpoints.waves(
+        roots.select(col("root"), col("root").as("node")).withColumn("sigma", lit(1.0)),
+        Seq("root", "node")) { (frontier, visited, _) =>
+      frontier
+        .join(e, frontier("node") === e("src"))
         .select(col("root"), e("dst").as("node"), col("sigma"))
         .groupBy(col("root"), col("node"))
         .agg(sum(col("sigma")).as("sigma"))
-        .join(visited.select(col("root"), col("node")), Seq("root", "node"), "left_anti")
-        .observe(obsW, count(lit(1)).as("n")))
-      if (Checkpoints.observedLong(obsW, "n")(next.count()) == 0L) {
-        done = true; releaseNext()
-      }
-      else {
-        visited = visited.unionByName(next)
-        sinceCkpt += 1
-        if (sinceCkpt >= 4) {
-          // free the SUPERSEDED visited copy once the new one is
-          // materialized (frontier checkpoints stay — the backward sweep
-          // and the final union consume them)
-          val (ck, rel) = Checkpoints.withRelease(visited)
-          if (releaseVisited != null) releaseVisited()
-          releaseVisited = rel
-          visited = ck
-          sinceCkpt = 0
-        }
-        frontiers += next
-      }
+        .join(visited, Seq("root", "node"), "left_anti")
     }
-    if (releaseVisited != null) releaseVisited() // forward-only state
     val maxDist = frontiers.length - 1
 
     // ---- backward dependency accumulation ----
@@ -505,9 +448,11 @@ object GraphAlgorithms {
     val (nodes, releaseNodes) = Checkpoints.withRelease(
       und.select(col("src").as("node")).distinct()
         .repartition(col("node")))
-    var labels = nodes.withColumn("label", col("node"))
-    var releaseLast: () => Unit = null
-    for (i <- 1 to rounds) {
+    // checkpointed every 2nd round: a round references the label state
+    // once, so lazy lineage between checkpoints is not re-evaluated
+    val labels = Checkpoints.iterate("labelPropagation",
+        Checkpoints.Checkpoint(nodes.withColumn("label", col("node"))), rounds,
+        every = 2) { (labels, _) =>
       // most-frequent neighbor label, smallest label on ties: count per
       // (node,label), then max_by over a (cnt, -label) total order. The
       // explicit repartition(node) satisfies ClusteredDistribution for
@@ -523,23 +468,16 @@ object GraphAlgorithms {
       val counted = gathered.repartition(col("node"))
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      val next =
-        if (numericIds)
-          counted.groupBy(col("node"))
-            .agg(max_by(col("label"), struct(col("cnt"), -col("label"))).as("label"))
-        else {
-          val w = Window.partitionBy(col("node"))
-            .orderBy(col("cnt").desc, col("label").asc)
-          counted.withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1)
-            .select(col("node"), col("label"))
-        }
-      if (i % 2 == 0 || i == rounds) {
-        val (ck, rel) = Checkpoints.withRelease(next)
-        if (releaseLast != null) releaseLast()
-        releaseLast = rel
-        labels = ck
-      } else labels = next
+      if (numericIds)
+        counted.groupBy(col("node"))
+          .agg(max_by(col("label"), struct(col("cnt"), -col("label"))).as("label"))
+      else {
+        val w = Window.partitionBy(col("node"))
+          .orderBy(col("cnt").desc, col("label").asc)
+        counted.withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("node"), col("label"))
+      }
     }
     // the final round checkpointed `labels` — the static tables are free
     if (rounds >= 1) { releaseUnd(); releaseNodes() }
@@ -586,11 +524,11 @@ object GraphAlgorithms {
     * the state is a fixpoint and remaining rounds would replay it
     * unchanged. The loop detects that and stops (`stopOnStableCycle`),
     * returning a result bit-identical to running all `rounds`; the
-    * detector is one `sum(moved)` action per round over the
-    * just-materialized checkpoint (no recompute, no extra shuffle).
+    * detector is a `sum(moved)` probe on each round's checkpoint.
     * This mirrors the reference's run-to-convergence Louvain
     * (protocol.py:44) instead of paying worst-case rounds at scale;
-    * executed-round telemetry lands in [[lastRefineRounds]].
+    * the executed rounds and their move counts land in
+    * `Checkpoints.lastRounds("refineCommunities")`.
     * Requires numeric NON-NEGATIVE node ids (the parity schedule is
     * id-arithmetic — `pmod` here vs signed `%` in the SQL oracle
     * diverge below zero, so negatives are rejected up front). Graph
@@ -676,8 +614,7 @@ object GraphAlgorithms {
       }
     // comm carries (node, community=cn, deg) node-partitioned; cn and
     // deg travel through the union below, so a round never re-joins it
-    var (comm, releaseLast) = Checkpoints.withRelease(
-      burst.repartition(col("node")))
+    val comm0 = Checkpoints.checkpoint(burst.repartition(col("node")))
     // σ-join strategy, decided ONCE: local moving never creates a new
     // community label, so the seed's community count bounds σ's row
     // count for every round. Broadcast below the bound (measured 2×
@@ -686,12 +623,19 @@ object GraphAlgorithms {
     // starts at ~n singleton rows — the forced broadcast would OOM, so
     // take the shuffled join.
     val broadcastSigma =
-      comm.select(col("community")).distinct().count() <= sigmaBroadcastBound
-    // zero-move streak across the residue cycle (see scaladoc): a full
-    // cycle of declined moves is a proven fixpoint, stop early
-    var stableRounds = 0
-    var r = 0
-    while (r < rounds && (!stopOnStableCycle || stableRounds < moverClasses)) {
+      comm0.df.select(col("community")).distinct().count() <= sigmaBroadcastBound
+    // checkpoint EVERY round: a round references comm three times
+    // (σ, gather, stay rows), so carrying lazy lineage would
+    // re-evaluate each prior round ~3× per level — the opposite of
+    // LPA, whose single state reference makes sparse checkpoints a win.
+    // A full residue cycle of zero-move rounds is a proven fixpoint
+    // (see scaladoc): stop there.
+    val comm = Checkpoints.iterate("refineCommunities", comm0, rounds,
+      probes =
+        if (stopOnStableCycle) Seq(coalesce(sum(col("moved")), lit(0L)).as("moved"))
+        else Nil,
+      stop = rs => stopOnStableCycle && rs.size > moverClasses &&
+        rs.takeRight(moverClasses).forall(_.long("moved") == 0L)) { (comm, r) =>
       // σ(c): total degree of c's members — one row per community
       val sigma0 = comm.groupBy(col("community")).agg(sum(col("deg")).as("sigma"))
       val sigma = if (broadcastSigma) broadcast(sigma0) else sigma0
@@ -722,7 +666,7 @@ object GraphAlgorithms {
       // rule: a move happens only on strict improvement over stay. All
       // keys are exact longs; cn rides along as max_by over the unique
       // stay marker.
-      val next = cand
+      cand
         .withColumn("gain", lit(twoM) * col("w") -
           col("deg") * (col("sigma") - col("is_stay") * col("deg")))
         .groupBy(col("node"))
@@ -732,36 +676,13 @@ object GraphAlgorithms {
           max_by(col("community"), col("is_stay")).as("cn"),
           max(col("deg")).as("deg"))
         .select(col("node"),
-          when(pmod(col("node"), lit(moverClasses)) === lit(r % moverClasses),
+          when(pmod(col("node"), lit(moverClasses)) === lit((r - 1) % moverClasses),
             col("chosen"))
             .otherwise(col("cn")).as("community"),
           col("cn"), col("deg"))
         .withColumn("moved", (col("community") =!= col("cn")).cast("long"))
         .drop("cn")
-      // checkpoint EVERY round: a round references comm three times
-      // (σ, gather, stay rows), so carrying lazy lineage would
-      // re-evaluate each prior round ~3× per level — the opposite of
-      // LPA, whose single state reference makes sparse checkpoints a win.
-      // The stable-cycle move count rides the checkpoint job itself as
-      // an observed metric (r14) — previously a separate per-round
-      // action over the just-written blocks, ~2 extra scheduler round
-      // trips per round for a number the materialization already knows.
-      val obs = new org.apache.spark.sql.Observation()
-      val (ck, rel) = Checkpoints.withRelease(
-        if (stopOnStableCycle)
-          next.observe(obs, coalesce(sum(col("moved")), lit(0L)).as("moved"))
-        else next)
-      releaseLast()
-      releaseLast = rel
-      comm = ck
-      if (stopOnStableCycle) {
-        val moved = Checkpoints.observedLong(obs, "moved")(
-          ck.agg(coalesce(sum(col("moved")), lit(0L))).head.getLong(0))
-        stableRounds = if (moved == 0L) stableRounds + 1 else 0
-      }
-      r += 1
     }
-    lastRefineRounds = r
     releaseUnd() // comm is a checkpoint — the edge table is free
     comm.select(col("node"), col("community"))
   }
@@ -881,23 +802,17 @@ object GraphAlgorithms {
   def modularity(edges: DataFrame, communities: DataFrame): DataFrame = {
     val dir = edges.select(col("src"), col("dst")).distinct()
       .filter(col("src") =!= col("dst"))
-    // checkpointed with the edge count riding the materialization as an
-    // observed metric (r14): previously m = und.count() was one full
-    // evaluation of the double-distinct canon and the final agg (which
-    // references und twice more) a second — the canon now materializes
-    // exactly once and both downstream passes read its blocks.
-    // Lifetime (ADVICE r14): the blocks back the returned one-row
-    // aggregate's plan until the consumer drops it (ContextCleaner);
-    // no release handle on purpose — the result is driver-tiny and the
-    // canon is edge-table-sized, held only while the caller holds the
-    // unevaluated result.
-    val obs = new org.apache.spark.sql.Observation()
-    val und = dir.select(
+    // the canon materializes once (the final agg references it three
+    // times) and m rides that job. Lifetime: the blocks back the returned
+    // one-row aggregate's plan until the consumer drops it
+    // (ContextCleaner); not released on purpose — the result is
+    // driver-tiny and the canon is edge-table-sized, held only while the
+    // caller holds the unevaluated result.
+    val canon = Checkpoints.checkpoint(dir.select(
       least(col("src"), col("dst")).as("a"),
-      greatest(col("src"), col("dst")).as("b")).distinct()
-      .observe(obs, count(lit(1)).as("m"))
-      .localCheckpoint()
-    val m = Checkpoints.observedLong(obs, "m")(und.count()).toDouble
+      greatest(col("src"), col("dst")).as("b")).distinct(), count(lit(1)).as("m"))
+    val und = canon.df
+    val m = canon.long("m").toDouble
     val lab = communities.select(col("node"), col("community"))
     val withC = und
       .join(lab.select(col("node").as("a"), col("community").as("ca")), "a")
@@ -1103,13 +1018,6 @@ object GraphAlgorithms {
             col("n_wedges").cast("double"), 6)).as("global_cc"))
   }
 
-  /** Rounds the most recent [[connectedComponents]] /[[kCore]] call on
-    * this JVM executed before its fixpoint check fired (bench/test
-    * telemetry, same contract as [[lastRefineRounds]]).
-    */
-  @volatile var lastCcRounds: Int = -1
-  @volatile var lastKCoreRounds: Int = -1
-
   /** Closure-join partition count chosen by the most recent
     * [[localClustering]] call (bench/test telemetry for the
     * wedge-volume pressure bound).
@@ -1129,8 +1037,7 @@ object GraphAlgorithms {
     * node-keyed min aggregation + one join back to the edge list — no
     * neighbor-list collection anywhere, so a 10⁷-degree hub costs a
     * combinable min, not memory. The fixpoint test is a count+hash-sum
-    * fingerprint of the edge set (one tiny agg per round), and lineage
-    * is cut per round with released checkpoints.
+    * fingerprint of the edge set, probed on each round's checkpoint.
     *
     * Output: (node, component) for every node incident to an edge,
     * where component = the minimum node id in the node's component
@@ -1164,50 +1071,21 @@ object GraphAlgorithms {
         .unionAll(m.select(col("m").as("a"), col("u").as("b")))
         .filter(col("a") =!= col("b")).distinct()
     }
-    // fingerprint rides the round's checkpoint job as OBSERVED metrics
-    // (r14) — previously a separate agg action per round over the
-    // just-written blocks. hash-sum in decimal(38,0): order-free and
-    // overflow-free (the long sum would trip ANSI overflow on a
-    // handful of rows).
-    def observed(e: DataFrame, obs: org.apache.spark.sql.Observation)
-        : DataFrame =
-      e.observe(obs, count(lit(1)).as("n"),
-        sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")).as("h"))
-    def fpOf(obs: org.apache.spark.sql.Observation, ck: DataFrame)
-        : (Long, String) = {
-      val m = Checkpoints.observedOr(obs) {
-        val r = ck.agg(count(lit(1)),
-          sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)"))).head
-        Map("n" -> r.getLong(0), "h" -> r.get(1))
-      }
-      val h = m("h")
-      (m("n") match {
-        case n: java.lang.Number => n.longValue()
-        case v => v.asInstanceOf[Long]
-      }, if (h == null) "" else h.toString)
+    // hash-sum in decimal(38,0): order-free and overflow-free (the long
+    // sum would trip ANSI overflow on a handful of rows)
+    val fingerprint = Seq(count(lit(1)).as("n"),
+      sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")).as("h"))
+    // each round materializes: a large/small-star plan references its
+    // input ~a dozen times, so lazily chained rounds would re-execute
+    // the unmaterialized intermediate combinatorially (BASELINE §22
+    // wave-fusion note)
+    val cur = Checkpoints.iterate("connectedComponents",
+        Checkpoints.checkpoint(und, fingerprint: _*), maxRounds, probes = fingerprint,
+        stop = rs =>
+          if (rs.size == 1) rs.head.long("n") == 0L
+          else rs.last.probes == rs(rs.size - 2).probes) { (cur, _) =>
+      smallStar(largeStar(cur))
     }
-
-    val obs0 = new org.apache.spark.sql.Observation()
-    var (cur, release) = Checkpoints.withRelease(observed(und, obs0))
-    var fp = fpOf(obs0, cur)
-    var rounds = 0
-    var converged = fp._1 == 0L
-    while (!converged && rounds < maxRounds) {
-      // each round materializes: a large/small-star plan references its
-      // input ~a dozen times, so lazily chained rounds would re-execute
-      // the unmaterialized intermediate combinatorially (BASELINE §22
-      // wave-fusion note)
-      val obs = new org.apache.spark.sql.Observation()
-      val (next, rel) = Checkpoints.withRelease(
-        observed(smallStar(largeStar(cur)), obs))
-      val nfp = fpOf(obs, next)
-      release()
-      cur = next; release = rel
-      converged = nfp == fp
-      fp = nfp
-      rounds += 1
-    }
-    lastCcRounds = rounds
     // fixpoint edge set is a star per component: (min, other). Components
     // = star membership; nodes absent from the stars map to themselves
     // (they ARE their component's minimum).
@@ -1226,10 +1104,11 @@ object GraphAlgorithms {
     *
     * Scale shape: each round is one node-keyed degree aggregation
     * (map-side combinable) + two anti-joins of the edge list against
-    * the dropped-node set (AQE broadcasts it when small); lineage is
-    * cut per round with released checkpoints. Round COUNT is the
-    * peeling depth of the graph (typically O(10) on real degree
-    * distributions; bounded by `maxRounds`).
+    * the dropped-node set (AQE broadcasts it when small), materialized
+    * as one checkpoint whose edge count is the fixpoint probe: a round
+    * that keeps every edge dropped no node. Round COUNT is the
+    * peeling depth of the graph plus that last round (typically O(10)
+    * on real degree distributions; bounded by `maxRounds`).
     *
     * Output: (node, core_degree) for the k-core's nodes, where
     * core_degree is the node's degree WITHIN the core.
@@ -1240,31 +1119,20 @@ object GraphAlgorithms {
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
 
-    var (cur, release) = Checkpoints.withRelease(canonicalEdges(edges))
-    var rounds = 0
-    var done = false
-    // per round one dropped-set checkpoint (whose emptiness probe rides
-    // the checkpoint job as an observed metric) and one survivor
-    // checkpoint — no edge counts anywhere. Fusing peel rounds into one
-    // lazy action measured slower (BASELINE §22 wave-fusion note).
-    while (!done && rounds < maxRounds) {
-      val obs = new org.apache.spark.sql.Observation()
-      val bad = degrees(cur).filter(col("degree") < k)
-        .select(col("node"))
-        .observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      if (Checkpoints.observedLong(obs, "n")(bad.count()) == 0L) done = true
-      else {
-        val (next, nextRelease) = Checkpoints.withRelease(
-          cur.join(bad.select(col("node").as("a")), Seq("a"), "left_anti")
-            .join(bad.select(col("node").as("b")), Seq("b"), "left_anti")
-            .select(col("a"), col("b")))
-        release(); cur = next; release = nextRelease
-        rounds += 1
-      }
-      Checkpoints.release(bad)
+    // one checkpoint per round: fusing peel rounds into one lazy action
+    // measured slower (BASELINE §22 wave-fusion note)
+    val edgeCount = count(lit(1)).as("n")
+    val core = Checkpoints.iterate("kCore",
+        Checkpoints.checkpoint(canonicalEdges(edges), edgeCount), maxRounds,
+        probes = Seq(edgeCount),
+        stop = rs => rs.last.long("n") == 0L ||
+          (rs.size > 1 && rs.last.long("n") == rs(rs.size - 2).long("n"))) { (cur, _) =>
+      val bad = degrees(cur).filter(col("degree") < k).select(col("node"))
+      cur.join(bad.select(col("node").as("a")), Seq("a"), "left_anti")
+        .join(bad.select(col("node").as("b")), Seq("b"), "left_anti")
+        .select(col("a"), col("b"))
     }
-    lastKCoreRounds = rounds
-    degrees(cur)
+    degrees(core)
   }
 
   /** Harmonic centrality from a root set: H(v) = Σ_{r ∈ roots, r ≠ v}
@@ -1274,13 +1142,12 @@ object GraphAlgorithms {
     * At scale the root set is a sample and the caller scales by
     * |V|/|roots| (the Brandes–Pich treatment betweenness already uses).
     *
-    * Dataflow: level-synchronous multi-root BFS carried as ONE
-    * (root, node, dist) DataFrame — all |roots| traversals advance in
-    * the same wave: per depth, one frontier×edges equi-join, one
-    * anti-join against the seen set, one (root, node) min-agg; lineage
-    * cut per wave with released checkpoints. Depth count = graph
-    * eccentricity bound (`maxDepth` caps it). No per-root loop, no
-    * adjacency collection.
+    * Dataflow: level-synchronous multi-root BFS ([[Checkpoints.waves]])
+    * over (root, node, dist) frontiers — all |roots| traversals advance
+    * in the same wave: per depth, one frontier×edges equi-join, one
+    * anti-join against the seen set, one (root, node) min-agg. Depth
+    * count = graph eccentricity bound (`maxDepth` caps it). No per-root
+    * loop, no adjacency collection.
     *
     * Output: (node, harmonic round6) for every node incident to an
     * edge, ordered by nothing (callers sort).
@@ -1303,34 +1170,14 @@ object GraphAlgorithms {
     val seed = roots.toDF("root")
       .join(nodes.select(col("node").as("root")), Seq("root"))
       .select(col("root"), col("root").as("node"), lit(0L).as("dist"))
-    // the frontier-emptiness probe rides each checkpoint job as an
-    // observed row count (r14) — previously a separate isEmpty action
-    // per wave over the just-written blocks
-    def counted(e: DataFrame, obs: org.apache.spark.sql.Observation)
-        : DataFrame = e.observe(obs, count(lit(1)).as("n"))
-    val obs0 = new org.apache.spark.sql.Observation()
-    var (frontier, releaseFrontier) =
-      Checkpoints.withRelease(counted(seed, obs0))
-    var frontierN = obs0.get("n").asInstanceOf[Long]
-    var (dist, releaseDist) = Checkpoints.withRelease(frontier)
-    var depth = 0
-    while (depth < maxDepth && frontierN > 0L) {
-      val expanded = frontier.join(sym, frontier("node") === sym("u"))
+    val dist = Checkpoints.waves(seed, Seq("root", "node"), maxDepth) { (frontier, seen, _) =>
+      frontier.join(sym, frontier("node") === sym("u"))
         .select(col("root"), col("v").as("node"),
           (col("dist") + 1L).as("dist"))
-        .join(dist.select(col("root"), col("node")),
-          Seq("root", "node"), "left_anti")
+        .join(seen, Seq("root", "node"), "left_anti")
         .groupBy(col("root"), col("node"))
         .agg(min(col("dist")).as("dist"))
-      val obsW = new org.apache.spark.sql.Observation()
-      val (nf, relNf) = Checkpoints.withRelease(counted(expanded, obsW))
-      val (nd, relNd) = Checkpoints.withRelease(dist.unionByName(nf))
-      releaseFrontier(); releaseDist()
-      frontier = nf; releaseFrontier = relNf
-      dist = nd; releaseDist = relNd
-      frontierN = Checkpoints.observedLong(obsW, "n")(nf.count())
-      depth += 1
-    }
+    }.reduce(_ unionByName _)
     val out = nodes
       .join(dist.filter(col("dist") > 0L)
           .groupBy(col("node"))
@@ -1338,7 +1185,7 @@ object GraphAlgorithms {
         Seq("node"), "left")
       .select(col("node"),
         round(coalesce(col("_h"), lit(0.0)), 6).as("harmonic"))
-    releaseSym(); releaseFrontier()
+    releaseSym()
     out
   }
 

@@ -141,59 +141,21 @@ object GraphOps {
       seeds: DataFrame,
       maxDepth: Int
   ): DataFrame = {
-    // Per-LEVEL frontiers, each localCheckpoint'ed once (eager,
-    // lineage-truncating); the visited set for the min-depth anti-join is
-    // a lazy union of the already-materialized frontiers, re-checkpointed
-    // only every few levels to bound plan depth. Earlier shapes
-    // re-materialized the whole accumulated state every wave (quadratic
-    // in depth) or cached every wave and never unpersisted (round 1).
-    val f0 = seeds
-      .select(col("root"), col("root").as("node"))
-      .withColumn("depth", lit(0))
-      .localCheckpoint() // eager
-    val frontiers = scala.collection.mutable.ArrayBuffer(f0)
-    var visited = f0.select(col("root"), col("node"))
-    var releaseVisited: () => Unit = null // the re-checkpoint copy we own
-    var sinceCkpt = 0
-    var depth = 1
-    var exhausted = false
-    while (depth <= maxDepth && !exhausted) {
-      val prev = frontiers.last.select(col("root"), col("node"))
-      // the emptiness probe rides the checkpoint job as an observed row
-      // count (r14 — previously a separate isEmpty action per wave), and
-      // superseded state releases its actual checkpoint blocks
-      // (Dataset.unpersist does not reach them; see Checkpoints.scala)
-      val obs = new org.apache.spark.sql.Observation()
-      val (next, relNext) = graft.ops.Checkpoints.withRelease(prev
+    // per-LEVEL frontiers; an empty one means no deeper paths exist
+    val frontiers = Checkpoints.waves(
+        seeds.select(col("root"), col("root").as("node")).withColumn("depth", lit(0)),
+        Seq("root", "node"), maxDepth) { (frontier, visited, depth) =>
+      val prev = frontier.select(col("root"), col("node"))
+      prev
         .join(e, prev("node") === e("src"))
         .select(col("root"), col("dst").as("node"))
         .distinct()
         .join(visited, Seq("root", "node"), "left_anti")
         .withColumn("depth", lit(depth))
-        .observe(obs, count(lit(1)).as("n")))
-      if (Checkpoints.observedLong(obs, "n")(next.count()) == 0L) {
-        exhausted = true // empty frontier — no deeper paths exist
-        relNext()
-      } else {
-        visited = visited.unionByName(next.select(col("root"), col("node")))
-        sinceCkpt += 1
-        if (sinceCkpt >= 4) {
-          // free the superseded visited copy once the new one is
-          // materialized (frontier checkpoints stay — they are the output)
-          val (ck, rel) = graft.ops.Checkpoints.withRelease(visited)
-          if (releaseVisited != null) releaseVisited()
-          releaseVisited = rel
-          visited = ck
-          sinceCkpt = 0
-        }
-        frontiers += next
-      }
-      depth += 1
     }
-    if (releaseVisited != null) releaseVisited() // traversal-only state
     // depth-0 seed rows are internal state, not output
     frontiers.drop(1).reduceOption(_ unionByName _)
-      .getOrElse(f0.filter(col("depth") > 0))
+      .getOrElse(frontiers.head.filter(col("depth") > 0))
   }
 
   /** J11/A9 — as-of / latest-per-key join: most recent row per partition

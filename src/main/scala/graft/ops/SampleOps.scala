@@ -240,9 +240,10 @@ object SampleOps {
     val seed = (seedRow.getLong(0), toArr(seedRow.getSeq[Any](1)))
     val chosen = scala.collection.mutable.ArrayBuffer((seed._1, seed._2, 0.0))
     // carry path: the running min-distance column, re-checkpointed
-    // every `checkpointEvery` steps to keep the least(...) lineage flat
-    var carried = if (carryMinDist) {
-      pts.withColumn("d", d2(seed._2)).localCheckpoint()
+    // every `checkpointEvery` centers to keep the least(...) lineage flat
+    val carried = if (carryMinDist) {
+      Checkpoints.carry(Checkpoints.checkpoint(pts.withColumn("d", d2(seed._2))),
+        checkpointEvery)
     } else null
     var i = 1
     var exhausted = false
@@ -258,14 +259,13 @@ object SampleOps {
       while (j < c.length) { cc += c(j) * c(j); j += 1 }
       dvv - 2.0 * dvc + cc
     }
-    var sinceCkpt = 0
     while (i < k && !exhausted) {
       if (carryMinDist) {
         // batched step: one action fetches the top-selectBatch frontier
         // (selectBatch = 1 degenerates to the r14 one-scan-per-center
         // sequential loop)
         val b = selectBatch
-        val rows = carried.orderBy(col("d").desc, col("id")).limit(b).collect()
+        val rows = carried.df.orderBy(col("d").desc, col("id")).limit(b).collect()
         // < b rows back ⇒ the batch IS the whole table: no uncollected
         // point exists and the certificate bound vanishes
         val certBound =
@@ -313,13 +313,9 @@ object SampleOps {
         if (accepted.nonEmpty && i < k && !exhausted) {
           // fold ALL accepted centers into the carried column at once —
           // the same exact min the stepwise least(...) chain computes
-          carried = carried.withColumn("d",
-            least((col("d") +: accepted.toSeq.map(cv => d2(cv))): _*))
-          sinceCkpt += accepted.size
-          if (sinceCkpt >= checkpointEvery) {
-            carried = carried.localCheckpoint()
-            sinceCkpt = 0
-          }
+          carried.advance(carried.df.withColumn("d",
+            least((col("d") +: accepted.toSeq.map(cv => d2(cv))): _*)),
+            weight = accepted.size)
         }
       } else {
         val dists = chosen.map { case (_, cv, _) => d2(cv) }
@@ -337,6 +333,7 @@ object SampleOps {
         }
       }
     }
+    if (carried != null) carried.close()
     chosen.zipWithIndex
       .map { case ((id, _, d), r) => (r + 1, id, d) }.toSeq
       .toDF("rank", "id", "dist")

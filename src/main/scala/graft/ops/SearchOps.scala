@@ -373,11 +373,11 @@ object SearchOps {
     val spark = df.sparkSession
     import spark.implicits._
     val fetchK = fetchKOpt.getOrElse(4 * k)
-    var remaining = cosineTopK(df, embCol, idCol, query, fetchK)
-      .select(col(idCol).cast("long").as("_id"), col(embCol).as("_emb"),
-        col("score"))
-      .withColumn("_maxSel", lit(0.0))
-      .localCheckpoint()
+    val remaining = Checkpoints.carry(Checkpoints.checkpoint(
+      cosineTopK(df, embCol, idCol, query, fetchK)
+        .select(col(idCol).cast("long").as("_id"), col(embCol).as("_emb"),
+          col("score"))
+        .withColumn("_maxSel", lit(0.0))), checkpointEvery)
     // driver replica of the CosineSim kernel (the same bit-equality
     // contract the driver-loop mmr documents): per-side norms and the
     // dot each accumulate left-to-right in doubles, zero-norm → 0.0,
@@ -394,7 +394,6 @@ object SearchOps {
     }
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     var done = false
-    var sinceCkpt = 0
     // batched selection (r15, same certificate as kCenterSelect): one
     // action fetches the top-selectBatch frontier by the argmax order;
     // the driver greedily accepts within the batch (exact cosine
@@ -405,7 +404,7 @@ object SearchOps {
     // unconditionally); selectBatch = 1 is the r14 sequential loop.
     while (selected.length < k && !done) {
       val v = lit(lambda) * col("score") - lit(1 - lambda) * col("_maxSel")
-      val rows = remaining.withColumn("_v", v)
+      val rows = remaining.df.withColumn("_v", v)
         .orderBy(col("_v").desc, col("_id").asc).limit(selectBatch)
         .select(col("_id"), col("_emb"), col("score"), col("_maxSel"),
           col("_v"))
@@ -458,18 +457,15 @@ object SearchOps {
         if (accepted.nonEmpty && selected.length < k) {
           val keep = accepted.map(_._1)
             .foldLeft(lit(true))((acc, id) => acc && (col("_id") =!= id))
-          remaining = remaining.filter(keep)
+          remaining.advance(remaining.df.filter(keep)
             .withColumn("_maxSel", greatest(
               (col("_maxSel") +: accepted.toSeq.map { case (_, e) =>
-                VectorFunctions.cosineToQuery(col("_emb"), e) }): _*))
-          sinceCkpt += accepted.size
-          if (sinceCkpt >= checkpointEvery) {
-            remaining = remaining.localCheckpoint()
-            sinceCkpt = 0
-          }
+                VectorFunctions.cosineToQuery(col("_emb"), e) }): _*)),
+            weight = accepted.size)
         }
       }
     }
+    remaining.close()
     selected.zipWithIndex
       .map { case ((id, score), rank) => (id, score, rank + 1) }
       .toSeq

@@ -339,12 +339,17 @@ class AlgoSpec extends SparkSuite {
     val full = GraphAlgorithms.refineCommunities(e, seed, rounds = 64,
       stopOnStableCycle = false)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(GraphAlgorithms.lastRefineRounds == 64)
+    assert(Checkpoints.lastRounds("refineCommunities").last.index == 64)
     val early = GraphAlgorithms.refineCommunities(e, seed, rounds = 64)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(early == full)
-    val executed = GraphAlgorithms.lastRefineRounds
+    val record = Checkpoints.lastRounds("refineCommunities")
+    val executed = record.last.index
     assert(executed < 64, s"early exit never fired: ran $executed rounds")
+    // it stopped on a full residue cycle (moverClasses = 4) of rounds
+    // that moved nothing
+    val cycle = record.takeRight(4)
+    assert(cycle.forall(r => r.index > 0 && r.long("moved") == 0L), cycle)
     // a fixpoint is detected after exactly one full zero-move residue
     // cycle; running with the cap AT the executed count changes nothing
     val capped = GraphAlgorithms.refineCommunities(e, seed, rounds = executed)
@@ -660,28 +665,66 @@ class AlgoSpec extends SparkSuite {
     val ccPath = GraphAlgorithms.connectedComponents(path).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(ccPath.length == 24 && ccPath.forall(_._2 == 1L))
-    assert(GraphAlgorithms.lastCcRounds > 0 &&
-      GraphAlgorithms.lastCcRounds <= 8,
-      s"rounds=${GraphAlgorithms.lastCcRounds}")
+    val ccRounds = Checkpoints.lastRounds("connectedComponents").last.index
+    assert(ccRounds > 0 && ccRounds <= 8, s"rounds=$ccRounds")
 
     assert(GraphAlgorithms.connectedComponents(
       Seq.empty[(Long, Long)].toDF("src", "dst")).isEmpty)
   }
 
-  test("Checkpoints.observedOr: observe metrics arrive from an eager localCheckpoint") {
+  test("Checkpoints.checkpoint: observe metrics arrive from an eager localCheckpoint") {
     // every iterative loop reads its per-round convergence probe this
     // way; if a Spark upgrade stops delivering the metrics, each round
     // would silently wait out the timeout and recompute via the fallback
     val base = spark.range(0L, 20000L, 1, 4)
       .select(col("id"), (col("id") % 7).as("moved"))
-    val obs = new org.apache.spark.sql.Observation()
-    val ck = base.observe(obs, count(lit(1)).as("n"), sum(col("moved")).as("m"))
-      .localCheckpoint()
-    var fallbackCalled = false
-    val got = Checkpoints.observedOr(obs) { fallbackCalled = true; Map.empty }
-    assert(!fallbackCalled, "observed metrics did not arrive with the checkpoint")
-    val want = ck.agg(count(lit(1)), sum(col("moved"))).head()
-    assert(got("n") == want.getLong(0) && got("m") == want.getLong(1), got)
+    val probes = Seq(count(lit(1)).as("n"), sum(col("moved")).as("m"))
+    val ck = Checkpoints.checkpoint(base, probes: _*)
+    assert(!ck.fellBack, "observed metrics did not arrive with the checkpoint")
+    val want = ck.df.agg(probes.head, probes.tail: _*).head()
+    assert(ck.probes == Map("n" -> want.getLong(0), "m" -> want.getLong(1)), ck.probes)
+    ck.release()
+  }
+
+  test("q_communities_refined is deterministic: same rows, same rounds, no fallback read") {
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$dir/lineitem.parquet").exists())
+    def run(): (Seq[org.apache.spark.sql.Row], IndexedSeq[Checkpoints.Round]) = {
+      // the query's memos are dropped after each run, so both run the loop
+      val caller = graft.trace.MemoLog.currentQuery
+      graft.trace.MemoLog.currentQuery = "q_communities_refined"
+      try {
+        val rows = SparkEntry.queries("q_communities_refined")(spark, dir).collect().toSeq
+        graft.trace.MemoLog.clearMemos(graft.trace.MemoLog.memosBuiltBy("q_communities_refined"))
+        (rows, Checkpoints.lastRounds("refineCommunities"))
+      } finally graft.trace.MemoLog.currentQuery = caller
+    }
+    val (rows1, rounds1) = run()
+    val (rows2, rounds2) = run()
+    assert(rows1.nonEmpty && rows1 == rows2)
+    def moves(rs: IndexedSeq[Checkpoints.Round]) = rs.tail.map(r => r.index -> r.long("moved"))
+    assert(rounds1.size > 1 && moves(rounds1) == moves(rounds2),
+      s"${moves(rounds1)} vs ${moves(rounds2)}")
+    assert(!(rounds1 ++ rounds2).exists(_.fellBack))
+  }
+
+  test("only Checkpoints builds or reads an Observation") {
+    // the bounded probe read (Checkpoints.checkpoint) is the one place an
+    // Observation may be created, attached or awaited
+    val root = new java.io.File("src/main/scala")
+    assume(root.isDirectory)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+    val pattern = """\bObservation\b|\.observe\(|\bobs\w*\.(get|future)\b""".r
+    val offenders = files(root)
+      .filter(f => f.getName.endsWith(".scala") &&
+        !f.getPath.endsWith("graft/ops/Checkpoints.scala"))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).zipWithIndex
+          .collect { case (line, i) if pattern.findFirstIn(line).isDefined =>
+            s"${f.getPath}:${i + 1}: ${line.trim}" }
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("kCore: peel cascade, empty core, k=1 identity") {

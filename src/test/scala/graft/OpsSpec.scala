@@ -1140,6 +1140,33 @@ class OpsSpec extends SparkSuite {
     assert(out.toSeq == Seq((5L, 10L, 0L, 90L), (10L, 3L, 1L, 97L)))
   }
 
+  test("cadence loops free every checkpoint they make") {
+    // bpeMerges (once per merge), kCenterSelect's carry path and
+    // mmrIterative re-checkpoint the frame they carry; none of their
+    // results reads it, so no block they created may outlive the call
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def leftBehind(body: => Unit): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      sc.getPersistentRDDs.keySet.diff(before).toSet
+    }
+    val docs = Seq("the theater thesis then the the banana bandana",
+        "aaaa aaaa banana low lower lowest low low").zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    assert(leftBehind(graft.ops.CorpusOps.bpeMerges(docs, "doc_id", "text",
+      numMerges = 10).collect()).isEmpty, "bpeMerges")
+    val pts = (0L until 40L).map(i =>
+        (i, Array((i % 7).toFloat, (i % 5).toFloat, (i % 3).toFloat)))
+      .toDF("vec_id", "embedding")
+    assert(leftBehind(graft.ops.SampleOps.kCenterSelect(pts, "vec_id", "embedding",
+      k = 10, carryMinDist = true, checkpointEvery = 2, selectBatch = 2)
+      .collect()).isEmpty, "kCenterSelect")
+    assert(leftBehind(graft.ops.SearchOps.mmrIterative(pts, "embedding", "vec_id",
+      Array(1.0f, 0.0f, 0.0f), k = 10, checkpointEvery = 2, selectBatch = 2)
+      .collect()).isEmpty, "mmrIterative")
+  }
+
   test("CorpusOps.bpeMerges equals a driver-side reference BPE trainer") {
     import spark.implicits._
     // repetition-heavy corpus: forces multi-char merges, adjacent-run
