@@ -125,15 +125,15 @@ private[graft] object Checkpoints {
       Checkpoint(ck, row.schema.fieldNames.zip(row.toSeq).toMap, fellBack, rel)
     }
 
-  /** A frame a loop replaces again and again. [[advance]] adds `weight`
-    * units of lineage (rounds, or centers folded into a carried column)
-    * and checkpoints once `every` units have piled up or on the `last`
-    * round; a superseded checkpoint is freed only after its successor is
-    * materialized, since the successor's plan reads it until then.
-    * [[close]] frees the last one: call it only when nothing the caller
-    * returns reads [[df]].
+  /** A frame a loop replaces again and again, starting from (and owning)
+    * `init`. [[advance]] adds `weight` units of lineage (rounds, or
+    * centers folded into a carried column) and checkpoints once `every`
+    * units have piled up or on the `last` round; a superseded checkpoint
+    * is freed only after its successor is materialized, since the
+    * successor's plan reads it until then. [[close]] frees the last one:
+    * call it only when nothing the caller returns reads [[df]].
     */
-  final class Carry private[Checkpoints] (init: Checkpoint, every: Int) {
+  final class Carry(init: Checkpoint, every: Int = 1) {
     private var current = init.df
     private var held = init.release
     private var since = 0
@@ -158,9 +158,6 @@ private[graft] object Checkpoints {
 
     def close(): Unit = { held(); held = NoRelease }
   }
-
-  /** A [[Carry]] that starts from (and owns) `init`. */
-  def carry(init: Checkpoint, every: Int = 1): Carry = new Carry(init, every)
 
   /** One round of an [[iterate]] loop: its index (0 is the initial
     * state), its probe values (empty for a round that was not
@@ -189,7 +186,7 @@ private[graft] object Checkpoints {
   def iterate(loop: String, init: Checkpoint, maxRounds: Int, every: Int = 1,
       probes: Seq[Column] = Nil, stop: IndexedSeq[Round] => Boolean = _ => false)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
-    val state = carry(init, every)
+    val state = new Carry(init, every)
     var record = Vector(Round(0, init.probes, init.fellBack))
     while (record.size <= maxRounds && !stop(record)) {
       val r = record.size
@@ -212,14 +209,14 @@ private[graft] object Checkpoints {
     */
   def waves(seed: DataFrame, keys: Seq[String], maxWaves: Int = Int.MaxValue)(
       expand: (DataFrame, DataFrame, Int) => DataFrame): IndexedSeq[DataFrame] = {
-    val rows = count(lit(1)).as("n")
-    var last = checkpoint(seed, rows)
+    val rowCount = count(lit(1)).as("n")
+    var last = checkpoint(seed, rowCount)
     var frontiers = Vector(last.df)
-    val visited = carry(Checkpoint(last.df.select(keys.map(col): _*)), every = 4)
+    val visited = new Carry(Checkpoint(last.df.select(keys.map(col): _*)), every = 4)
     while (last.long("n") > 0L && frontiers.size <= maxWaves) {
       if (frontiers.size > 1)
         visited.advance(visited.df.unionByName(frontiers.last.select(keys.map(col): _*)))
-      last = checkpoint(expand(frontiers.last, visited.df, frontiers.size), rows)
+      last = checkpoint(expand(frontiers.last, visited.df, frontiers.size), rowCount)
       if (last.long("n") == 0L) last.release() else frontiers :+= last.df
     }
     visited.close()

@@ -542,7 +542,7 @@ object CorpusOps {
       numMerges: Int,
       wordpiece: Boolean): Seq[(Long, String, String, Long, Double)] = {
     require(numMerges > 0, "numMerges must be positive")
-    val words = Checkpoints.carry(Checkpoints.checkpoint(df
+    val words = new Checkpoints.Carry(Checkpoints.checkpoint(df
       .select(explode(graft.functions.TextFunctions.tokens(col(textCol)))
         .as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))

@@ -242,7 +242,7 @@ object SampleOps {
     // carry path: the running min-distance column, re-checkpointed
     // every `checkpointEvery` centers to keep the least(...) lineage flat
     val carried = if (carryMinDist) {
-      Checkpoints.carry(Checkpoints.checkpoint(pts.withColumn("d", d2(seed._2))),
+      new Checkpoints.Carry(Checkpoints.checkpoint(pts.withColumn("d", d2(seed._2))),
         checkpointEvery)
     } else null
     var i = 1

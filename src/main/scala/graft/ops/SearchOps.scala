@@ -373,7 +373,7 @@ object SearchOps {
     val spark = df.sparkSession
     import spark.implicits._
     val fetchK = fetchKOpt.getOrElse(4 * k)
-    val remaining = Checkpoints.carry(Checkpoints.checkpoint(
+    val remaining = new Checkpoints.Carry(Checkpoints.checkpoint(
       cosineTopK(df, embCol, idCol, query, fetchK)
         .select(col(idCol).cast("long").as("_id"), col(embCol).as("_emb"),
           col("score"))
